@@ -475,7 +475,7 @@ def mor_hudi_data_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.hudi import read_hudi_mor_snapshot
 
     return read_hudi_mor_snapshot(
-        spark, _HUDI_MOR_FIXTURE, column_range=("value", 70, 100)
+        spark, _HUDI_MOR_FIXTURE, bounds={"value": (70, 100)}
     ).select("id", "name", "value")
 
 

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..plans.metadata import CommitMetadata, WriteStat
+from ..plans.pruning import bounds_filter, may_overlap
 from ..plans.slices import FileSlice, resolve_slices, touched_file_groups
 from ..plans.timeline import Timeline, TimelineError
 
@@ -1577,18 +1578,16 @@ class CowTable:
     @staticmethod
     def _stat_passes(stat, between: dict[str, tuple]) -> bool:
         """Can a slice with these published stats contain rows in the
-        bounds? [min, max] overlap per column; EQUALITY probes additionally
-        consult the secondary value-bucket index — a file whose bitmap
-        lacks the probe's bucket cannot contain the value even when its
-        range overlaps (no false negatives: absence of a bucket bit proves
-        absence of every value hashing to it). Missing stats keep the
-        slice (conservative)."""
+        bounds? The shared [min, max] rule (``plans.pruning.may_overlap``)
+        per column; EQUALITY probes additionally consult the secondary
+        value-bucket index — a file whose bitmap lacks the probe's bucket
+        cannot contain the value even when its range overlaps (no false
+        negatives: absence of a bucket bit proves absence of every value
+        hashing to it). Missing stats keep the slice (conservative)."""
         for col, (lo, hi) in between.items():
             cs = (stat.column_stats or {}).get(col) if stat else None
-            if cs is not None:
-                mn, mx = cs
-                if (hi is not None and mn > hi) or (lo is not None and mx < lo):
-                    return False
+            if cs is not None and not may_overlap(lo, hi, *cs):
+                return False
             vx = (stat.value_index or {}).get(col) if stat else None
             # The bitmap is only consulted for probe types where Python's
             # str(v) is bit-identical to Spark's cast-to-string (int and
@@ -1614,13 +1613,7 @@ class CowTable:
         paths, _total = self.pruned_files(between, as_of)
         if not paths:
             return self.snapshot(as_of).limit(0)
-        df = self._read_paths(paths, as_of)
-        for col, (lo, hi) in between.items():
-            if lo is not None:
-                df = df.filter(F.col(col) >= F.lit(lo))
-            if hi is not None:
-                df = df.filter(F.col(col) <= F.lit(hi))
-        return df
+        return bounds_filter(self._read_paths(paths, as_of), between)
 
     def incremental(self, begin_exclusive: str, end_inclusive: str | None = None) -> DataFrame:
         """Rows whose records changed in (begin, end] — B3.

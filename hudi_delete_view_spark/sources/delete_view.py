@@ -175,8 +175,7 @@ class DeleteView:
             # deleted-key set back onto the wide side. The wide scan feeds
             # a BroadcastHashJoin directly — no Exchange of wide rows.
             old_keys = (
-                (self.spark.read.schema(schema) if schema is not None else self.spark.read)
-                .parquet(*old_paths)
+                new_reader.parquet(*old_paths)
                 .select(
                     file_id_expr(F.col(FILE_NAME_FIELD)).alias(_FID),
                     F.col(RECORD_KEY_FIELD),
@@ -195,13 +194,8 @@ class DeleteView:
         # schema evolution: columns added to the table AFTER the deleted
         # rows' slices were written must still appear (as NULLs) — align to
         # the delete commit's published schema, same contract as a snapshot
-        meta = self.timeline.commit_metadata(self.timestamp)
-        if meta.schema_json:
-            import json as _json
-
-            from pyspark.sql.types import StructType
-
-            for f_ in StructType.fromJson(_json.loads(meta.schema_json)).fields:
+        if schema is not None:
+            for f_ in schema.fields:
                 if f_.name not in deleted.columns:
                     deleted = deleted.withColumn(f_.name, F.lit(None).cast(f_.dataType))
         # A9: stamp the delete commit as the row's processing time
@@ -231,15 +225,9 @@ class DeleteView:
         if df is None:
             # empty view: publish an empty parquet dir with the table schema
             self.timeline.fs.rmtree(path)
-            meta = self.timeline.commit_metadata(self.timestamp)
-            if meta.schema_json:
-                import json as _json
-
-                from pyspark.sql.types import StructType
-
-                empty = self.spark.createDataFrame(
-                    [], StructType.fromJson(_json.loads(meta.schema_json))
-                )
+            schema = self._published_schema()
+            if schema is not None:
+                empty = self.spark.createDataFrame([], schema)
                 empty.write.mode("overwrite").parquet(path)
             else:
                 self.timeline.fs.makedirs(path)

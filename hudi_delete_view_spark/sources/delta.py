@@ -72,6 +72,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..plans.fs import fs_for
+from ..plans.pruning import may_overlap
 
 LOG_DIR = "_delta_log"
 
@@ -680,16 +681,10 @@ def _stats_pass(add: dict, bounds: dict[str, tuple]) -> bool:
         return True
     mins = stats.get("minValues") or {}
     maxs = stats.get("maxValues") or {}
-    for col, (lo, hi) in bounds.items():
-        fmin, fmax = mins.get(col), maxs.get(col)
-        try:
-            if lo is not None and fmax is not None and fmax < lo:
-                return False
-            if hi is not None and fmin is not None and fmin > hi:
-                return False
-        except TypeError:
-            continue  # cross-type comparison: stats unusable, keep file
-    return True
+    return all(
+        may_overlap(lo, hi, mins.get(col), maxs.get(col))
+        for col, (lo, hi) in bounds.items()
+    )
 
 
 def read_delta_snapshot(
@@ -733,9 +728,7 @@ def read_delta_snapshot(
                         v = int(v)
                     except ValueError:
                         continue
-                if lo is not None and v < lo:
-                    return False
-                if hi is not None and v > hi:
+                if not may_overlap(lo, hi, v, v):
                     return False
             return True
 

@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..plans.fs import fs_for
+from ..plans.pruning import bounds_filter, may_overlap
 from .cow import PARTITION_PATH_FIELD, RECORD_KEY_FIELD
 
 _BASE_RE = re.compile(
@@ -367,20 +368,17 @@ def _prune_slices_by_stats(
     groups: a key's whole version history lives in one group, so if no
     file of the group can hold a value in range, neither can any key's
     LATEST value. A file excludes the range when its stats say
-    value_count == 0 (delete-only logs) or its [min, max] is disjoint;
-    a file with NO stats row makes its group unprunable (unknown ≠
-    excluded)."""
+    value_count == 0 (delete-only logs) or the shared [min, max] rule
+    (``plans.pruning.may_overlap``) proves it disjoint; a file with NO
+    stats row makes its group unprunable (unknown ≠ excluded)."""
 
     def file_excludes(name: str) -> bool:
         s = stats.get(name)
         if s is None:
             return False
-        if s.get("value_count") == 0:
-            return True
-        mn, mx = s.get("min"), s.get("max")
-        if mn is None or mx is None:
-            return False
-        return mx < lo or mn > hi
+        return s.get("value_count") == 0 or not may_overlap(
+            lo, hi, s.get("min"), s.get("max")
+        )
 
     return [
         s for s in slices
@@ -819,24 +817,24 @@ def _log_rows_df(
             # Avro logical types ride as their base primitive: a
             # timestamp-micros column arrives as int64 — convert by the
             # declared Spark type so Arrow hands Spark real timestamps.
-            # Delete-block tombstones carry None payloads, so a batch
-            # mixing data + tombstone rows lands as float64 (NaN) — the
-            # dtype check catches that shape too (NaN -> NaT).
-            if len(pdf_out):
-                for f in out_schema.fields:
-                    # NTZ included: a base parquet written without Spark
-                    # footer metadata (isAdjustedToUTC=false) reads back
-                    # as TimestampNTZType, which is NOT a TimestampType
-                    # subclass
-                    if not isinstance(
-                        f.dataType, (T.TimestampType, T.TimestampNTZType)
-                    ):
-                        continue
-                    col = pdf_out[f.name]
-                    if col.dtype.kind in "if" or any(
-                        isinstance(x, int) for x in col
-                    ):
-                        pdf_out[f.name] = pd.to_datetime(col, unit="us")
+            # Delete-block tombstones carry None payloads, so the column
+            # is built as nullable Int64 straight from the row values
+            # (None -> NaT): a float64/object column would send
+            # pd.to_datetime down pandas' float path, which raises
+            # FloatingPointError under np.errstate(over="raise").
+            for f in out_schema.fields:
+                # NTZ included: a base parquet written without Spark
+                # footer metadata (isAdjustedToUTC=false) reads back as
+                # TimestampNTZType, which is NOT a TimestampType subclass
+                if not isinstance(
+                    f.dataType, (T.TimestampType, T.TimestampNTZType)
+                ):
+                    continue
+                vals = [r[f.name] for r in rows]
+                if any(isinstance(x, int) for x in vals):
+                    pdf_out[f.name] = pd.array(vals, dtype="Int64").astype(
+                        "datetime64[us]"
+                    )
             yield pdf_out
 
     if not files:
@@ -850,7 +848,7 @@ def _log_rows_df(
 def read_hudi_mor_snapshot(
     spark: SparkSession, base_path: str, as_of: str | None = None,
     listing: str = "auto", file_ids: set[str] | None = None,
-    column_range: tuple[str, object, object] | None = None,
+    bounds: dict[str, tuple] | None = None,
 ) -> DataFrame:
     """Snapshot view of a genuine Hudi MOR table at ``as_of`` (default:
     latest completed instant): base parquet merged with committed log
@@ -866,12 +864,14 @@ def read_hudi_mor_snapshot(
     dominant open cost and the listing a metadata-enabled Hudi writer
     maintains is the source of truth.
 
-    ``column_range=(col, lo, hi)``: data skipping through the metadata
-    table's column_stats index — file groups whose every file provably
-    excludes [lo, hi] never enter the scan (sound because keys never
-    migrate between Hudi file groups), and the row filter is applied
-    on top (stats are file-granular). Without a column_stats partition
-    the range degrades to a plain post-merge filter.
+    ``bounds={col: (lo, hi)}`` (None = open side), as for the Delta and
+    Iceberg readers: data skipping through the metadata table's
+    column_stats index — file groups whose every file provably excludes
+    a column's range never enter the scan (sound because keys never
+    migrate between Hudi file groups), and the row filter
+    (``plans.pruning.bounds_filter``) is applied on top (stats are
+    file-granular). A column without a column_stats entry degrades to
+    the plain post-merge filter.
 
     ``file_ids``: restrict the merge to the named file groups (the
     record-index point-lookup path)."""
@@ -904,16 +904,14 @@ def read_hudi_mor_snapshot(
         # point-lookup restriction (record-index callers): merge only
         # the named file groups' slices
         slices = [s for s in slices if s.file_id in file_ids]
-    residual = None
-    if column_range is not None:
+    if bounds:
         # data skipping via the metadata table's column_stats index:
-        # drop file groups every file of which excludes [lo, hi], then
-        # apply the residual row filter (stats are file-granular)
-        col, lo, hi = column_range
-        stats = read_hudi_column_stats(base_path, col)
-        if stats:
-            slices = _prune_slices_by_stats(slices, stats, lo, hi)
-        residual = F.col(col).between(F.lit(lo), F.lit(hi))
+        # drop file groups every file of which excludes a column's range;
+        # the residual row filter applies after the merge
+        for col, (lo, hi) in bounds.items():
+            stats = read_hudi_column_stats(base_path, col)
+            if stats:
+                slices = _prune_slices_by_stats(slices, stats, lo, hi)
         if not slices:
             empty = read_hudi_mor_snapshot(
                 spark, base_path, as_of=as_of, listing=listing
@@ -944,8 +942,7 @@ def read_hudi_mor_snapshot(
     )
     if "_hoodie_is_deleted" in [f.name for f in base.schema.fields]:
         out = out.filter(~F.coalesce(F.col("_hoodie_is_deleted"), F.lit(False)))
-    if residual is not None:
-        out = out.filter(residual)
+    out = bounds_filter(out, bounds or {})
     return out.drop("__rn", "__is_delete", *_ORD_COLS)
 
 

@@ -61,6 +61,7 @@ from pyspark.sql import types as T
 
 from ..plans.avro_ocf import read_ocf
 from ..plans.fs import fs_for
+from ..plans.pruning import may_overlap
 
 EXISTING, ADDED, DELETED = 0, 1, 2
 DATA, POSITION_DELETES, EQUALITY_DELETES = 0, 1, 2
@@ -279,17 +280,11 @@ def _manifest_summary_skip(mf: dict, meta: dict,
         s = summaries[i] or {}
         if s.get("contains_null"):
             continue  # a null partition value always passes file pruning
-        lo_q, hi_q = bounds[col]
         t = types.get(f.get("source-id"))
         m_lo = _decode_single_value(s.get("lower_bound"), t)
         m_hi = _decode_single_value(s.get("upper_bound"), t)
-        try:
-            if hi_q is not None and m_lo is not None and m_lo > hi_q:
-                return True
-            if lo_q is not None and m_hi is not None and m_hi < lo_q:
-                return True
-        except TypeError:
-            continue  # cross-type comparison: summary unusable
+        if not may_overlap(*bounds[col], m_lo, m_hi):
+            return True
     return False
 
 
@@ -648,19 +643,11 @@ def _partition_pass(df_entry: dict, ident: dict[str, str],
     """False only when an identity partition value PROVES every row of
     the file violates the bounds."""
     pv = df_entry.get("partition") or {}
-    for pname, col in ident.items():
-        if col not in bounds or pname not in pv or pv[pname] is None:
-            continue
-        lo, hi = bounds[col]
-        v = pv[pname]
-        try:
-            if lo is not None and v < lo:
-                return False
-            if hi is not None and v > hi:
-                return False
-        except TypeError:
-            continue  # cross-type comparison: value unusable, keep file
-    return True
+    return all(
+        may_overlap(*bounds[col], pv.get(pname), pv.get(pname))
+        for pname, col in ident.items()
+        if col in bounds
+    )
 
 
 def read_iceberg_snapshot(

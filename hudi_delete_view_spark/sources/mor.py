@@ -28,6 +28,7 @@ import os
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..plans.pruning import bounds_filter
 from ..plans.slices import resolve_slices
 from ..plans.timeline import TimelineError
 from .cow import (
@@ -440,13 +441,7 @@ class MorTable(CowTable):
         merged = self._merged_over(kept, as_of)
         if merged is None:
             return self.snapshot(as_of).limit(0)
-        df = merged
-        for col, (lo, hi) in between.items():
-            if lo is not None:
-                df = df.filter(F.col(col) >= F.lit(lo))
-            if hi is not None:
-                df = df.filter(F.col(col) <= F.lit(hi))
-        return df
+        return bounds_filter(merged, between)
 
     def incremental(self, begin_exclusive: str, end_inclusive: str | None = None) -> DataFrame:
         """Changed rows in (begin, end] — B3 on MOR.

@@ -21,8 +21,9 @@ Design:
 - **Filter pushdown = stats pruning.** ``pushFilters`` collects
   single-column range/equality bounds and prunes whole slices through
   the SAME published-stats test the native scan uses
-  (``CowTable._stat_passes`` — [min, max] overlap + the value-bucket
-  bitmap for portable equality probes). Every filter is still returned
+  (``CowTable._stat_passes`` — the shared [min, max] rule of
+  ``plans.pruning`` + the value-bucket bitmap for portable equality
+  probes). Every filter is still returned
   to Spark for row-level evaluation: the connector prunes files, Spark
   prunes rows — both layers stay correct independently.
 - **Streaming = commit tailing.** The stream reader's offset is the
@@ -159,14 +160,13 @@ class LakeviewReader(DataSourceReader):
         for f in filters:
             attr = getattr(f, "attribute", None)
             col = attr[0] if attr and len(attr) == 1 else None
-            # Only int/str probe values participate in pruning (bool
-            # excluded), mirroring _stat_passes' probe_ok guard: stats
-            # are published as JSON, so a date/datetime/Decimal value
-            # Spark pushes would hit Python's cross-type comparison
-            # TypeError at PLANNING time — failing a scan that works
-            # fine without pushdown. Those filters still flow back to
-            # Spark for row-level evaluation; only file pruning is
-            # skipped.
+            # Only int/str probe values become bounds (bool excluded),
+            # mirroring _stat_passes' probe_ok guard. Stats are published
+            # as JSON scalars, so a date/datetime/Decimal value could
+            # never prove a file disjoint: the shared rule
+            # (plans.pruning.may_overlap) keeps a file on any cross-type
+            # comparison. Those filters still flow back to Spark for
+            # row-level evaluation; only file pruning is skipped.
             v = getattr(f, "value", None)
             prunable = isinstance(v, (int, str)) and not isinstance(v, bool)
             if col is not None and prunable:

@@ -170,6 +170,8 @@ def test_delta_stats_pruning_never_reads_excluded_files(spark):
     file list excludes F6 (stats: min=max=70) BEFORE any scan, and the
     bounded read equals the unbounded read filtered row-level (pruning
     is an optimization, never a filter)."""
+    import datetime
+
     from hudi_delete_view_spark.sources.delta import _stats_pass
 
     state = resolve_delta_state(FIXTURE)
@@ -192,6 +194,12 @@ def test_delta_stats_pruning_never_reads_excluded_files(spark):
                               bounds={"part": ("b", "b")})
     assert {r.part for r in got.collect()} == {"b"}
     assert state2.partition_columns == ["part"]
+    # a date bound against string partition values proves nothing:
+    # every file is kept, nothing raises
+    dated = read_delta_snapshot(
+        spark, FIXTURE, version=4,
+        bounds={"part": (datetime.date(2021, 1, 1), None)})
+    assert dated.count() == full.count()
 
 
 def test_delta_non_hive_layout_fallback(spark, tmp_path):

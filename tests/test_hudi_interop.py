@@ -486,6 +486,10 @@ def test_hudi_column_stats_skipping(spark):
     slices = _list_slices(MOR_FIXTURE, valid)
     pruned = _prune_slices_by_stats(slices, stats, 70, 100)
     assert [s.file_id[:4] for s in pruned] == ["7c2e"]  # FG2 gone
+    # an open side proves nothing, and neither does a cross-type bound:
+    # every group stays
+    assert len(_prune_slices_by_stats(slices, stats, 70, None)) == 3
+    assert len(_prune_slices_by_stats(slices, stats, "70", "100")) == 3
 
     def rows(**kw):
         return sorted(
@@ -494,10 +498,13 @@ def test_hudi_column_stats_skipping(spark):
             .select("id", "value").collect()
         )
 
-    full_filtered = [(i, v) for i, v in rows() if 70 <= v <= 100]
-    assert rows(column_range=("value", 70, 100)) == full_filtered == [
+    full = rows()
+    full_filtered = [(i, v) for i, v in full if 70 <= v <= 100]
+    assert rows(bounds={"value": (70, 100)}) == full_filtered == [
         ("id7", 77), ("id8", 80)]
-    assert rows(column_range=("value", 5000, 6000)) == []
+    assert rows(bounds={"value": (5000, 6000)}) == []
+    assert rows(bounds={"value": (70, None)}) == [
+        (i, v) for i, v in full if v >= 70]
     with tempfile.TemporaryDirectory() as tmp:
         bare = os.path.join(tmp, "bare")
         shutil.copytree(MOR_FIXTURE, bare)
@@ -506,7 +513,7 @@ def test_hudi_column_stats_skipping(spark):
         got = sorted(
             (r["id"], r["value"])
             for r in read_hudi_mor_snapshot(
-                spark, bare, column_range=("value", 70, 100))
+                spark, bare, bounds={"value": (70, 100)})
             .select("id", "value").collect()
         )
         assert got == full_filtered  # degrades to the plain filter

@@ -1,8 +1,8 @@
 """Capture ``explain('formatted')`` for the bench HEADLINE queries into
-``plans/r09/<query>_<tag>.txt`` (tag = before/after), per the optimization
-round's evidence contract. Usage:
+``plans/<round>/<query>_<tag>.txt`` (tag = before/after), per an
+optimization round's evidence contract. Usage:
 
-    python tools/r09_plans.py before [query ...]
+    python tools/dump_plans.py r10 before [query ...]
 
 Defaults to every HEADLINE query when none are named. Uses the same
 fixtures/session as bench.py so the captured plan is the bench's plan.
@@ -21,15 +21,17 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
+    if len(sys.argv) < 3:
+        sys.exit(__doc__)
+    rnd, tag = sys.argv[1], sys.argv[2]
     import bench
     from hudi_delete_view_spark import queries as registry
     from hudi_delete_view_spark.session import get_spark
 
     registry.load_all()
-    names = sys.argv[2:] or bench.HEADLINE
+    names = sys.argv[3:] or bench.HEADLINE
 
-    spark = get_spark("r09-plans")
+    spark = get_spark(f"{rnd}-plans")
     spark.sparkContext.setLogLevel("ERROR")
     # same fixture warmup as bench.py so lake queries see built tables
     from hudi_delete_view_spark.sources.fixtures import (
@@ -46,7 +48,7 @@ def main() -> None:
 
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans", "r09",
+        "plans", rnd,
     )
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
