@@ -20,11 +20,14 @@ vectors"): blob data =
 - combined length of magic + vector, 4 bytes BIG-endian;
 - the 4-byte magic sequence ``D1 D3 39 64`` (the little-endian
   encoding of 1681511377 — byte-identical to the Delta protocol's
-  RoaringBitmapArray magic, so ``plans/roaring.py``'s golden-pinned
-  parser consumes the magic+vector slice directly);
+  RoaringBitmapArray magic);
 - the vector: portable 64-bit roaring bitmap (int64 LE bitmap count,
   then per bitmap int32 LE key + standard 32-bit portable roaring);
 - CRC-32 of (magic + vector), 4 bytes BIG-endian.
+
+That is exactly the Delta on-disk DV envelope, so one parser,
+``roaring.read_dv_from_file`` (golden-pinned against
+org.roaringbitmap), reads both formats.
 
 Blob metadata carries ``referenced-data-file`` and ``cardinality``
 properties; manifests additionally record ``referenced_data_file`` /
@@ -37,7 +40,7 @@ import json
 import struct
 import zlib
 
-from .roaring import parse_dv_blob
+from .roaring import RoaringFormatError, read_dv_from_file
 
 MAGIC = b"PFA1"
 DV_MAGIC_BYTES = bytes([0xD1, 0xD3, 0x39, 0x64])
@@ -81,22 +84,13 @@ def dv_blob_bytes(positions: list[int]) -> bytes:
 
 def parse_dv_blob_at(data: bytes, offset: int, length: int) -> list[int]:
     """Deleted row ordinals of the DV blob at ``offset`` (the manifest's
-    ``content_offset``; ``length`` = ``content_size_in_bytes``)."""
-    blob = data[offset:offset + length]
-    if len(blob) < 12:
-        raise PuffinFormatError("deletion-vector blob truncated")
-    (mv_len,) = struct.unpack(">i", blob[:4])
-    mv = blob[4:4 + mv_len]
-    if mv[:4] != DV_MAGIC_BYTES:
-        raise PuffinFormatError(
-            f"deletion-vector magic mismatch: {mv[:4].hex()}"
-        )
-    (crc,) = struct.unpack(">I", blob[4 + mv_len:8 + mv_len])
-    if crc != (zlib.crc32(mv) & 0xFFFFFFFF):
-        raise PuffinFormatError("deletion-vector CRC mismatch")
-    # magic + portable64 is byte-identical to the Delta RoaringBitmapArray
-    # envelope parse_dv_blob speaks (golden-pinned vs org.roaringbitmap)
-    return parse_dv_blob(mv)
+    ``content_offset``; ``length`` = ``content_size_in_bytes``, which
+    counts the 4-byte length prefix and the 4-byte CRC around the
+    magic + vector)."""
+    try:
+        return read_dv_from_file(data, offset, length - 8)
+    except RoaringFormatError as exc:
+        raise PuffinFormatError(str(exc)) from exc
 
 
 def write_puffin(blobs: list[dict], properties: dict | None = None) -> bytes:

@@ -113,13 +113,20 @@ def parse_dv_blob(data: bytes) -> list[int]:
 
 def read_dv_from_file(data: bytes, offset: int, size: int) -> list[int]:
     """One DV inside an on-disk deletion vector file: [int32 BE size]
-    [blob][int32 BE CRC32], CRC verified."""
+    [blob][int32 BE CRC32], CRC verified. Delta DV files and Iceberg
+    Puffin ``deletion-vector-v1`` blobs share this envelope."""
+    if offset < 0 or len(data) < offset + 4:
+        raise RoaringFormatError(
+            f"deletion vector offset {offset} past the end of its file"
+        )
     (stored_size,) = struct.unpack_from(">i", data, offset)
     if stored_size != size:
         raise RoaringFormatError(
             f"deletion vector size mismatch: descriptor says {size}, "
             f"file says {stored_size}"
         )
+    if len(data) < offset + 8 + size:
+        raise RoaringFormatError("deletion vector truncated")
     blob = data[offset + 4: offset + 4 + size]
     (crc,) = struct.unpack_from(">i", data, offset + 4 + size)
     if (zlib.crc32(blob) & 0xFFFFFFFF) != (crc & 0xFFFFFFFF):

@@ -45,9 +45,10 @@ https://github.com/delta-io/delta/blob/master/PROTOCOL.md):
   'u' z85-uuid-named file, or absolute-path 'p'; RoaringBitmapArray
   portable serialization, ``plans/roaring.py`` — the 32-bit roaring
   layer golden-vector-pinned against the real org.roaringbitmap)
-  parses EXECUTOR-side into (file, row ordinal) rows and applies as an
-  anti-join on ``_metadata.row_index``. A DV commit's delete view is
-  EXACT and keyless: deleted rows = (new DV minus old DV) by ordinal.
+  parses EXECUTOR-side in the reader Iceberg v3 DVs share
+  (``plans/row_deletes.py``) into (file, row ordinal) rows and applies
+  as an anti-join on ``_metadata.row_index``. A DV commit's delete view
+  is EXACT and keyless: deleted rows = (new DV minus old DV) by ordinal.
 
 Scale shape: the driver touches only the log (KB-scale JSON + one
 checkpoint parquet footer/read — the same class of planning work Delta's
@@ -73,6 +74,7 @@ from pyspark.sql import types as T
 
 from ..plans.fs import fs_for
 from ..plans.pruning import may_overlap
+from ..plans.row_deletes import delete_view, dv_positions
 
 LOG_DIR = "_delta_log"
 
@@ -274,8 +276,8 @@ def _check_add(add: dict) -> None:
 
 
 def _dv_descriptor(base_path: str, add: dict) -> tuple | None:
-    """Normalize an add's deletionVector into a picklable work tuple
-    (kind, payload, offset, size) the executor parser consumes —
+    """Normalize an add's deletionVector into the blob
+    (kind, payload, offset, size) ``row_deletes.dv_positions`` reads —
     PROTOCOL.md storage types: 'i' inline (Z85 blob), 'u' UUID file
     (pathOrInlineDv = <optional prefix><20-char Z85 uuid>, file
     <prefix>/deletion_vector_<uuid>.bin under the table), 'p' absolute
@@ -307,49 +309,6 @@ def _dv_descriptor(base_path: str, add: dict) -> tuple | None:
     off = dv.get("offset")  # checkpoint structs carry an explicit null
     return ("file", os.path.join(base_path, rel),
             1 if off is None else int(off), int(dv["sizeInBytes"]))
-
-
-def _dv_positions_df(spark: SparkSession, base_path: str,
-                     adds: list[dict]) -> DataFrame:
-    """(file basename, deleted row ordinal) rows for every add carrying
-    a deletion vector — DV blobs parse EXECUTOR-side (one task per DV;
-    a day's DVs across 10k files never transit the driver), mirroring
-    the Iceberg position-delete shape."""
-    work = []
-    for a in adds:
-        d = _dv_descriptor(base_path, a)
-        if d is not None:
-            work.append((os.path.basename(a["path"]),) + d)
-    schema = "fname string, pos long"
-    if not work:
-        return spark.createDataFrame([], schema)
-
-    def parse(batches):
-        import pandas as pd
-
-        from ..plans.roaring import parse_dv_blob, read_dv_from_file, z85_decode
-
-        for pdf in batches:
-            rows = []
-            for fname, kind, payload, offset, size in pdf.itertuples(
-                index=False
-            ):
-                if kind == "inline":
-                    positions = parse_dv_blob(z85_decode(payload))
-                else:
-                    with open(payload, "rb") as f:
-                        data = f.read()
-                    positions = read_dv_from_file(data, offset, size)
-                rows.extend((fname, p) for p in positions)
-            yield pd.DataFrame(rows, columns=["fname", "pos"])
-
-    return (
-        spark.createDataFrame(
-            work, "fname string, kind string, payload string, "
-                  "offset long, size long")
-        .repartition(min(len(work), 64))
-        .mapInPandas(parse, schema)
-    )
 
 
 def _apply_action(state: dict, action: dict) -> None:
@@ -661,9 +620,10 @@ def _read_adds_live(
     if not with_dv:
         return out
     rows = _read_adds(spark, base_path, state, with_dv, with_ordinal=True)
-    dels = _dv_positions_df(spark, base_path, with_dv).select(
-        F.col("fname").alias("__fname"), F.col("pos").alias("__pos")
-    )
+    dels = dv_positions(spark, [
+        (os.path.basename(a["path"]), _dv_descriptor(base_path, a), [])
+        for a in with_dv
+    ]).toDF("__fname", "__pos")
     live = rows.join(dels, ["__fname", "__pos"], "left_anti").select(*names)
     return out.unionByName(live) if plain else live
 
@@ -1332,18 +1292,17 @@ def read_delta_delete_view(
     key_cols: list[str] | None = None,
 ) -> DataFrame:
     """THE FLAGSHIP question asked of a foreign Delta table: which rows
-    did commit ``version`` delete? Two shapes, both reconstructed from
-    the commit's own actions — never an untouched file:
+    did commit ``version`` delete? This decodes the commit's actions
+    into the parts ``row_deletes.delete_view`` assembles — never an
+    untouched file:
 
-    - **Deletion-vector commits** (a path re-added with a new DV):
-      EXACT and keyless — the deleted ordinals are (new DV minus old
-      DV), read back as one inner join on (file basename, row ordinal).
-    - **Copy-on-write rewrites** (paths removed, others added):
-      candidates = the removed files' LIVE rows at version-1 (their old
-      DVs applied — rows already dead cannot be deleted again),
-      survivors = the added files' live rows; one keyed anti-join
-      (``key_cols`` required for this shape; raised by name when
-      absent). dataChange=false movements (OPTIMIZE) never count.
+    - a path removed and re-added with a deletion vector: its new DV,
+      with the old DV as the superseded blob, by position over the
+      file's rows at version-1 (exact and keyless);
+    - any other removed path: the keyed rewrite, the removed files'
+      live rows at version-1 against the added files' live rows
+      (``key_cols`` required). dataChange=false movements (OPTIMIZE)
+      never count.
 
     Stamped with the deleting commit's version and timestamp."""
     actions = _version_actions(base_path, version)
@@ -1363,9 +1322,9 @@ def read_delta_delete_view(
         ),
         None,
     )
-    # the removed files' CONTENT lives in the pre-commit state
-    state_prev = resolve_delta_state(base_path, version - 1)
-    schema_names = [f.name for f in state_prev.schema.fields]
+    # the removed files' CONTENT lives in the pre-commit state; version
+    # 0 removes nothing and only lends the view its schema
+    state_prev = resolve_delta_state(base_path, max(version - 1, 0))
 
     # split the DV shape out: same path removed AND re-added with a DV
     added_by_path = {a["path"]: a for a in added}
@@ -1380,63 +1339,39 @@ def read_delta_delete_view(
             dv_pairs.append((old, new))
         else:
             cow_removed.append(old)
-    cow_added = [
-        a for a in added
-        if not (a.get("deletionVector") and a["path"] in state_prev.adds)
-    ]
 
-    parts = []
+    by_position = None
     if dv_pairs:
-        # exact: ordinals newly dead at this commit
-        new_pos = _dv_positions_df(
-            spark, base_path, [new for _old, new in dv_pairs]
-        )
-        olds_with_dv = [old for old, _new in dv_pairs
-                        if old.get("deletionVector")]
-        if olds_with_dv:
-            old_pos = _dv_positions_df(spark, base_path, olds_with_dv)
-            new_pos = new_pos.join(old_pos, ["fname", "pos"], "left_anti")
+        positions = dv_positions(spark, [
+            (os.path.basename(new["path"]), _dv_descriptor(base_path, new),
+             [_dv_descriptor(base_path, old)]
+             if old.get("deletionVector") else [])
+            for old, new in dv_pairs
+        ]).toDF("__fname", "__pos")
         rows = _read_adds(
             spark, base_path, state_prev,
             [old for old, _new in dv_pairs], with_ordinal=True,
         )
-        parts.append(
-            rows.join(
-                new_pos.select(F.col("fname").alias("__fname"),
-                               F.col("pos").alias("__pos")),
-                ["__fname", "__pos"], "inner",
-            ).select(*schema_names)
-        )
+        by_position = (rows, positions)
+    cand = survivors = None
     if cow_removed:
-        if not key_cols:
-            raise DeltaFormatError(
-                f"commit {version} removed data files (copy-on-write "
-                "shape): pass key_cols to reconstruct which of their "
-                "rows did not survive"
-            )
-        candidates = _read_adds_live(
-            spark, base_path, state_prev, cow_removed
-        )
-        out = candidates
+        cand = _read_adds_live(spark, base_path, state_prev, cow_removed)
+        cow_added = [
+            a for a in added
+            if not (a.get("deletionVector") and a["path"] in state_prev.adds)
+        ]
         if cow_added:
             state_now = resolve_delta_state(base_path, version)
-            survivor_adds = [
+            survivors = _read_adds_live(spark, base_path, state_now, [
                 state_now.adds[a["path"]]
                 for a in cow_added
                 if a["path"] in state_now.adds
-            ]
-            survivors = _read_adds_live(
-                spark, base_path, state_now, survivor_adds
-            ).select(*key_cols)
-            out = candidates.join(survivors, key_cols, "left_anti")
-        parts.append(out)
-
-    if not parts:
-        out = spark.createDataFrame([], state_prev.schema)
-    else:
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
+            ])
+    out = delete_view(
+        spark, state_prev.schema, error=DeltaFormatError,
+        what=f"commit {version}", by_position=by_position,
+        removed=cand, added=survivors, key_cols=key_cols,
+    )
     return out.withColumn(
         "_deleted_by_version", F.lit(version).cast("long")
     ).withColumn(

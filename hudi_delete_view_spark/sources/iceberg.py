@@ -32,9 +32,10 @@ https://iceberg.apache.org/spec/):
   (round 9): position-delete entries whose payload is a PUFFIN file
   (``plans/puffin.py`` — blob = big-endian length + magic D1 D3 39 64
   + portable 64-bit roaring + CRC, per the public Puffin spec) parse
-  EXECUTOR-side into (referenced file, ordinal) rows and apply through
-  the same anti-join; a commit's new DV is cumulative, so its delete
-  view is (new DV minus the superseded DV) — exact and keyless.
+  EXECUTOR-side in the reader Delta DVs share (``plans/row_deletes.py``)
+  into (referenced file, ordinal) rows and apply through the same
+  anti-join; a commit's new DV is cumulative, so its delete view is
+  (new DV minus the superseded DV) — exact and keyless.
 
 Relocation: ``file_path`` entries are full URIs under the table's
 recorded ``location``; when the directory moves (this fixture is a
@@ -54,6 +55,7 @@ import json
 import os
 import re
 import struct
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -62,6 +64,7 @@ from pyspark.sql import types as T
 from ..plans.avro_ocf import read_ocf
 from ..plans.fs import fs_for
 from ..plans.pruning import may_overlap
+from ..plans.row_deletes import delete_view, dv_positions
 
 EXISTING, ADDED, DELETED = 0, 1, 2
 DATA, POSITION_DELETES, EQUALITY_DELETES = 0, 1, 2
@@ -431,110 +434,69 @@ def _is_dv(f: dict) -> bool:
     return (f.get("file_format") or "").upper() == "PUFFIN"
 
 
-def _read_dv_positions(
-    spark: SparkSession, base_path: str, meta: dict, files: list[dict],
-    minus: list[dict] | None = None,
-) -> DataFrame:
-    """(file_path, pos) rows of v3 deletion vectors. Blob bytes parse
-    EXECUTOR-side (one task slice per DV — a 100 TB table carries one
-    DV per data file; the driver ships only (path, offset, size,
-    referenced) tuples), mirroring the Delta DV path.
-
-    ``minus``: superseded DVs to subtract INSIDE the same task (v3 DVs
-    are cumulative and at most one per data file, so new-minus-old is a
-    per-referenced-file set difference — fusing it here replaces a
-    second mapInPandas subtree plus a shuffle-backed anti-join with one
-    extra blob read per task; guide §2.4, remove shuffles outright)."""
-    import json as _json
-
-    import pandas as pd  # noqa: F401  (executor dependency, imported for clarity)
-
-    location = meta.get("location", "")
-
-    def _ref_of(f: dict) -> str:
-        ref = f.get("referenced_data_file")
-        if ref is None:
-            raise IcebergFormatError(
-                f"deletion vector {f.get('file_path')!r} records no "
-                "referenced_data_file — cannot apply; refused rather "
-                "than resurrect deleted rows"
-            )
-        return ref
-
-    old_by_ref: dict[str, list] = {}
-    for f in minus or []:
-        old_by_ref.setdefault(_ref_of(f), []).append((
-            _relocate(f["file_path"], location, base_path),
-            int(f.get("content_offset") or 0),
-            int(f.get("content_size_in_bytes") or 0),
-        ))
-    # the puffin path relocates for READING; the referenced data file
-    # stays RECORDED — __path on data rows re-attaches the recorded URI
-    work = [(
-        _relocate(f["file_path"], location, base_path),
-        int(f.get("content_offset") or 0),
-        int(f.get("content_size_in_bytes") or 0),
-        _ref_of(f),
-        _json.dumps(old_by_ref.get(_ref_of(f), [])),
-    ) for f in files]
-
-    def parse(batches):
-        import json
-
-        import pandas as pd
-
-        from ..plans.puffin import parse_dv_blob_at
-
-        for pdf in batches:
-            out = []
-            for path, off, size, ref, old_json in pdf.itertuples(index=False):
-                with open(path, "rb") as fh:
-                    data = fh.read()
-                positions = parse_dv_blob_at(data, int(off), int(size))
-                old = json.loads(old_json)
-                if old:
-                    dead = set()
-                    for opath, ooff, osize in old:
-                        with open(opath, "rb") as fh:
-                            odata = fh.read()
-                        dead.update(parse_dv_blob_at(odata, int(ooff), int(osize)))
-                    positions = [p for p in positions if p not in dead]
-                out.extend((ref, p) for p in positions)
-            yield pd.DataFrame(out, columns=["file_path", "pos"])
-
-    return (
-        spark.createDataFrame(
-            work,
-            "puffin string, off long, size long, ref string, old string",
+def _dv_ref(f: dict) -> str:
+    """The RECORDED data file a v3 deletion vector applies to."""
+    ref = f.get("referenced_data_file")
+    if ref is None:
+        raise IcebergFormatError(
+            f"deletion vector {f.get('file_path')!r} records no "
+            "referenced_data_file — cannot apply; refused rather "
+            "than resurrect deleted rows"
         )
-        .repartition(min(len(work), 64))
-        .mapInPandas(parse, "file_path string, pos long")
+    return ref
+
+
+def _dv_blob(f: dict, location: str, base_path: str) -> tuple:
+    """The ``row_deletes`` blob of a v3 DV: the Puffin path relocates for
+    READING, and ``content_size_in_bytes`` counts the 4-byte length and
+    CRC around the DV."""
+    return (
+        "file", _relocate(f["file_path"], location, base_path),
+        int(f.get("content_offset") or 0),
+        int(f.get("content_size_in_bytes") or 0) - 8,
     )
 
 
 def _read_pos_deletes(
-    spark: SparkSession, base_path: str, meta: dict, files: list[dict]
+    spark: SparkSession, base_path: str, meta: dict, files: list[dict],
+    superseded: list[dict] | None = None,
 ) -> DataFrame:
+    """(``__path``, ``__pos``) rows the non-empty position-delete
+    ``files`` name, minus the positions the ``superseded`` DVs named.
+
+    DVs are cumulative, one per data file, so their subtraction is per
+    referenced file, inside the DV parse task. Plain position files
+    subtract the superseded positions through one anti-join — only a
+    snapshot that adds both plain files and DVs over older DVs pays it."""
     location = meta.get("location", "")
-    pd_schema = T.StructType([
-        T.StructField("file_path", T.StringType()),
-        T.StructField("pos", T.LongType()),
-    ])
-    if not files:
-        return spark.createDataFrame([], pd_schema)
+    old: dict[str, list] = {}
+    for f in superseded or []:
+        old.setdefault(_dv_ref(f), []).append(
+            _dv_blob(f, location, base_path))
     dvs = [f for f in files if _is_dv(f)]
     plain = [f for f in files if not _is_dv(f)]
     parts = []
     if plain:
         paths = [_relocate(f["file_path"], location, base_path)
                  for f in plain]
-        parts.append(spark.read.schema(pd_schema).parquet(*paths))
+        rows = spark.read.schema("file_path string, pos long").parquet(
+            *paths
+        ).select(F.col("file_path").alias("__path"),
+                 F.col("pos").alias("__pos"))
+        if old:
+            rows = rows.join(dv_positions(spark, [
+                (ref, blob, []) for ref, blobs in old.items() for blob in blobs
+            ]).toDF("__path", "__pos"), ["__path", "__pos"], "left_anti")
+        parts.append(rows)
     if dvs:
-        parts.append(_read_dv_positions(spark, base_path, meta, dvs))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+        # the referenced data file stays RECORDED — __path on data rows
+        # re-attaches the recorded URI
+        parts.append(dv_positions(spark, [
+            (_dv_ref(f), _dv_blob(f, location, base_path),
+             old.get(_dv_ref(f), []))
+            for f in dvs
+        ]).toDF("__path", "__pos"))
+    return reduce(DataFrame.unionByName, parts)
 
 
 # Manifest-driven join sizing: every delete file's entry records its
@@ -589,14 +551,7 @@ def _pos_delete_targets(
     plain = []
     for f in files:
         if _is_dv(f):
-            ref = f.get("referenced_data_file")
-            if ref is None:
-                raise IcebergFormatError(
-                    f"deletion vector {f.get('file_path')!r} records no "
-                    "referenced_data_file — cannot apply; refused rather "
-                    "than resurrect deleted rows"
-                )
-            targets.add(os.path.basename(ref))
+            targets.add(os.path.basename(_dv_ref(f)))
         else:
             plain.append(f)
     if plain:
@@ -680,9 +635,7 @@ def read_iceberg_snapshot(
         with_ordinal=bool(pos), with_seq=bool(eq),
     )
     if pos:
-        dels = _read_pos_deletes(spark, base_path, meta, pos).select(
-            F.col("file_path").alias("__path"), F.col("pos").alias("__pos")
-        )
+        dels = _read_pos_deletes(spark, base_path, meta, pos)
         rows = rows.join(_size_hint(dels, pos), ["__path", "__pos"], "left_anti")
     if eq:
         rows = _apply_eq_deletes(
@@ -753,26 +706,21 @@ def read_iceberg_delete_view(
     key_cols: list[str] | None = None,
 ) -> DataFrame:
     """THE FLAGSHIP question asked of a foreign Iceberg table: which
-    rows did snapshot S delete?
+    rows did snapshot S delete? This decodes S's own manifests into the
+    parts ``row_deletes.delete_view`` assembles — never an untouched
+    file:
 
-    Three delete shapes, all reconstructed from S's own manifests —
-    never an untouched file:
-
-    - **Merge-on-read, position** (position delete files ADDED by S):
-      exact by construction — the delete file names (target file, row
-      ordinal), so the deleted images come from one join on (path,
-      ordinal). No user key needed.
-    - **Merge-on-read, equality** (equality delete files ADDED by S):
-      exact and keyless — the victims are the PARENT snapshot's live
-      rows semi-joined to the delete rows on the equality_ids columns
-      (every parent-live data file has sequence < S's by construction,
-      so the spec's strict-inequality rule is satisfied; a same-commit
-      re-insert is not parent-live and correctly never appears).
-    - **Copy-on-write** (data files REMOVED by S): candidates = the
-      removed files' rows (minus rows position-deleted BEFORE S — those
-      were already dead), survivors = rows of the files S ADDED;
-      deleted = one keyed anti-join (``key_cols`` required for this
-      shape; raised by name when absent)."""
+    - equality delete files ADDED by S: the parent snapshot's live rows
+      semi-joined to the delete rows on the equality_ids columns (exact
+      and keyless — every parent-live row has sequence < S's, so the
+      spec's strict-inequality rule holds; a same-commit re-insert is
+      not parent-live);
+    - position deletes and v3 DVs ADDED by S: by position over the
+      files they name, minus what the DVs S superseded already named
+      (exact and keyless);
+    - data files REMOVED by S: the keyed rewrite, the removed files'
+      rows minus those position-deleted before S, against the rows of
+      the files S added (``key_cols`` required)."""
     meta = _load_metadata(base_path)
     schema = _schema_for(meta)
     snaps = {s["snapshot-id"]: s for s in meta.get("snapshots") or []}
@@ -793,20 +741,20 @@ def read_iceberg_delete_view(
 
     pos_added = dfiles(ADDED, POSITION_DELETES)
     pos_prior = dfiles(EXISTING, POSITION_DELETES)
-    pos_removed = dfiles(DELETED, POSITION_DELETES)
+    # a removed DV is superseded only when S writes new DVs: v3 DVs are
+    # cumulative, the new one holding every position of the old
+    superseded = []
+    if any(_is_dv(f) for f in pos_added):
+        superseded = [
+            f for f in dfiles(DELETED, POSITION_DELETES) if _is_dv(f)
+        ]
     eq_added = dfiles(ADDED, EQUALITY_DELETES)
     removed_data = dfiles(DELETED, DATA)
     added_data = dfiles(ADDED, DATA)
     live_data = dfiles(EXISTING, DATA) + added_data
 
-    parts = []
+    exact = []
     if eq_added:
-        # exact, keyless: equality-delete rows added by S name the dying
-        # keys; every row LIVE at the parent snapshot has data sequence
-        # < S's (same-commit re-inserts are not in the parent), so the
-        # spec's strict-inequality rule is satisfied by construction and
-        # the victims are parent-live SEMI JOIN eq rows on the equality
-        # columns
         snaps_by_seq = sorted(
             (meta.get("snapshots") or []), key=lambda s: s["sequence-number"]
         )
@@ -828,43 +776,15 @@ def read_iceberg_delete_view(
                 dels = spark.read.schema(eq_schema).parquet(
                     _relocate(f["file_path"], location, base_path)
                 )
-                parts.append(
+                exact.append(
                     prev_rows.join(_size_hint(dels, [f]), cols, "left_semi")
                 )
+    by_position = None
     if pos_added:
-        # exact MOR reconstruction: only the files the new deletes name.
-        # v3 deletion vectors are CUMULATIVE (at most one DV per data
-        # file; a new DV supersedes — and contains — the old one, which
-        # S marks DELETED): the commit's own delta is new minus old,
-        # exactly the Delta DV delete-view algebra. The subtraction is
-        # fused into the DV parse task (per-referenced-file set
-        # difference) when the added position deletes are all DVs —
-        # identical output to the former two-subtree anti-join, minus
-        # its two exchanges; a mixed added set (plain files + DVs with
-        # superseded priors) keeps the general anti-join.
-        superseded = [f for f in pos_removed if _is_dv(f)]
-        dv_added = [f for f in pos_added if _is_dv(f)]
-        if superseded and dv_added and len(dv_added) == len(pos_added):
-            dels = _read_dv_positions(
-                spark, base_path, meta, dv_added, minus=superseded
-            ).select(
-                F.col("file_path").alias("__path"), F.col("pos").alias("__pos")
-            )
-        else:
-            dels = _read_pos_deletes(spark, base_path, meta, pos_added).select(
-                F.col("file_path").alias("__path"), F.col("pos").alias("__pos")
-            )
-            if superseded and dv_added:
-                old = _read_pos_deletes(
-                    spark, base_path, meta, superseded
-                ).select(
-                    F.col("file_path").alias("__path"),
-                    F.col("pos").alias("__pos"),
-                )
-                dels = dels.join(old, ["__path", "__pos"], "left_anti")
+        dels = _read_pos_deletes(spark, base_path, meta, pos_added, superseded)
         # target pruning resolves from MANIFEST metadata for DVs (no
-        # Spark job; formerly a collect over the parsed delete rows) —
-        # a superset is sound, the (path, pos) join below stays exact
+        # Spark job) — a superset is sound, the (path, pos) join stays
+        # exact
         targets = _pos_delete_targets(spark, base_path, meta, pos_added)
         target_files = [
             f for f in live_data + removed_data
@@ -873,43 +793,27 @@ def read_iceberg_delete_view(
         rows = _read_data_files(
             spark, base_path, meta, schema, target_files, with_ordinal=True
         )
-        parts.append(
-            rows.join(_size_hint(dels, pos_added), ["__path", "__pos"],
-                      "inner").select(*[f.name for f in schema.fields])
-        )
+        by_position = (rows, _size_hint(dels, pos_added))
+    cand = survivors = None
     if removed_data:
-        if not key_cols:
-            raise IcebergFormatError(
-                f"snapshot {snapshot_id} removed data files (copy-on-write "
-                "shape): pass key_cols to reconstruct which of their rows "
-                "did not survive"
-            )
         cand = _read_data_files(
             spark, base_path, meta, schema, removed_data, with_ordinal=True
         )
         if pos_prior:
-            prior = _read_pos_deletes(
-                spark, base_path, meta, pos_prior
-            ).select(
-                F.col("file_path").alias("__path"),
-                F.col("pos").alias("__pos"),
-            )
+            prior = _read_pos_deletes(spark, base_path, meta, pos_prior)
             cand = cand.join(_size_hint(prior, pos_prior),
                              ["__path", "__pos"], "left_anti")
         cand = cand.select(*[f.name for f in schema.fields])
         if added_data:
             survivors = _read_data_files(
                 spark, base_path, meta, schema, added_data
-            ).select(*key_cols)
-            cand = cand.join(survivors, key_cols, "left_anti")
-        parts.append(cand)
-
-    if not parts:
-        out = spark.createDataFrame([], schema)
-    else:
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
+            )
+    out = delete_view(
+        spark, schema, error=IcebergFormatError,
+        what=f"snapshot {snapshot_id}", exact=exact,
+        by_position=by_position, removed=cand, added=survivors,
+        key_cols=key_cols,
+    )
     return out.withColumn(
         "_deleted_by_snapshot", F.lit(snapshot_id).cast("long")
     ).withColumn(

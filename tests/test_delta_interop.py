@@ -64,6 +64,10 @@ def test_delta_flagship_delete_view(spark):
     # false) is invisible to the flagship question
     assert read_delta_delete_view(spark, FIXTURE, 4, ["id"]).count() == 0
     assert read_delta_delete_view(spark, FIXTURE, 3, ["id"]).count() == 0
+    # the first commit has no pre-commit state and deletes nothing
+    v0 = read_delta_delete_view(spark, FIXTURE, 0)
+    assert v0.count() == 0
+    assert v0.columns[-2:] == ["_deleted_by_version", "_deleted_at_ts"]
 
 
 def test_delta_checkpoint_only_replay(spark, tmp_path):
@@ -372,6 +376,9 @@ def test_delta_deletion_vectors(spark):
     assert [(r.id, r.value, r._deleted_by_version)
             for r in v5.collect()] == [("id4", 40, 5)]
     v6 = read_delta_delete_view(spark, FIXTURE, 6)
+    # the older DV is subtracted inside the one DV parse task
+    plan = v6._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1 and "LeftAnti" not in plan, plan
     assert [(r.id, r.value, r._deleted_by_version)
             for r in v6.collect()] == [("id6", 60, 6)]
     # CDC stamps stay per-key precise through DV commits

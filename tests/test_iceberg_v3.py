@@ -74,6 +74,15 @@ def test_puffin_refusals():
     bad[b["offset"] + 5] ^= 0xFF
     with pytest.raises(PuffinFormatError):
         parse_dv_blob_at(bytes(bad), b["offset"], b["length"])
+    # a manifest content_size_in_bytes that disagrees with the blob's
+    # own length prefix refuses by name, short or long
+    for length in (b["length"] - 4, b["length"] + 8):
+        with pytest.raises(PuffinFormatError, match="size mismatch"):
+            parse_dv_blob_at(img, b["offset"], length)
+    # a file cut inside the blob refuses by name, not with struct.error
+    for cut, match in ((2, "past the end"), (10, "truncated")):
+        with pytest.raises(PuffinFormatError, match=match):
+            parse_dv_blob_at(img[:b["offset"] + cut], b["offset"], b["length"])
 
 
 def test_v3_snapshot_applies_live_dv(spark):
@@ -95,9 +104,43 @@ def test_v3_dv_delete_view_is_new_minus_superseded(spark):
     the commit's own delete view must be exactly ordinal 3 (id4)."""
     snaps = _snaps()
     dv3 = read_iceberg_delete_view(spark, V3, snaps[2]["snapshot-id"])
+    # the superseded DV is subtracted inside the one DV parse task
+    plan = dv3._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1 and "LeftAnti" not in plan, plan
     assert [(r.id, r.value) for r in dv3.collect()] == [("id4", 40)]
     dv2 = read_iceberg_delete_view(spark, V3, snaps[1]["snapshot-id"])
     assert sorted(r.id for r in dv2.collect()) == ["id2", "id3"]
+
+
+def test_v3_mixed_snapshot_subtracts_superseded_from_plain_deletes(
+        spark, tmp_path):
+    """A snapshot adding plain position files AND a DV over an older DV:
+    the superseded positions leave every added delete — the DV's inside
+    its parse task, the plain file's through the anti-join."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hudi_delete_view_spark.sources.iceberg import _read_pos_deletes
+
+    da, db = "file:///t/data/da.parquet", "file:///t/data/db.parquet"
+    dvs = []
+    for name, positions in (("old", [1, 2]), ("new", [1, 2, 3])):
+        blob = {"type": DV_BLOB_TYPE, "data": dv_blob_bytes(positions)}
+        (tmp_path / f"{name}.puffin").write_bytes(write_puffin([blob]))
+        dvs.append({
+            "file_path": f"{name}.puffin", "file_format": "PUFFIN",
+            "referenced_data_file": da, "content_offset": blob["offset"],
+            "content_size_in_bytes": blob["length"],
+        })
+    old, new = dvs
+    pq.write_table(pa.table({"file_path": [da, da, db], "pos": [2, 5, 1]}),
+                   tmp_path / "pos.parquet")
+    plain_file = {"file_path": "pos.parquet", "file_format": "PARQUET"}
+    dels = _read_pos_deletes(
+        spark, str(tmp_path), {"location": ""}, [plain_file, new], [old]
+    )
+    assert sorted(tuple(r) for r in dels.collect()) == [
+        (da, 3), (da, 5), (db, 1)]
 
 
 def test_v3_dv_missing_referenced_file_refuses(spark, tmp_path):
