@@ -115,6 +115,15 @@ class CommitMetadata:
                 return stat
         return None
 
+    def published_schema(self):
+        """The Spark ``StructType`` this commit published, or None for a
+        commit that predates schema publication."""
+        if not self.schema_json:
+            return None
+        from pyspark.sql.types import StructType
+
+        return StructType.fromJson(json.loads(self.schema_json))
+
     def to_json(self) -> str:
         return json.dumps(
             {

@@ -1,10 +1,20 @@
-"""Which rows did a commit delete? The format-free half of the foreign
-Delta and Iceberg delete views (the reference pairs each rewritten file
-with its predecessor and anti-joins on the record key,
-``HudiDeleteHandle.java:44-81``).
+"""Which rows did a commit delete? The format-free half of every delete
+view (the reference pairs each rewritten file with its predecessor and
+anti-joins on the record key, ``HudiDeleteHandle.java:44-81``).
 
-Each format only decodes its log or manifests into the parts a commit
-names; this module reads them back:
+Each format only decodes its metadata into the parts a commit names,
+and ``delete_view`` assembles them. The five views and their parts:
+
+- native COW (``DeleteView``): its file pairs are the keyed rewrite on
+  ``(file id, record key)`` (the two-phase scale shape: one exact part);
+- native MOR (``MorTable.delete_view``): log tombstones select an exact
+  part; base rewrites are the keyed rewrite;
+- foreign Hudi MOR: the log blocks' tombstones select an exact part;
+- Delta: rows by DV position, plus the keyed rewrite;
+- Iceberg: rows by position, equality deletes (exact), the keyed
+  rewrite.
+
+This module reads the parts back:
 
 - ``dv_positions``: the one executor-side deletion-vector reader. Delta
   DVs and Iceberg v3 Puffin DVs share one envelope ([int32 BE size]
@@ -12,9 +22,8 @@ names; this module reads them back:
   ``roaring.read_dv_from_file``. A blob is ``(kind, src, offset,
   size)``: kind ``"inline"`` carries a Z85 payload in ``src``, kind
   ``"file"`` a path, the envelope's offset and the DV's byte size.
-- ``delete_view``: the union of the parts — rows newly dead by
-  position, the keyed copy-on-write rewrite, and any extra exact part
-  (Iceberg equality deletes).
+- ``delete_view``: the union of the parts — exact parts, rows newly
+  dead by position, and the keyed copy-on-write rewrite.
 """
 
 from __future__ import annotations
@@ -73,8 +82,8 @@ def delete_view(
     spark: SparkSession,
     schema: T.StructType,
     *,
-    error: type[Exception],
-    what: str,
+    error: type[Exception] = ValueError,
+    what: str = "the commit",
     exact: Sequence[DataFrame] = (),
     by_position: tuple[DataFrame, DataFrame] | None = None,
     removed: DataFrame | None = None,
@@ -82,6 +91,7 @@ def delete_view(
     key_cols: list[str] | None = None,
 ) -> DataFrame:
     """The rows ``what`` (e.g. ``"commit 5"``) deleted, in ``schema``.
+    ``error`` and ``what`` only name the refusal below.
 
     - ``exact``: parts that already are deleted rows.
     - ``by_position``: ``(rows, positions)`` — rows carrying the

@@ -1218,14 +1218,7 @@ class CowTable:
         ts = as_of or self.timeline.latest_timestamp()
         if ts is None:
             return None
-        schema_json = self.timeline.commit_metadata(ts).schema_json
-        if not schema_json:
-            return None
-        import json as _json
-
-        from pyspark.sql.types import StructType
-
-        return StructType.fromJson(_json.loads(schema_json))
+        return self.timeline.commit_metadata(ts).published_schema()
 
     def _read_paths(self, paths: list[str], as_of: str | None = None) -> DataFrame:
         """Vectorized scan of resolved slice paths with the PUBLISHED
@@ -1273,14 +1266,9 @@ class CowTable:
             slices = {k: s for k, s in slices.items() if k[0] in wanted}
         paths = [s.base_path for s in slices.values() if s.base_path]
         if not paths:
-            schema_json = None
-            latest = self.timeline.latest_timestamp()
-            if latest:
-                schema_json = self.timeline.commit_metadata(latest).schema_json
-            if schema_json:
-                from pyspark.sql.types import StructType
-
-                return self.spark.createDataFrame([], StructType.fromJson(__import__("json").loads(schema_json)))
+            schema = self._published_schema()
+            if schema is not None:
+                return self.spark.createDataFrame([], schema)
             raise TimelineError(f"table at {self.base_path} has no commits")
         return self._read_paths(paths, as_of)
 

@@ -34,6 +34,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans import row_deletes
 from ..plans.timeline import Timeline, TimelineError
 from .cow import (
     COMMIT_TIME_FIELD,
@@ -110,21 +111,6 @@ class DeleteView:
             )
         return pairs
 
-    def _published_schema(self):
-        """Schema the table published at the delete commit (StructType), or
-        None for pre-schema-payload timelines. Metadata-only planning: old
-        slices straddling a schema evolution align to it with NULLs — the
-        same union mergeSchema inferred, without a driver footer read per
-        predecessor slice."""
-        schema_json = self.timeline.commit_metadata(self.timestamp).schema_json
-        if not schema_json:
-            return None
-        import json as _json
-
-        from pyspark.sql.types import StructType
-
-        return StructType.fromJson(_json.loads(schema_json))
-
     # -- A6-A9: the distributed pipeline --------------------------------
     def _compute(self) -> DataFrame:
         pairs = self._file_pairs()
@@ -132,9 +118,12 @@ class DeleteView:
             return None  # nothing deleted at T
         old_paths = [p[1] for p in pairs]
         new_paths = [p[2] for p in pairs]
-        # file-group tag from the stored file name (JVM regexp; no
-        # input_file_name needed because the writer stamps _hoodie_file_name)
-        schema = self._published_schema()
+        # metadata-only planning: old slices straddling a schema evolution
+        # read with the delete commit's published schema, the added columns
+        # as NULLs — the union mergeSchema inferred, without a driver
+        # footer read per predecessor slice
+        meta = self.timeline.commit_metadata(self.timestamp)
+        schema = meta.published_schema()
         reader = (
             self.spark.read.schema(schema)
             if schema is not None
@@ -142,6 +131,8 @@ class DeleteView:
             # evolution (one group rewritten with a new column, another not)
             else self.spark.read.option("mergeSchema", "true")
         )
+        # file-group tag from the stored file name (JVM regexp; no
+        # input_file_name needed because the writer stamps _hoodie_file_name)
         old_df = reader.parquet(*old_paths).withColumn(
             _FID, file_id_expr(F.col(FILE_NAME_FIELD))
         )
@@ -151,17 +142,18 @@ class DeleteView:
         new_reader = (
             self.spark.read.schema(schema) if schema is not None else self.spark.read
         )
-        new_keys = (
-            new_reader.parquet(*new_paths)
-            .select(
+        keys = [_FID, RECORD_KEY_FIELD]
+
+        def read_keys(paths):
+            return new_reader.parquet(*paths).select(
                 file_id_expr(F.col(FILE_NAME_FIELD)).alias(_FID),
                 F.col(RECORD_KEY_FIELD),
             )
-        )
+
+        new_keys = read_keys(new_paths)
         # join shape from commit stats (known before any data is read):
         # rows in the new slices bound the anti-join build side,
         # totalRecordsDeleted bounds the answer
-        meta = self.timeline.commit_metadata(self.timestamp)
         new_rows = sum(
             stat.num_writes
             for _p, stat in meta.all_stats()
@@ -174,30 +166,17 @@ class DeleteView:
             # scale shape: narrow key anti-join -> broadcast the (small)
             # deleted-key set back onto the wide side. The wide scan feeds
             # a BroadcastHashJoin directly — no Exchange of wide rows.
-            old_keys = (
-                new_reader.parquet(*old_paths)
-                .select(
-                    file_id_expr(F.col(FILE_NAME_FIELD)).alias(_FID),
-                    F.col(RECORD_KEY_FIELD),
-                )
+            deleted_keys = read_keys(old_paths).join(
+                new_keys, on=keys, how="left_anti"
             )
-            deleted_keys = old_keys.join(
-                new_keys, on=[_FID, RECORD_KEY_FIELD], how="left_anti"
-            )
-            deleted = old_df.join(
-                F.broadcast(deleted_keys),
-                on=[_FID, RECORD_KEY_FIELD],
-                how="left_semi",
-            )
+            deleted = row_deletes.delete_view(self.spark, old_df.schema, exact=[
+                old_df.join(F.broadcast(deleted_keys), on=keys, how="left_semi")
+            ])
         else:
-            deleted = old_df.join(new_keys, on=[_FID, RECORD_KEY_FIELD], how="left_anti")
-        # schema evolution: columns added to the table AFTER the deleted
-        # rows' slices were written must still appear (as NULLs) — align to
-        # the delete commit's published schema, same contract as a snapshot
-        if schema is not None:
-            for f_ in schema.fields:
-                if f_.name not in deleted.columns:
-                    deleted = deleted.withColumn(f_.name, F.lit(None).cast(f_.dataType))
+            deleted = row_deletes.delete_view(
+                self.spark, old_df.schema,
+                removed=old_df, added=new_keys, key_cols=keys,
+            )
         # A9: stamp the delete commit as the row's processing time
         return deleted.withColumn(COMMIT_TIME_FIELD, F.lit(self.timestamp)).drop(_FID)
 
@@ -225,7 +204,7 @@ class DeleteView:
         if df is None:
             # empty view: publish an empty parquet dir with the table schema
             self.timeline.fs.rmtree(path)
-            schema = self._published_schema()
+            schema = self.timeline.commit_metadata(self.timestamp).published_schema()
             if schema is not None:
                 empty = self.spark.createDataFrame([], schema)
                 empty.write.mode("overwrite").parquet(path)
@@ -241,7 +220,7 @@ class DeleteView:
         (``_compute``), so the serve plan carries that schema explicitly —
         no footer inference on the hot repeat-query path."""
         path = self.materialize()
-        schema = self._published_schema()
+        schema = self.timeline.commit_metadata(self.timestamp).published_schema()
         if schema is not None:
             return self.spark.read.schema(schema).parquet(path)
         return self.spark.read.parquet(path)
@@ -286,12 +265,7 @@ def delete_views_between(
         if timeline.commit_metadata(ts).total_records_deleted <= 0:
             continue  # stats pruning: commit deleted nothing
         view_dirs.append(DeleteView(spark, base_path, ts).materialize())
-    import json as _json
-
-    from pyspark.sql.types import StructType
-
-    schema_json = timeline.commit_metadata(end).schema_json
-    schema = StructType.fromJson(_json.loads(schema_json)) if schema_json else None
+    schema = timeline.commit_metadata(end).published_schema()
     if not view_dirs:
         # empty range: empty frame with the table's published schema + stamp
         return spark.createDataFrame([], schema)

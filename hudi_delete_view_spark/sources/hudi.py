@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..plans import row_deletes
 from ..plans.fs import fs_for
 from ..plans.pruning import bounds_filter, may_overlap
 from .cow import PARTITION_PATH_FIELD, RECORD_KEY_FIELD
@@ -546,34 +547,9 @@ def read_hudi_mor_cdc(
         F.col("__a._hoodie_commit_time").alias("change_commit"),
         F.col("__a").alias("__img"),
     )
-    # delete stamps: tombstones (delete-block entries or
-    # _hoodie_is_deleted records) in the window's committed log blocks
-    valid = {ts for ts in instants if ts <= end}
-    md = read_hudi_metadata_files(base_path) if listing in ("auto", "metadata") else None
-    slices = (
-        _slices_from_metadata(base_path, valid, md)
-        if md is not None
-        else _list_slices(base_path, valid)
-    )
-    slices = [s for s in slices if s.file_id in touched]
-    logs = _log_rows_df(spark, slices, before.schema, valid)
-    tomb = (
-        logs.filter(
-            (F.col("__is_delete")
-             | F.coalesce(F.col("_hoodie_is_deleted"), F.lit(False)))
-            & (F.col("__ord_instant") > F.lit(begin_exclusive))
-            & (F.col("__ord_instant") <= F.lit(end))
-        )
-        .groupBy(*key)
-        .agg(F.max("__ord_instant").alias("__del_ts"))
-    ) if "_hoodie_is_deleted" in before.columns else (
-        logs.filter(
-            F.col("__is_delete")
-            & (F.col("__ord_instant") > F.lit(begin_exclusive))
-            & (F.col("__ord_instant") <= F.lit(end))
-        )
-        .groupBy(*key)
-        .agg(F.max("__ord_instant").alias("__del_ts"))
+    tomb = _tombstones(
+        spark, base_path, instants, begin_exclusive, end, touched,
+        before.schema, listing,
     )
     deletes = (
         j.filter(F.col("__a").isNull())
@@ -656,10 +632,6 @@ def read_hudi_mor_point_lookup(
             raise ValueError(f"no record_index partition under {base_path!r}")
         if locations is not None:
             fids = {fid for (_p, fid) in locations.values()}
-            if not fids:
-                return read_hudi_mor_snapshot(
-                    spark, base_path, as_of=as_of
-                ).filter(F.lit(False))
             return read_hudi_mor_snapshot(
                 spark, base_path, as_of=as_of, file_ids=fids
             ).filter(F.col("_hoodie_record_key").isin(list(keys)))
@@ -670,12 +642,7 @@ def read_hudi_mor_point_lookup(
         raise ValueError(f"no completed Hudi instants under {base_path!r}")
     upto = as_of if as_of is not None else instants[-1]
     valid = {ts for ts in instants if ts <= upto}
-    md = read_hudi_metadata_files(base_path)
-    slices = (
-        _slices_from_metadata(base_path, valid, md)
-        if md is not None
-        else _list_slices(base_path, valid)
-    )
+    slices = _committed_slices(base_path, valid, "auto")
     kb = [k.encode("utf-8") for k in keys]
     fids = set()
     for s in slices:
@@ -685,10 +652,6 @@ def read_hudi_mor_point_lookup(
         bloom = _footer_bloom(s.base_path)
         if bloom is None or any(bloom.might_contain(k) for k in kb):
             fids.add(s.file_id)
-    if not fids:
-        return read_hudi_mor_snapshot(spark, base_path, as_of=as_of).filter(
-            F.lit(False)
-        )
     return read_hudi_mor_snapshot(
         spark, base_path, as_of=as_of, file_ids=fids
     ).filter(F.col("_hoodie_record_key").isin(list(keys)))
@@ -845,6 +808,54 @@ def _log_rows_df(
     return src.mapInPandas(parse, out_schema)
 
 
+def _committed_slices(
+    base_path: str, valid: set[str], listing: str
+) -> list[_Slice]:
+    """Committed slices, named by the metadata table's files partition
+    or by a directory walk (``listing``: see ``read_hudi_mor_snapshot``)."""
+    if listing not in ("auto", "walk", "metadata"):
+        raise ValueError(f"unknown listing mode {listing!r}")
+    md = (
+        read_hudi_metadata_files(base_path) if listing in ("auto", "metadata")
+        else None
+    )
+    if listing == "metadata" and md is None:
+        raise ValueError(f"no Hudi metadata table under {base_path!r}")
+    if md is not None:
+        return _slices_from_metadata(base_path, valid, md)
+    return _list_slices(base_path, valid)
+
+
+def _tombstones(
+    spark: SparkSession, base_path: str, instants: list[str],
+    begin_exclusive: str, end: str, file_ids: set[str],
+    data_schema: T.StructType, listing: str = "auto",
+) -> DataFrame:
+    """(partition, key, ``__del_ts``): every key the committed log
+    blocks of instants in (begin, end] tombstone — DELETE_BLOCK entries
+    plus ``_hoodie_is_deleted`` records — with its last tombstoning
+    instant. Decodes only the logs of the ``file_ids`` groups, in the
+    same executor-side parse the snapshot uses (``_log_rows_df``)."""
+    valid = {ts for ts in instants if ts <= end}
+    slices = [
+        s for s in _committed_slices(base_path, valid, listing)
+        if s.file_id in file_ids
+    ]
+    tomb = F.col("__is_delete")
+    if "_hoodie_is_deleted" in data_schema.names:
+        tomb = tomb | F.coalesce(F.col("_hoodie_is_deleted"), F.lit(False))
+    return (
+        _log_rows_df(spark, slices, data_schema, valid)
+        .filter(
+            tomb
+            & (F.col("__ord_instant") > F.lit(begin_exclusive))
+            & (F.col("__ord_instant") <= F.lit(end))
+        )
+        .groupBy(PARTITION_PATH_FIELD, RECORD_KEY_FIELD)
+        .agg(F.max("__ord_instant").alias("__del_ts"))
+    )
+
+
 def read_hudi_mor_snapshot(
     spark: SparkSession, base_path: str, as_of: str | None = None,
     listing: str = "auto", file_ids: set[str] | None = None,
@@ -873,12 +884,10 @@ def read_hudi_mor_snapshot(
     file-granular). A column without a column_stats entry degrades to
     the plain post-merge filter.
 
-    ``file_ids``: restrict the merge to the named file groups (the
-    record-index point-lookup path)."""
+    ``file_ids``: restrict the merge to the named file groups (an
+    empty frame when none of them is committed)."""
     from pyspark.sql import Window as W
 
-    if listing not in ("auto", "walk", "metadata"):
-        raise ValueError(f"unknown listing mode {listing!r}")
     instants = hudi_completed_instants(base_path)
     if not instants:
         raise ValueError(f"no completed Hudi instants under {base_path!r}")
@@ -889,34 +898,23 @@ def read_hudi_mor_snapshot(
         raise ValueError(
             f"as_of {as_of!r} precedes the first instant {instants[0]!r}"
         )
-    md_listing = (
-        read_hudi_metadata_files(base_path) if listing in ("auto", "metadata")
-        else None
-    )
-    if listing == "metadata" and md_listing is None:
-        raise ValueError(f"no Hudi metadata table under {base_path!r}")
-    slices = (
-        _slices_from_metadata(base_path, valid, md_listing)
-        if md_listing is not None
-        else _list_slices(base_path, valid)
-    )
+    slices = _committed_slices(base_path, valid, listing)
     if file_ids is not None:
-        # point-lookup restriction (record-index callers): merge only
-        # the named file groups' slices
+        # merge only the named file groups' slices
         slices = [s for s in slices if s.file_id in file_ids]
-    if bounds:
-        # data skipping via the metadata table's column_stats index:
-        # drop file groups every file of which excludes a column's range;
-        # the residual row filter applies after the merge
-        for col, (lo, hi) in bounds.items():
-            stats = read_hudi_column_stats(base_path, col)
-            if stats:
-                slices = _prune_slices_by_stats(slices, stats, lo, hi)
-        if not slices:
-            empty = read_hudi_mor_snapshot(
-                spark, base_path, as_of=as_of, listing=listing
-            )
-            return empty.filter(F.lit(False))
+    # data skipping via the metadata table's column_stats index: drop
+    # file groups every file of which excludes a column's range; the
+    # residual row filter applies after the merge
+    for col, (lo, hi) in (bounds or {}).items():
+        stats = read_hudi_column_stats(base_path, col)
+        if stats:
+            slices = _prune_slices_by_stats(slices, stats, lo, hi)
+    if not slices and (bounds or file_ids is not None):
+        # restricted to nothing: empty frame, columns of the full read
+        empty = read_hudi_mor_snapshot(
+            spark, base_path, as_of=as_of, listing=listing
+        )
+        return empty.filter(F.lit(False))
     if not slices:
         raise ValueError(f"no committed base files under {base_path!r}")
 
@@ -1304,12 +1302,10 @@ def read_hudi_mor_delete_view(
     (``HudiDeleteHandle.java:73-74`` semantics).
 
     MOR deletes live in LOG BLOCKS, not rewritten base files, so the
-    reconstruction differs from the COW path: the commit's tombstoned
-    keys (DELETE_BLOCK entries + ``_hoodie_is_deleted`` data-block
-    records whose ``INSTANT_TIME`` header equals the commit) semi-select
-    the merged snapshot AS OF the preceding instant. Key extraction
-    rides the same executor-side ``mapInPandas`` parse as the snapshot
-    reader; the pre-image read is the ordinary time-travel merge."""
+    commit's tombstoned keys (``_tombstones``, shared with the CDC)
+    semi-select the merged snapshot AS OF the preceding instant — one
+    exact part for ``row_deletes.delete_view``. Both sides read only
+    the file groups the commit's write stats name."""
     instants = hudi_completed_instants(base_path)
     if timestamp not in instants:
         raise ValueError(
@@ -1322,22 +1318,13 @@ def read_hudi_mor_delete_view(
             f"{timestamp!r} is the bootstrap instant: nothing precedes it"
         )
     prev = instants[idx - 1]
-    valid = {ts for ts in instants if ts <= timestamp}
-    slices = _list_slices(base_path, valid)
-    base = spark.read.parquet(*[s.base_path for s in slices])
-    logs = _log_rows_df(spark, slices, base.schema, valid)
-    tomb = F.col("__is_delete") | F.coalesce(
-        F.col("_hoodie_is_deleted"), F.lit(False)
-    ) if "_hoodie_is_deleted" in base.columns else F.col("__is_delete")
-    deleted_keys = (
-        logs.filter(F.col("__ord_instant") == timestamp)
-        .filter(tomb)
-        .select("_hoodie_partition_path", "_hoodie_record_key")
-        .distinct()
+    touched = hudi_touched_file_ids(base_path, prev, timestamp)
+    pre = read_hudi_mor_snapshot(spark, base_path, as_of=prev, file_ids=touched)
+    key = [PARTITION_PATH_FIELD, RECORD_KEY_FIELD]
+    tomb = _tombstones(
+        spark, base_path, instants, prev, timestamp, touched, pre.schema
     )
-    pre = read_hudi_mor_snapshot(spark, base_path, as_of=prev)
-    return pre.join(
-        F.broadcast(deleted_keys),
-        ["_hoodie_partition_path", "_hoodie_record_key"],
-        "left_semi",
-    ).withColumn("_hoodie_commit_time", F.lit(timestamp))
+    gone = pre.join(F.broadcast(tomb.select(*key)), key, "left_semi")
+    return row_deletes.delete_view(spark, pre.schema, exact=[gone]).withColumn(
+        "_hoodie_commit_time", F.lit(timestamp)
+    )

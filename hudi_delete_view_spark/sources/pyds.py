@@ -145,7 +145,7 @@ def _load_schema(path: str, as_of: str | None) -> StructType:
     ts = as_of or tl.latest_timestamp()
     if ts is None:
         raise ValueError(f"no commits at {path}")
-    return StructType.fromJson(json.loads(tl.commit_metadata(ts).schema_json))
+    return tl.commit_metadata(ts).published_schema()
 
 
 class LakeviewReader(DataSourceReader):

@@ -842,6 +842,9 @@ def test_mor_foreign_delete_view(spark):
     from hudi_delete_view_spark.sources.hudi import read_hudi_mor_delete_view
 
     dv = read_hudi_mor_delete_view(spark, MOR_FIXTURE, M2)
+    # M2 never touched FG3: its base is not read
+    assert not any(os.path.basename(f).startswith("b5c6d7e8-")
+                   for f in dv.inputFiles())
     got = {(r["id"], r["name"], r["value"], r["_hoodie_commit_time"])
            for r in dv.select("id", "name", "value",
                               "_hoodie_commit_time").collect()}

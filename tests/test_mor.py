@@ -2,6 +2,7 @@
 read-optimized view, delete view over logs (FIXTURES.md §2.2)."""
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -133,17 +134,38 @@ def test_log_free_groups_bypass_merge_window(spark, scratch):
     assert rows2 == rows
 
 
+def _executed(df) -> str:
+    """The executed plan, read before any action (the adaptive plan then
+    prints only its initial tree)."""
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _merge_windows(df) -> int:
+    return len(re.findall(r"\bWindow \[", _executed(df)))
+
+
 def test_mor_delete_view(table, orders):
     victims = orders.filter("o_orderkey % 11 = 0")
     n = victims.count()
     table.delete_delta(victims.select("o_orderkey", "o_orderstatus"), C2)
     dv = table.delete_view(C2)
+    # tombstones semi-select the rows at T-1: no anti-join, and no merge
+    # at all while T-1 is log-free
+    assert "LeftAnti" not in _executed(dv) and _merge_windows(dv) == 0
     assert dv.count() == n
     got = {r[0] for r in dv.select(RECORD_KEY_FIELD).collect()}
     want = {str(r.o_orderkey) for r in victims.select("o_orderkey").collect()}
     assert got == want
     # deleted rows carry their last-known payload (from the base slice)
     assert dv.filter(F.col("o_totalprice").isNull()).count() == 0
+
+    # over a logged T-1: one merge window (T-1's), none at T, no anti-join
+    victims3 = orders.filter("o_orderkey % 13 = 0 AND NOT o_orderkey % 11 = 0")
+    table.delete_delta(victims3.select("o_orderkey", "o_orderstatus"), C3)
+    dv3 = table.delete_view(C3)
+    assert "LeftAnti" not in _executed(dv3) and _merge_windows(dv3) == 1
+    got3 = {r[0] for r in dv3.select(RECORD_KEY_FIELD).collect()}
+    assert got3 == {str(r.o_orderkey) for r in victims3.collect()}
 
 
 def test_mor_incremental_reads_log_changes(table, orders):
@@ -362,7 +384,19 @@ def test_merge_delta_mixed_actions(spark, scratch):
     assert meta.total_records_deleted == 2
     got = {r["k"]: r["v"] for r in t.snapshot().select("k", "v").collect()}
     assert got == {1: 999, 2: 20, 4: 999, 5: 50, 7: 70, 8: 80, 9: 90, 10: 100, 21: 210}
-    dv = {r["k"] for r in t.delete_view("20270602000000").collect()}
+    dv_df = t.delete_view("20270602000000")
+    # only the groups holding k=3 and k=6 are read, at T-1 and in T's logs
+    deleting = {
+        s.file_id for _p, s in meta.all_stats() if s.num_deletes > 0
+    }
+    untouched = {
+        os.path.basename(f)
+        for g, sl in resolve_slices(t.timeline).items() if g[1] not in deleting
+        for f in [sl.base_path, *sl.log_paths] if f
+    }
+    assert untouched  # the commit deleted from a strict subset of groups
+    assert not untouched & {os.path.basename(f) for f in dv_df.inputFiles()}
+    dv = {r["k"] for r in dv_df.collect()}
     assert dv == {3, 6}
     # base files untouched: read-optimized still serves the original rows
     ro = {r["k"]: r["v"] for r in t.read_optimized().select("k", "v").collect()}
@@ -412,6 +446,10 @@ def test_cow_writers_on_mor_absorb_logs(spark, scratch):
     t.delete(spark.createDataFrame([(1,)], "k int"), "20270604000000")
     got = {r["k"]: r["v"] for r in t.snapshot().select("k", "v").collect()}
     assert got == {2: 222, 4: 40, 5: 50}
+    # the delete view of a base rewrite: merged rows at T-1 whose keys the
+    # new base file lacks
+    dv = t.delete_view("20270604000000").select("k", "v").collect()
+    assert {(r["k"], r["v"]) for r in dv} == {(1, 10)}
     # and the same through a COW-style merge
     t.merge_into(
         spark.createDataFrame([(4, 444, False), (5, 0, True)], "k int, v int, is_del boolean"),
@@ -419,6 +457,8 @@ def test_cow_writers_on_mor_absorb_logs(spark, scratch):
     )
     got = {r["k"]: r["v"] for r in t.snapshot().select("k", "v").collect()}
     assert got == {2: 222, 4: 444}
+    dv = t.delete_view("20270605000000").select("k", "v").collect()
+    assert {(r["k"], r["v"]) for r in dv} == {(5, 50)}
 
 
 def test_size_tiered_compaction_rewrites_fewer_bytes(spark, scratch):
