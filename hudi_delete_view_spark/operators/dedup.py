@@ -330,6 +330,30 @@ def ngram_jaccard_pairs(
     )
 
 
+def _verify_strong_pairs(
+    docs: DataFrame,
+    strong: DataFrame,
+    id_col: str,
+    text_col: str,
+    threshold: float,
+    shingle_k: int,
+) -> DataFrame:
+    """The funnel's verify tail: exact n-gram Jaccard of the estimate-pruned
+    ``strong`` pairs (id_a, id_b) over their member docs in ``docs``.
+
+    ``strong`` is materialized first (tiny: id pairs only) so the
+    member-doc semi-join doesn't re-execute the whole funnel; then ONLY
+    pair-member docs are shingled — after the estimate prune that's a
+    small fraction of the corpus (measured ~5x faster than shingling every
+    doc at sf0.1). The members come from one scan of the cached pairs."""
+    strong = register_cache(strong)
+    members = strong.select(F.explode(F.array("id_a", "id_b")).alias(id_col)).distinct()
+    return ngram_jaccard_pairs(
+        docs.join(F.broadcast(members), id_col, "left_semi"),
+        id_col, text_col, pairs=strong, threshold=threshold, shingle_k=shingle_k,
+    )
+
+
 def minhash_verified_pairs(
     df: DataFrame,
     id_col: str,
@@ -357,22 +381,7 @@ def minhash_verified_pairs(
         .filter(F.col("est_jaccard") >= threshold - est_margin)
         .select("id_a", "id_b")
     )
-    # materialize the post-prune pair set (tiny: id pairs only) so the
-    # member-doc semi-join below doesn't re-execute the whole funnel; then
-    # shingle ONLY pair-member docs for the exact verify — after the
-    # estimate prune that's a small fraction of the corpus (measured ~5x
-    # faster than shingling every doc at sf0.1; the earlier note about
-    # semi-joins being slower predates this barrier)
-    strong = register_cache(strong)
-    members = (
-        strong.select(F.col("id_a").alias(id_col))
-        .union(strong.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    return ngram_jaccard_pairs(
-        df.join(F.broadcast(members), id_col, "left_semi"),
-        id_col, text_col, pairs=strong, threshold=threshold, shingle_k=shingle_k,
-    )
+    return _verify_strong_pairs(df, strong, id_col, text_col, threshold, shingle_k)
 
 
 def minhash_dedup(
@@ -1087,16 +1096,8 @@ def minhash_dedup_incremental(
         .filter(F.col("est_jaccard") >= threshold - est_margin)
         .select("id_a", "id_b")
     )
-    strong = register_cache(strong)
-    members = (
-        strong.select(F.col("id_a").alias(id_col))
-        .union(strong.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    corpus = base.unionByName(inc)
-    verified = ngram_jaccard_pairs(
-        corpus.join(F.broadcast(members), id_col, "left_semi"),
-        id_col, text_col, pairs=strong, threshold=threshold, shingle_k=shingle_k,
+    verified = _verify_strong_pairs(
+        base.unionByName(inc), strong, id_col, text_col, threshold, shingle_k
     )
     losers = verified.select(F.col("id_b").alias(id_col)).distinct()
     return inc.join(losers, id_col, "left_anti")

@@ -29,6 +29,31 @@ def md5_frac32_sql(inner: str) -> str:
     )
 
 
+def _plans_exchange(df: DataFrame) -> bool:
+    """Whether ``df``'s physical plan holds a shuffle or broadcast exchange,
+    looking through adaptive plans, subqueries and cached plans. Plans the
+    query; runs none of it."""
+    jvm = df.sparkSession.sparkContext._jvm
+    kinds = [
+        jvm.java.lang.Class.forName(name)
+        for name in (
+            "org.apache.spark.sql.execution.exchange.Exchange",
+            "org.apache.spark.sql.execution.adaptive.ExchangeQueryStageExec",
+        )
+    ]
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        if any(k.isInstance(node) for k in kinds):
+            return True
+        if node.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+        # innerChildren: subqueries, and the plan under a cached relation
+        for seq in (node.children(), node.innerChildren()):
+            stack.extend(seq.apply(i) for i in range(seq.size()))
+    return False
+
+
 def spread(df: DataFrame, min_factor: float = 0.5) -> DataFrame:
     """Ensure a CPU-heavy narrow map downstream has enough partitions to
     use the cluster.
@@ -38,9 +63,18 @@ def spread(df: DataFrame, min_factor: float = 0.5) -> DataFrame:
     single core. Repartition only when the source parallelism is below
     ``min_factor * defaultParallelism`` — on a real multi-file 100 TB scan
     the input already has thousands of splits and this is a no-op (no
-    shuffle added)."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
+    shuffle added).
+
+    Never executes its input: the decision comes from the physical plan.
+    A plan holding any exchange (shuffle or broadcast) is returned as is,
+    since AQE sizes its partitions at run time, and counting them would
+    run every stage of the plan only to throw the results away (a
+    non-adaptive broadcast join runs its broadcast on ``execute()``).
+    Otherwise the count is the scan's split count, which lists files and
+    launches no Spark job."""
+    if _plans_exchange(df):
+        return df
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < max(1, int(target * min_factor)):
         return df.repartition(target)
     return df

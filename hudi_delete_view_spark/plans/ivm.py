@@ -176,9 +176,12 @@ def _where_touched_chunked(
     """Restrict ``rederived`` to the touched partition tuples via literal
     predicates, chunked to ≤WINDOW_TOUCHED_PRED_MAX clauses per union
     branch (see WINDOW_TOUCHED_CHUNKS_MAX). One chunk degenerates to the
-    plain single-predicate restriction."""
+    plain single-predicate restriction; no touched tuples restrict to no
+    rows."""
     from functools import reduce
 
+    if not touched_rows:
+        return rederived.where(F.lit(False))
     step = WINDOW_TOUCHED_PRED_MAX
     parts = []
     for i in range(0, len(touched_rows), step):

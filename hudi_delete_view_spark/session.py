@@ -6,6 +6,11 @@ that matter identically on a 1000-executor cluster:
 - AQE on (runtime shuffle-partition coalescing, skew-join splitting,
   broadcast demotion/promotion) so plans survive 100x data-scale changes
   without retuning.
+- Cached plans may change their output partitioning
+  (``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``, off by
+  default in Spark 4.1), so AQE coalesces a persisted operator
+  intermediate too: a few hundred cached pairs read back as a task or
+  two, not as ``spark.sql.shuffle.partitions`` near-empty ones.
 - ``spark.sql.shuffle.partitions`` sized for the local test boxes; on a real
   cluster AQE's coalescing makes the initial number a ceiling, not a tuning
   knob.
@@ -33,6 +38,7 @@ def get_spark(app_name: str = "hudi-delete-view-spark", master: str | None = Non
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # cap Arrow batches below G1's humongous-object threshold: at the
         # default 10k rows a 64-long signature batch is a ~32 MB single

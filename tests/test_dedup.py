@@ -442,6 +442,76 @@ def test_incremental_dedup_no_base_pairs(spark, docs):
     assert out.columns == inc.columns
 
 
+def _jobs_for(spark, group, fn):
+    """Ids of the Spark jobs ``fn`` launches (the job audit of
+    ``tests/test_evolution.py``)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "spread job audit")
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
+def _one_file_ids(spark, path, n=200):
+    spark.range(n).coalesce(1).write.mode("overwrite").parquet(path)
+    return spark.read.parquet(path)
+
+
+@pytest.mark.parametrize("aqe", ["true", "false"])
+def test_spread_never_executes_its_input(spark, scratch, aqe):
+    """A frame that broadcast-semi-joins a shuffled aggregate keeps its
+    plan-decided partitions: ``spread`` plans it and launches no job, with
+    AQE on and off (a non-adaptive broadcast join broadcasts on
+    ``execute()``). Counting its partitions does launch jobs, so the audit
+    sees them."""
+    from hudi_delete_view_spark.operators.util import spread
+
+    ids = _one_file_ids(spark, os.path.join(scratch, "ids"))
+    keys = ids.groupBy((F.col("id") % 7).alias("id")).count().select("id")
+    df = ids.join(F.broadcast(keys), "id", "left_semi")
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    try:
+        out = []
+        assert _jobs_for(spark, f"spread-{aqe}", lambda: out.append(spread(df))) == []
+        assert out[0] is df
+        assert _jobs_for(spark, f"probe-{aqe}", lambda: df.rdd.getNumPartitions())
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    assert sorted(r.id for r in out[0].collect()) == list(range(7))
+
+
+def test_spread_repartitions_one_file_scan(spark, scratch):
+    """A one-file parquet scan still spreads to ``defaultParallelism``,
+    from its split count alone."""
+    from hudi_delete_view_spark.operators.util import spread
+
+    df = _one_file_ids(spark, os.path.join(scratch, "ids"))
+    assert df.rdd.getNumPartitions() == 1
+    out = []
+    assert _jobs_for(spark, "spread-scan", lambda: out.append(spread(df))) == []
+    assert out[0].rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+
+
+def test_cached_intermediate_is_coalesced(spark):
+    """The session lets AQE change a cached plan's output partitioning, so
+    a persisted tiny aggregate reads back in fewer partitions than
+    ``spark.sql.shuffle.partitions`` instead of one task per partition."""
+    from hudi_delete_view_spark.operators.util import register_cache
+
+    agg = spark.range(100).groupBy((F.col("id") % 5).alias("g")).count()
+    cached = register_cache(agg)
+    try:
+        shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        assert shuffle > 1
+        assert cached.rdd.getNumPartitions() < shuffle
+        assert cached.count() == 5
+    finally:
+        cached.unpersist()
+
+
 def test_shared_span_pairs_and_boilerplate_cap(spark):
     from hudi_delete_view_spark.operators.dedup import shared_span_pairs
 

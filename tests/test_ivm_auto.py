@@ -3851,3 +3851,16 @@ def test_window_touched_predicate_chunks(spark, scratch, monkeypatch):
              "20260103000000")
     mv.refresh(); check()
     assert mv.refresh()["advanced"] is False
+
+
+def test_where_touched_chunked_empty_restricts_to_nothing(spark):
+    """No touched partition tuples restrict the re-derivation to no rows
+    (the schema is kept) instead of failing on an empty chunk list."""
+    from hudi_delete_view_spark.plans.ivm import _where_touched_chunked
+
+    df = spark.range(5).selectExpr("id % 2 as g", "id as v")
+    out = _where_touched_chunked(df, [], ["g"])
+    assert out.schema == df.schema
+    assert out.count() == 0
+    one = _where_touched_chunked(df, [{"g": 1}], ["g"])
+    assert sorted(r.v for r in one.collect()) == [1, 3]
