@@ -11,6 +11,13 @@ that matter identically on a 1000-executor cluster:
   default in Spark 4.1), so AQE coalesces a persisted operator
   intermediate too: a few hundred cached pairs read back as a task or
   two, not as ``spark.sql.shuffle.partitions`` near-empty ones.
+- The driver JVM's young generation is a fixed share of its heap
+  (``-XX:NewRatio=2``, one third) instead of G1's pause-time-driven
+  sizing, which moves between 5% and 60% of the heap on timing alone: a
+  run then touches the same amount of heap every time, so its resident
+  memory is repeatable. Set through ``spark.driver.defaultJavaOptions``,
+  which takes effect only when ``get_spark`` launches the JVM and which
+  ``spark.driver.extraJavaOptions`` adds to rather than replaces.
 - ``spark.sql.shuffle.partitions`` sized for the local test boxes; on a real
   cluster AQE's coalescing makes the initial number a ceiling, not a tuning
   knob.
@@ -53,6 +60,8 @@ def get_spark(app_name: str = "hudi-delete-view-spark", master: str | None = Non
         # the events table stores TIMESTAMP(NANOS); read as long + convert
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        # fixed young generation: repeatable resident memory (see above)
+        .config("spark.driver.defaultJavaOptions", "-XX:NewRatio=2")
         .config("spark.ui.enabled", "false")
     )
     from .profile import SCALE_SPARK_CONFS, scale_mode

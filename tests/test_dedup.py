@@ -512,6 +512,20 @@ def test_cached_intermediate_is_coalesced(spark):
         cached.unpersist()
 
 
+def test_driver_young_generation_is_fixed(spark):
+    """get_spark launches the driver JVM with NewRatio set on its command
+    line, which makes G1 keep a fixed young generation instead of resizing
+    it from pause-time predictions; left at its default, NewRatio is
+    ignored by G1."""
+    jvm = spark.sparkContext._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    opt = bean.getVMOption("NewRatio")
+    assert opt.getValue() == "2"
+    assert opt.getOrigin().toString() == "VM_CREATION"
+
+
 def test_shared_span_pairs_and_boilerplate_cap(spark):
     from hudi_delete_view_spark.operators.dedup import shared_span_pairs
 
