@@ -81,16 +81,20 @@ IDs for lineage) and classifies the view:
   project/filter view): the join algebra degenerated to zero dim
   sources — touched record keys re-derived through the plan, rows the
   filter now rejects becoming view deletes.
-- **agg_join** — Aggregate over ONE inner or left-outer equi-join in a
-  single declaration.  INNER: DELTA-JOIN maintenance — the exact
-  multiset identity Δ(F⋈D) = ΔF⋈D_anchor ∪ F_target⋈ΔD builds a
-  signed pre-aggregate feed (each static side pruned to the delta's
-  join keys by a broadcast semi-join) that flows into the same
-  retraction merge as single-source aggregates; min/max/HLL re-derive
-  their dirty groups from the group-side-restricted pre-aggregate
-  join.  LEFT OUTER: dirty-group re-derivation (the identity does not
-  hold under null-extension) — join-key CDC probes map changes to
-  groups at both states, which rebuild from the target snapshots.
+- **agg_tree** — Aggregate (or DISTINCT) over a tree of one or more
+  INNER / LEFT / RIGHT / FULL OUTER equi-joins in a single
+  declaration: a two-source join is the one-join tree, a star or
+  snowflake rollup a deeper one, and a self-join gives each
+  occurrence its own leaf.  All-INNER trees: the telescoping DELTA-JOIN
+  feed Δ(s1⋈…⋈sn) = Σ_i s1_t⋈…⋈Δs_i⋈…⋈sn_a (for two sources,
+  Δ(F⋈D) = ΔF⋈D_anchor ∪ F_target⋈ΔD; the bilinear join rule of
+  DBSP), each static side pruned to the delta's join keys by a
+  broadcast semi-join.  Outer arms: the null-extension-aware signed
+  identity (inner terms plus a presence-flip correction).  Either feed
+  flows into the same retraction merge as single-source aggregates;
+  min/max re-derive their dirty groups through the tree, restricted
+  to those groups at the group-carrying leaf when it is not
+  null-extended.
 - **union** — UNION ALL of N Project/Filter branches over N sources
   under a (literal tag, record key) identity: each branch advances
   independently by change-key re-derivation over its own chain.
@@ -130,7 +134,8 @@ from ..sources.cow import RECORD_KEY_FIELD, META_FIELDS, CowTable
 
 # Literal touched-partition predicate bound for window advances: a delta
 # touching more partitions than this re-derives full-input. MEASURED
-# round 9 (tools/measure_window_touched_cliff.py, SCALE.md): the OR
+# round 9 (SCALE.md, "Round 9: window-advance touched-predicate cliff
+# measured"): the OR
 # predicate's Catalyst planning cost grows superlinearly with clause
 # count — 256 clauses planned in ~5s, 1024 took ~40s, eating most of
 # the 65s benefit H18 measured at 1.6M rows — and a left-deep fold of
@@ -158,16 +163,28 @@ WINDOW_TOUCHED_CHUNKS_MAX = int(
 def _balanced_any(conds: list) -> "F.Column":
     """OR a list of Columns as a BALANCED tree. A left-deep fold of ~1024
     clauses overflows the JVM stack in Spark 4's recursive
-    ColumnNode-to-Expression conversion (measured by
-    tools/measure_window_touched_cliff.py: StackOverflowError at the old
-    WINDOW_TOUCHED_PRED_MAX); depth log2(n) converts fine and plans
-    faster."""
+    ColumnNode-to-Expression conversion (StackOverflowError at the old
+    WINDOW_TOUCHED_PRED_MAX; SCALE.md, "Round 9: window-advance
+    touched-predicate cliff measured"); depth log2(n) converts fine and
+    plans faster."""
     while len(conds) > 1:
         conds = [
             conds[i] | conds[i + 1] if i + 1 < len(conds) else conds[i]
             for i in range(0, len(conds), 2)
         ]
     return conds[0]
+
+
+def _part_cond(a: str, b: str, cols: list) -> "F.Column":
+    """Null-safe equality of the partition columns ``cols`` between the
+    frames aliased ``a`` and ``b`` — the touched-partition match every
+    window advance uses."""
+    from functools import reduce
+
+    return reduce(
+        lambda x, y: x & y,
+        [F.col(f"{a}.{p}").eqNullSafe(F.col(f"{b}.{p}")) for p in cols],
+    )
 
 
 def _where_touched_chunked(
@@ -202,6 +219,9 @@ def _where_touched_chunked(
 __all__ = ["AutoMaterializedView", "UnsupportedViewError", "classify_view"]
 
 _HIDDEN_N = "__mv_n"  # signed row count per group (dead-group detector)
+
+# the view kinds stored as aggregate state (group keys + hidden counters)
+_AGG_KINDS = ("aggregate", "agg_union", "agg_tree")
 
 # the variance family, all maintained through signed power sums
 # (Σx, Σx², non-null n); "samp" members divide by n−1, "pop" by n
@@ -630,14 +650,6 @@ def _classify_aggregate(plan, src_ids, refs, snapshots, quals=frozenset()) -> di
             "chain": _chain_to_spec(chain, quals),
         }
     if _cls(term[1]) == "Join":
-        two_way = all(
-            _descend_chain(c, snapshots)[1][0] == "source"
-            for c in _children(term[1])
-        )
-        if two_way:
-            return _classify_agg_join(
-                group, aggs, chain, term[1], snapshots, plan, quals
-            )
         return _classify_agg_tree(
             group, aggs, chain, term[1], snapshots, plan, quals
         )
@@ -707,9 +719,7 @@ def _compose_agg_stage(group, aggs, mid_nodes, inner, quals) -> dict:
     child's SERVE projection (NULL-sum / avg-ratio semantics spelled as
     SQL over the stored hidden counters), so the outer sees the same
     rows the user's inner aggregate would produce."""
-    if inner["kind"] not in (
-        "aggregate", "agg_stage", "agg_join", "agg_union", "agg_tree"
-    ):
+    if inner["kind"] not in _AGG_KINDS + ("agg_stage",):
         raise UnsupportedViewError(
             f"aggregate over a {inner['kind']} view is not auto-stageable"
         )
@@ -921,16 +931,8 @@ def _classify_distinct(node, snapshots, quals=frozenset(), src_ids=None,
         inner = _classify_aggregate(term[1], src_ids, refs, snapshots, quals)
         return _compose_agg_stage(group, [], chain, inner, quals)
     if _cls(term[1]) == "Join":
-        # DISTINCT over equi-joins: the degenerate aggregate-over-join
-        # (two sources) or aggregate-over-tree (star/snowflake)
-        two_way = all(
-            _descend_chain(c, snapshots)[1][0] == "source"
-            for c in _children(term[1])
-        )
-        if two_way:
-            return _classify_agg_join(
-                group, [], chain, term[1], snapshots, node, quals
-            )
+        # DISTINCT over equi-joins: the degenerate aggregate-over-tree
+        # (a two-source join is the one-join tree)
         return _classify_agg_tree(
             group, [], chain, term[1], snapshots, node, quals
         )
@@ -969,186 +971,6 @@ def _join_end(expr, left_ids, right_ids, synth, quals):
     name = f"__mv_jke{len(synth['left']) + len(synth['right'])}"
     synth[side].append((name, _strip_quals(expr.sql(), quals)))
     return side, name, refs
-
-
-def _side_replay(side: dict, df: DataFrame, extra: tuple = ()) -> DataFrame:
-    """Replay one agg_join side: its Project/Filter chain, then any
-    synthesized join-key expressions as select("*", expr) — runtime
-    application, because a static all-columns projection would break on
-    CDC feeds (which carry payload + op columns, not the snapshot's
-    meta columns)."""
-    out = _replay_spec(side["chain"], df, extra=extra)
-    items = side.get("synth", [])
-    if items:
-        out = out.select(
-            "*", *[F.expr(sql).alias(nm) for nm, sql in items]
-        )
-    return out
-
-
-def _classify_agg_join(
-    group, aggs, mid_nodes, join_node, snapshots, agg_node, quals=frozenset()
-) -> dict:
-    """Aggregate over ONE inner or left-outer equi-join — maintained by
-    DIRTY-GROUP re-derivation: both sides' CDC feeds name the touched
-    join-key values, the pre-aggregate join (replayed at the anchor and
-    the target) maps those keys to the groups they feed at either
-    state, and exactly those groups recompute from the target
-    snapshots.  LEFT OUTER detection restricts only the PRESERVED side
-    (null-safe, so NULL-keyed preserved rows re-derive too): every
-    affected row — including a row whose dim match vanished and flipped
-    to null-extension — survives on the preserved side with its join
-    key in the dirty set.  Work ∝ rows of touched groups; any supported
-    aggregate works because dirty groups rebuild their stored state
-    from scratch.  Honest cost note: under LEFT OUTER, a dim delete
-    dirties the null-extension group, whose re-derivation is
-    group-sized — at scale, keep the unmatched-rows group small or
-    filter it out above the join."""
-    jt = join_node.joinType().sql()
-    if jt not in ("INNER", "LEFT OUTER", "RIGHT OUTER", "FULL OUTER"):
-        raise UnsupportedViewError(
-            f"aggregate over a {jt} join: INNER / LEFT / RIGHT / FULL "
-            "OUTER equi-joins are maintainable below an aggregate"
-        )
-    cond = join_node.condition()
-    if cond.isEmpty():
-        raise UnsupportedViewError("aggregate over a cross join: no join "
-                                   "key to map changes to dirty groups")
-    cond = cond.get()
-    # a conjunction of plain-column equalities, each one-per-side: the
-    # composite key real schemas join on
-    eqs = []
-
-    def _walk_cond(c):
-        if _cls(c) == "And":
-            _walk_cond(c.left())
-            _walk_cond(c.right())
-        elif _cls(c) == "EqualTo":
-            eqs.append(c)
-        else:
-            raise UnsupportedViewError(
-                f"join condition {c.sql()} must be a conjunction of "
-                "plain-column equalities"
-            )
-
-    _walk_cond(cond)
-    left_ids = {a.exprId().id(): a.name() for a in _seq(join_node.left().output())}
-    right_ids = {a.exprId().id(): a.name() for a in _seq(join_node.right().output())}
-    jpairs, cond_ids = [], set()
-    synth = {"left": [], "right": []}
-    for e in eqs:
-        ea = _join_end(e.left(), left_ids, right_ids, synth, quals)
-        eb = _join_end(e.right(), left_ids, right_ids, synth, quals)
-        if ea is None or eb is None or ea[0] == eb[0]:
-            raise UnsupportedViewError(
-                f"join equality {e.sql()} must take one column (or a "
-                "one-sided expression) from each side of the join"
-            )
-        cond_ids |= ea[2] | eb[2]
-        l_end, r_end = (ea, eb) if ea[0] == "left" else (eb, ea)
-        jpairs.append((l_end[1], r_end[1]))
-    jcols = {"left": [l for l, _ in jpairs], "right": [r for _, r in jpairs]}
-    # Colliding column names across the two sides (e.g. SQL joining raw
-    # snapshots — both carry the _hoodie_* meta columns) matter only
-    # when the plan REFERENCES them: the join-output attrs the view
-    # actually consumes are the references of the node directly above
-    # the join (the bottom mid node, else the aggregate) plus the join
-    # keys.  A name needed from BOTH sides is genuinely ambiguous in
-    # the replayed join and refuses; a collision needed on one side
-    # drops from the other; needed on neither drops from both.
-    consumer = mid_nodes[-1] if mid_nodes else agg_node
-    needed_ids = {
-        a.exprId().id() for a in _seq(consumer.references().toSeq())
-    } | cond_ids
-    need_l = {left_ids[i] for i in needed_ids if i in left_ids}
-    need_r = {right_ids[i] for i in needed_ids if i in right_ids}
-    both = need_l & need_r
-    if both:
-        raise UnsupportedViewError(
-            f"aggregate-over-join references column name(s) {sorted(both)} "
-            "from BOTH sides of the join — rename in the per-side "
-            "projections so the replayed join is unambiguous"
-        )
-    collide = set(left_ids.values()) & set(right_ids.values())
-    drop_l = sorted(collide - need_l)
-    drop_r = sorted(collide - need_r)
-    sides = {}
-    for pos, child in (("left", join_node.left()), ("right", join_node.right())):
-        nodes, term = _descend_chain(child, snapshots)
-        if term[0] != "source":
-            raise UnsupportedViewError(
-                f"the {pos} side of an aggregate-over-join must be a "
-                "Project/Filter chain over one source — stage deeper "
-                "shapes as view-over-view"
-            )
-        sides[pos] = {
-            "source": term[1],
-            "chain": _chain_to_spec(nodes, quals),
-            # synthesized join-key expressions ride as hidden columns
-            # applied at replay time — before the join, the probes,
-            # and the collision drops
-            "synth": synth[pos],
-            "join_cols": jcols[pos],
-            "drop": drop_l if pos == "left" else drop_r,
-        }
-    # SELF-joins (both sides over one source) are maintainable here: the
-    # telescoping identity is OCCURRENCE-based, not source-based —
-    # A_t⋈B_t − A_a⋈B_a = ΔA⋈B_a + A_t⋈ΔB holds with A and B replaying
-    # the SAME table's CDC through their own chains, and the delta feed
-    # below is side-gated (each side contributes its own term), so one
-    # source's change correctly produces BOTH terms.  The dirty-group
-    # fallback unions both sides' probes over the same CDC.  (The
-    # N-source TREE algebra stays leaf-keyed by source name and still
-    # refuses duplicates — _build_join_tree.)
-    mid_spec = _chain_to_spec(mid_nodes, quals)
-    # when every group key is a plain column of ONE side (and the mid
-    # chain doesn't rename anything), re-derivation can restrict that
-    # side's INPUT to the dirty groups — the 100 TB lever that keeps the
-    # recompute join member-sized instead of table-sized
-    group_side = None
-    if not any(k == "project" for k, _ in mid_spec):
-        cands = set()
-        for _n, sql in group:
-            if sql in left_ids.values():
-                cands.add("left")
-            elif sql in right_ids.values():
-                cands.add("right")
-            else:
-                cands.add(None)
-        if len(cands) == 1:
-            group_side = cands.pop()
-    if jt == "RIGHT OUTER":
-        # A right-join B == B left-join A: swap the stored sides so the
-        # PRESERVED side is always spec["left"], and every left-outer
-        # rule below applies verbatim (column names drive the replay,
-        # so the physical side order is irrelevant)
-        sides = {"left": sides["right"], "right": sides["left"]}
-        group_side = {"left": "right", "right": "left", None: None}[group_side]
-        jt = "LEFT OUTER"
-    join_type = {"INNER": "inner", "LEFT OUTER": "left",
-                 "FULL OUTER": "full"}[jt]
-    if join_type == "left" and group_side == "right":
-        # restricting the null-extended side would flip unmatched
-        # preserved rows into the NULL group — fall back to the full
-        # re-derivation join for dim-side group keys
-        group_side = None
-    if join_type == "full":
-        # either side's input restriction would flip the OTHER side's
-        # unaffected rows into null-extension
-        group_side = None
-    return {
-        "kind": "agg_join",
-        "group": group,
-        "aggs": aggs,
-        # feeds reach _agg_delta already pre-replayed (the join IS the
-        # replay); an empty chain makes the shared state-builders identity
-        "chain": [],
-        "mid": mid_spec,
-        "left": sides["left"],
-        "right": sides["right"],
-        "group_side": group_side,
-        "join_type": join_type,
-    }
 
 
 def _build_join_tree(node, snapshots, quals, needed_ids, seen):
@@ -1283,34 +1105,45 @@ def _build_join_tree(node, snapshots, quals, needed_ids, seen):
     }
 
 
+def _synth(df: DataFrame, node: dict) -> DataFrame:
+    """Append a tree node's synthesized join-key columns (one-sided
+    expression keys, ``_join_end``) as select("*", expr) — applied at
+    replay time, because a static all-columns projection would break on
+    CDC feeds, which carry payload + op columns, not the snapshot's
+    meta columns."""
+    items = node.get("synth", [])
+    if not items:
+        return df
+    return df.select("*", *[F.expr(sql).alias(nm) for nm, sql in items])
+
+
+def _tree_leaves(node) -> list[dict]:
+    """The leaf specs of a classified join tree, left to right."""
+    if "src" in node:
+        return [node]
+    return _tree_leaves(node["left"]) + _tree_leaves(node["right"])
+
 
 def _classify_agg_tree(
     group, aggs, mid_nodes, join_root, snapshots, agg_node, quals=frozenset()
 ) -> dict:
-    """Aggregate over a MULTI-JOIN tree (star/snowflake below GROUP BY —
-    the TPC-H Q5 rollup shape), maintained by DIRTY-GROUP re-derivation
-    with IMAGE-REPLAY detection: for each changed source S and each
-    boundary (anchor / target), the user's own join tree re-runs with
-    S's leaf replaced by S's CDC images at that boundary (before-images
-    at the anchor, after-images at the target) and every other leaf at
-    that boundary's snapshot — the group keys it produces are exactly
-    the groups S's changes touch at that state.  LEFT OUTER joins where
-    S sits on the null-extended side flip to INNER for S's detection
-    pass (restricting a null-extended side does not restrict the
-    preserved output; INNER names precisely the tree rows whose S-match
-    appeared or vanished — under the real LEFT join, the null-extension
-    flip set).  Exactly the dirty groups rebuild from the target
-    snapshots and swap in.
+    """Aggregate (or DISTINCT) over a tree of one or more equi-joins —
+    a two-source join is the one-join tree, the TPC-H Q5 rollup
+    (star/snowflake below GROUP BY) a deeper one — maintained by a
+    SIGNED feed into the shared retraction merge.  All-INNER trees take
+    the telescoping delta-join feed (``_agg_tree_delta_feed``, the
+    bilinear join rule); trees with LEFT / FULL OUTER arms take the
+    null-extension-aware identity (``_tree_signed_delta``: inner terms
+    plus a presence-flip correction; FULL decomposes as
+    T = (L LEFT R) ⊎ (R ANTI L) × null_L).  RIGHT joins normalize by a
+    side swap; self-joins become occurrence-named leaves.
 
-    Work shape: detection costs 2·|changed sources| tree joins, each
-    with ONE change-sized (broadcastable) side; re-derivation restricts
-    the group-carrying leaf's INPUT to the dirty groups when every
-    group key is a plain column of one leaf (the other leaves prune
-    through the equi-join build), falling back to one full tree pass
-    for expression/mixed group keys.  FULL OUTER composes too (round
-    7): the signed identity decomposes T = (L LEFT R) ⊎ (R ANTI L)
-    x null_L, each part carrying its own exact delta — see
-    ``_tree_signed_delta``."""
+    Work shape: every term joins ONE change-sized side against static
+    sides semi-pruned to its join keys.  min/max retractions re-derive
+    their dirty groups through the whole tree, with the group-carrying
+    leaf's INPUT restricted to those groups when every group key is a
+    plain column of one non-null-extended leaf (the other leaves prune
+    through the equi-join build)."""
     # names consumed ABOVE any join: the aggregate, the mid chain, and
     # every join condition in the tree — collision drops keep exactly
     # these and refuse genuinely ambiguous ones
@@ -1334,17 +1167,13 @@ def _classify_agg_tree(
     # leaf-input restriction for the rebuild: every group key a plain
     # column of exactly one leaf — the 100 TB lever that keeps the
     # recompute tree member-sized instead of table-sized
-    def _leaves(n):
-        if "src" in n:
-            return [n]
-        return _leaves(n["left"]) + _leaves(n["right"])
-
     group_src = None
     if not any(k == "project" for k, _ in _chain_to_spec(mid_nodes, quals)):
         cands = set()
         for _n, sql in group:
             hit = [
-                lf["src"] for lf in _leaves(tree) if sql in lf["out_names"]
+                lf["src"] for lf in _tree_leaves(tree)
+                if sql in lf["out_names"]
             ]
             cands.add(hit[0] if len(hit) == 1 else None)
         if len(cands) == 1:
@@ -1352,8 +1181,7 @@ def _classify_agg_tree(
 
     # restricting a NULL-EXTENDED leaf is unsound: dropping its
     # non-dirty rows flips unrelated preserved rows into null-extension
-    # and pollutes the NULL group's rebuild — same rule as agg_join's
-    # group_side=None for dim-side keys under LEFT OUTER
+    # and pollutes the NULL group's rebuild
     def _null_extended(n):
         if "src" in n:
             return set()
@@ -1386,8 +1214,8 @@ def _classify_agg_tree(
         "sources": tree["srcs"],
         "group_src": group_src,
         # all-INNER trees advance by the telescoping DELTA-JOIN feed
-        # (change-sized); any LEFT arm falls back to dirty-group
-        # re-derivation (the identity fails under null-extension)
+        # (change-sized); any outer arm takes the signed identity
+        # (the telescoping fails under null-extension)
         "all_inner": _all_inner(tree),
     }
 
@@ -1408,17 +1236,6 @@ def _jk_cond(cols: list, nullsafe: bool):
         if nullsafe
         else F.col(c) == F.col(f"__mv_jk{i}")
         for i, c in enumerate(cols)
-    ]
-    return reduce(lambda a, b: a & b, terms)
-
-
-def _join_cond(spec: dict):
-    """AND-composed equi-join condition from the aligned side columns."""
-    from functools import reduce
-
-    terms = [
-        F.col(lc) == F.col(rc)
-        for lc, rc in zip(spec["left"]["join_cols"], spec["right"]["join_cols"])
     ]
     return reduce(lambda a, b: a & b, terms)
 
@@ -1613,12 +1430,10 @@ def _classify_window_tree(
             "side — aggregate the tree, or split the view"
         )
 
-    def _dup_leaves(n):
-        if "src" in n:
-            return [n["real_src"]] if n.get("real_src") != n["src"] else []
-        return _dup_leaves(n["left"]) + _dup_leaves(n["right"])
-
-    dups = _dup_leaves(tree)
+    dups = [
+        lf["real_src"] for lf in _tree_leaves(tree)
+        if lf.get("real_src") != lf["src"]
+    ]
     key_cols = None
     if dups:
         # a self-join emits several rows per fact record key, so the
@@ -1628,14 +1443,8 @@ def _classify_window_tree(
         # (resolved through the leaf's positional rk attr id), plus the
         # ordinary view key of the non-duplicated sources if projected
         dup_set = set(dups)
-
-        def _leaves(n):
-            if "src" in n:
-                return [n]
-            return _leaves(n["left"]) + _leaves(n["right"])
-
         occ_cols = []
-        for leaf in _leaves(tree):
+        for leaf in _tree_leaves(tree):
             real = leaf.get("real_src", leaf["src"])
             if real not in dup_set:
                 continue
@@ -2118,21 +1927,11 @@ class AutoMaterializedView:
         unchanged (same table, same timeline, identical anchor
         values)."""
         self._leaf_alias: dict[str, str] = {}
-        tree = spec.get("tree")
-        if not tree:
-            return
-
-        def walk(n):
-            if "src" in n:
-                real = n.get("real_src", n["src"])
-                if n["src"] != real:
-                    self._leaf_alias[n["src"]] = real
-                    self.sources.setdefault(n["src"], self.sources[real])
-                return
-            walk(n["left"])
-            walk(n["right"])
-
-        walk(tree)
+        for lf in _tree_leaves(spec["tree"]) if spec.get("tree") else []:
+            real = lf.get("real_src", lf["src"])
+            if lf["src"] != real:
+                self._leaf_alias[lf["src"]] = real
+                self.sources.setdefault(lf["src"], self.sources[real])
 
     def _fill_leaf_aliases(self, d: dict | None) -> dict | None:
         """Mirror real-source entries of a caller-supplied per-source
@@ -2159,13 +1958,13 @@ class AutoMaterializedView:
             deepest = deepest["inner"]
         if deepest["kind"] == "aggregate":
             src_names = [deepest["source"]]
-        elif deepest["kind"] == "agg_join":
-            src_names = [deepest["left"]["source"],
-                         deepest["right"]["source"]]
         elif deepest["kind"] == "agg_union":
             src_names = sorted({b["source"] for b in deepest["branches"]})
-        else:  # agg_tree
-            src_names = list(deepest["sources"])
+        else:  # agg_tree: real tables (self-join leaves share one)
+            src_names = sorted({
+                lf.get("real_src", lf["src"])
+                for lf in _tree_leaves(deepest["tree"])
+            })
         stage = AutoMaterializedView(
             self.spark,
             self.path.rstrip("/") + ".stage0",
@@ -2181,6 +1980,7 @@ class AutoMaterializedView:
             if inner["kind"] == "agg_stage"
             else inner
         )
+        stage._extend_leaf_aliases(stage._spec)
         self._stage = stage
         self.sources = {"__stage0": stage.table}
         return {
@@ -2198,8 +1998,11 @@ class AutoMaterializedView:
             s = self._read_spec_summary()
             if s is not None:
                 return s["key_fields"]
-        spec = self.spec()
-        if spec["kind"] in ("aggregate", "agg_join", "agg_union", "agg_tree"):
+        return self._spec_key_fields(self.spec())
+
+    @staticmethod
+    def _spec_key_fields(spec: dict) -> list[str]:
+        if spec["kind"] in _AGG_KINDS:
             return [n for n, _ in spec["group"]]
         if spec["kind"] in ("union", "window_union"):
             return [spec["tag_col"], spec["key"]["name"]]
@@ -2239,8 +2042,11 @@ class AutoMaterializedView:
     # "already advanced, just serve" call never touches the classifier.
     # Views with pseudo-leaf aliases (self-join trees) or a hidden stage
     # mark themselves ineligible — their refresh needs live spec state —
-    # and simply keep the classify-first path.
-    _SPEC_SUMMARY_VERSION = 1
+    # and simply keep the classify-first path.  The version bumps when
+    # a stored kind name stops existing (v2: the two-source aggregate-
+    # over-join kind became the one-join agg_tree), so an old summary
+    # re-classifies instead of serving through the wrong branch.
+    _SPEC_SUMMARY_VERSION = 2
 
     def _spec_summary_path(self) -> str:
         return os.path.join(self.path, "_view_spec")
@@ -2254,21 +2060,13 @@ class AutoMaterializedView:
         return s if s.get("v") == self._SPEC_SUMMARY_VERSION else None
 
     def _write_spec_summary(self, spec: dict) -> None:
-        if spec["kind"] in ("aggregate", "agg_join", "agg_union", "agg_tree"):
-            key_fields = [n for n, _ in spec["group"]]
-        elif spec["kind"] in ("union", "window_union"):
-            key_fields = [spec["tag_col"], spec["key"]["name"]]
-        elif spec.get("key_cols"):
-            key_fields = spec["key_cols"]
-        else:
-            key_fields = [spec["key"]["name"]]
         summary = {
             "v": self._SPEC_SUMMARY_VERSION,
             "kind": spec["kind"],
             "group_names": [n for n, _ in spec.get("group") or []],
             "aggs": [[a, fn] for a, fn, _ in spec.get("aggs") or []],
             "post": spec.get("post", []),
-            "key_fields": key_fields,
+            "key_fields": self._spec_key_fields(spec),
             # pseudo-leaf aliases of self-join trees (anchor keys carry
             # them; the fast path mirrors real latest values onto them)
             "leaf_alias": dict(getattr(self, "_leaf_alias", None) or {}),
@@ -2436,6 +2234,20 @@ class AutoMaterializedView:
         vl = self.table.timeline.latest_timestamp()
         return max(int(max(latest.values())), int(vl) if vl else 0)
 
+    def _commit_delta(
+        self, dead: DataFrame, live: DataFrame, base: int,
+        table: CowTable | None = None,
+    ) -> None:
+        """One advance's writes to ``table`` (default: the view): the
+        ``dead`` keys delete at ``base + 1``, then the ``live`` rows
+        upsert at ``base + 2``; an empty side commits nothing."""
+        if table is None:
+            table = self.table
+        if dead.count() > 0:
+            table.delete(dead, f"{base + 1:014d}")
+        if live.count() > 0:
+            table.upsert(live, f"{base + 2:014d}")
+
     def serve(self) -> DataFrame:
         snap = self.table.snapshot()
         # serving needs only the summary-sized view of the spec; use the
@@ -2455,7 +2267,7 @@ class AutoMaterializedView:
             group_names = [n for n, _ in spec.get("group") or []]
             aggs = spec.get("aggs") or []
             post = spec.get("post", [])
-        if kind not in ("aggregate", "agg_join", "agg_union", "agg_tree"):
+        if kind not in _AGG_KINDS:
             keep = [c for c in snap.columns if c not in META_FIELDS]
             return snap.select(*keep)
         cols = [
@@ -2546,29 +2358,17 @@ class AutoMaterializedView:
 
     @staticmethod
     def _hll_aux_aliases(spec: dict) -> list[tuple[str, str]]:
-        """approx_count_distinct aliases whose sketches are backed by a
+        """approx_count_distinct aliases, whose sketches are backed by a
         per-value aux table (the E4 COUNT DISTINCT state, reused): on
         retraction the group's sketch rebuilds from the aux table's live
         values — never from the source, whose dirty groups could be
         arbitrarily large at 100 TB while aux is bounded by the live
-        DISTINCT value set.  Only the signed-merge advance paths keep
-        aux (single-source aggregates and delta-join INNER agg_join);
-        the outer-join dirty path rebuilds dirty groups' sketches from
-        scratch anyway, so it carries no aux state."""
-        if (
-            spec["kind"] in ("aggregate", "agg_union")
-            or (
-                spec["kind"] == "agg_join"
-                and spec.get("join_type", "inner") == "inner"
-            )
-            or (spec["kind"] == "agg_tree" and spec.get("all_inner"))
-        ):
-            return [
-                (a, arg)
-                for a, fn, arg in spec["aggs"]
-                if fn == "approx_count_distinct"
-            ]
-        return []
+        DISTINCT value set.  Every aggregate kind advances through the
+        signed merge, so every one keeps this state."""
+        return [
+            (a, arg) for a, fn, arg in spec["aggs"]
+            if fn == "approx_count_distinct"
+        ]
 
     def _aux_table(self, alias: str) -> CowTable:
         """Per-value state for one COUNT(DISTINCT) output: a nested lake
@@ -2705,65 +2505,16 @@ class AutoMaterializedView:
         keys = [F.expr(sql).alias(name) for name, sql in spec["group"]]
         return df.groupBy(*keys).agg(*aggs)
 
-    def _pre_agg(
-        self,
-        spec: dict,
-        snaps: dict[str, DataFrame],
-        dirty_jk: DataFrame | None = None,
-        restrict: str | None = None,
-    ) -> DataFrame:
-        """The replayed below-aggregate join of an agg_join view: each
-        side's Project/Filter chain over its snapshot, the inner
-        equi-join, then the mid chain (filters/projections between the
-        join and the aggregate).  ``dirty_jk`` (one ``__mv_jk`` column)
-        prunes BOTH sides to the touched join keys before the join —
-        explicit semi-joins rather than trusting pushdown, so each
-        side's scan is change-sized."""
-        left = _side_replay(
-            spec["left"], snaps[spec["left"]["source"]]
-        ).drop(*spec["left"]["drop"])
-        right = _side_replay(
-            spec["right"], snaps[spec["right"]["source"]]
-        ).drop(*spec["right"]["drop"])
-        jt = spec.get("join_type", "inner")
-        if dirty_jk is not None:
-            # INNER: both sides prune (NULL keys can't join).  Outer
-            # joins: only a PRESERVED side prunes — null-safe, so
-            # NULL-keyed preserved rows re-derive — while a null-
-            # extended side stays whole (pruning it would flip the
-            # other side's unaffected rows to null-extension).
-            # ``restrict`` picks the side(s): default both for inner,
-            # left for left-outer; full-outer callers run once per side.
-            sides_to = restrict or ("both" if jt == "inner" else "left")
-            nullsafe = jt != "inner"
-
-            if sides_to in ("both", "left"):
-                left = left.join(
-                    F.broadcast(dirty_jk),
-                    _jk_cond(spec["left"]["join_cols"], nullsafe),
-                    "left_semi",
-                )
-            if sides_to in ("both", "right"):
-                right = right.join(
-                    F.broadcast(dirty_jk),
-                    _jk_cond(spec["right"]["join_cols"], nullsafe),
-                    "left_semi",
-                )
-        j = left.join(right, _join_cond(spec), jt)
-        return _replay_spec(spec["mid"], j)
-
     def _seed(self, spec: dict, at: dict[str, str]) -> None:
         snaps = {n: t.snapshot(at[n]) for n, t in self.sources.items()}
         ts = max(at.values())
-        if spec["kind"] in ("aggregate", "agg_join", "agg_union", "agg_tree"):
+        if spec["kind"] in _AGG_KINDS:
             if spec["kind"] == "aggregate":
                 feed = snaps[spec["source"]].withColumn("__mv_sign", F.lit(1))
             elif spec["kind"] == "agg_union":
                 feed = self._agg_union_full_feed(spec, snaps)
-            elif spec["kind"] == "agg_tree":
-                feed = self._agg_tree_full_feed(spec, snaps)
             else:
-                feed = self._pre_agg(spec, snaps).withColumn("__mv_sign", F.lit(1))
+                feed = self._agg_tree_full_feed(spec, snaps)
             seed = self._agg_delta(spec, feed)
             if "__mv_dirty" in seed.columns:
                 seed = seed.drop("__mv_dirty")  # delta-only flag
@@ -2780,8 +2531,6 @@ class AutoMaterializedView:
     def _advance(self, spec, anchor: dict, latest: dict) -> None:
         if spec["kind"] == "aggregate":
             self._advance_aggregate(spec, anchor, latest)
-        elif spec["kind"] == "agg_join":
-            self._advance_agg_join(spec, anchor, latest)
         elif spec["kind"] == "agg_union":
             self._advance_agg_union(spec, anchor, latest)
         elif spec["kind"] == "agg_tree":
@@ -2882,11 +2631,10 @@ class AutoMaterializedView:
 
     def _merge_agg_delta(self, spec, feed, latest, full_feed_fn) -> None:
         """Merge a SIGNED feed's aggregate delta into the stored state —
-        the shared retraction engine behind single-source aggregates
-        AND delta-join-maintained aggregate-over-join views.
+        the shared retraction engine behind every aggregate kind.
         ``full_feed_fn(dirty_keys)`` supplies an insert-only full feed
         (optionally pre-restricted to the dirty groups) for the
-        re-derive-on-retraction aliases (min/max/HLL)."""
+        re-derive-on-retraction aliases (min/max)."""
         from functools import reduce
 
         delta = self._agg_delta(spec, feed).localCheckpoint(eager=True)
@@ -3070,10 +2818,7 @@ class AutoMaterializedView:
                 *group_names, "__mv_val"
             )
             livev = mergedv.filter(F.col("__mv_vn") > 0)
-            if deadv.count() > 0:
-                aux.delete(deadv, f"{base + 1:014d}")
-            if livev.count() > 0:
-                aux.upsert(livev, f"{base + 2:014d}")
+            self._commit_delta(deadv, livev, base, aux)
             # recount every touched group over its FULL merged value set
             # (zero-count rows included so a group whose last value died
             # serves 0, not its stale stored count).  HLL aliases rebuild
@@ -3114,303 +2859,7 @@ class AutoMaterializedView:
         merged = merged.select(*group_names, *stored_order)
         live = merged.filter(F.col(_HIDDEN_N) > 0)
         dead = merged.filter(F.col(_HIDDEN_N) <= 0).select(*group_names)
-        if dead.count() > 0:
-            self.table.delete(dead, f"{base + 1:014d}")
-        if live.count() > 0:
-            self.table.upsert(live, f"{base + 2:014d}")
-
-    # -- algebra: delta-join maintenance (INNER aggregate-over-join) -----
-    def _agg_join_delta_feed(self, spec, anchor, latest) -> DataFrame | None:
-        """Signed pre-aggregate delta of an INNER equi-join — the exact
-        multiset identity  Δ(F⋈D) = ΔF ⋈ D_anchor  ∪  F_target ⋈ ΔD:
-        each source's CDC (with preimages) replays through its own
-        chain as the signed side, the static side is PRUNED to the
-        delta's join keys by a broadcast semi-join, and the mid chain
-        replays on top.  Work ∝ the change set; the anchor state costs
-        one key-pruned scan, never an evaluation of the old join."""
-        sign = F.when(
-            F.col("op").isin("insert", "update"), F.lit(1)
-        ).otherwise(F.lit(-1))
-        l, r = spec["left"], spec["right"]
-        lsrc, rsrc = self.sources[l["source"]], self.sources[r["source"]]
-        terms = []
-        if anchor[l["source"]] != latest[l["source"]]:
-            dl = _side_replay(
-                l,
-                lsrc.cdc(
-                    anchor[l["source"]],
-                    latest[l["source"]],
-                    include_update_preimages=True,
-                ).withColumn("__mv_sign", sign),
-                extra=("__mv_sign",),
-            ).drop(*l["drop"])
-            d_old = _side_replay(
-                r, rsrc.snapshot(anchor[r["source"]])
-            ).drop(*r["drop"])
-            jks = _jk_frame(dl, l["join_cols"])
-            d_old = d_old.join(
-                F.broadcast(jks),
-                _jk_cond(r["join_cols"], False),
-                "left_semi",
-            )
-            terms.append(dl.join(d_old, _join_cond(spec), "inner"))
-        if anchor[r["source"]] != latest[r["source"]]:
-            dr = _side_replay(
-                r,
-                rsrc.cdc(
-                    anchor[r["source"]],
-                    latest[r["source"]],
-                    include_update_preimages=True,
-                ).withColumn("__mv_sign", sign),
-                extra=("__mv_sign",),
-            ).drop(*r["drop"])
-            f_new = _side_replay(
-                l, lsrc.snapshot(latest[l["source"]])
-            ).drop(*l["drop"])
-            jks = _jk_frame(dr, r["join_cols"])
-            f_new = f_new.join(
-                F.broadcast(jks),
-                _jk_cond(l["join_cols"], False),
-                "left_semi",
-            )
-            terms.append(f_new.join(dr, _join_cond(spec), "inner"))
-        if not terms:
-            return None
-        feed = terms[0] if len(terms) == 1 else terms[0].unionByName(
-            terms[1], allowMissingColumns=True
-        )
-        return _replay_spec(spec["mid"], feed, extra=("__mv_sign",))
-
-    def _pre_agg_for_groups(self, spec, latest, dirty_keys) -> DataFrame:
-        """Insert-only full pre-aggregate feed for re-derive-on-
-        retraction aliases, with the group-carrying side's INPUT
-        restricted to the dirty groups when the group keys live on one
-        side (the other side prunes through the equi-join build)."""
-        from functools import reduce
-
-        snaps = {n: t.snapshot(latest[n]) for n, t in self.sources.items()}
-        gside = spec.get("group_side")
-        if gside is None or dirty_keys is None:
-            return self._pre_agg(spec, snaps).withColumn(
-                "__mv_sign", F.lit(1)
-            )
-        left_df = _side_replay(
-            spec["left"], snaps[spec["left"]["source"]]
-        ).drop(*spec["left"]["drop"])
-        right_df = _side_replay(
-            spec["right"], snaps[spec["right"]["source"]]
-        ).drop(*spec["right"]["drop"])
-        sdf = left_df if gside == "left" else right_df
-        rcond = reduce(
-            lambda a, b: a & b,
-            [
-                F.col(f"__s.{sql}").eqNullSafe(F.col(f"__dg.{name}"))
-                for name, sql in spec["group"]
-            ],
-        )
-        sdf = sdf.alias("__s").join(
-            F.broadcast(dirty_keys.alias("__dg")), rcond, "left_semi"
-        )
-        if gside == "left":
-            left_df = sdf
-        else:
-            right_df = sdf
-        pa = _replay_spec(
-            spec["mid"], left_df.join(right_df, _join_cond(spec), "inner")
-        )
-        return pa.withColumn("__mv_sign", F.lit(1))
-
-    # -- algebra: dirty-group re-derivation (LEFT OUTER agg-over-join) ---
-    def _advance_agg_join(self, spec, anchor, latest) -> None:
-        if spec.get("join_type", "inner") == "inner":
-            feed = self._agg_join_delta_feed(spec, anchor, latest)
-            if feed is None:
-                return
-            self._merge_agg_delta(
-                spec,
-                feed,
-                latest,
-                lambda dirty_keys: self._pre_agg_for_groups(
-                    spec, latest, dirty_keys
-                ),
-            )
-            return
-        self._advance_agg_join_dirty(spec, anchor, latest)
-
-    def _advance_agg_join_dirty(self, spec, anchor, latest) -> None:
-        """Advance a LEFT OUTER aggregate-over-join view by DIRTY-GROUP
-        re-derivation (the delta-join identity does not hold under
-        null-extension): (1) both sides' CDC
-        windows name the touched JOIN-KEY values (before- and
-        after-images replayed through that side's own chain, so filters
-        and renames apply); (2) the pre-aggregate join — pruned to those
-        keys on BOTH sides — maps them to the groups they feed at the
-        anchor state and at the target state (an update that moves rows
-        between groups dirties both); (3) exactly those dirty groups
-        rebuild their stored state from the target snapshots and swap
-        in, with vanished groups becoming view deletes.  Detection
-        passes are change-sized (the broadcast join-key semi prunes
-        both scan sides); the re-derivation pass is member-sized when
-        the group keys live on one side (that side's input restricted
-        to dirty groups, the other pruned through the equi-join build)
-        and falls back to one full join pass for expression/mixed group
-        keys — every restriction applied to INPUTS, never left to
-        optimizer pushdown."""
-        from functools import reduce
-
-        group_names = [n for n, _ in spec["group"]]
-        gk = [f"__mv_gk{i}" for i in range(len(group_names))]
-        key_exprs = [
-            F.expr(sql).alias(t) for t, (_n, sql) in zip(gk, spec["group"])
-        ]
-
-        # 1. touched join-key values from both sides' CDC windows
-        dirty_jk = None
-        for side in (spec["left"], spec["right"]):
-            s = side["source"]
-            if anchor[s] == latest[s]:
-                continue
-            cdc = self.sources[s].cdc(
-                anchor[s], latest[s], include_update_preimages=True
-            )
-            jks = _jk_frame(_side_replay(side, cdc), side["join_cols"])
-            dirty_jk = jks if dirty_jk is None else dirty_jk.unionByName(jks)
-        if dirty_jk is None:
-            return
-        dirty_jk = dirty_jk.distinct().localCheckpoint(eager=True)
-        if dirty_jk.count() == 0:
-            return
-
-        # 2. the groups those keys feed, at the anchor AND target states
-        def groups_at(at: dict) -> DataFrame:
-            snaps = {n: t.snapshot(at[n]) for n, t in self.sources.items()}
-            if spec.get("join_type") == "full":
-                # a changed row survives on ITS OWN side under FULL
-                # OUTER; one preserved-side-restricted run per side
-                # covers every affected row (incl. null-extension flips)
-                return (
-                    self._pre_agg(spec, snaps, dirty_jk, restrict="left")
-                    .select(*key_exprs)
-                    .unionByName(
-                        self._pre_agg(
-                            spec, snaps, dirty_jk, restrict="right"
-                        ).select(*key_exprs)
-                    )
-                )
-            return self._pre_agg(spec, snaps, dirty_jk).select(*key_exprs)
-
-        dirty = (
-            groups_at(anchor)
-            .unionByName(groups_at(latest))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        if dirty.count() == 0:
-            return
-
-        # 3. re-derive exactly those groups from the target snapshots.
-        # When the group keys live on ONE side, that side's INPUT is
-        # restricted to the dirty groups before the join (the other side
-        # prunes through the equi-join build), keeping the recompute
-        # join member-sized; the post-join group semi below the
-        # aggregate then only trims partial-group rows the restriction
-        # could not express (group_side None: expression keys or
-        # renaming mid chain).
-        snaps = {n: t.snapshot(latest[n]) for n, t in self.sources.items()}
-        left_df = _side_replay(
-            spec["left"], snaps[spec["left"]["source"]]
-        ).drop(*spec["left"]["drop"])
-        right_df = _side_replay(
-            spec["right"], snaps[spec["right"]["source"]]
-        ).drop(*spec["right"]["drop"])
-        gside = spec.get("group_side")
-        if gside is not None:
-            sdf = left_df if gside == "left" else right_df
-            rcond = reduce(
-                lambda a, b: a & b,
-                [
-                    F.col(f"__s.{sql}").eqNullSafe(F.col(f"__dg.{t}"))
-                    for t, (_n, sql) in zip(gk, spec["group"])
-                ],
-            )
-            sdf = sdf.alias("__s").join(
-                F.broadcast(dirty.alias("__dg")), rcond, "left_semi"
-            )
-            if gside == "left":
-                left_df = sdf
-            else:
-                right_df = sdf
-        pa = _replay_spec(
-            spec["mid"],
-            left_df.join(
-                right_df, _join_cond(spec), spec.get("join_type", "inner")
-            ),
-        )
-        pcond = reduce(
-            lambda a, b: a & b,
-            [
-                F.expr(sql).eqNullSafe(F.col(f"__dg.{t}"))
-                for t, (_n, sql) in zip(gk, spec["group"])
-            ],
-        )
-        feed = pa.join(
-            F.broadcast(dirty.alias("__dg")), pcond, "left_semi"
-        ).withColumn("__mv_sign", F.lit(1))
-        state = self._agg_delta(spec, feed)
-        if "__mv_dirty" in state.columns:
-            state = state.drop("__mv_dirty")
-        state = state.localCheckpoint(eager=True)
-        scond = reduce(
-            lambda a, b: a & b,
-            [
-                F.col(f"__dg.{t}").eqNullSafe(F.col(f"__st.{n}"))
-                for t, n in zip(gk, group_names)
-            ],
-        )
-        dead = (
-            dirty.alias("__dg")
-            .join(state.select(*group_names).alias("__st"), scond, "left_anti")
-            .select(*[F.col(t).alias(n) for t, n in zip(gk, group_names)])
-            .localCheckpoint(eager=True)
-        )
-        base = self._commit_base(latest)
-        # per-value COUNT(DISTINCT) state: dirty groups' rows replaced
-        # wholesale (re-derivation has no signed delta to merge)
-        for alias, arg in self._distinct_aliases(spec):
-            aux = self._aux_table(alias)
-            new_vals = self._value_state(spec, arg, feed).localCheckpoint(
-                eager=True
-            )
-            acond = reduce(
-                lambda a, b: a & b,
-                [
-                    F.col(f"__a.{n}").eqNullSafe(F.col(f"__dg.{t}"))
-                    for n, t in zip(group_names, gk)
-                ],
-            )
-            vcond = reduce(
-                lambda a, b: a & b,
-                [
-                    F.col(f"__a.{c}").eqNullSafe(F.col(f"__v.{c}"))
-                    for c in group_names + ["__mv_val"]
-                ],
-            )
-            dead_vals = (
-                aux.snapshot()
-                .select(*group_names, "__mv_val")
-                .alias("__a")
-                .join(F.broadcast(dirty.alias("__dg")), acond, "left_semi")
-                .join(new_vals.alias("__v"), vcond, "left_anti")
-                .select(*[F.col(f"__a.{c}").alias(c) for c in group_names + ["__mv_val"]])
-            )
-            if dead_vals.count() > 0:
-                aux.delete(dead_vals, f"{base + 1:014d}")
-            if new_vals.count() > 0:
-                aux.upsert(new_vals, f"{base + 2:014d}")
-        if dead.count() > 0:
-            self.table.delete(dead, f"{base + 1:014d}")
-        if state.count() > 0:
-            self.table.upsert(state, f"{base + 2:014d}")
+        self._commit_delta(dead, live, base)
 
     # -- algebra: image-replay dirty groups (aggregate-over-join trees) --
     def _replay_tree(
@@ -3429,14 +2878,6 @@ class AutoMaterializedView:
         (null-safe) — the null-extension-aware detection for changed
         sources under a LEFT join."""
         from functools import reduce
-
-        def _synth(df, n):
-            items = n.get("synth", [])
-            if not items:
-                return df
-            return df.select(
-                "*", *[F.expr(sql).alias(nm) for nm, sql in items]
-            )
 
         if "src" in node:
             base = (override or {}).get(node["src"])
@@ -3481,9 +2922,9 @@ class AutoMaterializedView:
         """One telescoping term's subtree replay: the side containing
         the changed source ``s`` carries the SIGNED delta; every
         sibling subtree replays full and is SEMI-PRUNED to the delta
-        side's join keys at its meet node — the tree generalization of
-        the 2-way delta-join's static-side pruning, applied to INPUTS
-        bottom-up so no sibling join ever runs unpruned."""
+        side's join keys at its meet node — the one-join delta's
+        static-side pruning, applied to INPUTS bottom-up so no sibling
+        join ever runs unpruned."""
         from functools import reduce
 
         if "src" in node:
@@ -3491,10 +2932,15 @@ class AutoMaterializedView:
                 node, snaps, override=override, extra=("__mv_sign",)
             )
         on_left = s in node["left"]["srcs"]
-        dside = self._tree_delta_term(
-            node["left"] if on_left else node["right"], s, snaps, override
-        ).drop(*(node["drop_l"] if on_left else node["drop_r"]))
-        dside = dside.localCheckpoint(eager=True)  # change-sized
+        dnode = node["left"] if on_left else node["right"]
+        dside = self._tree_delta_term(dnode, s, snaps, override).drop(
+            *(node["drop_l"] if on_left else node["drop_r"])
+        )
+        if "src" not in dnode:
+            # a joined delta subtree is change-sized but costly to
+            # replay twice (key frame + join); a leaf's replayed CDC
+            # is cheaper to read again than to pin with its own job
+            dside = dside.localCheckpoint(eager=True)
         sib = self._replay_tree(
             node["right"] if on_left else node["left"], snaps
         ).drop(*(node["drop_r"] if on_left else node["drop_l"]))
@@ -3514,12 +2960,7 @@ class AutoMaterializedView:
             node["mid"], left.join(right, cond, "inner"),
             extra=("__mv_sign",),
         )
-        items = node.get("synth", [])
-        if items:
-            out = out.select(
-                "*", *[F.expr(sql).alias(nm) for nm, sql in items]
-            )
-        return out
+        return _synth(out, node)
 
     def _tree_signed_delta(self, node, anchor, latest) -> DataFrame | None:
         """Signed delta of a classified join SUBTREE between the anchor
@@ -3554,14 +2995,6 @@ class AutoMaterializedView:
         sign = F.when(
             F.col("op").isin("insert", "update"), F.lit(1)
         ).otherwise(F.lit(-1))
-
-        def _synth(df, n):
-            items = n.get("synth", [])
-            if not items:
-                return df
-            return df.select(
-                "*", *[F.expr(sql).alias(nm) for nm, sql in items]
-            )
 
         if "src" in node:
             s = node["src"]
@@ -3875,8 +3308,6 @@ class AutoMaterializedView:
         NOT pushed down (measured on 4.1: PushDownLeftSemiAntiJoin
         pushes below a bare Window but stops at the top-k Filter above
         it, which would re-rank the whole table)."""
-        from functools import reduce
-
         key = spec["key"]["name"]
         out_parts = [o for o, _s in spec["parts"]]
         d_fact = self._changed_fact_keys(spec, anchor, latest)
@@ -3901,30 +3332,15 @@ class AutoMaterializedView:
             eager=True
         )
 
-        def part_cond(a: str, b: str):
-            return reduce(
-                lambda x, y: x & y,
-                [
-                    F.col(f"{a}.{p}").eqNullSafe(F.col(f"{b}.{p}"))
-                    for p in out_parts
-                ],
-            )
-
         touched_src = touched.select(
             *[F.col(o).alias(s) for o, s in spec["parts"]]
         )
         src_parts = [s for _o, s in spec["parts"]]
-        src_cond = reduce(
-            lambda x, y: x & y,
-            [
-                F.col(f"s.{p}").eqNullSafe(F.col(f"t.{p}"))
-                for p in src_parts
-            ],
-        )
         restricted = (
             snaps[spec["source"]]
             .alias("s")
-            .join(F.broadcast(touched_src.alias("t")), src_cond, "left_semi")
+            .join(F.broadcast(touched_src.alias("t")),
+                  _part_cond("s", "t", src_parts), "left_semi")
         )
         rederived = self.plan_fn({spec["source"]: restricted}).localCheckpoint(
             eager=True
@@ -3932,16 +3348,13 @@ class AutoMaterializedView:
         dead = (
             view_snap.select(key, *out_parts)
             .alias("v")
-            .join(F.broadcast(touched.alias("t")), part_cond("v", "t"), "left_semi")
+            .join(F.broadcast(touched.alias("t")),
+                  _part_cond("v", "t", out_parts), "left_semi")
             .select(key)
             .join(rederived.select(key), key, "left_anti")
             .localCheckpoint(eager=True)
         )
-        base = self._commit_base(latest)
-        if dead.count() > 0:
-            self.table.delete(dead, f"{base + 1:014d}")
-        if rederived.count() > 0:
-            self.table.upsert(rederived, f"{base + 2:014d}")
+        self._commit_delta(dead, rederived, self._commit_base(latest))
 
     def _advance_window_tree(self, spec, anchor, latest) -> None:
         """Re-rank exactly the touched partitions of a window-over-join
@@ -4003,36 +3416,23 @@ class AutoMaterializedView:
                 rederived, touched.collect(), out_parts
             )
 
-        def part_cond(a, b):
-            return reduce(
-                lambda x, y: x & y,
-                [
-                    F.col(f"{a}.{p}").eqNullSafe(F.col(f"{b}.{p}"))
-                    for p in out_parts
-                ],
-            )
-
         rederived = (
             rederived.alias("r")
-            .join(F.broadcast(touched.alias("t")), part_cond("r", "t"),
-                  "left_semi")
+            .join(F.broadcast(touched.alias("t")),
+                  _part_cond("r", "t", out_parts), "left_semi")
             .localCheckpoint(eager=True)
         )
         view_snap = self.table.snapshot()
         dead = (
             view_snap.select(*keys, *out_parts)
             .alias("v")
-            .join(F.broadcast(touched.alias("t")), part_cond("v", "t"),
-                  "left_semi")
+            .join(F.broadcast(touched.alias("t")),
+                  _part_cond("v", "t", out_parts), "left_semi")
             .select(*keys)
             .join(rederived.select(*keys), keys, "left_anti")
             .localCheckpoint(eager=True)
         )
-        base = self._commit_base(latest)
-        if dead.count() > 0:
-            self.table.delete(dead, f"{base + 1:014d}")
-        if rederived.count() > 0:
-            self.table.upsert(rederived, f"{base + 2:014d}")
+        self._commit_delta(dead, rederived, self._commit_base(latest))
 
     def _advance_window_union(self, spec, anchor, latest) -> None:
         """Re-rank exactly the touched partitions of a window-over-
@@ -4148,35 +3548,22 @@ class AutoMaterializedView:
                 rederived, touched.collect(), out_parts
             )
 
-        def part_cond(a, b):
-            return reduce(
-                lambda x, y: x & y,
-                [
-                    F.col(f"{a}.{p}").eqNullSafe(F.col(f"{b}.{p}"))
-                    for p in out_parts
-                ],
-            )
-
         rederived = (
             rederived.alias("r")
-            .join(F.broadcast(touched.alias("t")), part_cond("r", "t"),
-                  "left_semi")
+            .join(F.broadcast(touched.alias("t")),
+                  _part_cond("r", "t", out_parts), "left_semi")
             .localCheckpoint(eager=True)
         )
         dead = (
             view_snap.select(tag, key, *out_parts)
             .alias("v")
-            .join(F.broadcast(touched.alias("t")), part_cond("v", "t"),
-                  "left_semi")
+            .join(F.broadcast(touched.alias("t")),
+                  _part_cond("v", "t", out_parts), "left_semi")
             .select(tag, key)
             .join(rederived.select(tag, key), [tag, key], "left_anti")
             .localCheckpoint(eager=True)
         )
-        base = self._commit_base(latest)
-        if dead.count() > 0:
-            self.table.delete(dead, f"{base + 1:014d}")
-        if rederived.count() > 0:
-            self.table.upsert(rederived, f"{base + 2:014d}")
+        self._commit_delta(dead, rederived, self._commit_base(latest))
 
     # -- algebra: per-branch change-key re-derivation (union views) ------
     def _advance_union(self, spec, anchor, latest) -> None:
@@ -4221,11 +3608,7 @@ class AutoMaterializedView:
         dead = reduce(
             lambda a, b: a.unionByName(b), deads
         ).localCheckpoint(eager=True)
-        base = self._commit_base(latest)
-        if dead.count() > 0:
-            self.table.delete(dead, f"{base + 1:014d}")
-        if rederived.count() > 0:
-            self.table.upsert(rederived, f"{base + 2:014d}")
+        self._commit_delta(dead, rederived, self._commit_base(latest))
 
     # -- algebra: change-key re-derivation (select / join views) ---------
     def _changed_keys_of(self, src, begin: str, end: str) -> DataFrame:
@@ -4417,8 +3800,4 @@ class AutoMaterializedView:
             affected.join(rederived.select(key), key, "left_anti")
             .localCheckpoint(eager=True)
         )
-        base = self._commit_base(latest)
-        if dead.count() > 0:
-            self.table.delete(dead, f"{base + 1:014d}")
-        if rederived.count() > 0:
-            self.table.upsert(rederived, f"{base + 2:014d}")
+        self._commit_delta(dead, rederived, self._commit_base(latest))

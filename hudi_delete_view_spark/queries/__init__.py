@@ -24,7 +24,7 @@ _LATE: set[str] = set()
 # driver rows date from round 1 (the code under them — scale profile,
 # skew guards, FS seam — has churned for seven rounds), then the r2/r3
 # survivors. Selection derives mechanically from unioning
-# CORRECTNESS_r01..r08 green rows; see tools/window_rotation.py.
+# CORRECTNESS_r01..r08 green rows; see SURVEY.md row I1.
 # Names listed here are pulled to the very front of the registry in this
 # order; everything else follows in registration order (``late`` still at
 # the back).

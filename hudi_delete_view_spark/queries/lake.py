@@ -1859,16 +1859,16 @@ GROUP BY o_orderpriority
 def lake_mv_auto_agg_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Aggregate-over-join in ONE declaration through the unified entry
     point — no manual staging: the classifier finds the inner equi-join
-    below the aggregate and maintains by DIRTY-GROUP re-derivation.
-    Both sides' CDC windows name the touched join keys (lineitem's
-    C2 updates / C3+C4 deletes, orders' C2 delta-updates / C3
-    delta-deletes), the join-key-pruned pre-aggregate join maps them to
-    the groups they feed at the anchor and target states, and exactly
-    those groups rebuild from the target snapshots.  The group key
-    lives on the DIM side (o_orderpriority) — the case a fact-only
-    change feed cannot resolve, and the reason detection goes through
-    the join.  Oracle recomputes the join + GROUP BY from scratch over
-    both change scripts."""
+    below the aggregate (a one-join agg_tree) and maintains it by the
+    telescoping delta-join feed Δ(F⋈D) = ΔF⋈D_anchor ∪ F_target⋈ΔD.
+    Each side's CDC (lineitem's C2 updates / C3+C4 deletes, orders' C2
+    delta-updates / C3 delta-deletes) joins the other side pruned to
+    its join keys, and the signed rows merge into the stored groups;
+    min_price re-derives only the groups a retraction touched.  The
+    group key lives on the DIM side (o_orderpriority) — the case a
+    fact-only change feed cannot resolve, and the reason the delta
+    goes through the join.  Oracle recomputes the join + GROUP BY from
+    scratch over both change scripts."""
     from ..sources.fixtures import build_orders_mor
 
     def plan(t):
@@ -1958,10 +1958,10 @@ def lake_mv_sql_ddl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CREATE MATERIALIZED VIEW declared in SQL TEXT — the switch-over
     surface for SQL-first users: the SELECT is planned by spark.sql
     over temp-view-registered lake snapshots, classified off the same
-    analyzed tree (here: agg_join — qualified attribute references are
-    stripped against the plan's own SubqueryAlias names so the
-    maintenance replays resolve), maintained by dirty-group
-    re-derivation across both change scripts, and served back as a
+    analyzed tree (here: a one-join agg_tree — qualified attribute
+    references are stripped against the plan's own SubqueryAlias names
+    so the maintenance replays resolve), maintained by the telescoping
+    delta-join feed across both change scripts, and served back as a
     temp view SQL consumers query by name."""
     import os as _os
 

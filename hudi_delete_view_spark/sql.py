@@ -57,7 +57,7 @@ def create_materialized_view(
     The ``sources`` dict names the lake tables the SELECT may reference;
     each plan evaluation registers the CURRENT snapshots under those
     names and plans the SELECT with ``spark.sql``, so classification
-    (aggregate / agg_join / join / select / window off the analyzed
+    (aggregate / agg_tree / join / select / window off the analyzed
     Catalyst tree) and every maintenance algebra work unchanged —
     including the algebras that re-run the plan over RESTRICTED inputs
     (touched partitions, dirty groups): the restriction rides in as the

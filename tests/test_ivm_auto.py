@@ -713,8 +713,8 @@ def test_agg_join_view(spark, scratch, tables):
     mv = AutoMaterializedView(spark, os.path.join(scratch, "mvaj"),
                               {"fact": fact, "dim": dim}, agg_join_plan)
     spec = mv.spec()
-    assert spec["kind"] == "agg_join"
-    assert {spec["left"]["source"], spec["right"]["source"]} == {"fact", "dim"}
+    assert spec["kind"] == "agg_tree"
+    assert set(spec["sources"]) == {"fact", "dim"}
     mv.refresh(seed_as_of={"fact": "20260101000000", "dim": "20260101000000"},
                to={"fact": "20260101000000", "dim": "20260101000000"})
 
@@ -891,7 +891,7 @@ def test_sql_materialized_view_ddl(spark, scratch, tables):
            GROUP BY gname""",
     )
     assert name == "sales_by_name"
-    assert mv.spec()["kind"] == "agg_join"
+    assert mv.spec()["kind"] == "agg_tree"
     refresh_materialized_view(name, mv, seed_as_of={
         "f_tbl": "20260101000000", "d_tbl": "20260101000000"})
     got = _rows(spark.sql("SELECT * FROM sales_by_name"))
@@ -1008,10 +1008,10 @@ def test_agg_left_outer_join_view(spark, scratch, tables):
     mv = AutoMaterializedView(spark, os.path.join(scratch, "mvalj"),
                               {"fact": fact, "dim": dim}, plan)
     spec = mv.spec()
-    assert spec["kind"] == "agg_join" and spec["join_type"] == "left"
+    assert spec["kind"] == "agg_tree" and spec["tree"]["jt"] == "left"
     # group key on the null-extended side: input restriction must NOT
     # apply to the dim side
-    assert spec["group_side"] is None
+    assert spec["group_src"] is None
     mv.refresh(seed_as_of={"fact": "20260101000000", "dim": "20260101000000"},
                to={"fact": "20260101000000", "dim": "20260101000000"})
 
@@ -1108,7 +1108,7 @@ def test_distinct_over_union_and_join(spark, scratch, tables):
 
     mv2 = AutoMaterializedView(spark, os.path.join(scratch, "mvdj"),
                                {"fact": fact, "dim": dim}, jplan)
-    assert mv2.spec()["kind"] == "agg_join" and mv2.spec()["aggs"] == []
+    assert mv2.spec()["kind"] == "agg_tree" and mv2.spec()["aggs"] == []
     mv2.refresh()
     dim.upsert(spark.createDataFrame([(0, "ZERO")], "gk long, gname string"),
                "20260106000000")
@@ -1577,8 +1577,8 @@ def test_self_join_aggregate_view(spark, scratch):
                               {"t": t}, plan)
     lmv = AutoMaterializedView(spark, os.path.join(scratch, "sjlmv"),
                                {"t": t}, lplan)
-    assert mv.spec()["kind"] == "agg_join"
-    assert lmv.spec()["join_type"] == "left"
+    assert mv.spec()["kind"] == "agg_tree"
+    assert lmv.spec()["tree"]["jt"] == "left"
     mv.refresh()
     lmv.refresh()
 
@@ -2127,14 +2127,14 @@ def test_agg_right_and_full_outer_join_views(spark, scratch, tables):
         mv = AutoMaterializedView(spark, os.path.join(scratch, name),
                                   {"fact": fact, "dim": dim}, plan)
         spec = mv.spec()
-        assert spec["kind"] == "agg_join"
+        assert spec["kind"] == "agg_tree"
         if name == "mvraj":
             # swapped: the preserved (fact) side is stored as left
-            assert spec["join_type"] == "left"
-            assert spec["left"]["source"] == "fact"
+            assert spec["tree"]["jt"] == "left"
+            assert spec["tree"]["left"]["src"] == "fact"
         else:
-            assert spec["join_type"] == "full"
-            assert spec["group_side"] is None
+            assert spec["tree"]["jt"] == "full"
+            assert spec["group_src"] is None
         seed = {"fact": "20260101000000", "dim": "20260101000000"}
         mv.refresh(seed_as_of=seed, to=seed)
 
@@ -2178,8 +2178,8 @@ def test_agg_join_composite_key(spark, scratch, tables):
     mv = AutoMaterializedView(spark, os.path.join(scratch, "mvck"),
                               {"fact": fact, "dim2": dim2}, plan)
     spec = mv.spec()
-    assert spec["kind"] == "agg_join"
-    assert len(spec["left"]["join_cols"]) == 2
+    assert spec["kind"] == "agg_tree"
+    assert len(spec["tree"]["pairs"]) == 2
     seed = {"fact": "20260101000000", "dim2": "20260101000000"}
     mv.refresh(seed_as_of=seed, to=seed)
 
@@ -2610,7 +2610,8 @@ def test_agg_tree_left_outer_arm_null_group(spark, scratch, tree_tables):
                 .join(t["c"].select("ckey", "region"),
                       F.col("ck") == F.col("ckey"), "left")
                 .groupBy("region")
-                .agg(F.count(F.lit(1)).alias("n"), F.sum("qty").alias("sq")))
+                .agg(F.count(F.lit(1)).alias("n"), F.sum("qty").alias("sq"),
+                     F.approx_count_distinct("ok").alias("ad")))
 
     mv = AutoMaterializedView(spark, os.path.join(scratch, "mvq5l"),
                               srcs, plan)
@@ -2663,7 +2664,7 @@ def test_expression_join_keys(spark, scratch, tree_tables):
 
     mv = AutoMaterializedView(spark, os.path.join(scratch, "mvek"),
                               {"li": li, "par": par}, plan)
-    assert mv.spec()["kind"] == "agg_join"
+    assert mv.spec()["kind"] == "agg_tree"
     mv.refresh()
     li.delete(spark.createDataFrame([("l2",), ("l3",)], "k string"),
               "20260102000000")
@@ -2726,7 +2727,8 @@ def test_agg_tree_inner_takes_delta_path(spark, scratch, tree_tables):
     path is replaced with a raiser, and for a retraction-capable
     aggregate set (sum/count, HLL via aux) the full-feed re-derivation
     hook is a raiser too; the view still converges through changes at
-    every level."""
+    every level.  The two-leaf view (one inner join) rides the same
+    path as the three-leaf tree."""
     srcs = tree_tables
     li, o, c = srcs["li"], srcs["o"], srcs["c"]
 
@@ -2739,10 +2741,22 @@ def test_agg_tree_inner_takes_delta_path(spark, scratch, tree_tables):
                 .agg(F.count(F.lit(1)).alias("n"), F.sum("qty").alias("sq"),
                      F.approx_count_distinct("ok").alias("ad")))
 
-    mv = AutoMaterializedView(spark, os.path.join(scratch, "mvdp"),
-                              srcs, plan)
-    assert mv.spec()["all_inner"] is True
-    mv.refresh()
+    def plan2(t):
+        return (t["li"].select("ok", "qty")
+                .join(t["o"].select("okey", "ck"), F.col("ok") == F.col("okey"))
+                .groupBy("ck")
+                .agg(F.count(F.lit(1)).alias("n"), F.sum("qty").alias("sq"),
+                     F.approx_count_distinct("ok").alias("ad")))
+
+    views = [
+        AutoMaterializedView(spark, os.path.join(scratch, "mvdp"),
+                             srcs, plan),
+        AutoMaterializedView(spark, os.path.join(scratch, "mvdp2"),
+                             {"li": li, "o": o}, plan2),
+    ]
+    for mv in views:
+        assert mv.spec()["all_inner"] is True
+        mv.refresh()
 
     def boom_signed(self, node, anchor, latest):
         raise AssertionError("all-INNER tree took the LEFT-arm signed "
@@ -2767,13 +2781,15 @@ def test_agg_tree_inner_takes_delta_path(spark, scratch, tree_tables):
         c.upsert(spark.createDataFrame([(1, "USA")],
                                        "ckey long, region string"),
                  "20260104000000")
-        mv.refresh()
-        assert _rows_ns(mv.serve()) == _rows_ns(
-            plan({n: t.snapshot() for n, t in srcs.items()}))
+        for mv in views:
+            mv.refresh()
+            assert _rows_ns(mv.serve()) == _rows_ns(mv.plan_fn(
+                {n: t.snapshot() for n, t in mv.sources.items()}))
     finally:
         AutoMaterializedView._tree_signed_delta = orig_signed
         AutoMaterializedView._merge_agg_delta = orig_merge
-    assert mv.refresh()["advanced"] is False
+    for mv in views:
+        assert mv.refresh()["advanced"] is False
 
 
 def test_aggregate_over_aggregate_autostaged(spark, scratch):

@@ -148,8 +148,9 @@ def ivm_advance_soak() -> None:
     aggregate-over-join views): grow the fact table 8x while holding the
     CHANGE SIZE fixed — advance wall-time should stay near-flat, because
     window views re-rank only touched partitions (source-input
-    restriction) and agg_join views re-derive only dirty groups (side-
-    input restriction).  A table-sized re-derivation would scale ~8x.
+    restriction) and aggregate-over-join views join only the change set
+    against key-pruned static sides.  A table-sized re-derivation would
+    scale ~8x.
     Prints a table to paste into SCALE.md.
     Usage: python tools/scale_stress.py --ivm-advance"""
     import shutil
