@@ -39,6 +39,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..plans import row_deletes
 from ..plans.metadata import CommitMetadata, WriteStat
 from ..plans.pruning import bounds_filter, may_overlap
 from ..plans.slices import FileSlice, resolve_slices, touched_file_groups
@@ -65,27 +66,6 @@ WRITE_TOKEN = "0-0-0"
 DEFAULT_PARTITION = "default"
 _PP = "__pp"  # staging-only partition column (partitionBy drops it from files)
 _FID = "__fid"
-
-# CDC delete-stamps broadcast bound: the stamps side is <= one row per key
-# deleted in the range, known driver-side from commit stats BEFORE any data
-# is read. Below this many deleted records the stamps relation broadcasts
-# (~30-byte keys -> tens of MB built); above it, the shuffled join is the
-# right call at any scale — the guard degrades, never breaks. Env-tunable
-# for clusters with bigger executor headroom.
-_BROADCAST_STAMPS_MAX_ROWS = int(
-    os.environ.get("SPARK_GRAFT_CDC_BCAST_STAMP_ROWS", 2_000_000)
-)
-
-# cdc() persists its delete-stamps subtree (it feeds two
-# differently-projected consumers) only past this many deleted rows in
-# range: below it, one extra persist+materialize job costs more than the
-# duplicated small scan it saves (measured ~+0.3s at sf0.1's ~17k
-# deletes); above it the barrier halves a scan+aggregation that grows
-# with the delete volume. Stats-gated like the delete view's two-phase
-# join — the driver knows total_records_deleted before any read.
-_STAMPS_PERSIST_MIN_ROWS = int(
-    os.environ.get("SPARK_GRAFT_CDC_STAMPS_PERSIST_MIN_ROWS", 100_000)
-)
 
 # file name: <fileId>_<writeToken>_<commitTs>[.log].parquet
 # The file id embeds the partition value verbatim (fg-<partition>-<n>), so
@@ -1238,11 +1218,17 @@ class CowTable:
         slices: dict[tuple[str, str], FileSlice],
         groups: set[tuple[str, str]],
         as_of: str | None = None,
+        since: str | None = None,
     ) -> DataFrame | None:
+        """Live rows of a group subset (None when it has no files);
+        ``since`` keeps only rows written after it."""
         paths = [slices[g].base_path for g in sorted(groups) if g in slices and slices[g].base_path]
         if not paths:
             return None
-        return self._read_paths(paths, as_of)
+        df = self._read_paths(paths, as_of)
+        if since is not None:
+            df = df.filter(F.col(COMMIT_TIME_FIELD) > F.lit(since))
+        return df
 
     def snapshot(
         self, as_of: str | None = None, partitions: list[str] | None = None
@@ -1609,18 +1595,19 @@ class CowTable:
         Scan is pruned to file groups touched in the range (driver-side
         stats pruning, the analogue of ``DeleteView.java:100``), then the
         ``_hoodie_commit_time`` filter pushes down into the Parquet scan as
-        a string-range predicate.
+        a string-range predicate. On MOR the groups read through the
+        merge (``_read_groups``): the latest version per key in the range
+        wins and tombstoned keys drop.
         """
         end = end_inclusive or self.timeline.latest_timestamp()
         groups = touched_file_groups(self.timeline, begin_exclusive, end)
         slices = resolve_slices(self.timeline, end)
-        df = self._read_groups(slices, groups, end)
+        df = self._read_groups(slices, groups, end, since=begin_exclusive)
         if df is None:
             return self.snapshot(end).limit(0)
-        cond = F.col(COMMIT_TIME_FIELD) > F.lit(begin_exclusive)
         if end is not None:
-            cond = cond & (F.col(COMMIT_TIME_FIELD) <= F.lit(end))
-        return df.filter(cond)
+            df = df.filter(F.col(COMMIT_TIME_FIELD) <= F.lit(end))
+        return df
 
     def bucketed_mirror(
         self,
@@ -1714,8 +1701,9 @@ class CowTable:
         begin side by a stats-bounded semi-join against the contributing
         keys — and the diff is ONE full-outer join on (file_id, key),
         group-co-located, the same key AQE skew-splits on, with payloads
-        travelling as single structs so the join never widens. Cost is
-        proportional to the changes in the range, not the table.
+        travelling as single structs so the join never widens
+        (``row_deletes.net_changes``). Cost is proportional to the changes
+        in the range, not the table.
         """
         end = end_inclusive or self.timeline.latest_timestamp()
         if end is not None:
@@ -1754,148 +1742,66 @@ class CowTable:
             for f_ in payload_fields:
                 if f_.name not in snap.columns:
                     snap = snap.withColumn(f_.name, F.lit(None).cast(f_.dataType))
+            # across an evolution the fid columns differ by construction,
+            # so the key-only join leaves them out
             return snap.select(
-                fid.alias(_FID),
+                *([] if crosses_evolution else [fid.alias(_FID)]),
                 F.col(RECORD_KEY_FIELD),
                 F.col(COMMIT_TIME_FIELD).alias(f"__ct_{img}"),
                 F.struct(*[F.col(f_.name) for f_ in payload_fields]).alias(f"__{img}"),
             )
 
-        # delete stamps: (record_key, last deleting commit) for every key
-        # deleted in the range — used to STAMP delete rows, and (in the
-        # change-pruned path below) to complete the begin-side contributor
-        # set. Commit stats bound its size driver-side before any data is
-        # read.
-        stamps = self._delete_stamps(begin_exclusive, end)
         range_meta = [
             self.timeline.commit_metadata(i.timestamp)
             for i in self.timeline.commits_in_range(begin_exclusive, end)
         ]
         total_deleted = sum(m.total_records_deleted for m in range_meta)
-        if total_deleted > _STAMPS_PERSIST_MIN_ROWS:
-            # the stamps relation feeds TWO differently-projected consumers
-            # (the begin-side contributor set and the delete-stamp join) —
-            # without a barrier the delete-view scan + aggregation executes
-            # twice per CDC call (guide §2.4). It is change-bounded (≤ one
-            # narrow row per key deleted in the range), so past the gate
-            # one materialized pass is strictly cheaper; below it the
-            # duplicated scan is smaller than a persist job (see
-            # _STAMPS_PERSIST_MIN_ROWS). The registry releases it between
-            # operator invocations.
-            from ..operators.util import register_cache
-
-            stamps = register_cache(stamps)
-
-        if crosses_evolution:
-            o = _side(prune(self.snapshot(begin_exclusive)), "before")
-            n = _side(end_snap, "after")
-            # the fid columns differ across the boundary by construction;
-            # drop them so the key-only join doesn't collide on the name
-            o, n = o.drop(_FID), n.drop(_FID)
-            j = o.join(n, on=join_keys, how="full_outer")
-            # untouched keys: identical slice on both sides, not rewritten
-            j = j.filter(
-                F.col("__before").isNull()
-                | F.col("__after").isNull()
-                | (F.col("__ct_after") > F.lit(begin_exclusive))
-            )
-        else:
+        changed_rows = None
+        if not crosses_evolution:
             # change-proportional diff (guide §2.2: shuffle the CHANGES,
             # not the table). End side: only rows rewritten in the range —
             # survivors keep their original commit stamp, so this is a
             # string predicate on the stored commit time that PUSHES INTO
             # the parquet scan (row groups of untouched rows skip on
-            # min/max stats). Begin side: only keys that can contribute —
-            # rewritten at end (insert/update) or deleted in the range
-            # (stamps); record keys are table-unique (the evolution branch
-            # already joins on them alone), so the semi-join keys on the
-            # record key. Net: the full-outer diff's inputs are
-            # change-sized, which is the whole point of a CDC feed over a
-            # 100 TB table — before this, both FULL boundary snapshots
-            # shuffled whenever every file group was touched.
-            n = _side(
-                end_snap.filter(
-                    F.col(COMMIT_TIME_FIELD) > F.lit(begin_exclusive)
-                ),
-                "after",
-            )
-            contrib = n.select(F.col(RECORD_KEY_FIELD)).unionByName(
-                stamps.select(F.col(RECORD_KEY_FIELD))
+            # min/max stats). The kernel then cuts the begin side to keys
+            # rewritten at end or deleted in the range; record keys are
+            # table-unique, so that semi-join keys on the record key.
+            end_snap = end_snap.filter(
+                F.col(COMMIT_TIME_FIELD) > F.lit(begin_exclusive)
             )
             # conservative driver-side bound on the contributor count:
             # trust per-commit insert/update counts when the writer
             # reported them; fall back to all rows written (COW rewrites,
-            # MOR delta appends report zeros there). Below the bound the
-            # key set broadcasts; above it a shuffled semi-join of two
-            # NARROW key columns still beats shuffling the unchanged wide
-            # rows it prunes.
-            changed_bound = total_deleted
+            # MOR delta appends report zeros there)
+            changed_rows = total_deleted
             for m in range_meta:
                 stats = [s for _p, s in m.all_stats()]
                 iu = sum(s.num_inserts + s.num_update_writes for s in stats)
-                changed_bound += iu if iu > 0 else sum(s.num_writes for s in stats)
-            if changed_bound <= _BROADCAST_STAMPS_MAX_ROWS:
-                contrib = F.broadcast(contrib)
-            o = _side(prune(self.snapshot(begin_exclusive)), "before").join(
-                contrib, on=RECORD_KEY_FIELD, how="left_semi"
-            )
-            # unchanged keys are excluded on BOTH sides by construction:
-            # every after-null row is a genuine delete, every pair a rewrite
-            j = o.join(n, on=join_keys, how="full_outer")
-        op = (
-            F.when(F.col("__before").isNull(), F.lit("insert"))
-            .when(F.col("__after").isNull(), F.lit("delete"))
-            .otherwise(F.lit("update"))
-        )
-        # delete rows: exact deleting-commit stamp (net-effect keeps the
-        # LAST delete of a key in the range). The stamps relation holds at
-        # most one row per key DELETED in the range, so when the stats
-        # bound is small it broadcasts instead of re-shuffling the whole
-        # wide diff output on record_key (the diff is partitioned by
-        # (file_id, key); this join keys on key alone). Catalyst can't see
-        # the bound (the stamps subtree is an aggregation over
-        # materialized views), hence the explicit hint.
-        stamp_side = (
-            F.broadcast(stamps)
-            if total_deleted <= _BROADCAST_STAMPS_MAX_ROWS
-            else stamps
-        )
-        j = j.withColumn("op", op).join(
-            stamp_side, on=RECORD_KEY_FIELD, how="left"
-        )
-        img = F.when(F.col("op") == "delete", F.col("__before")).otherwise(F.col("__after"))
-        change = F.when(F.col("op") == "delete", F.col("__ct_del")).otherwise(F.col("__ct_after"))
-        main_rec = F.struct(
-            F.col("op").alias("op"),
-            F.col(RECORD_KEY_FIELD).alias(RECORD_KEY_FIELD),
-            change.alias("change_commit"),
-            img.alias("__img"),
-        )
-        if include_update_preimages:
-            # preimage rows ride the SAME pass as their postimages (explode
-            # of a 1-or-2 element record array) — a unionByName of a second
-            # selection would re-execute both boundary snapshots and the
-            # diff join end-to-end
-            pre_rec = F.struct(
-                F.lit("update_preimage").alias("op"),
-                F.col(RECORD_KEY_FIELD).alias(RECORD_KEY_FIELD),
-                # stamped with the commit that replaced the image, like
-                # the postimage row it retracts against
-                F.col("__ct_after").alias("change_commit"),
-                F.col("__before").alias("__img"),
-            )
-            recs = F.when(
-                F.col("op") == "update", F.array(main_rec, pre_rec)
-            ).otherwise(F.array(main_rec))
-        else:
-            recs = F.array(main_rec)
-        return (
-            j.select(F.explode(recs).alias("__r"))
-            .select("__r.op", f"__r.{RECORD_KEY_FIELD}", "__r.change_commit", "__r.__img.*")
+                changed_rows += iu if iu > 0 else sum(s.num_writes for s in stats)
+        return row_deletes.net_changes(
+            _side(prune(self.snapshot(begin_exclusive)), "before"),
+            _side(end_snap, "after"),
+            join_keys,
+            keys=[RECORD_KEY_FIELD],
+            stamp="change_commit",
+            # across an evolution every key pairs up: an untouched one is
+            # the same slice on both sides, not rewritten
+            updated=(
+                F.col("__ct_after") > F.lit(begin_exclusive)
+                if crosses_evolution else None
+            ),
+            after_stamp=F.col("__ct_after"),
+            # exact deleting-commit stamps (net effect keeps the LAST
+            # delete of a key in the range); commit stats bound their
+            # rows before any data is read
+            stamps=self._delete_stamps(begin_exclusive, end),
+            stamp_rows=total_deleted,
+            changed_rows=changed_rows,
+            preimages=include_update_preimages,
         )
 
     def _delete_stamps(self, begin_exclusive: str, end: str | None) -> DataFrame:
-        """(record_key, __ct_del): the LAST commit in (begin, end] that
+        """(record_key, __stamp): the LAST commit in (begin, end] that
         deleted each key — COW derives it from the per-commit delete-view
         feed (MOR overrides with a tombstone-log scan)."""
         from .delete_view import delete_views_between
@@ -1903,5 +1809,5 @@ class CowTable:
         return (
             delete_views_between(self.spark, self.base_path, begin_exclusive, end)
             .groupBy(RECORD_KEY_FIELD)
-            .agg(F.max(COMMIT_TIME_FIELD).alias("__ct_del"))
+            .agg(F.max(COMMIT_TIME_FIELD).alias("__stamp"))
         )

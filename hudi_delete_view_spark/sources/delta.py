@@ -67,6 +67,7 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -74,7 +75,7 @@ from pyspark.sql import types as T
 
 from ..plans.fs import fs_for
 from ..plans.pruning import may_overlap
-from ..plans.row_deletes import delete_view, dv_positions
+from ..plans.row_deletes import delete_view, dv_positions, net_changes, net_diff
 
 LOG_DIR = "_delta_log"
 
@@ -781,9 +782,10 @@ def read_delta_cdc(
     Scale shape: Delta files are immutable, so rows in files untouched
     by the window CANNOT change — both boundary snapshots prune to the
     window's moved paths (dataChange=false movements included, see
-    ``_window_file_events``) before the one full-outer diff on the key.
-    Precise stamps come from per-version mini-diffs, each pruned to THAT
-    version's data-changing files — total bytes read ≈ the window's
+    ``_window_file_events``) before the one full-outer diff on the key
+    (``row_deletes.net_changes``). Precise stamps come from per-version
+    mini-diffs (``net_diff``), each pruned to THAT version's
+    data-changing files — total bytes read ≈ the window's
     change history, the same work profile as decoding a Hudi log
     window."""
     latest = resolve_delta_state(base_path)
@@ -791,85 +793,56 @@ def read_delta_cdc(
     per_version, moved = _window_file_events(
         base_path, begin_version_exclusive, end
     )
-    state_b = resolve_delta_state(base_path, begin_version_exclusive)
-    state_e = resolve_delta_state(base_path, end)
-    payload = [f.name for f in state_e.schema.fields]
-    non_key = [c for c in payload if c not in key_cols]
+    states = {latest.version: latest}
 
-    def keyed(df: DataFrame, tag: str) -> DataFrame:
-        return df.select(
-            *key_cols,
-            F.struct(*[F.col(c) for c in payload]).alias(tag),
+    def state(v: int) -> DeltaState:
+        # each version the window needs replays the log once, not once
+        # as a version's successor and again as its predecessor
+        if v not in states:
+            states[v] = resolve_delta_state(base_path, v)
+        return states[v]
+
+    payload = [f.name for f in state(end).schema.fields]
+
+    def side(v: int, paths, img: str) -> DataFrame:
+        st = state(v)
+        adds = [st.adds[p] for p in sorted(paths) if p in st.adds]
+        return _read_adds_live(spark, base_path, st, adds).select(
+            *key_cols, F.struct(*[F.col(c) for c in payload]).alias(img)
         )
 
-    before = keyed(
-        _read_adds_live(
-            spark, base_path, state_b,
-            [a for p, a in state_b.adds.items() if p in moved],
-        ),
-        "__b",
-    )
-    after = keyed(
-        _read_adds_live(
-            spark, base_path, state_e,
-            [a for p, a in state_e.adds.items() if p in moved],
-        ),
-        "__a",
-    )
-    j = before.join(after, key_cols, "full")
-
-    def differs() -> F.Column:
-        clause = F.lit(False)
-        for c in non_key:
-            clause = clause | ~F.col(f"__a.{c}").eqNullSafe(F.col(f"__b.{c}"))
-        return clause
-
-    net = j.filter(
-        F.col("__b").isNull() | F.col("__a").isNull() | differs()
-    )
-
+    differs = F.lit(False)
+    for c in payload:
+        if c not in key_cols:
+            differs = differs | ~F.col(f"__after.{c}").eqNullSafe(
+                F.col(f"__before.{c}")
+            )
     # precise per-key change stamps: for each window version, diff the
     # rows its data-changing commits removed vs added (files immutable,
     # so this pair IS the version's change set); a key's stamp is the
     # max version at which its value moved
-    events = []
-    for v, (adds_v, rms_v) in sorted(per_version.items()):
-        st_prev = resolve_delta_state(base_path, v - 1)
-        rm_adds = [st_prev.adds[p] for p in rms_v if p in st_prev.adds]
-        st_v = resolve_delta_state(base_path, v)
-        ad_adds = [st_v.adds[p] for p in adds_v if p in st_v.adds]
-        bv = keyed(_read_adds_live(spark, base_path, st_prev, rm_adds), "__b")
-        av = keyed(_read_adds_live(spark, base_path, st_v, ad_adds), "__a")
-        dv = bv.join(av, key_cols, "full").filter(
-            F.col("__b").isNull() | F.col("__a").isNull() | differs()
-        )
-        events.append(dv.select(*key_cols, F.lit(v).alias("__v")))
+    events = [
+        net_diff(
+            side(v - 1, rms_v, "__before"), side(v, adds_v, "__after"),
+            key_cols, differs,
+        ).select(*key_cols, F.lit(v).alias("__v"))
+        for v, (adds_v, rms_v) in sorted(per_version.items())
+    ]
+    stamps = None
     if events:
-        ev = events[0]
-        for e in events[1:]:
-            ev = ev.unionByName(e)
-        stamps = ev.groupBy(*key_cols).agg(
-            F.max("__v").cast("long").alias("change_version")
+        stamps = reduce(DataFrame.unionByName, events).groupBy(*key_cols).agg(
+            F.max("__v").cast("long").alias("__stamp")
         )
-        net = net.join(stamps, key_cols, "left")
-    else:
-        net = net.withColumn("change_version", F.lit(None).cast("long"))
-
-    inserts = net.filter(F.col("__b").isNull()).select(
-        F.lit("insert").alias("op"), "change_version",
-        *[F.col(f"__a.{c}").alias(c) for c in payload],
+    return net_changes(
+        side(begin_version_exclusive, moved, "__before"),
+        side(end, moved, "__after"),
+        key_cols,
+        keys=[],
+        stamp="change_version",
+        updated=differs,
+        after_stamp=None if events else F.lit(None).cast("long"),
+        stamps=stamps,
     )
-    updates = net.filter(
-        F.col("__b").isNotNull() & F.col("__a").isNotNull()
-    ).select(
-        F.lit("update").alias("op"), "change_version",
-        *[F.col(f"__a.{c}").alias(c) for c in payload],
-    )
-    deletes = net.filter(F.col("__a").isNull()).select(
-        F.lit("delete").alias("op"), "change_version",
-        *[F.col(f"__b.{c}").alias(c) for c in payload],
-    )
-    return inserts.unionByName(updates).unionByName(deletes)
 
 
 _HOODIE_META_COLS = (

@@ -498,7 +498,8 @@ def read_hudi_mor_cdc(
     boundary snapshots to file groups touched in the range (sound —
     Hudi keys never migrate between groups, so untouched groups cannot
     contribute changes), the diff is one full-outer join on
-    (partition, key) with payloads as single structs, and the delete
+    (partition, key) with payloads as single structs
+    (``row_deletes.net_changes``), and the delete
     stamps come from the SAME executor-side log decode the snapshot
     uses, filtered to tombstones in the window."""
     instants = hudi_completed_instants(base_path)
@@ -507,64 +508,35 @@ def read_hudi_mor_cdc(
     end = end_inclusive or instants[-1]
     touched = hudi_touched_file_ids(base_path, begin_exclusive, end)
     key = [PARTITION_PATH_FIELD, RECORD_KEY_FIELD]
-    if not touched:
-        # same projection as the non-empty path: op, key, change_commit,
-        # then payload columns EXCLUDING the key — re-selecting the key
-        # via *empty.columns would produce a duplicate column name that
-        # breaks unionByName/parquet downstream (ADVICE r7)
-        empty = read_hudi_mor_snapshot(spark, base_path, as_of=end,
-                                       listing=listing).filter(F.lit(False))
-        return empty.select(
-            F.lit("insert").alias("op"),
-            F.col(RECORD_KEY_FIELD),
-            F.col("_hoodie_commit_time").alias("change_commit"),
-            *[c for c in empty.columns if c != RECORD_KEY_FIELD],
-        )
-    before = read_hudi_mor_snapshot(
-        spark, base_path, as_of=begin_exclusive, listing=listing,
-        file_ids=touched,
-    )
-    after = read_hudi_mor_snapshot(
-        spark, base_path, as_of=end, listing=listing, file_ids=touched
-    )
-    payload = [c for c in after.columns]
-    b = before.select(*key, F.struct(*before.columns).alias("__b"))
-    a = after.select(*key, F.struct(*after.columns).alias("__a"))
-    j = b.join(a, key, "full")
 
-    inserts = j.filter(F.col("__b").isNull()).select(
-        F.lit("insert").alias("op"),
-        F.col(f"__a.{RECORD_KEY_FIELD}").alias(RECORD_KEY_FIELD),
-        F.col("__a._hoodie_commit_time").alias("change_commit"),
-        F.col("__a").alias("__img"),
-    )
-    updates = j.filter(
-        F.col("__b").isNotNull() & F.col("__a").isNotNull()
-        & (F.col("__a._hoodie_commit_time") > F.lit(begin_exclusive))
-    ).select(
-        F.lit("update").alias("op"),
-        F.col(f"__a.{RECORD_KEY_FIELD}").alias(RECORD_KEY_FIELD),
-        F.col("__a._hoodie_commit_time").alias("change_commit"),
-        F.col("__a").alias("__img"),
-    )
-    tomb = _tombstones(
-        spark, base_path, instants, begin_exclusive, end, touched,
-        before.schema, listing,
-    )
-    deletes = (
-        j.filter(F.col("__a").isNull())
-        .join(tomb, key, "left")
-        .select(
-            F.lit("delete").alias("op"),
-            F.col(f"__b.{RECORD_KEY_FIELD}").alias(RECORD_KEY_FIELD),
-            F.col("__del_ts").alias("change_commit"),
-            F.col("__b").alias("__img"),
+    def snapshot(as_of: str) -> DataFrame:
+        return read_hudi_mor_snapshot(
+            spark, base_path, as_of=as_of, listing=listing, file_ids=touched
         )
+
+    def side(snap: DataFrame, img: str) -> DataFrame:
+        # the key travels as a join column, so the image leaves it out
+        # (a second _hoodie_record_key column breaks unionByName/parquet
+        # downstream, ADVICE r7)
+        return snap.select(*key, F.struct(
+            *[c for c in snap.columns if c != RECORD_KEY_FIELD]
+        ).alias(img))
+
+    before = snapshot(begin_exclusive)
+    commit_time = F.col("__after._hoodie_commit_time")
+    return row_deletes.net_changes(
+        side(before, "__before"),
+        side(snapshot(end), "__after"),
+        key,
+        keys=[RECORD_KEY_FIELD],
+        stamp="change_commit",
+        updated=commit_time > F.lit(begin_exclusive),
+        after_stamp=commit_time,
+        stamps=_tombstones(
+            spark, base_path, instants, begin_exclusive, end, touched,
+            before.schema, listing,
+        ),
     )
-    out = inserts.unionByName(updates).unionByName(deletes)
-    img_cols = [F.col(f"__img.{c}").alias(c) for c in payload
-                if c != RECORD_KEY_FIELD]
-    return out.select("op", RECORD_KEY_FIELD, "change_commit", *img_cols)
 
 
 def _footer_bloom(path: str):
@@ -831,7 +803,7 @@ def _tombstones(
     begin_exclusive: str, end: str, file_ids: set[str],
     data_schema: T.StructType, listing: str = "auto",
 ) -> DataFrame:
-    """(partition, key, ``__del_ts``): every key the committed log
+    """(partition, key, ``__stamp``): every key the committed log
     blocks of instants in (begin, end] tombstone — DELETE_BLOCK entries
     plus ``_hoodie_is_deleted`` records — with its last tombstoning
     instant. Decodes only the logs of the ``file_ids`` groups, in the
@@ -852,7 +824,7 @@ def _tombstones(
             & (F.col("__ord_instant") <= F.lit(end))
         )
         .groupBy(PARTITION_PATH_FIELD, RECORD_KEY_FIELD)
-        .agg(F.max("__ord_instant").alias("__del_ts"))
+        .agg(F.max("__ord_instant").alias("__stamp"))
     )
 
 

@@ -58,9 +58,9 @@ class MorTable(CowTable):
         merge's (commit_time, seqno) tiebreak is deterministic only across
         batches, not within one)."""
         read_ts = self.timeline.latest_timestamp()
-        incoming = self._dedup_incoming(
-            self._with_meta(df, commit_ts, suffix=".log.parquet")
-        ).withColumn(DELETED_FIELD, F.lit(False))
+        incoming = self._dedup_incoming(self._with_meta(
+            self._as_table_types(df, read_ts), commit_ts, suffix=".log.parquet"
+        )).withColumn(DELETED_FIELD, F.lit(False))
         return self._write_delta(
             incoming, commit_ts, operation="delta_commit", read_ts=read_ts
         )
@@ -130,6 +130,7 @@ class MorTable(CowTable):
         read_ts = self.timeline.latest_timestamp()
         if read_ts is None:
             raise TimelineError("merge into empty table (bulk_insert first)")
+        source = self._as_table_types(source, read_ts)
         if delete_condition is None:
             delete_condition = F.lit(False)
         elif isinstance(delete_condition, str):
@@ -165,6 +166,19 @@ class MorTable(CowTable):
             combined, commit_ts, operation="delta_commit", read_ts=read_ts,
             delete_counts=delete_counts,
         )
+
+    def _as_table_types(self, df: DataFrame, read_ts: str | None) -> DataFrame:
+        """``df`` with each column the table already has cast to the
+        table's type: a delta declaring ``k int`` over an INT64 base would
+        publish ``int`` and fail every merged read of the base."""
+        schema = self._published_schema(read_ts)
+        if schema is None:
+            return df
+        types = {f.name: f.dataType for f in schema.fields}
+        return df.select(*[
+            F.col(c).cast(types[c]).alias(c) if c in types else F.col(c)
+            for c in df.columns
+        ])
 
     def _delta_schema_json(self, stamped: DataFrame, read_ts: str | None) -> str:
         """Published schema for a delta commit: the incoming batch's
@@ -305,7 +319,9 @@ class MorTable(CowTable):
             reader = reader.schema(schema)
         return reader.parquet(*paths)
 
-    def _merged_over(self, slices: dict, as_of: str | None = None) -> DataFrame | None:
+    def _merged_over(
+        self, slices: dict, as_of: str | None = None, since: str | None = None
+    ) -> DataFrame | None:
         """Merged view over a slice subset: latest version per key wins;
         tombstones drop rows. base ∪ logs → window rank on (file_id, key)
         by (commit_time, seqno) desc → keep rank 1 → drop deleted. One
@@ -317,7 +333,12 @@ class MorTable(CowTable):
         logged tail); a fully-compacted table plans with no window at
         all. None when the subset has no files. Both sides plan with the
         PUBLISHED per-side schemas (``_published_mor_schemas``) — at 100k
-        files that removes every driver footer read from the plan."""
+        files that removes every driver footer read from the plan.
+
+        ``since`` keeps only versions written after it, filtered BELOW
+        the window so that it shuffles only those. Each key's newest
+        version is then the same as over all versions, or dropped: a
+        key with any version after ``since`` has its newest there."""
         base_schema, log_schema = self._published_mor_schemas(as_of)
         logged = {g: s for g, s in slices.items() if s.log_paths}
         free_bases = [
@@ -339,6 +360,8 @@ class MorTable(CowTable):
             df = parts[0]
             for p in parts[1:]:
                 df = df.unionByName(p, allowMissingColumns=True)
+            if since is not None:
+                df = df.filter(F.col(COMMIT_TIME_FIELD) > F.lit(since))
             w = Window.partitionBy(
                 file_id_expr(F.col(FILE_NAME_FIELD)), F.col(RECORD_KEY_FIELD)
             ).orderBy(F.desc(COMMIT_TIME_FIELD), F.desc(COMMIT_SEQNO_FIELD))
@@ -351,6 +374,8 @@ class MorTable(CowTable):
             )
         if free_bases:
             free = self._read_mor(free_bases, base_schema)
+            if since is not None:
+                free = free.filter(F.col(COMMIT_TIME_FIELD) > F.lit(since))
             if DELETED_FIELD in free.columns:
                 free = free.filter(
                     ~F.coalesce(F.col(DELETED_FIELD), F.lit(False))
@@ -363,7 +388,8 @@ class MorTable(CowTable):
         return merged
 
     def _read_groups(
-        self, slices: dict, groups: set, as_of: str | None = None
+        self, slices: dict, groups: set, as_of: str | None = None,
+        since: str | None = None,
     ) -> DataFrame | None:
         """Live rows of a group subset — read THROUGH the merge.
 
@@ -376,7 +402,7 @@ class MorTable(CowTable):
         write on MOR an ABSORBING commit: correct data, logs folded in —
         targeted compaction semantics."""
         return self._merged_over(
-            {g: slices[g] for g in groups if g in slices}, as_of
+            {g: slices[g] for g in groups if g in slices}, as_of, since
         )
 
     def snapshot(
@@ -439,62 +465,6 @@ class MorTable(CowTable):
             return self.snapshot(as_of).limit(0)
         return bounds_filter(merged, between)
 
-    def incremental(self, begin_exclusive: str, end_inclusive: str | None = None) -> DataFrame:
-        """Changed rows in (begin, end] — B3 on MOR.
-
-        The COW implementation reads base slices only; on MOR the changes
-        live in delta LOG slices, so the scan must union base + logs of the
-        touched groups before the commit-time range filter. Within the
-        range the latest version per key wins and tombstoned keys drop
-        (same merge as ``snapshot``, restricted to the window)."""
-        from ..plans.slices import touched_file_groups
-
-        end = end_inclusive or self.timeline.latest_timestamp()
-        groups = touched_file_groups(self.timeline, begin_exclusive, end)
-        slices = resolve_slices(self.timeline, end)
-        base_paths, log_paths = [], []
-        for g in sorted(groups):
-            s = slices.get(g)
-            if s is None:
-                continue
-            if s.base_path:
-                base_paths.append(s.base_path)
-            log_paths.extend(s.log_paths)
-        if not base_paths and not log_paths:
-            return self.snapshot(end).limit(0)
-        # base and log files have different schemas (logs carry the
-        # tombstone flag) — read separately and union, as in snapshot(),
-        # each side planned with its PUBLISHED schema (no footer reads);
-        # one mixed read.parquet would silently drop the flag column
-        base_schema, log_schema = self._published_mor_schemas(end)
-        parts = []
-        if base_paths:
-            base = self._read_mor(base_paths, base_schema)
-            if DELETED_FIELD not in base.columns:
-                base = base.withColumn(DELETED_FIELD, F.lit(False))
-            parts.append(base)
-        if log_paths:
-            parts.append(self._read_mor(log_paths, log_schema))
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p, allowMissingColumns=True)
-        if DELETED_FIELD not in df.columns:
-            df = df.withColumn(DELETED_FIELD, F.lit(False))
-        cond = (F.col(COMMIT_TIME_FIELD) > F.lit(begin_exclusive)) & (
-            F.col(COMMIT_TIME_FIELD) <= F.lit(end)
-        )
-        w = Window.partitionBy(
-            file_id_expr(F.col(FILE_NAME_FIELD)), F.col(RECORD_KEY_FIELD)
-        ).orderBy(F.desc(COMMIT_TIME_FIELD), F.desc(COMMIT_SEQNO_FIELD))
-        return (
-            df.filter(cond)
-            .withColumn("__rank", F.row_number().over(w))
-            .filter(F.col("__rank") == 1)
-            .drop("__rank")
-            .filter(~F.coalesce(F.col(DELETED_FIELD), F.lit(False)))
-            .drop(DELETED_FIELD)
-        )
-
     def _tombstones(self, begin_exclusive: str, end: str | None):
         """(``_FID``, key, commit time) of every tombstone the commits in
         (begin, end] wrote: a scan of exactly the log files they published
@@ -528,7 +498,7 @@ class MorTable(CowTable):
         per key in (begin, end] (``_tombstones``)."""
         return self._tombstones(begin_exclusive, end).groupBy(
             RECORD_KEY_FIELD
-        ).agg(F.max(COMMIT_TIME_FIELD).alias("__ct_del"))
+        ).agg(F.max(COMMIT_TIME_FIELD).alias("__stamp"))
 
     # ------------------------------------------------------------------
     # compaction: merge logs into fresh base slices

@@ -1463,7 +1463,7 @@ def test_cdc_stamps_single_execution(spark, scratch, monkeypatch):
     import io
     from contextlib import redirect_stdout
 
-    import hudi_delete_view_spark.sources.cow as cow_mod
+    from hudi_delete_view_spark.plans import row_deletes
 
     t = CowTable(
         spark, os.path.join(scratch, "cdc_stamps"), key_fields=["k"],
@@ -1489,10 +1489,53 @@ def test_cdc_stamps_single_execution(spark, scratch, monkeypatch):
     assert plan_of(ungated).count(".delete/") == 2
     rows_ungated = sorted((r["op"], r["k"]) for r in ungated.collect())
     # force the gate: barrier engages, subtree planned once behind a cache
-    monkeypatch.setattr(cow_mod, "_STAMPS_PERSIST_MIN_ROWS", 0)
+    monkeypatch.setattr(row_deletes, "STAMPS_PERSIST_MIN_ROWS", 0)
     df = t.cdc(T1, T3)
     plan = plan_of(df)
     assert "InMemoryTableScan" in plan, plan
     assert plan.count(".delete/") == 1, plan
     rows = sorted((r["op"], r["k"]) for r in df.collect())
     assert rows == rows_ungated == [("delete", 2), ("update", 1)]
+
+
+def test_foreign_cdc_single_diff_pass(spark):
+    """Shape pin for the shared net-change kernel on the two foreign
+    fixtures: the Hudi MOR CDC diffs its boundaries in exactly one
+    full-outer join, the Delta CDC in one plus one per version that both
+    removed and added data (its per-version stamp diffs), and neither
+    assembles op branches a second or third time — each stays within
+    the jobs the three-branch union took (13 and 12)."""
+    from hudi_delete_view_spark.sources.delta import (
+        _window_file_events,
+        read_delta_cdc,
+    )
+    from hudi_delete_view_spark.sources.hudi import read_hudi_mor_cdc
+
+    fixtures = os.path.join(os.path.dirname(__file__), "fixtures")
+    sc = spark.sparkContext
+
+    def run(group, df):
+        sc.setJobGroup(group, "cdc shape audit")
+        try:
+            df.collect()
+        finally:
+            sc.setJobGroup(None, None)
+        # the adaptive plan prints its initial plan after the final one
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        final = plan.split("== Initial Plan ==")[0]
+        return len(sc.statusTracker().getJobIdsForGroup(group)), final
+
+    jobs, plan = run("hudi-cdc-shape", read_hudi_mor_cdc(
+        spark, os.path.join(fixtures, "hudi_mor"), "20210301090000"))
+    assert plan.count("FullOuter") == 1, plan
+    assert jobs <= 13, jobs
+
+    delta = os.path.join(fixtures, "delta_tbl")
+    per_version, _moved = _window_file_events(delta, 0, 4)
+    # an append-only version (v4) diffs against an empty side, a join
+    # Catalyst folds away
+    diffs = sum(1 for adds, rms in per_version.values() if adds and rms)
+    assert diffs == 2
+    jobs, plan = run("delta-cdc-shape", read_delta_cdc(spark, delta, ["id"], 0, 4))
+    assert plan.count("FullOuter") == 1 + diffs, plan
+    assert jobs <= 12, jobs

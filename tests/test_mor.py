@@ -407,6 +407,34 @@ def test_merge_delta_mixed_actions(spark, scratch):
     assert got2 == got
 
 
+def test_delta_source_takes_table_types(spark, scratch):
+    """A merge or upsert delta narrower than the table (``k int, v int``
+    over a base bulk-inserted from Python ints, INT64) is cast to the
+    table schema: the merged snapshot stays readable, typed as the base."""
+    t = MorTable(
+        spark, os.path.join(scratch, "mor_mrg_types"), key_fields=["k"],
+        partition_field="p", num_file_groups=2,
+    )
+    t.bulk_insert(
+        spark.createDataFrame([(k, f"p{k % 2}", k * 10) for k in range(4)],
+                              ["k", "p", "v"]),
+        "20270601000000",
+    )
+    src = spark.createDataFrame(
+        [(1, "p1", 7001, False), (2, "p0", 0, True), (10, "p0", 9010, False)],
+        "k int, p string, v int, is_del boolean",
+    )
+    t.merge_delta(src, "20270602000000", delete_condition="is_del")
+    t.upsert_delta(
+        spark.createDataFrame([(3, "p1", 33)], "k int, p string, v int"),
+        "20270603000000",
+    )
+    snap = t.snapshot()
+    assert dict(snap.dtypes)["k"] == dict(snap.dtypes)["v"] == "bigint"
+    got = {r["k"]: r["v"] for r in snap.select("k", "v").collect()}
+    assert got == {0: 0, 1: 7001, 3: 33, 10: 9010}
+
+
 def test_mor_scan_merges_logs(spark, scratch):
     """MOR scan must read THROUGH the merge: log updates move rows into
     the scanned range (and tombstones remove them) even when the base
