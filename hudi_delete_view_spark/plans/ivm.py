@@ -65,18 +65,22 @@ IDs for lineage) and classifies the view:
   joining a dim key changed in range, dim deletes included via CDC
   before-images) → re-derive those rows against latest snapshots, one
   delete commit for vanished view rows, one upsert for the rest.
-- **window** — Project/Filter above ONE Window over one source (rank,
-  top-k per group, running aggregates): maintained by WHOLE-PARTITION
-  re-derivation, because one changed row reshuffles every rank in its
-  partition.  Touched partitions = old locations from the stored view ∪
-  new locations from the source (never from the windowed plan, whose
-  top-k filter may hide a changed row); the plan re-runs over the
-  SOURCE RESTRICTED to those partitions (input restriction commutes
-  with whole partitions; an output semi-join would not be pushed below
-  the top-k filter), vanished rows become view deletes.  A Window
-  anywhere else in a plan is
-  refused — the row-granular algebras would silently miss the
-  partition reshuffle.
+- **window** — Project/Filter above ONE Window over one or more UNION
+  ALL branches (rank, top-k per group, running aggregates; a single
+  source is the one-branch union, with no tag column): maintained by
+  WHOLE-PARTITION re-derivation, because one changed row reshuffles
+  every rank in its partition.  Touched partitions, per branch = old
+  locations from the stored view ∪ new locations from the source
+  (never from the windowed plan, whose top-k filter may hide a changed
+  row); the plan re-runs over the SOURCES RESTRICTED to those
+  partitions (input restriction commutes with whole partitions; an
+  output semi-join would not be pushed below the top-k filter), and
+  vanished rows become view deletes.  A window over a join tree
+  (**window_tree**) finds its touched partitions by image replay
+  through the tree instead, since a dim change can move rows between
+  partitions; both re-rank through one tail.  A Window anywhere else
+  in a plan is refused — the row-granular algebras would silently
+  miss the partition reshuffle.
 - **select** — single source, no join/aggregate (the everyday
   project/filter view): the join algebra degenerated to zero dim
   sources — touched record keys re-derived through the plan, rows the
@@ -140,11 +144,8 @@ from ..sources.cow import RECORD_KEY_FIELD, META_FIELDS, CowTable
 # count — 256 clauses planned in ~5s, 1024 took ~40s, eating most of
 # the 65s benefit H18 measured at 1.6M rows — and a left-deep fold of
 # 1024 clauses overflowed the JVM stack outright (fixed: balanced
-# fold). 256 is the measured-sane default; env-tunable for bigger
-# tables where full-input re-derive costs minutes.
-WINDOW_TOUCHED_PRED_MAX = int(
-    os.environ.get("SPARK_GRAFT_WINDOW_PRED_MAX", "256")
-)
+# fold). 256 is the measured-sane bound.
+WINDOW_TOUCHED_PRED_MAX = 256
 
 # Chunk multiplier: between PRED_MAX and PRED_MAX*CHUNKS_MAX touched
 # partitions the literal predicate is applied CHUNKED — K union branches
@@ -155,9 +156,7 @@ WINDOW_TOUCHED_PRED_MAX = int(
 # path 16x before the full-input fallback; each branch's predicate still
 # pushes below the Window, and branches keep disjoint partitions (the
 # touched tuples are distinct), so the union is duplicate-free.
-WINDOW_TOUCHED_CHUNKS_MAX = int(
-    os.environ.get("SPARK_GRAFT_WINDOW_PRED_CHUNKS", "16")
-)
+WINDOW_TOUCHED_CHUNKS_MAX = 16
 
 
 def _balanced_any(conds: list) -> "F.Column":
@@ -807,7 +806,8 @@ def _resolve_literal(eid: int, nodes: list) -> str | None:
     return None
 
 
-def _classify_union(plan, src_ids, refs, snapshots, quals=frozenset()) -> dict:
+def _classify_union(plan, src_ids, refs, snapshots, quals=frozenset(),
+                    kids=None) -> dict:
     """UNION ALL views (multi-source append — N ingest feeds fused into
     one logical table): each branch is a Project/Filter chain over a
     source, maintained independently by change-key re-derivation over
@@ -815,8 +815,13 @@ def _classify_union(plan, src_ids, refs, snapshots, quals=frozenset()) -> dict:
     branch must project its source's record key into a COMMON output
     column AND a DISTINCT LITERAL tag column (e.g.
     ``lit('web').alias('src')``) — record keys from different sources
-    may collide, so the tag disambiguates storage and deletes."""
-    kids = _children(plan)
+    may collide, so the tag disambiguates storage and deletes.
+
+    ``kids=[plan]`` classifies ``plan`` itself as the ONE branch of a
+    one-input union (a single-source window): one branch needs no tag,
+    so ``tag_col``/``tag_pos`` are None and the record key alone is the
+    identity."""
+    kids = _children(plan) if kids is None else kids
     out_names = [a.name() for a in _seq(plan.output())]
     branches, key_idx, tag_cands = [], None, None
     for child in kids:
@@ -865,26 +870,30 @@ def _classify_union(plan, src_ids, refs, snapshots, quals=frozenset()) -> dict:
              "lits": lits}
         )
     tag_idx = None
-    for i in sorted(tag_cands or ()):
-        vals = [b["lits"][i] for b in branches]
-        if len(set(vals)) == len(vals):
-            tag_idx = i
-            break
-    if tag_idx is None:
-        raise UnsupportedViewError(
-            "UNION view needs a discriminator: every branch must project "
-            "a LITERAL tag column with pairwise-distinct values (e.g. "
-            "lit('web').alias('src')) — record keys from different "
-            "sources may collide, so (tag, key) is the row identity"
-        )
+    if len(branches) > 1:  # one branch needs no discriminator
+        for i in sorted(tag_cands or ()):
+            vals = [b["lits"][i] for b in branches]
+            if len(set(vals)) == len(vals):
+                tag_idx = i
+                break
+        if tag_idx is None:
+            raise UnsupportedViewError(
+                "UNION view needs a discriminator: every branch must "
+                "project a LITERAL tag column with pairwise-distinct "
+                "values (e.g. lit('web').alias('src')) — record keys from "
+                "different sources may collide, so (tag, key) is the row "
+                "identity"
+            )
     for b in branches:
-        b["tag_sql"] = b.pop("lits")[tag_idx]
+        lits = b.pop("lits")
+        if tag_idx is not None:
+            b["tag_sql"] = lits[tag_idx]
     return {
         "kind": "union",
         "branches": branches,
         "key": {"name": out_names[key_idx]},
         "key_pos": key_idx,
-        "tag_col": out_names[tag_idx],
+        "tag_col": None if tag_idx is None else out_names[tag_idx],
         "tag_pos": tag_idx,
         "out_names": out_names,
     }
@@ -1240,44 +1249,25 @@ def _jk_cond(cols: list, nullsafe: bool):
     return reduce(lambda a, b: a & b, terms)
 
 
-def _classify_window(win_node, src_ids, refs, out_ids, snapshots,
-                     quals=frozenset()) -> dict:
-    """Window views (rank / top-k per group / running aggregates):
-    maintained by WHOLE-PARTITION re-derivation — one changed row
-    reshuffles every rank in its partition, so the advance re-runs the
-    plan over exactly the touched partitions (old location from the
-    stored view, new location from the source) and swaps them in.
-    Work ∝ rows of touched partitions, never the table; ANY window
-    function is supported because the user's own plan recomputes."""
-    _nodes, term = _descend_chain(_children(win_node)[0], snapshots)
-    if term[0] != "source":
-        if _cls(term[1]) == "Union":
-            # UNION ALL below the window — rank across merged feeds.
-            # The analyzer routinely inserts pass-through Projects here
-            # (withColumn re-projection); those preserve exprIds and are
-            # transparent. Anything computing or filtering between the
-            # window and the union is not — fold it into the branches.
-            for n in _nodes:
-                if _cls(n) != "Project" or any(
-                    _cls(p) != "AttributeReference"
-                    for p in _seq(n.projectList())
-                ):
-                    raise UnsupportedViewError(
-                        "projections/filters between the window and the "
-                        "UNION are not maintainable — fold them into each "
-                        "union branch so the branch chains carry them"
-                    )
-            return _classify_window_union(
-                win_node, term[1], src_ids, refs, out_ids, snapshots, quals
-            )
-        # joins below the window — the multi-source composition
-        return _classify_window_tree(
-            win_node, src_ids, refs, out_ids, snapshots, quals
-        )
-    # a chain over ONE source (regardless of how many sources are
-    # registered): the classic single-source window algebra
-    src_name = term[1]
-    key = _find_view_key(out_ids, refs, src_ids, want_source=src_name)
+def _final_name(tid: int, out_ids: dict[int, str], refs) -> str | None:
+    """The view output column carrying window-input attr ``tid``: the
+    same exprId (pass-through) or a pure rename (an alias referencing
+    ONLY it — transitive reach would false-match e.g. the rank column,
+    whose window expression also references the partition attr)."""
+    return next(
+        (name for eid, name in out_ids.items() if eid == tid), None
+    ) or next(
+        (name for eid, name in out_ids.items() if refs.get(eid) == [tid]),
+        None,
+    )
+
+
+def _window_parts(win_node, out_ids, refs) -> list:
+    """The window's PARTITION BY as (view output name, partition attr)
+    pairs — the one partition-spec resolver of both window
+    classifiers.  Each partition expression must be a plain column that
+    the view projects: stored rows map back to their partitions
+    through it."""
     pspec = _seq(win_node.partitionSpec())
     if not pspec:
         raise UnsupportedViewError(
@@ -1292,30 +1282,115 @@ def _classify_window(win_node, src_ids, refs, out_ids, snapshots,
                 f"window partition expression {e.sql()} must be a plain "
                 "column (pre-compute derived partitions in a select below)"
             )
-        hit = _resolve_to_source(e.exprId().id(), refs, src_ids)
-        if hit is None or hit[0] != src_name:
-            raise UnsupportedViewError(
-                f"window partition column {e.sql()} does not resolve to the "
-                "source"
-            )
-        # the output column carrying the partition attr: same exprId
-        # (pass-through) or a pure rename (an alias referencing ONLY it —
-        # transitive reach would false-match e.g. the rank column, whose
-        # window expression also references the partition attr)
-        tid = e.exprId().id()
-        out_name = next(
-            (name for eid, name in out_ids.items() if eid == tid), None
-        ) or next(
-            (name for eid, name in out_ids.items() if refs.get(eid) == [tid]),
-            None,
-        )
+        out_name = _final_name(e.exprId().id(), out_ids, refs)
         if out_name is None:
             raise UnsupportedViewError(
                 f"window partition column {e.sql()} must be projected into "
                 "the view output — it maps stored rows to their partitions"
             )
-        parts.append((out_name, hit[1]))
-    return {"kind": "window", "source": src_name, "key": key, "parts": parts}
+        parts.append((out_name, e))
+    return parts
+
+
+def _classify_window(win_node, src_ids, refs, out_ids, snapshots,
+                     quals=frozenset()) -> dict:
+    """Window views (rank / top-k per group / running aggregates) over
+    one source or a UNION ALL of sources, maintained by WHOLE-PARTITION
+    re-derivation: one changed row reshuffles every rank in its
+    partition, so the advance re-runs the user's OWN plan (any window
+    function) over exactly the touched partitions and swaps them in.
+    Work ∝ rows of touched partitions, never the table.
+
+    A single source is the one-branch union: the window's input chain
+    is the branch, with no tag column, and the source's record key is
+    the row identity.  Over a UNION ALL (rank across merged ingest
+    feeds) the identity is the union contract's (tag, key).  Detection
+    is per branch (see _advance_window): changed keys name the
+    partitions rows ENTER through the branch chain's after-image and
+    LEAVE through the stored view — union is a multiset sum, so
+    branches never interact.  The partition column maps per branch to
+    possibly-different source columns (``part_src_cols``, SQL over the
+    source's raw columns); a source feeding several branches is
+    restricted to the OR of its branches' restrictions — superset-safe
+    because the output post-trims to exactly the touched tuples — and a
+    branch whose partition is derived from renamed intermediates
+    (None) disables input restriction for its source.  Joins below the
+    window classify as ``window_tree``."""
+    child = _children(win_node)[0]
+    _nodes, term = _descend_chain(child, snapshots)
+    if term[0] == "source":
+        top, kids = child, [child]
+    elif _cls(term[1]) == "Union":
+        # The analyzer routinely inserts pass-through Projects between
+        # the window and the union (withColumn re-projection); those
+        # preserve exprIds and are transparent. Anything computing or
+        # filtering between them is not — fold it into the branches.
+        for n in _nodes:
+            if _cls(n) != "Project" or any(
+                _cls(p) != "AttributeReference"
+                for p in _seq(n.projectList())
+            ):
+                raise UnsupportedViewError(
+                    "projections/filters between the window and the "
+                    "UNION are not maintainable — fold them into each "
+                    "union branch so the branch chains carry them"
+                )
+        top, kids = term[1], _children(term[1])
+    else:
+        # joins below the window — the multi-source composition
+        return _classify_window_tree(
+            win_node, src_ids, refs, out_ids, snapshots, quals
+        )
+    uspec = _classify_union(top, src_ids, refs, snapshots, quals, kids=kids)
+    top_out = _seq(top.output())
+    pos_of = {a.exprId().id(): i for i, a in enumerate(top_out)}
+    parts = _window_parts(win_node, out_ids, refs)
+    for _o, e in parts:
+        if e.exprId().id() not in pos_of:
+            raise UnsupportedViewError(
+                f"window partition column {e.sql()} must be a UNION "
+                "output column"
+            )
+    key_final = _final_name(
+        top_out[uspec["key_pos"]].exprId().id(), out_ids, refs
+    )
+    tag_final = None
+    if uspec["tag_pos"] is not None:
+        tag_final = _final_name(
+            top_out[uspec["tag_pos"]].exprId().id(), out_ids, refs
+        )
+    if key_final is None or (uspec["tag_pos"] is not None
+                             and tag_final is None):
+        raise UnsupportedViewError(
+            "a window view must project its input's record-key column "
+            "(and over a UNION, the tag column) into its output — it is "
+            "the row identity"
+        )
+
+    # per-branch partition-to-source-column mapping for input restriction
+    for kid, br in zip(kids, uspec["branches"]):
+        nodes, term = _descend_chain(kid, snapshots)
+        local = _source_local_ids(term, snapshots)
+        kid_out = _seq(kid.output())
+        cols = [
+            _chain_col_sql(
+                kid_out[pos_of[e.exprId().id()]].exprId().id(), nodes, local,
+                quals,
+            )
+            for _o, e in parts
+        ]
+        br["part_src_cols"] = cols if all(c is not None for c in cols) else None
+
+    return {
+        "kind": "window",
+        "branches": uspec["branches"],
+        "key": {"name": key_final},
+        "tag_col": tag_final,
+        "in_names": uspec["out_names"],
+        "parts": [
+            (o, uspec["out_names"][pos_of[e.exprId().id()]]) for o, e in parts
+        ],
+    }
 
 
 def _classify_window_tree(
@@ -1338,36 +1413,13 @@ def _classify_window_tree(
     tuple of every duplicate-leaf occurrence's record key (each
     occurrence must project its own record key into the output) plus
     the non-duplicated sources' view key if one is projected."""
-    pspec = _seq(win_node.partitionSpec())
-    if not pspec:
-        raise UnsupportedViewError(
-            "window without PARTITION BY: every change would re-derive "
-            "the whole table — give the window a partition"
-        )
     parts, psrcs = [], set()
-    for e in pspec:
-        if _cls(e) != "AttributeReference":
-            raise UnsupportedViewError(
-                f"window partition expression {e.sql()} must be a plain "
-                "column (pre-compute derived partitions in a select below)"
-            )
+    for out_name, e in _window_parts(win_node, out_ids, refs):
         hit = _resolve_to_source(e.exprId().id(), refs, src_ids)
         if hit is None:
             raise UnsupportedViewError(
                 f"window partition column {e.sql()} does not resolve to "
                 "a source column"
-            )
-        tid = e.exprId().id()
-        out_name = next(
-            (name for eid, name in out_ids.items() if eid == tid), None
-        ) or next(
-            (name for eid, name in out_ids.items() if refs.get(eid) == [tid]),
-            None,
-        )
-        if out_name is None:
-            raise UnsupportedViewError(
-                f"window partition column {e.sql()} must be projected into "
-                "the view output — it maps stored rows to their partitions"
             )
         psrcs.add(hit[0])
         # (output name, window-input name, source column name): detection
@@ -1511,7 +1563,7 @@ def _classify_window_tree(
         # null-extended one — the advance instead applies the touched
         # tuples as a literal predicate on the plan OUTPUT, which
         # Catalyst pushes below the Window to exactly the producing
-        # occurrence (see _advance_window_tree).
+        # occurrence (see _rerank_touched).
         "restrict_ok": part_src not in _null_extended(tree)
         and not (dups and part_src in set(dups)),
         "tree": tree,
@@ -1552,99 +1604,6 @@ def _chain_col_sql(eid: int, nodes: list, src_cols: dict[int, str],
             return None  # not produced by this project at all
         eid = nxt
     return src_cols.get(eid)
-
-
-def _classify_window_union(
-    win_node, union_node, src_ids, refs, out_ids, snapshots, quals=frozenset()
-) -> dict:
-    """Window views over UNION ALL inputs (rank across merged ingest
-    feeds): the composition of the union and window algebras — SURVEY
-    §12 lead 1, the last cell of the IVM composition lattice.
-
-    Detection is per-branch image replay: each changed source's keys
-    name the partitions their rows ENTER through that branch's chain
-    after-image, and the partitions they LEAVE through the stored view's
-    (tag, key) rows — union is a multiset sum, so branches never
-    interact at detection time.  Re-derivation re-runs the user's OWN
-    plan (any window function) with each SOURCE input restricted to
-    rows some branch maps into a touched partition; the partition
-    column maps per-branch to possibly-different source columns, and a
-    source feeding several branches gets the OR of its branches'
-    restrictions — superset-safe only because the output post-trims to
-    exactly the touched partition tuples.  A branch whose partition
-    output is a derived expression disables input restriction for its
-    source (full-input pass, still output-exact via the post-trim).
-    Row identity is the union contract's (tag, key)."""
-    uspec = _classify_union(union_node, src_ids, refs, snapshots, quals)
-    union_out = _seq(union_node.output())
-    union_names = uspec["out_names"]
-    pos_of = {a.exprId().id(): i for i, a in enumerate(union_out)}
-
-    def final_name(tid):
-        return next(
-            (n for eid, n in out_ids.items() if eid == tid), None
-        ) or next(
-            (n for eid, n in out_ids.items() if refs.get(eid) == [tid]), None
-        )
-
-    pspec = _seq(win_node.partitionSpec())
-    if not pspec:
-        raise UnsupportedViewError(
-            "window without PARTITION BY: every change would re-derive "
-            "the whole table — give the window a partition"
-        )
-    parts = []  # (final output name, union column name, union position)
-    for e in pspec:
-        if _cls(e) != "AttributeReference":
-            raise UnsupportedViewError(
-                f"window partition expression {e.sql()} must be a plain "
-                "column (pre-compute derived partitions inside the union "
-                "branches)"
-            )
-        tid = e.exprId().id()
-        if tid not in pos_of:
-            raise UnsupportedViewError(
-                f"window partition column {e.sql()} must be a UNION "
-                "output column"
-            )
-        oname = final_name(tid)
-        if oname is None:
-            raise UnsupportedViewError(
-                f"window partition column {e.sql()} must be projected "
-                "into the view output — it maps stored rows to their "
-                "partitions"
-            )
-        parts.append((oname, union_names[pos_of[tid]], pos_of[tid]))
-
-    key_tid = union_out[uspec["key_pos"]].exprId().id()
-    tag_tid = union_out[uspec["tag_pos"]].exprId().id()
-    key_final, tag_final = final_name(key_tid), final_name(tag_tid)
-    if key_final is None or tag_final is None:
-        raise UnsupportedViewError(
-            "a window-over-union view must project the union's record-key "
-            "and tag columns into its output — (tag, key) is the row "
-            "identity"
-        )
-
-    # per-branch partition-to-source-column mapping for input restriction
-    for child, br in zip(_children(union_node), uspec["branches"]):
-        nodes, term = _descend_chain(child, snapshots)
-        local = _source_local_ids(term, snapshots)
-        child_out = _seq(child.output())
-        cols = [
-            _chain_col_sql(child_out[pidx].exprId().id(), nodes, local, quals)
-            for _o, _u, pidx in parts
-        ]
-        br["part_src_cols"] = cols if all(c is not None for c in cols) else None
-
-    return {
-        "kind": "window_union",
-        "branches": uspec["branches"],
-        "key": {"name": key_final},
-        "tag_col": tag_final,
-        "union_out_names": union_names,
-        "parts": [(o, u) for o, u, _p in parts],
-    }
 
 
 def _classify_one_join(join_node, fact, anchored, src_ids, refs, out_ids,
@@ -2004,7 +1963,7 @@ class AutoMaterializedView:
     def _spec_key_fields(spec: dict) -> list[str]:
         if spec["kind"] in _AGG_KINDS:
             return [n for n, _ in spec["group"]]
-        if spec["kind"] in ("union", "window_union"):
+        if spec.get("tag_col"):  # union identity (tag, key)
             return [spec["tag_col"], spec["key"]["name"]]
         if spec.get("key_cols"):  # window over a self-join tree
             return spec["key_cols"]
@@ -2044,9 +2003,10 @@ class AutoMaterializedView:
     # mark themselves ineligible — their refresh needs live spec state —
     # and simply keep the classify-first path.  The version bumps when
     # a stored kind name stops existing (v2: the two-source aggregate-
-    # over-join kind became the one-join agg_tree), so an old summary
+    # over-join kind became the one-join agg_tree; v3: window-over-union
+    # became the one-or-more-branch window), so an old summary
     # re-classifies instead of serving through the wrong branch.
-    _SPEC_SUMMARY_VERSION = 2
+    _SPEC_SUMMARY_VERSION = 3
 
     def _spec_summary_path(self) -> str:
         return os.path.join(self.path, "_view_spec")
@@ -2539,8 +2499,6 @@ class AutoMaterializedView:
             self._advance_window(spec, anchor, latest)
         elif spec["kind"] == "window_tree":
             self._advance_window_tree(spec, anchor, latest)
-        elif spec["kind"] == "window_union":
-            self._advance_window_union(spec, anchor, latest)
         elif spec["kind"] == "union":
             self._advance_union(spec, anchor, latest)
         else:
@@ -3296,191 +3254,48 @@ class AutoMaterializedView:
 
     # -- algebra: whole-partition re-derivation (window views) -----------
     def _advance_window(self, spec, anchor, latest) -> None:
-        """Re-rank exactly the TOUCHED partitions: a changed row's old
-        partition comes from the stored view (updates can move rows
-        between partitions; deletes only exist there), its new partition
-        from the source — never from the windowed plan itself, whose
-        top-k filter may hide the row.  The partition restriction is
-        applied to the SOURCE INPUT, not the plan output: partition
-        columns are plain source columns (classifier-enforced), so
-        feeding whole partitions commutes with every row-wise stage and
-        the Window itself — whereas a semi-join left above the plan is
-        NOT pushed down (measured on 4.1: PushDownLeftSemiAntiJoin
-        pushes below a bare Window but stops at the top-k Filter above
-        it, which would re-rank the whole table)."""
-        key = spec["key"]["name"]
-        out_parts = [o for o, _s in spec["parts"]]
-        d_fact = self._changed_fact_keys(spec, anchor, latest)
-        src = self.sources[spec["source"]]
-        snaps = {spec["source"]: src.snapshot(latest[spec["source"]])}
-        view_snap = self.table.snapshot()
-        tp_new = (
-            snaps[spec["source"]]
-            .join(
-                d_fact.select(F.col(key).alias(RECORD_KEY_FIELD)),
-                RECORD_KEY_FIELD,
-                "left_semi",
-            )
-            .select(*[F.col(s).alias(o) for o, s in spec["parts"]])
-        )
-        tp_old = (
-            view_snap.select(key, *out_parts)
-            .join(d_fact, key, "left_semi")
-            .select(*out_parts)
-        )
-        touched = tp_new.unionByName(tp_old).distinct().localCheckpoint(
-            eager=True
-        )
-
-        touched_src = touched.select(
-            *[F.col(o).alias(s) for o, s in spec["parts"]]
-        )
-        src_parts = [s for _o, s in spec["parts"]]
-        restricted = (
-            snaps[spec["source"]]
-            .alias("s")
-            .join(F.broadcast(touched_src.alias("t")),
-                  _part_cond("s", "t", src_parts), "left_semi")
-        )
-        rederived = self.plan_fn({spec["source"]: restricted}).localCheckpoint(
-            eager=True
-        )
-        dead = (
-            view_snap.select(key, *out_parts)
-            .alias("v")
-            .join(F.broadcast(touched.alias("t")),
-                  _part_cond("v", "t", out_parts), "left_semi")
-            .select(key)
-            .join(rederived.select(key), key, "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        self._commit_delta(dead, rederived, self._commit_base(latest))
-
-    def _advance_window_tree(self, spec, anchor, latest) -> None:
-        """Re-rank exactly the touched partitions of a window-over-join
-        view: image-replay detection through the tree names the
-        partitions changed rows leave and enter (before-images at the
-        anchor cover deletes and moves-out; after-images at the target
-        cover inserts, moves-in, and null-extension flips), the user's
-        OWN plan re-runs with the partition source's snapshot
-        restricted to the touched tuples, and the output post-trims to
-        exactly those partitions — so the fallback for a null-extended
-        partition source (full-input pass) stays output-exact.
-
-        When source-level restriction is unsound (self-join trees —
-        restricting the shared snapshot would also filter PARTNER
-        occurrences; null-extended partition sources — restriction
-        fabricates null-extensions), the touched tuples instead become
-        a LITERAL predicate on the plan's OUTPUT partition columns:
-        Catalyst pushes a partitionSpec-column predicate through the
-        Window and down to exactly the occurrence that produces the
-        column, leaving partner occurrences full — the sound
-        restriction, derived by the optimizer instead of by snapshot
-        substitution (measured 2.6-3.6x refresh win at 0.1-1.6M rows,
-        SCALE.md round-8). Output unchanged: the predicate keeps whole
-        partitions and the post-trim below is identical."""
+        """Per-branch touched-partition detection for a window over one
+        or more union branches: each changed source's keys name the
+        partitions its rows ENTER (the branch chain replayed over the
+        keys' rows in the source at the target) and LEAVE (the stored
+        view's rows under that branch's key, and tag over a union) —
+        never the windowed plan itself, whose top-k filter may hide a
+        changed row.  Each source is then restricted to the OR of its
+        branches' partition-column restrictions; a branch with no
+        source-column mapping leaves its source full."""
         from functools import reduce
 
-        keys = spec.get("key_cols") or [spec["key"]["name"]]
-        out_parts = [o for o, _w, _s in spec["parts"]]
-        sel = [F.col(w).alias(o) for o, w, _s in spec["parts"]]
-        touched = self._tree_touched(spec, anchor, latest, sel)
-        if touched is None:
-            return
-        n_touched = touched.count()
-        if n_touched == 0:
-            return
-        snaps = {n: t.snapshot(latest[n]) for n, t in self.sources.items()}
-        if spec["restrict_ok"]:
-            scond = reduce(
-                lambda x, y: x & y,
-                [
-                    F.col(f"__s.{sc}").eqNullSafe(F.col(f"__t.{o}"))
-                    for o, _w, sc in spec["parts"]
-                ],
-            )
-            snaps[spec["part_src"]] = (
-                snaps[spec["part_src"]]
-                .alias("__s")
-                .join(F.broadcast(touched.alias("__t")), scond, "left_semi")
-            )
-        rederived = self.plan_fn(snaps)
-        if not spec["restrict_ok"] and n_touched <= (
-            WINDOW_TOUCHED_PRED_MAX * WINDOW_TOUCHED_CHUNKS_MAX
-        ):
-            # literal touched-partition predicate, CHUNKED past
-            # WINDOW_TOUCHED_PRED_MAX clauses (bounded: a huge delta
-            # touching even more partitions re-derives full-input — at
-            # that point the window is mostly recomputed anyway)
-            rederived = _where_touched_chunked(
-                rederived, touched.collect(), out_parts
-            )
-
-        rederived = (
-            rederived.alias("r")
-            .join(F.broadcast(touched.alias("t")),
-                  _part_cond("r", "t", out_parts), "left_semi")
-            .localCheckpoint(eager=True)
-        )
-        view_snap = self.table.snapshot()
-        dead = (
-            view_snap.select(*keys, *out_parts)
-            .alias("v")
-            .join(F.broadcast(touched.alias("t")),
-                  _part_cond("v", "t", out_parts), "left_semi")
-            .select(*keys)
-            .join(rederived.select(*keys), keys, "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        self._commit_delta(dead, rederived, self._commit_base(latest))
-
-    def _advance_window_union(self, spec, anchor, latest) -> None:
-        """Re-rank exactly the touched partitions of a window-over-
-        UNION-ALL view: per-branch image replay names the partitions
-        each changed source's rows enter (branch chain after-image) and
-        leave (stored view rows under that branch's (tag, key)), the
-        user's OWN plan re-runs with each source restricted to the OR
-        of its branches' partition-column restrictions (broadcast
-        semi-join; a branch with a derived partition column falls back
-        to full input for its source), and the output post-trims to
-        exactly the touched tuples — which is what makes the per-source
-        OR superset-safe.  Deletes are (tag, key) rows of touched
-        partitions absent from the re-derivation."""
-        from functools import reduce
-
-        key = spec["key"]["name"]
-        tag = spec["tag_col"]
-        out_parts = [o for o, _u in spec["parts"]]
+        key, tag = spec["key"]["name"], spec["tag_col"]
+        out_parts = [o for o, _i in spec["parts"]]
+        by_src: dict[str, list] = {}
+        for br in spec["branches"]:
+            by_src.setdefault(br["source"], []).append(br)
         view_snap = self.table.snapshot()
         pieces = []
-        for br in spec["branches"]:
-            s = br["source"]
+        for s, brs in by_src.items():
             if anchor[s] == latest[s]:
                 continue
             src = self.sources[s]
-            d_keys = self._changed_keys_of(
-                src, anchor[s], latest[s]
-            ).localCheckpoint(eager=True)
+            d_keys = self._changed_keys_of(src, anchor[s], latest[s])
             after = src.snapshot(latest[s]).join(
-                F.broadcast(d_keys), RECORD_KEY_FIELD, "left_semi"
+                d_keys, RECORD_KEY_FIELD, "left_semi"
             )
-            red = _replay_spec(br["chain"], after).toDF(
-                *spec["union_out_names"]
+            old = view_snap.join(
+                d_keys.select(F.col(RECORD_KEY_FIELD).alias(key)), key,
+                "left_semi",
             )
-            pieces.append(
-                red.select(*[F.col(u).alias(o) for o, u in spec["parts"]])
-            )
-            pieces.append(
-                view_snap.filter(F.col(tag) == F.expr(br["tag_sql"]))
-                .join(
-                    F.broadcast(
-                        d_keys.select(F.col(RECORD_KEY_FIELD).alias(key))
-                    ),
-                    key,
-                    "left_semi",
+            if tag is None:
+                pieces.append(old.select(*out_parts))
+            for br in brs:
+                red = _replay_spec(br["chain"], after).toDF(*spec["in_names"])
+                pieces.append(
+                    red.select(*[F.col(i).alias(o) for o, i in spec["parts"]])
                 )
-                .select(*out_parts)
-            )
+                if tag is not None:
+                    pieces.append(
+                        old.filter(F.col(tag) == F.expr(br["tag_sql"]))
+                        .select(*out_parts)
+                    )
         if not pieces:
             return
         touched = (
@@ -3488,66 +3303,103 @@ class AutoMaterializedView:
             .distinct()
             .localCheckpoint(eager=True)
         )
-        n_touched = touched.count()
-        if n_touched == 0:
+        restrict = {
+            s: [b["part_src_cols"] for b in brs]
+            for s, brs in by_src.items()
+            if all(b["part_src_cols"] for b in brs)
+        }
+        self._rerank_touched(
+            spec, touched, latest, restrict, len(restrict) < len(by_src)
+        )
+
+    def _advance_window_tree(self, spec, anchor, latest) -> None:
+        """Touched-partition detection for a window over a join tree:
+        IMAGE REPLAY through the tree (before-images at the anchor
+        cover deletes and moves-out; after-images at the target cover
+        inserts, moves-in, and null-extension flips) — a dim change
+        can move rows between partitions through the join, which no
+        per-source key lookup sees.  The partition source's snapshot
+        is restricted unless that is unsound (``restrict_ok`` False:
+        a null-extended partition source, where restriction fabricates
+        null-extensions, or a self-joined one, where it would also
+        filter PARTNER occurrences)."""
+        sel = [F.col(w).alias(o) for o, w, _s in spec["parts"]]
+        touched = self._tree_touched(spec, anchor, latest, sel)
+        if touched is None:
             return
+        restrict = {}
+        if spec["restrict_ok"]:
+            restrict[spec["part_src"]] = [
+                [f"`{sc}`" for _o, _w, sc in spec["parts"]]
+            ]
+        self._rerank_touched(
+            spec, touched, latest, restrict, not spec["restrict_ok"]
+        )
+
+    def _rerank_touched(self, spec, touched, latest, restrict,
+                        full_input) -> None:
+        """The one re-rank tail of every window advance: re-run the
+        user's OWN plan over the latest snapshots with each source in
+        ``restrict`` (name -> per-branch lists of partition SQL over its
+        raw columns, aligned with ``spec["parts"]``) semi-joined to the
+        ``touched`` partition tuples — input restriction commutes with
+        whole partitions, whereas a semi-join left above the plan is
+        NOT pushed below the top-k Filter (measured on 4.1) — then
+        post-trim the output to exactly the touched tuples, which keeps
+        an OR of branch restrictions or an unrestricted source
+        output-exact.  Vanished rows of touched partitions become view
+        deletes.
+
+        ``full_input`` (some partition-carrying source reads its full
+        snapshot): the touched tuples become a LITERAL predicate on
+        the plan's OUTPUT partition columns, which Catalyst pushes
+        through the Window, a Union and each branch's Project down to
+        exactly the producing scan or occurrence — the sound
+        restriction, derived by the optimizer instead of by snapshot
+        substitution (measured 2.6-3.6x refresh win at 0.1-1.6M rows,
+        SCALE.md round-8).  Chunked past WINDOW_TOUCHED_PRED_MAX
+        clauses; a delta touching more than PRED_MAX * CHUNKS_MAX
+        partitions re-derives full-input (the window is then mostly
+        recomputed anyway).  Only this path needs the touched count."""
+        from functools import reduce
+
+        keys = self._spec_key_fields(spec)
+        out_parts = [p[0] for p in spec["parts"]]
         snaps = {}
-        unrestricted = False  # some source re-reads its full input
         for name, src in self.sources.items():
             snap = src.snapshot(latest[name])
-            brs = [b for b in spec["branches"] if b["source"] == name]
-            if not (brs and all(b.get("part_src_cols") for b in brs)):
-                unrestricted = True
-            if brs and all(b.get("part_src_cols") for b in brs):
+            if name in restrict:
                 # partition values computed on the UNALIASED snapshot
                 # (derived-partition SQL must resolve against source
                 # columns, not the join's ambiguous namespace), then the
                 # OR-of-branches semi-join against the touched tuples
                 helpers, conds = [], []
-                for bi, b in enumerate(brs):
-                    cols = []
-                    for i, sql in enumerate(b["part_src_cols"]):
-                        cname = f"__mv_wu_p{bi}_{i}"
+                for bi, cols in enumerate(restrict[name]):
+                    terms = []
+                    for i, (sql, o) in enumerate(zip(cols, out_parts)):
+                        cname = f"__mv_wp{bi}_{i}"
                         snap = snap.withColumn(cname, F.expr(sql))
                         helpers.append(cname)
-                        cols.append(cname)
-                    conds.append(
-                        reduce(
-                            lambda x, y: x & y,
-                            [
-                                F.col(f"__s.{c}").eqNullSafe(
-                                    F.col(f"__t.{o}")
-                                )
-                                for c, (o, _u) in zip(cols, spec["parts"])
-                            ],
+                        terms.append(
+                            F.col(f"__s.{cname}").eqNullSafe(F.col(f"__t.{o}"))
                         )
-                    )
+                    conds.append(reduce(lambda x, y: x & y, terms))
                 snap = (
                     snap.alias("__s")
-                    .join(
-                        F.broadcast(touched.alias("__t")),
-                        reduce(lambda x, y: x | y, conds),
-                        "left_semi",
-                    )
+                    .join(F.broadcast(touched.alias("__t")),
+                          reduce(lambda x, y: x | y, conds), "left_semi")
                     .drop(*helpers)
                 )
             snaps[name] = snap
         rederived = self.plan_fn(snaps)
-        if unrestricted and n_touched <= (
-            WINDOW_TOUCHED_PRED_MAX * WINDOW_TOUCHED_CHUNKS_MAX
-        ):
-            # same trick as _advance_window_tree: the touched tuples as
-            # a literal predicate on the OUTPUT partition columns —
-            # Catalyst pushes it through the Window, the Union, and
-            # each branch's Project (rewriting through derived-column
-            # aliases) down to the scans snapshot-level restriction
-            # could not reach; chunked past WINDOW_TOUCHED_PRED_MAX
-            # clauses. Output unchanged: whole partitions pass and the
-            # post-trim below is identical.
-            rederived = _where_touched_chunked(
-                rederived, touched.collect(), out_parts
-            )
-
+        if full_input:
+            n = touched.count()
+            if n == 0:
+                return
+            if n <= WINDOW_TOUCHED_PRED_MAX * WINDOW_TOUCHED_CHUNKS_MAX:
+                rederived = _where_touched_chunked(
+                    rederived, touched.collect(), out_parts
+                )
         rederived = (
             rederived.alias("r")
             .join(F.broadcast(touched.alias("t")),
@@ -3555,12 +3407,12 @@ class AutoMaterializedView:
             .localCheckpoint(eager=True)
         )
         dead = (
-            view_snap.select(tag, key, *out_parts)
+            self.table.snapshot().select(*keys, *out_parts)
             .alias("v")
             .join(F.broadcast(touched.alias("t")),
                   _part_cond("v", "t", out_parts), "left_semi")
-            .select(tag, key)
-            .join(rederived.select(tag, key), [tag, key], "left_anti")
+            .select(*keys)
+            .join(rederived.select(*keys), keys, "left_anti")
             .localCheckpoint(eager=True)
         )
         self._commit_delta(dead, rederived, self._commit_base(latest))

@@ -200,7 +200,10 @@ def net_changes(
       ``after`` or in ``stamps`` (a semi-join, broadcast when the bound
       is at most ``BROADCAST_ROWS``), so every pair is an update. The
       stamps feed two consumers, and persist past
-      ``STAMPS_PERSIST_MIN_ROWS``.
+      ``STAMPS_PERSIST_MIN_ROWS`` stamp rows: the call then runs one
+      Spark job eagerly (the count that fills the cache) instead of only
+      building a plan, and the stamps stay cached until
+      ``operators.util.unpersist_operator_caches()``.
     - ``preimages``: each update also emits an ``update_preimage`` row
       with the before-image, stamped like its postimage, in the same
       ``explode`` — a union of a second selection would run both

@@ -1704,6 +1704,11 @@ class CowTable:
         travelling as single structs so the join never widens
         (``row_deletes.net_changes``). Cost is proportional to the changes
         in the range, not the table.
+
+        Lazy up to a bound: past ``row_deletes.STAMPS_PERSIST_MIN_ROWS``
+        delete stamps the call runs one Spark job eagerly to persist the
+        stamps, which then stay cached until
+        ``operators.util.unpersist_operator_caches()``.
         """
         end = end_inclusive or self.timeline.latest_timestamp()
         if end is not None:

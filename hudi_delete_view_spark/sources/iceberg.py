@@ -508,9 +508,7 @@ def _read_pos_deletes(
 # unknowable to Catalyst and default to sort-merge). 1M position rows is
 # ~100 MB built — comfortable for executors at any cluster size; beyond
 # it the shuffled join is the right call, so this degrades, never breaks.
-_BROADCAST_DELETE_ROWS_MAX = int(
-    os.environ.get("SPARK_GRAFT_ICE_BCAST_DELETE_ROWS", 1_000_000)
-)
+_BROADCAST_DELETE_ROWS_MAX = 1_000_000
 
 
 def _size_hint(dels: DataFrame, files: list[dict]) -> DataFrame:
@@ -530,9 +528,7 @@ def _size_hint(dels: DataFrame, files: list[dict]) -> DataFrame:
 # skipped — pruning is an optimization, so "all files" is the sound
 # superset — keeping plan construction free of unbounded collects
 # (guide §5.1) no matter how many delete rows a snapshot added.
-_TARGET_PROBE_MAX_ROWS = int(
-    os.environ.get("SPARK_GRAFT_ICE_TARGET_PROBE_ROWS", 100_000)
-)
+_TARGET_PROBE_MAX_ROWS = 100_000
 
 
 def _pos_delete_targets(

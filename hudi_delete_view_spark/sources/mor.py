@@ -27,6 +27,7 @@ import os
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType, StructField, StructType
 
 from ..plans import row_deletes
 from ..plans.pruning import bounds_filter
@@ -187,9 +188,7 @@ class MorTable(CowTable):
         published schema — readers plan scans from it (metadata-only
         planning), so a shrink would silently drop base-file columns the
         old footer-merge read surfaced. No-op for full-width deltas; the
-        tombstone flag stays last so per-side planning stays canonical."""
-        from pyspark.sql.types import StructType
-
+        tombstone flag stays last so the planned schema stays canonical."""
         new_schema = stamped.drop(_PP, _FID).schema
         prior = self._published_schema(read_ts) if read_ts else None
         if prior is not None:
@@ -293,25 +292,22 @@ class MorTable(CowTable):
         out = super().snapshot(as_of, partitions=partitions)
         return out.drop(DELETED_FIELD) if DELETED_FIELD in out.columns else out
 
-    def _published_mor_schemas(self, as_of: str | None = None):
-        """(base_schema, log_schema) planned from the PUBLISHED commit
-        schema (metadata-only planning, same contract as the COW
-        ``_read_paths``): base files never carry the tombstone flag, log
-        files always do (appended last by every delta writer), so the two
-        sides plan with per-side StructTypes derived from one commit-JSON
-        read — no driver footer I/O per MOR read. (None, None) for
+    def _published_mor_schema(self, as_of: str | None = None):
+        """The PUBLISHED commit schema with the tombstone flag last — the
+        one StructType every MOR scan plans with (metadata-only planning,
+        same contract as the COW ``_read_paths``): no driver footer I/O
+        per MOR read. Log files carry the flag (appended last by every
+        delta writer); base files do not, so they read it as NULL and the
+        merge's ``coalesce`` filter covers them too — a base row that did
+        carry a set flag stays deleted instead of coming back. None for
         pre-schema-payload tables; callers fall back to inference."""
         schema = self._published_schema(as_of)
         if schema is None:
-            return None, None
-        from pyspark.sql.types import BooleanType, StructField, StructType
-
-        data_fields = [f for f in schema.fields if f.name != DELETED_FIELD]
-        base = StructType(data_fields)
-        log = StructType(
-            [*data_fields, StructField(DELETED_FIELD, BooleanType(), True)]
-        )
-        return base, log
+            return None
+        return StructType([
+            *[f for f in schema.fields if f.name != DELETED_FIELD],
+            StructField(DELETED_FIELD, BooleanType(), True),
+        ])
 
     def _read_mor(self, paths: list[str], schema) -> DataFrame:
         reader = self.spark.read
@@ -332,14 +328,14 @@ class MorTable(CowTable):
         snapshot into a near-pure scan (the shuffle covers just the
         logged tail); a fully-compacted table plans with no window at
         all. None when the subset has no files. Both sides plan with the
-        PUBLISHED per-side schemas (``_published_mor_schemas``) — at 100k
-        files that removes every driver footer read from the plan.
+        PUBLISHED schema (``_published_mor_schema``) — at 100k files that
+        removes every driver footer read from the plan.
 
         ``since`` keeps only versions written after it, filtered BELOW
         the window so that it shuffles only those. Each key's newest
         version is then the same as over all versions, or dropped: a
         key with any version after ``since`` has its newest there."""
-        base_schema, log_schema = self._published_mor_schemas(as_of)
+        schema = self._published_mor_schema(as_of)
         logged = {g: s for g, s in slices.items() if s.log_paths}
         free_bases = [
             s.base_path
@@ -352,11 +348,8 @@ class MorTable(CowTable):
             log_paths = [p for s in logged.values() for p in s.log_paths]
             parts = []
             if base_paths:
-                base = self._read_mor(base_paths, base_schema)
-                if DELETED_FIELD not in base.columns:
-                    base = base.withColumn(DELETED_FIELD, F.lit(False))
-                parts.append(base)
-            parts.append(self._read_mor(log_paths, log_schema))
+                parts.append(self._read_mor(base_paths, schema))
+            parts.append(self._read_mor(log_paths, schema))
             df = parts[0]
             for p in parts[1:]:
                 df = df.unionByName(p, allowMissingColumns=True)
@@ -373,7 +366,7 @@ class MorTable(CowTable):
                 .drop(DELETED_FIELD)
             )
         if free_bases:
-            free = self._read_mor(free_bases, base_schema)
+            free = self._read_mor(free_bases, schema)
             if since is not None:
                 free = free.filter(F.col(COMMIT_TIME_FIELD) > F.lit(since))
             if DELETED_FIELD in free.columns:
@@ -482,9 +475,8 @@ class MorTable(CowTable):
             return self.spark.createDataFrame([], ", ".join(
                 f"{c} string" for c in (_FID, RECORD_KEY_FIELD, COMMIT_TIME_FIELD)
             ))
-        _base_schema, log_schema = self._published_mor_schemas(end)
         return (
-            self._read_mor(paths, log_schema)
+            self._read_mor(paths, self._published_mor_schema(end))
             .filter(F.coalesce(F.col(DELETED_FIELD), F.lit(False)))
             .select(
                 file_id_expr(F.col(FILE_NAME_FIELD)).alias(_FID),
@@ -669,7 +661,7 @@ class MorTable(CowTable):
         ts_list = self.timeline.timestamps()
         idx = ts_list.index(timestamp)
         prev_ts = ts_list[idx - 1] if idx else timestamp
-        base_schema, _log_schema = self._published_mor_schemas(prev_ts)
+        schema = self._published_mor_schema(prev_ts)
         meta = self.timeline.commit_metadata(timestamp)
         deleting = [s for _p, s in meta.all_stats() if idx and s.num_deletes > 0]
         prev_slices = resolve_slices(self.timeline, prev_ts) if deleting else {}
@@ -694,11 +686,11 @@ class MorTable(CowTable):
         rewritten = [s for s in deleting if not s.log_file]
         removed = merged_before(rewritten)
         added = None if removed is None else self._read_mor(
-            [os.path.join(self.base_path, s.path) for s in rewritten], base_schema
+            [os.path.join(self.base_path, s.path) for s in rewritten], schema
         ).select(fid.alias(_FID), RECORD_KEY_FIELD)
         return (
             row_deletes.delete_view(
-                self.spark, base_schema, exact=exact,
+                self.spark, StructType(schema.fields[:-1]), exact=exact,
                 removed=removed, added=added, key_cols=keys,
             )
             .drop(_FID)

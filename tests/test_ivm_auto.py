@@ -643,7 +643,9 @@ def test_window_view_topk(spark, scratch, tables):
 
     mv = AutoMaterializedView(spark, os.path.join(scratch, "mvw"),
                               {"fact": fact}, plan)
-    assert mv.spec()["kind"] == "window"
+    spec = mv.spec()  # a single source is the one untagged branch
+    assert spec["kind"] == "window" and spec["tag_col"] is None
+    assert [b["source"] for b in spec["branches"]] == ["fact"]
     mv.refresh(seed_as_of={"fact": "20260101000000"})
     assert _rows(mv.serve()) == _rows(plan({"fact": fact.snapshot()}))
     # insert a new g=1 maximum: ranks shift, old rank-3 leaves the view
@@ -916,7 +918,7 @@ def test_sql_materialized_view_ddl(spark, scratch, tables):
                                        ORDER BY v DESC, _hoodie_record_key) AS rn
              FROM f_tbl) WHERE rn <= 2""",
     )
-    assert wmv.spec()["kind"] == "window"
+    assert wmv.spec()["kind"] == "window" and wmv.spec()["tag_col"] is None
     refresh_materialized_view(wname, wmv, seed_as_of={"f_tbl": "20260101000000"})
     fact.snapshot().createOrReplaceTempView("f_tbl")
     want = _rows(spark.sql(
@@ -1428,7 +1430,7 @@ def test_window_over_union_view(spark, scratch, tables):
     mv = AutoMaterializedView(spark, os.path.join(scratch, "mvwu"),
                               {"fact": fact, "other": other}, plan)
     spec = mv.spec()
-    assert spec["kind"] == "window_union"
+    assert spec["kind"] == "window" and len(spec["branches"]) == 3
     assert spec["tag_col"] == "src" and spec["key"]["name"] == "vk"
     assert spec["parts"] == [("part", "part")]
     # per-branch partition mapping: three different source columns
@@ -1494,7 +1496,7 @@ def test_window_over_union_derived_partition(spark, scratch, tables):
     mv = AutoMaterializedView(spark, os.path.join(scratch, "mvwud"),
                               {"fact": fact}, plan)
     spec = mv.spec()
-    assert spec["kind"] == "window_union"
+    assert spec["kind"] == "window" and spec["tag_col"] == "src"
     srcs = [b["part_src_cols"] for b in spec["branches"]]
     assert srcs[0] == ["g"]
     assert srcs[1] is not None and "100" in srcs[1][0]  # derived, restricted
@@ -1535,7 +1537,7 @@ def test_window_over_union_renamed_intermediate_falls_back(spark, scratch,
     mv = AutoMaterializedView(spark, os.path.join(scratch, "mvwur"),
                               {"fact": fact}, plan)
     spec = mv.spec()
-    assert spec["kind"] == "window_union"
+    assert spec["kind"] == "window" and spec["tag_col"] == "src"
     assert [b["part_src_cols"] for b in spec["branches"]][1] is None
     seed = {"fact": "20260101000000"}
     mv.refresh(seed_as_of=seed, to=seed)
@@ -1741,7 +1743,7 @@ def test_window_over_self_join_tree_maintains(spark, scratch):
 def test_window_over_union_sql_ddl(spark, scratch, tables):
     """The SQL-declared form of the union x window composition: UNION ALL
     subquery under ROW_NUMBER with a top-k outer filter classifies as
-    window_union through the DDL dialect (SubqueryAlias wrappers and
+    window-over-union through the DDL dialect (SubqueryAlias wrappers and
     qualifiers transparent) and maintains through refresh-by-name."""
     from hudi_delete_view_spark.sql import (
         create_materialized_view,
@@ -1768,7 +1770,7 @@ def test_window_over_union_sql_ddl(spark, scratch, tables):
              )
            ) WHERE rn <= 3""",
     )
-    assert mv.spec()["kind"] == "window_union"
+    assert mv.spec()["kind"] == "window" and mv.spec()["tag_col"] == "src"
     refresh_materialized_view(name, mv)
 
     def want():
@@ -2064,6 +2066,73 @@ def test_noop_refresh_is_jobless(spark, scratch, tables):
     assert sc.statusTracker().getJobIdsForGroup("noop-refresh") == []
 
 
+def _jobs_for(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "ivm refresh job audit")
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_window_refresh_job_counts(spark, scratch, tables):
+    """Spark jobs per stepwise window refresh (C1 -> C2 -> C3 -> C4 of
+    the fixture's fact table) stay at or below what the separate
+    single-source and window-over-union advances ran before both became
+    the one-or-more-branch ``window`` kind (measured on this fixture,
+    4 local cores). Every step still equals the from-scratch recompute."""
+    from pyspark.sql import Window as W
+
+    fact, _ = tables
+    other = CowTable(spark, os.path.join(scratch, "jother"), key_fields=["k"],
+                     partition_field=None, num_file_groups=2)
+    other.bulk_insert(spark.range(12).selectExpr(
+        "concat('k', id) as k", "cast(id % 3 as long) as grp",
+        "cast(id * 7 as double) as w"), "20260101000000")
+
+    def topk(t):
+        w = W.partitionBy("g").orderBy(F.desc("v"), F.asc("k"))
+        return (t["fact"]
+                .select(F.col("_hoodie_record_key").alias("vk"), "k", "g", "v")
+                .withColumn("rn", F.row_number().over(w)).filter("rn <= 3"))
+
+    def over_union(t):
+        a = t["fact"].select(
+            F.lit("f").alias("src"), F.col("_hoodie_record_key").alias("vk"),
+            F.col("g").alias("part"), F.col("v").alias("val"))
+        b = t["other"].select(
+            F.lit("o").alias("src"), F.col("_hoodie_record_key").alias("vk"),
+            F.col("grp").alias("part"), F.col("w").alias("val"))
+        w = W.partitionBy("part").orderBy(
+            F.desc("val"), F.asc("src"), F.asc("vk"))
+        return (a.unionByName(b).withColumn("rn", F.row_number().over(w))
+                .filter("rn <= 3"))
+
+    c1 = "20260101000000"
+    steps = ["20260102000000", "20260103000000", "20260104000000"]
+    cases = [
+        ("topk", {"fact": fact}, topk, [31, 31, 25]),
+        ("union", {"fact": fact, "other": other}, over_union, [33, 32, 26]),
+    ]
+    for name, sources, plan, parent_jobs in cases:
+        mv = AutoMaterializedView(spark, os.path.join(scratch, f"jmv_{name}"),
+                                  sources, plan)
+        assert mv.spec()["kind"] == "window"
+        seed = {n: c1 for n in sources}
+        mv.refresh(seed_as_of=seed, to=seed)
+        jobs = []
+        for ts in steps:
+            to = {**seed, "fact": ts}
+            jobs.append(len(_jobs_for(
+                spark, f"window-jobs-{name}-{ts}",
+                lambda: mv.refresh(to=to))))
+            assert _rows(mv.serve()) == _rows(plan(
+                {n: t.snapshot(to[n]) for n, t in sources.items()}))
+        assert all(j <= p for j, p in zip(jobs, parent_jobs)), (
+            name, jobs, parent_jobs)
+
+
 def test_window_view_over_mor_fact(spark, scratch):
     """Window views over a MOR fact: delta updates move rows between
     rank partitions and delta tombstones promote hidden partition-mates
@@ -2086,7 +2155,7 @@ def test_window_view_over_mor_fact(spark, scratch):
 
     mv = AutoMaterializedView(spark, os.path.join(scratch, "mvmorwin"),
                               {"fact": fact}, plan)
-    assert mv.spec()["kind"] == "window"
+    assert mv.spec()["kind"] == "window" and mv.spec()["tag_col"] is None
     mv.refresh()
     assert _rows(mv.serve()) == _rows(plan({"fact": fact.snapshot()}))
     fact.upsert_delta(spark.createDataFrame([("k2", 2, 500.0)],

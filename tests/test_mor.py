@@ -134,6 +134,28 @@ def test_log_free_groups_bypass_merge_window(spark, scratch):
     assert rows2 == rows
 
 
+def test_flagged_base_rows_stay_deleted(spark, scratch):
+    """Base files are not meant to carry the tombstone flag, but one
+    that does must fail safe: a base row flagged deleted stays out of
+    the snapshot, in a logged group (through the merge) and in a
+    log-free one (around it)."""
+    t = MorTable(spark, os.path.join(scratch, "flagged"), key_fields=["k"],
+                 partition_field=None, num_file_groups=2)
+    t.bulk_insert(spark.range(20).selectExpr(
+        "cast(id as long) as k", "cast(id as double) as v",
+        "id % 2 = 0 as _hoodie_is_deleted"), C1)
+    odd = set(range(1, 20, 2))
+    assert {r["k"] for r in t.snapshot().collect()} == odd
+    t.upsert_delta(spark.createDataFrame([(1, 100.0)], "k long, v double"),
+                   C2)
+    slices = resolve_slices(t.timeline).values()
+    assert sum(1 for s in slices if s.log_paths) == 1  # one logged group
+    snap = t.snapshot()
+    assert "_hoodie_is_deleted" not in snap.columns
+    rows = {r["k"]: r["v"] for r in snap.collect()}
+    assert set(rows) == odd and rows[1] == 100.0
+
+
 def _executed(df) -> str:
     """The executed plan, read before any action (the adaptive plan then
     prints only its initial tree)."""
