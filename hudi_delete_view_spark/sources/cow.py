@@ -14,13 +14,14 @@ Scale design (the part that must survive 100 TB / 1000 executors):
   index lookup), shuffled once by ``(partition, file_group)``, and written
   with ``partitionBy`` so every file group lands as exactly one Parquet file.
   The driver then only *renames* files and writes KB-scale commit JSON.
-- **Write stats come from metadata, not jobs**: per-group row counts are
-  read from Parquet footers (same trick as the reference's footer-only
-  count, ``DeleteUtils.java:27-48``); update/delete counters are derived
-  arithmetically from previous-commit stats. A bulk insert is exactly ONE
-  Spark job (incoming counts == written footer counts); an upsert/delete
-  adds only the irreducible affected-group discovery job, pruned to the
-  key + partition columns.
+- **Write stats come from metadata and the write itself, not extra
+  jobs**: per-group row counts are read from Parquet footers (same trick
+  as the reference's footer-only count, ``DeleteUtils.java:27-48``);
+  per-group incoming counts and value-index buckets are observed on the
+  write action (``DataFrame.observe``); update/delete counters are
+  derived arithmetically from previous-commit stats. A bulk insert is
+  exactly ONE Spark job; an upsert/delete adds only the affected-group
+  collect, one exchange over the partition + file-group columns.
 - **Upsert/delete only rewrite affected file groups** — the stats-based
   pruning the reference applies at read time (``DeleteView.java:100``) is
   applied symmetrically at write time.
@@ -33,10 +34,11 @@ from __future__ import annotations
 
 import os
 import shutil
+from typing import NamedTuple
 from urllib.parse import unquote
 
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..plans import row_deletes
@@ -122,6 +124,57 @@ def _value_bucket(v, n_bits: int) -> int:
     import hashlib
 
     return int(hashlib.md5(str(v).encode()).hexdigest()[:15], 16) % n_bits
+
+
+def _value_bucket_col(c: str, n_bits: int):
+    """The engine-side value bucket of column ``c``: portable 60-bit md5 of
+    the value string mod ``n_bits`` (the hash contract ``_value_bucket``
+    mirrors on the driver, so a probe's bucket costs no Spark round-trip
+    at prune time)."""
+    from ..operators.util import md5_prefix60_sql
+
+    return F.expr(f"pmod({md5_prefix60_sql(f'cast(`{c}` as string)')}, {n_bits})")
+
+
+def _value_index_bitmaps(
+    buckets: dict[str, list], n_bits: int
+) -> dict[tuple[str, str], dict[str, str]]:
+    """{(partition, file_id): {col: base64_bitmap}} from a write's observed
+    ``collect_set(struct(__pp, __fid, bucket))`` per index column — the
+    ``n_bits``-wide md5-bucket membership bitmap of each written file.
+
+    Groups are keyed by the write's staging columns, i.e. by the PHYSICAL
+    file, never by the stored ``_hoodie_file_name``: rewrites that keep row
+    stamps (upsert survivors, clustering, repartition, merge) carry OLD
+    file names in that column, and grouping on it would drop survivor
+    values from the new file's bitmap (a false negative, the one failure
+    mode a membership index must never have). A group whose values are all
+    NULL still gets an all-zero bitmap."""
+    import base64
+
+    out: dict[tuple[str, str], dict[str, str]] = {}
+    for c, entries in buckets.items():
+        raws: dict[tuple[str, str], bytearray] = {}
+        for pp, fid, b in entries:
+            raw = raws.setdefault((pp, fid), bytearray(n_bits // 8))
+            if b is not None:
+                raw[b // 8] |= 1 << (b % 8)
+        for g, raw in raws.items():
+            # base64 (not a JSON int array): 16384 bits -> ~2.7 KB of
+            # commit JSON per (file, column) instead of ~20 KB
+            out.setdefault(g, {})[c] = base64.b64encode(bytes(raw)).decode("ascii")
+    return out
+
+
+class GroupWrite(NamedTuple):
+    """One file group a write produced: its table-relative path, footer
+    row count, the rows this commit stamped in it (counted only when the
+    writer asks), and its value-index bitmaps."""
+
+    path: str
+    rows: int
+    incoming: int = 0
+    value_index: dict = {}
 
 
 def _bitmap_has(b64: str, bucket: int) -> bool:
@@ -243,8 +296,8 @@ class CowTable:
         # secondary value-bucket index columns: for each, every published
         # file carries an index_bits-wide md5-bucket bitmap of its values
         # so EQUALITY predicates prune files whose [min, max] overlap.
-        # Handle-level config like stats_columns; costs one column-pruned
-        # scan of the newly-written files per commit.
+        # Handle-level config like stats_columns; the buckets are observed
+        # on each commit's write, so the index costs no extra Spark job.
         self.index_columns = list(index_columns or [])
         # bitmap width per (file, column); 16384 bits = 256 longs ~ 2 KB of
         # commit JSON per file per column. Sized so a file with a few
@@ -337,17 +390,25 @@ class CowTable:
         suffix: str = ".parquet",
         sort_cols: list[str] | None = None,
         parquet_block_bytes: int | None = None,
-    ) -> dict[tuple[str, str], tuple[str, int]]:
+        count_incoming: bool = False,
+    ) -> dict[tuple[str, str], GroupWrite]:
         """Write one Parquet file per (partition, file_id) group.
 
         ``repartition(__pp, __fid)`` puts each group wholly in one task, and
         ``partitionBy`` routes it to its own leaf dir — so each group becomes
         exactly one file regardless of how many groups share a task. Returns
-        {(partition, file_id): (relative_path, footer_row_count)}.
+        {(partition, file_id): GroupWrite}.
 
         ``expected_groups`` forces empty slices to exist (a delete that
         empties a whole file group must still publish a zero-row file —
         FIXTURES.md edge case; the reference reads such slices fine).
+
+        The per-group metadata beyond the footer row count is observed on
+        the write itself (``DataFrame.observe``, no extra Spark job):
+        ``count_incoming`` counts, per expected group, the rows this commit
+        stamped (``_hoodie_commit_time == commit_ts``; carried rows keep
+        their older stamps), and every write collects the value-index
+        buckets of ``index_columns``.
         """
         staging = os.path.join(self.base_path, f".staging-{commit_ts}")
         self.fs.rmtree(staging)
@@ -358,6 +419,26 @@ class CowTable:
             # may be column names or arbitrary sort expressions (Z-order)
             exprs = [F.col(c) if isinstance(c, str) else c for c in sort_cols]
             shuffled = shuffled.sortWithinPartitions(F.col(_PP), F.col(_FID), *exprs)
+        counted = list(expected_groups or []) if count_incoming else []
+        vix_cols = [c for c in self.index_columns if c in df.columns]
+        # one count_if per counted group (observe takes no grouping): the
+        # file id alone names the group, since it embeds the partition
+        stamped_here = F.col(COMMIT_TIME_FIELD) == F.lit(commit_ts)
+        aggs = [
+            F.count_if(stamped_here & (F.col(_FID) == fid)).alias(f"__inc_{i}")
+            for i, (_pp, fid) in enumerate(counted)
+        ] + [
+            F.collect_set(
+                F.struct(F.col(_PP), F.col(_FID), _value_bucket_col(c, self.index_bits))
+            ).alias(f"__vix_{i}")
+            for i, c in enumerate(vix_cols)
+        ]
+        observation = None
+        if aggs:
+            # observed AFTER the repartition: on the pre-shuffle frame, an
+            # AQE partitioned write of zero rows reports no metrics at all
+            observation = Observation()
+            shuffled = shuffled.observe(observation, *aggs)
         writer = shuffled.write.partitionBy(_PP, _FID).mode("overwrite")
         if parquet_block_bytes:
             writer = writer.option("parquet.block.size", str(parquet_block_bytes))
@@ -376,8 +457,13 @@ class CowTable:
         # mode sizes the bitset from the actual distinct keys written
         writer = writer.option("parquet.bloom.filter.adaptive.enabled", "true")
         writer.parquet(staging)
+        observed = observation.get if observation else {}
+        incoming = {g: observed[f"__inc_{i}"] for i, g in enumerate(counted)}
+        vix = _value_index_bitmaps(
+            {c: observed[f"__vix_{i}"] for i, c in enumerate(vix_cols)}, self.index_bits
+        )
 
-        written: dict[tuple[str, str], tuple[str, int]] = {}
+        written: dict[tuple[str, str], GroupWrite] = {}
         for pp_dir in self.fs.listdir(staging):
             if not pp_dir.startswith(f"{_PP}="):
                 continue
@@ -394,9 +480,12 @@ class CowTable:
                 fname = f"{file_id}_{WRITE_TOKEN}_{commit_ts}{suffix}"
                 target = os.path.join(target_dir, fname)
                 self.fs.replace(os.path.join(leaf, parts[0]), target)
-                written[(partition, file_id)] = (
+                g = (partition, file_id)
+                written[g] = GroupWrite(
                     os.path.join(partition, fname),
                     _footer_row_count(target),
+                    incoming.get(g, 0),
+                    vix.get(g, {}),
                 )
 
         # publish empty slices for groups the write produced no rows for
@@ -415,68 +504,10 @@ class CowTable:
                 self.fs.makedirs(target_dir)
                 fname = f"{file_id}_{WRITE_TOKEN}_{commit_ts}{suffix}"
                 self.fs.copy(src, os.path.join(target_dir, fname))
-                written[(partition, file_id)] = (os.path.join(partition, fname), 0)
+                written[(partition, file_id)] = GroupWrite(os.path.join(partition, fname), 0)
 
         self.fs.rmtree(staging)
         return written
-
-    def _value_index_bitmaps(
-        self, written: dict[tuple[str, str], tuple[str, int]]
-    ) -> dict[str, dict[str, str]]:
-        """{rel_path: {col: base64_bitmap}} — ``self.index_bits``-wide
-        md5-bucket membership bitmaps for ``index_columns`` over the
-        newly-written files, each encoded as a base64 string in the
-        commit payload.
-
-        ONE column-pruned Spark job per commit: the files just written are
-        re-read selecting only the physical file name + indexed columns,
-        bucket = portable 60-bit md5 of the value string mod
-        ``self.index_bits`` (the engine-portable hash contract, so the
-        driver can compute a probe's bucket with hashlib — no Spark
-        round-trip at prune time), one collect_set per column,
-        rows == files (metadata scale)."""
-        from ..operators.util import md5_prefix60_sql
-
-        if not self.index_columns or not written:
-            return {}
-        paths = [os.path.join(self.base_path, rel) for rel, _n in written.values()]
-        df = self.spark.read.option("mergeSchema", "true").parquet(*paths)
-        cols = [c for c in self.index_columns if c in df.columns]
-        if not cols:
-            return {}
-        nb = self.index_bits
-        aggs = [
-            F.collect_set(
-                F.expr(f"pmod({md5_prefix60_sql(f'cast(`{c}` as string)')}, {nb})")
-            ).alias(f"__b_{i}")
-            for i, c in enumerate(cols)
-        ]
-        out: dict[str, dict[str, list[int]]] = {}
-        by_name = {os.path.basename(rel): rel for rel, _n in written.values()}
-        # group by the PHYSICAL file (input_file_name), NOT the stored
-        # _hoodie_file_name meta column: rewrites that preserve row stamps
-        # (upsert survivors, clustering, repartition, merge) carry OLD
-        # file names in that column — grouping on it would assign survivor
-        # rows to files outside this commit and silently DROP their values
-        # from the new file's bitmap (a false negative, the one failure
-        # mode a membership index must never have)
-        phys = F.element_at(F.split(F.input_file_name(), "/"), -1).alias("__file")
-        for r in df.select(phys, *cols).groupBy("__file").agg(*aggs).collect():
-            rel = by_name.get(r["__file"])
-            if rel is None:
-                continue
-            per_col = {}
-            import base64 as _b64
-
-            for i, c in enumerate(cols):
-                raw = bytearray(nb // 8)
-                for b in r[f"__b_{i}"]:
-                    raw[b // 8] |= 1 << (b % 8)
-                # base64 (not a JSON int array): 16384 bits -> ~2.7 KB of
-                # commit JSON per (file, column) instead of ~20 KB
-                per_col[c] = _b64.b64encode(bytes(raw)).decode("ascii")
-            out[rel] = per_col
-        return out
 
     def _ensure_new_commit_ts(self, commit_ts: str) -> None:
         """Monotonicity pre-flight, called BEFORE any file write: a commit
@@ -501,11 +532,11 @@ class CowTable:
             for t in self.timeline.timestamps()
             for _p, s in self.timeline.commit_metadata(t).all_stats()
         }
-        for (_g, (rel_path, _rows)) in written.items():
-            if rel_path in referenced:
+        for w in written.values():
+            if w.path in referenced:
                 continue
             try:
-                self.fs.remove(os.path.join(self.base_path, rel_path))
+                self.fs.remove(os.path.join(self.base_path, w.path))
             except OSError:
                 pass
 
@@ -567,9 +598,8 @@ class CowTable:
         self,
         commit_ts: str,
         operation: str,
-        written: dict[tuple[str, str], tuple[str, int]],
+        written: dict[tuple[str, str], GroupWrite],
         prev_slices: dict[tuple[str, str], FileSlice],
-        incoming_counts: dict[tuple[str, str], int] | None = None,
         schema_json: str | None = None,
         is_delete: bool = False,
         read_ts: str | None = "__unchecked__",
@@ -581,8 +611,10 @@ class CowTable:
 
         For each rewritten group: prev = previous slice rows (from the
         previous commit's stats / footer), new = rows now, inc = incoming
-        batch rows.  Then updates = prev + inc - new, inserts = inc -
-        updates, deletes = prev - new (delete op). No extra Spark jobs.
+        batch rows (observed on the write, ``GroupWrite.incoming``).  Then
+        updates = prev + inc - new, inserts = inc - updates, deletes =
+        prev - new (delete op). No extra Spark jobs: the value-index
+        bitmaps were observed on the write too.
 
         ``read_ts`` enables optimistic concurrency control: the latest
         instant the writer's view was based on when it resolved slices.
@@ -608,10 +640,9 @@ class CowTable:
         stats_cols = list(
             dict.fromkeys([*self.stats_columns, *([active_pf] if active_pf else [])])
         )
-        vix = self._value_index_bitmaps(written)
         p2ws: dict[str, list[WriteStat]] = {}
         total_deleted = 0
-        for (partition, file_id), (rel_path, new_rows) in sorted(written.items()):
+        for (partition, file_id), (rel_path, new_rows, inc, vix) in sorted(written.items()):
             prev = prev_slices.get((partition, file_id))
             # prev.base_path is already table-rooted (resolve_slices); a
             # second join is a local no-op but DOUBLES a URI base path
@@ -620,7 +651,6 @@ class CowTable:
                 if prev and prev.base_path
                 else 0
             )
-            inc = (incoming_counts or {}).get((partition, file_id), 0)
             if explicit_stats is not None:
                 # mixed-action commits (MERGE): updates/inserts/deletes were
                 # classified by the writer (matched vs not, delete-flagged vs
@@ -656,7 +686,7 @@ class CowTable:
                     num_inserts=inserts,
                     file_size_bytes=self.fs.size(abs_path),
                     column_stats=footer_column_stats(abs_path, stats_cols),
-                    value_index=vix.get(rel_path, {}),
+                    value_index=vix,
                 )
             )
         meta = CommitMetadata(
@@ -683,11 +713,13 @@ class CowTable:
         stamped = self._dedup_incoming(self._with_meta(df, commit_ts))
         self._ensure_new_commit_ts(commit_ts)
         read_ts = self.timeline.latest_timestamp()
-        written = self._write_file_groups(stamped, commit_ts)
-        inc = {g: rows for g, (_p, rows) in written.items()}
+        written = {
+            g: w._replace(incoming=w.rows)
+            for g, w in self._write_file_groups(stamped, commit_ts).items()
+        }
         return self._publish(
             commit_ts, "bulk_insert", written, prev_slices={},
-            incoming_counts=inc, schema_json=stamped.drop(_PP, _FID).schema.json(),
+            schema_json=stamped.drop(_PP, _FID).schema.json(),
             read_ts=read_ts,
         )
 
@@ -700,31 +732,28 @@ class CowTable:
         Unchanged rows keep their original meta columns (so incremental
         reads by ``_hoodie_commit_time`` see only truly-changed records).
         """
-        # The pre-write job here is irreducible — the affected-group set
-        # must be known BEFORE the survivors read is planned — but it is
-        # cheap by construction: counting DISTINCT keys on the pre-dedup
-        # frame equals the post-dedup row count (dedup keeps one row per
-        # key) while letting Catalyst prune the scan to the key+partition
-        # columns and run a partial-aggregated shuffle of (group, key)
-        # pairs instead of the full-payload window the dedup needs.
+        # The one pre-write pass: the affected-group set must be known
+        # BEFORE the survivors read is planned. It is a single exchange
+        # over the (partition, file-group) columns of the pre-dedup frame;
+        # dedup only drops rows, so it adds no group. Per-group incoming
+        # counts are not taken here: they are observed on the write, after
+        # dedup, so a key repeated under two partition values charges only
+        # the group that receives it.
         stamped = self._with_meta(df, commit_ts)
-        inc_counts = {
-            (r[_PP], r[_FID]): r["cnt"]
-            for r in stamped.groupBy(_PP, _FID)
-            .agg(F.countDistinct(RECORD_KEY_FIELD).alias("cnt"))
-            .collect()
+        affected = {
+            (r[_PP], r[_FID]) for r in stamped.select(_PP, _FID).distinct().collect()
         }
         incoming = self._dedup_incoming(stamped)
         self._ensure_new_commit_ts(commit_ts)
         read_ts = self.timeline.latest_timestamp()
         prev_slices = resolve_slices(self.timeline)
-        affected = set(inc_counts)
         old = self._read_groups(prev_slices, affected)
         if old is not None:
+            # an anti-join ignores duplicates on its build side and dedup
+            # keeps the same key set, so the build side is the pre-dedup
+            # key column: no window, no distinct
             survivors = old.join(
-                incoming.select(F.col(RECORD_KEY_FIELD)).distinct(),
-                on=RECORD_KEY_FIELD,
-                how="left_anti",
+                stamped.select(RECORD_KEY_FIELD), on=RECORD_KEY_FIELD, how="left_anti"
             )
             # allowMissingColumns = schema evolution: columns added by this
             # commit appear with nulls on surviving old rows (and vice
@@ -738,10 +767,11 @@ class CowTable:
         merged = merged.withColumn(_PP, F.col(PARTITION_PATH_FIELD)).withColumn(
             _FID, file_id_expr(F.col(FILE_NAME_FIELD))
         )
-        written = self._write_file_groups(merged, commit_ts, expected_groups=sorted(affected))
+        written = self._write_file_groups(
+            merged, commit_ts, expected_groups=sorted(affected), count_incoming=True
+        )
         return self._publish(
             commit_ts, "upsert", written, prev_slices,
-            incoming_counts=inc_counts,
             schema_json=merged.drop(_PP, _FID).schema.json(),  # evolved schema
             read_ts=read_ts,
         )
@@ -770,7 +800,7 @@ class CowTable:
             self._record_key_col().alias(RECORD_KEY_FIELD),
             self._partition_col().alias(_PP),
         )
-        keys = keys.withColumn(_FID, self._fid_col(F.col(_PP))).distinct()
+        keys = keys.withColumn(_FID, self._fid_col(F.col(_PP)))
         affected = {(r[_PP], r[_FID]) for r in keys.select(_PP, _FID).distinct().collect()}
         self._ensure_new_commit_ts(commit_ts)
         read_ts = self.timeline.latest_timestamp()
@@ -790,6 +820,8 @@ class CowTable:
                 schema_json=self.timeline.commit_metadata(read_ts).schema_json,
                 read_ts=read_ts,
             )
+        # repeated keys need no distinct: an anti-join ignores build-side
+        # duplicates
         survivors = old.join(
             keys.select(RECORD_KEY_FIELD), on=RECORD_KEY_FIELD, how="left_anti"
         )
@@ -828,11 +860,13 @@ class CowTable:
         ``prevCommit`` pairing; the view's anti-join reconstructs the
         deleted rows — SURVEY §2 A2/B6, DeleteView.java:100).
 
-        Scale shape: one classification aggregation over (source keys ⋈
-        old keys, both pruned to key+group columns), then the same
-        single-shuffle group rewrite every writer uses. Only affected
-        groups are read or written; AQE broadcasts the source side when
-        the batch is small.
+        Scale shape: the affected-group collect, one classification
+        aggregation over (source keys ⋈ old keys, both pruned to key+group
+        columns), then the same single-shuffle group rewrite every writer
+        uses, its anti-join built from the source key column without a
+        distinct. Only affected groups are read or written; AQE broadcasts
+        the source side when the batch is small. With AQE on, each query
+        stage is its own job: 11 on a 4-group table (5 with AQE off).
         """
         if delete_condition is None:
             delete_condition = F.lit(False)
@@ -890,11 +924,7 @@ class CowTable:
             affected_fids = sorted({f for (_p, f) in affected})
             survivors = old.filter(
                 file_id_expr(F.col(FILE_NAME_FIELD)).isin(affected_fids)
-            ).join(
-                deduped.select(F.col(RECORD_KEY_FIELD)).distinct(),
-                on=RECORD_KEY_FIELD,
-                how="left_anti",
-            )
+            ).join(stamped.select(RECORD_KEY_FIELD), on=RECORD_KEY_FIELD, how="left_anti")
         upserts = deduped.filter(~F.col("__is_del")).drop(_PP, _FID, "__is_del")
         if survivors is not None:
             merged = survivors.unionByName(upserts, allowMissingColumns=True)

@@ -10,6 +10,7 @@ from hudi_delete_view_spark.sources.fixtures import LINEITEM_KEY
 from hudi_delete_view_spark.plans.timeline import Timeline, TimelineError
 from hudi_delete_view_spark.sources.cow import (
     COMMIT_TIME_FIELD,
+    FILE_NAME_FIELD,
     META_FIELDS,
     RECORD_KEY_FIELD,
     CowTable,
@@ -1120,6 +1121,96 @@ def test_value_bucket_index_survives_clustering(spark, scratch):
     assert t.scan({"cat": ("cat0777", "cat0777")}).count() == 4
     for v in ("cat0000", "cat3999"):
         assert t.scan({"cat": (v, v)}).count() == df.filter(F.col("cat") == v).count()
+
+
+def _reread_value_index(t, meta):
+    """Reference bitmaps for one commit: re-read the files it wrote and
+    group their rows by PHYSICAL file name (the writer's former post-write
+    pass). {rel_path: {col: base64_bitmap}}."""
+    import base64
+
+    from hudi_delete_view_spark.operators.util import md5_prefix60_sql
+
+    by_name = {os.path.basename(s.path): s.path for _p, s in meta.all_stats()}
+    df = t.spark.read.option("mergeSchema", "true").parquet(
+        *[os.path.join(t.base_path, rel) for rel in by_name.values()]
+    )
+    cols = [c for c in t.index_columns if c in df.columns]
+    nb = t.index_bits
+    aggs = [
+        F.collect_set(
+            F.expr(f"pmod({md5_prefix60_sql(f'cast(`{c}` as string)')}, {nb})")
+        ).alias(f"__b_{i}")
+        for i, c in enumerate(cols)
+    ]
+    phys = F.element_at(F.split(F.input_file_name(), "/"), -1).alias("__file")
+    out = {}
+    for r in df.select(phys, *cols).groupBy("__file").agg(*aggs).collect():
+        per_col = {}
+        for i, c in enumerate(cols):
+            raw = bytearray(nb // 8)
+            for b in r[f"__b_{i}"]:
+                raw[b // 8] |= 1 << (b % 8)
+            per_col[c] = base64.b64encode(bytes(raw)).decode("ascii")
+        out[by_name[r["__file"]]] = per_col
+    return out
+
+
+def test_value_index_observed_equals_file_reread(spark, scratch):
+    """Bitmaps the writer observes on the write equal a re-read of the
+    files each commit wrote: bulk insert, upsert (survivors keep OLD
+    ``_hoodie_file_name`` values), delete, merge and clustering, over a
+    string and an int column with NULLs, including a group emptied by a
+    delete."""
+    t = CowTable(
+        spark, os.path.join(scratch, "vixeq"), key_fields=["k"],
+        partition_field="p", num_file_groups=3, index_columns=["cat", "n"],
+    )
+    schema = "k int, p string, cat string, n int"
+    rows = [
+        (i, f"p{i % 3}", f"cat{i % 97}", None if i % 11 == 0 else i % 13)
+        for i in range(600)
+    ]
+    t.bulk_insert(spark.createDataFrame(rows, schema), "20270601000000")
+    t.upsert(
+        spark.createDataFrame(
+            [(i, f"p{i % 3}", f"new{i}", i) for i in range(0, 600, 40)], schema
+        ),
+        "20270602000000",
+    )
+    t.delete(
+        spark.createDataFrame([(r[0], r[1]) for r in rows if r[0] % 5 == 0], "k int, p string"),
+        "20270603000000",
+    )
+    src = spark.createDataFrame(
+        [(i, f"p{i % 3}", f"m{i}", None, i % 4 == 0) for i in range(1, 700, 9)],
+        "k int, p string, cat string, n int, is_del boolean",
+    )
+    t.merge_into(src, "20270604000000", delete_condition="is_del")
+    # empty the group holding key 2: every one of its rows is deleted
+    snap = t.snapshot()
+    fid2 = t.lookup([(2, "p2")]).select(FILE_NAME_FIELD).first()[0].split("_")[0]
+    doomed = snap.filter(F.col(FILE_NAME_FIELD).startswith(fid2 + "_")).select("k", "p")
+    t.delete(doomed, "20270605000000")
+    t.cluster("20270606000000", sort_cols=["cat"])
+    survivors_checked = False
+    for ts in t.timeline.timestamps():
+        meta = t.timeline.commit_metadata(ts)
+        want = _reread_value_index(t, meta)
+        for _p, stat in meta.all_stats():
+            assert stat.value_index == want.get(stat.path, {}), (ts, stat.path)
+        if ts == "20270602000000":
+            files = [os.path.join(t.base_path, s.path) for _p, s in meta.all_stats()]
+            stamps = {
+                r[0] for r in spark.read.parquet(*files).select(FILE_NAME_FIELD).distinct().collect()
+            }
+            survivors_checked = any(not f.endswith(f"_{ts}.parquet") for f in stamps)
+    assert survivors_checked, "fixture has no upsert survivors with old file names"
+    emptied = [
+        s for _p, s in t.timeline.commit_metadata("20270605000000").all_stats()
+        if s.num_writes == 0
+    ]
+    assert len(emptied) == 1 and emptied[0].value_index == {}
 
 
 def test_delete_missing_partition_column_named_error(spark, scratch):
