@@ -1306,8 +1306,8 @@ def _classify_window(win_node, src_ids, refs, out_ids, snapshots,
     the row identity.  Over a UNION ALL (rank across merged ingest
     feeds) the identity is the union contract's (tag, key).  Detection
     is per branch (see _advance_window): changed keys name the
-    partitions rows ENTER through the branch chain's after-image and
-    LEAVE through the stored view — union is a multiset sum, so
+    partitions rows LEAVE and ENTER through the branch chain replayed
+    over their before- and after-images — union is a multiset sum, so
     branches never interact.  The partition column maps per branch to
     possibly-different source columns (``part_src_cols``, SQL over the
     source's raw columns); a source feeding several branches is
@@ -2198,15 +2198,12 @@ class AutoMaterializedView:
         self, dead: DataFrame, live: DataFrame, base: int,
         table: CowTable | None = None,
     ) -> None:
-        """One advance's writes to ``table`` (default: the view): the
-        ``dead`` keys delete at ``base + 1``, then the ``live`` rows
-        upsert at ``base + 2``; an empty side commits nothing."""
-        if table is None:
-            table = self.table
-        if dead.count() > 0:
-            table.delete(dead, f"{base + 1:014d}")
-        if live.count() > 0:
-            table.upsert(live, f"{base + 2:014d}")
+        """One advance's write to ``table`` (default: the view): ONE
+        group rewrite at ``base + 1`` (``CowTable.apply_delta``) in which
+        the ``dead`` keys delete and the ``live`` rows upsert, applied as
+        one weighted update the way DBSP applies a Z-set delta. A key on
+        both sides ends live; an empty delta commits nothing."""
+        (table or self.table).apply_delta(live, dead, f"{base + 1:014d}")
 
     def serve(self) -> DataFrame:
         snap = self.table.snapshot()
@@ -3256,45 +3253,31 @@ class AutoMaterializedView:
     def _advance_window(self, spec, anchor, latest) -> None:
         """Per-branch touched-partition detection for a window over one
         or more union branches: each changed source's keys name the
-        partitions its rows ENTER (the branch chain replayed over the
-        keys' rows in the source at the target) and LEAVE (the stored
-        view's rows under that branch's key, and tag over a union) —
-        never the windowed plan itself, whose top-k filter may hide a
-        changed row.  Each source is then restricted to the OR of its
+        partitions its rows LEAVE and ENTER — the branch chain replayed
+        over the keys' rows in the source at the anchor (before-images)
+        and at the target (after-images).  Never the windowed plan or
+        the stored view: a filter above the window (a top-k, or a value
+        filter) may hide a changed row whose partition-mates it still
+        moves.  Each source is then restricted to the OR of its
         branches' partition-column restrictions; a branch with no
         source-column mapping leaves its source full."""
         from functools import reduce
 
-        key, tag = spec["key"]["name"], spec["tag_col"]
-        out_parts = [o for o, _i in spec["parts"]]
         by_src: dict[str, list] = {}
         for br in spec["branches"]:
             by_src.setdefault(br["source"], []).append(br)
-        view_snap = self.table.snapshot()
         pieces = []
         for s, brs in by_src.items():
             if anchor[s] == latest[s]:
                 continue
             src = self.sources[s]
             d_keys = self._changed_keys_of(src, anchor[s], latest[s])
-            after = src.snapshot(latest[s]).join(
-                d_keys, RECORD_KEY_FIELD, "left_semi"
-            )
-            old = view_snap.join(
-                d_keys.select(F.col(RECORD_KEY_FIELD).alias(key)), key,
-                "left_semi",
-            )
-            if tag is None:
-                pieces.append(old.select(*out_parts))
-            for br in brs:
-                red = _replay_spec(br["chain"], after).toDF(*spec["in_names"])
-                pieces.append(
-                    red.select(*[F.col(i).alias(o) for o, i in spec["parts"]])
-                )
-                if tag is not None:
+            for ts in (anchor[s], latest[s]):
+                image = src.snapshot(ts).join(d_keys, RECORD_KEY_FIELD, "left_semi")
+                for br in brs:
+                    red = _replay_spec(br["chain"], image).toDF(*spec["in_names"])
                     pieces.append(
-                        old.filter(F.col(tag) == F.expr(br["tag_sql"]))
-                        .select(*out_parts)
+                        red.select(*[F.col(i).alias(o) for o, i in spec["parts"]])
                     )
         if not pieces:
             return
@@ -3406,14 +3389,14 @@ class AutoMaterializedView:
                   _part_cond("r", "t", out_parts), "left_semi")
             .localCheckpoint(eager=True)
         )
+        # every stored key of a touched partition is a delete marker; the
+        # rederived ones end live
         dead = (
             self.table.snapshot().select(*keys, *out_parts)
             .alias("v")
             .join(F.broadcast(touched.alias("t")),
                   _part_cond("v", "t", out_parts), "left_semi")
             .select(*keys)
-            .join(rederived.select(*keys), keys, "left_anti")
-            .localCheckpoint(eager=True)
         )
         self._commit_delta(dead, rederived, self._commit_base(latest))
 
@@ -3442,14 +3425,11 @@ class AutoMaterializedView:
                 *spec["out_names"]
             )
             ups.append(red)
-            deads.append(
-                d_keys.select(
-                    F.expr(br["tag_sql"]).alias(tag),
-                    F.col(RECORD_KEY_FIELD).alias(key),
-                ).join(
-                    red.select(tag, key), [tag, key], "left_anti"
-                )
-            )
+            # every changed key is a marker; the replayed ones end live
+            deads.append(d_keys.select(
+                F.expr(br["tag_sql"]).alias(tag),
+                F.col(RECORD_KEY_FIELD).alias(key),
+            ))
         if not ups:
             return
         from functools import reduce
@@ -3457,9 +3437,7 @@ class AutoMaterializedView:
         rederived = reduce(
             lambda a, b: a.unionByName(b), ups
         ).localCheckpoint(eager=True)
-        dead = reduce(
-            lambda a, b: a.unionByName(b), deads
-        ).localCheckpoint(eager=True)
+        dead = reduce(lambda a, b: a.unionByName(b), deads)
         self._commit_delta(dead, rederived, self._commit_base(latest))
 
     # -- algebra: change-key re-derivation (select / join views) ---------
@@ -3647,9 +3625,9 @@ class AutoMaterializedView:
             # row identity before writing (rows are identical copies)
             touched = touched.dropDuplicates([key])
             affected = affected.dropDuplicates([key])
+        # every affected key is a marker; the rederived ones end live
         rederived = touched.localCheckpoint(eager=True)
-        dead = (
-            affected.join(rederived.select(key), key, "left_anti")
-            .localCheckpoint(eager=True)
+        self._commit_delta(
+            affected.localCheckpoint(eager=True), rederived,
+            self._commit_base(latest),
         )
-        self._commit_delta(dead, rederived, self._commit_base(latest))

@@ -1003,18 +1003,12 @@ def _maintain_join_view(spark, sf_dir: str):
         .join(d_li_keys, "lk", "left_anti")
         .join(F.broadcast(d_ord_keys), "o_orderkey", "left_semi")
     )
-    dead = affected_view.select("lk").join(
-        rederived.select("lk"), "lk", "left_anti"
-    ).localCheckpoint(eager=True)
-
-    # two maintenance commits stamped AFTER both source anchors
-    base_ts = max(li_latest, om_latest)
-    t_del = f"{int(base_ts) + 1:014d}"
-    t_up = f"{int(base_ts) + 2:014d}"
-    if dead.count() > 0:
-        view.delete(dead, t_del)
-    if rederived.count() > 0:
-        view.upsert(rederived, t_up)
+    # one maintenance commit stamped AFTER both source anchors: every
+    # affected key is a delete marker, and the rederived ones end live
+    view.apply_delta(
+        rederived, affected_view.select("lk"),
+        f"{int(max(li_latest, om_latest)) + 1:014d}",
+    )
     with open(anchor_path, "w") as f:
         json.dump({"li": li_latest, "om": om_latest}, f)
     return view
@@ -1147,11 +1141,8 @@ def stream_ivm_view(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(ord_snap, F.col("l_orderkey") == F.col("o_orderkey"))
             .localCheckpoint(eager=True)
         )
-        dead = keys.join(rederived.select("lk"), "lk", "left_anti")
-        if dead.count() > 0:
-            view.delete(dead, f"{int(ts) + 1:014d}")
-        if rederived.count() > 0:
-            view.upsert(rederived, f"{int(ts) + 2:014d}")
+        # the rederived keys end live; the other touched keys delete
+        view.apply_delta(rederived, keys, f"{int(ts) + 1:014d}")
         state["anchor"] = ts
 
     for ts in li.timeline.timestamps()[1:]:
@@ -1251,10 +1242,7 @@ def lake_ivm_agg_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).localCheckpoint(eager=True)
         live = merged.filter(F.col("n_rows") > 0)
         dead = merged.filter(F.col("n_rows") <= 0).select("l_returnflag")
-        if dead.count() > 0:
-            view.delete(dead, f"{int(latest) + 1:014d}")
-        if live.count() > 0:
-            view.upsert(live, f"{int(latest) + 2:014d}")
+        view.apply_delta(live, dead, f"{int(latest) + 1:014d}")
         with open(anchor_path, "w") as f:
             json.dump({"li": latest}, f)
 

@@ -17,11 +17,10 @@ Scale design (the part that must survive 100 TB / 1000 executors):
 - **Write stats come from metadata and the write itself, not extra
   jobs**: per-group row counts are read from Parquet footers (same trick
   as the reference's footer-only count, ``DeleteUtils.java:27-48``);
-  per-group incoming counts and value-index buckets are observed on the
-  write action (``DataFrame.observe``); update/delete counters are
-  derived arithmetically from previous-commit stats. A bulk insert is
-  exactly ONE Spark job; an upsert/delete adds only the affected-group
-  collect, one exchange over the partition + file-group columns.
+  per-group update/insert/delete counts and value-index buckets are
+  observed on the write action (``DataFrame.observe``). A bulk insert is
+  exactly ONE Spark job; upsert, delete and merge are one group rewrite
+  (``_rewrite``) that adds only the affected-group collect.
 - **Upsert/delete only rewrite affected file groups** — the stats-based
   pruning the reference applies at read time (``DeleteView.java:100``) is
   applied symmetrically at write time.
@@ -68,6 +67,10 @@ WRITE_TOKEN = "0-0-0"
 DEFAULT_PARTITION = "default"
 _PP = "__pp"  # staging-only partition column (partitionBy drops it from files)
 _FID = "__fid"
+# group-rewrite staging columns (``_rewrite``): the row comes from the
+# incoming batch / the incoming row is a delete marker
+_SRC = "__src"
+_DEL = "__del"
 
 # file name: <fileId>_<writeToken>_<commitTs>[.log].parquet
 # The file id embeds the partition value verbatim (fg-<partition>-<n>), so
@@ -166,15 +169,24 @@ def _value_index_bitmaps(
     return out
 
 
+def _group_id():
+    """A row's numeric (partition, file group) id: 53 bits of
+    ``xxhash64``, which the doubles of ``histogram_numeric`` hold
+    exactly. The driver inverts it over the affected groups."""
+    return F.xxhash64(F.col(_PP), F.col(_FID)).bitwiseAND(F.lit((1 << 53) - 1))
+
+
 class GroupWrite(NamedTuple):
     """One file group a write produced: its table-relative path, footer
-    row count, the rows this commit stamped in it (counted only when the
-    writer asks), and its value-index bitmaps."""
+    row count, value-index bitmaps, and the rows this commit updated,
+    inserted and deleted in it."""
 
     path: str
     rows: int
-    incoming: int = 0
     value_index: dict = {}
+    updates: int = 0
+    inserts: int = 0
+    deletes: int = 0
 
 
 def _bitmap_has(b64: str, bucket: int) -> bool:
@@ -390,7 +402,7 @@ class CowTable:
         suffix: str = ".parquet",
         sort_cols: list[str] | None = None,
         parquet_block_bytes: int | None = None,
-        count_incoming: bool = False,
+        gids: dict[int, tuple[str, str]] | None = None,
     ) -> dict[tuple[str, str], GroupWrite]:
         """Write one Parquet file per (partition, file_id) group.
 
@@ -403,42 +415,72 @@ class CowTable:
         empties a whole file group must still publish a zero-row file —
         FIXTURES.md edge case; the reference reads such slices fine).
 
+        With ``gids`` ({group id: group}, see ``_group_id``) ``df`` is a
+        group rewrite's union of old rows and incoming rows (``_rewrite``).
+        Every row of a key then sits in its group's task, so one window
+        over (group, key) resolves the key without a join: an old row
+        survives when no incoming row names its key, is updated when a
+        non-marker one does, and is deleted when only markers do; an
+        incoming row is written unless it is a marker.
+
         The per-group metadata beyond the footer row count is observed on
-        the write itself (``DataFrame.observe``, no extra Spark job):
-        ``count_incoming`` counts, per expected group, the rows this commit
-        stamped (``_hoodie_commit_time == commit_ts``; carried rows keep
-        their older stamps), and every write collects the value-index
-        buckets of ``index_columns``.
+        the write itself (``DataFrame.observe``, no extra Spark job): a
+        rewrite's updated, inserted and deleted rows per group, and the
+        value-index buckets of ``index_columns`` over the written rows.
         """
         staging = os.path.join(self.base_path, f".staging-{commit_ts}")
         self.fs.rmtree(staging)
         shuffled = df.repartition(F.col(_PP), F.col(_FID))
+        aggs, keep = [], None
+        if gids is not None:
+            # hash partitioning on the group satisfies the (group, key)
+            # window: it adds no exchange
+            w = Window.partitionBy(_PP, _FID, RECORD_KEY_FIELD)
+            src, marker = F.col(_SRC), F.col(_DEL)
+            shuffled = shuffled.select(
+                "*",
+                F.max(src).over(w).alias("__named"),
+                F.max(src & ~marker).over(w).alias("__upserted"),
+                F.min(src).over(w).alias("__new"),
+            )
+            named, upserted = F.col("__named"), F.col("__upserted")
+            keep = (~src & ~named) | (src & ~marker)
+            # one histogram per count, each exact only where every row of
+            # a group sits in one task, i.e. after the repartition: partial
+            # histograms of one id merged across tasks miscount
+            nb = F.lit(len(gids) + 1)
+            aggs = [
+                F.histogram_numeric(F.when(cond, _group_id()), nb).alias(f"__n_{n}")
+                for n, cond in (
+                    ("updates", ~src & upserted),
+                    ("inserts", src & ~marker & F.col("__new")),
+                    ("deletes", ~src & named & ~upserted),
+                )
+            ]
         if sort_cols:
             # group cols lead the sort so each leaf file comes out ordered
             # by sort_cols even when several groups share a task; entries
             # may be column names or arbitrary sort expressions (Z-order)
             exprs = [F.col(c) if isinstance(c, str) else c for c in sort_cols]
             shuffled = shuffled.sortWithinPartitions(F.col(_PP), F.col(_FID), *exprs)
-        counted = list(expected_groups or []) if count_incoming else []
         vix_cols = [c for c in self.index_columns if c in df.columns]
-        # one count_if per counted group (observe takes no grouping): the
-        # file id alone names the group, since it embeds the partition
-        stamped_here = F.col(COMMIT_TIME_FIELD) == F.lit(commit_ts)
-        aggs = [
-            F.count_if(stamped_here & (F.col(_FID) == fid)).alias(f"__inc_{i}")
-            for i, (_pp, fid) in enumerate(counted)
-        ] + [
-            F.collect_set(
-                F.struct(F.col(_PP), F.col(_FID), _value_bucket_col(c, self.index_bits))
-            ).alias(f"__vix_{i}")
-            for i, c in enumerate(vix_cols)
-        ]
+        for i, c in enumerate(vix_cols):
+            bucket = F.struct(F.col(_PP), F.col(_FID), _value_bucket_col(c, self.index_bits))
+            aggs.append(F.collect_set(
+                bucket if keep is None else F.when(keep, bucket)
+            ).alias(f"__vix_{i}"))
         observation = None
         if aggs:
-            # observed AFTER the repartition: on the pre-shuffle frame, an
-            # AQE partitioned write of zero rows reports no metrics at all
+            # observed AFTER the repartition: there every group sits in one
+            # task, which the histograms' exactness needs (an AQE
+            # partitioned write of zero rows also reports no metrics at all
+            # on the pre-shuffle frame)
             observation = Observation()
             shuffled = shuffled.observe(observation, *aggs)
+        if keep is not None:
+            shuffled = shuffled.filter(keep).drop(
+                _SRC, _DEL, "__named", "__upserted", "__new"
+            )
         writer = shuffled.write.partitionBy(_PP, _FID).mode("overwrite")
         if parquet_block_bytes:
             writer = writer.option("parquet.block.size", str(parquet_block_bytes))
@@ -458,10 +500,13 @@ class CowTable:
         writer = writer.option("parquet.bloom.filter.adaptive.enabled", "true")
         writer.parquet(staging)
         observed = observation.get if observation else {}
-        incoming = {g: observed[f"__inc_{i}"] for i, g in enumerate(counted)}
         vix = _value_index_bitmaps(
             {c: observed[f"__vix_{i}"] for i, c in enumerate(vix_cols)}, self.index_bits
         )
+        counts: dict[tuple[str, str], dict[str, int]] = {}
+        for n in ("updates", "inserts", "deletes") if gids is not None else ():
+            for b in observed[f"__n_{n}"] or []:
+                counts.setdefault(gids[int(b["x"])], {})[n] = round(b["y"])
 
         written: dict[tuple[str, str], GroupWrite] = {}
         for pp_dir in self.fs.listdir(staging):
@@ -484,14 +529,14 @@ class CowTable:
                 written[g] = GroupWrite(
                     os.path.join(partition, fname),
                     _footer_row_count(target),
-                    incoming.get(g, 0),
                     vix.get(g, {}),
+                    **counts.get(g, {}),
                 )
 
         # publish empty slices for groups the write produced no rows for
         missing = [g for g in (expected_groups or []) if g not in written]
         if missing:
-            empty = self.spark.createDataFrame([], df.drop(_PP, _FID).schema)
+            empty = self.spark.createDataFrame([], df.drop(_PP, _FID, _SRC, _DEL).schema)
             tmp = os.path.join(staging, "_empty")
             empty.coalesce(1).write.mode("overwrite").parquet(tmp)
             src = next(
@@ -504,7 +549,10 @@ class CowTable:
                 self.fs.makedirs(target_dir)
                 fname = f"{file_id}_{WRITE_TOKEN}_{commit_ts}{suffix}"
                 self.fs.copy(src, os.path.join(target_dir, fname))
-                written[(partition, file_id)] = GroupWrite(os.path.join(partition, fname), 0)
+                written[(partition, file_id)] = GroupWrite(
+                    os.path.join(partition, fname), 0, {},
+                    **counts.get((partition, file_id), {}),
+                )
 
         self.fs.rmtree(staging)
         return written
@@ -601,20 +649,17 @@ class CowTable:
         written: dict[tuple[str, str], GroupWrite],
         prev_slices: dict[tuple[str, str], FileSlice],
         schema_json: str | None = None,
-        is_delete: bool = False,
         read_ts: str | None = "__unchecked__",
         conflict_any: bool = False,
         extra: dict | None = None,
-        explicit_stats: dict[tuple[str, str], tuple[int, int, int]] | None = None,
     ) -> CommitMetadata:
-        """Derive write stats arithmetically and publish the commit JSON.
+        """Publish the commit JSON for the groups ``written``.
 
-        For each rewritten group: prev = previous slice rows (from the
-        previous commit's stats / footer), new = rows now, inc = incoming
-        batch rows (observed on the write, ``GroupWrite.incoming``).  Then
-        updates = prev + inc - new, inserts = inc - updates, deletes =
-        prev - new (delete op). No extra Spark jobs: the value-index
-        bitmaps were observed on the write too.
+        Each group's stats are the ones its write carried: the footer row
+        count, and the updates, inserts and deletes a group rewrite
+        observed (``_rewrite``; bulk inserts count every row an insert,
+        table services change no record). ``prevCommit`` is the slice the
+        group replaces. No Spark job and no footer read of the old slice.
 
         ``read_ts`` enables optimistic concurrency control: the latest
         instant the writer's view was based on when it resolved slices.
@@ -642,51 +687,22 @@ class CowTable:
         )
         p2ws: dict[str, list[WriteStat]] = {}
         total_deleted = 0
-        for (partition, file_id), (rel_path, new_rows, inc, vix) in sorted(written.items()):
+        for (partition, file_id), w in sorted(written.items()):
             prev = prev_slices.get((partition, file_id))
-            # prev.base_path is already table-rooted (resolve_slices); a
-            # second join is a local no-op but DOUBLES a URI base path
-            prev_rows = (
-                _footer_row_count(prev.base_path)
-                if prev and prev.base_path
-                else 0
-            )
-            if explicit_stats is not None:
-                # mixed-action commits (MERGE): updates/inserts/deletes were
-                # classified by the writer (matched vs not, delete-flagged vs
-                # not) — the prev/inc arithmetic below can't separate a
-                # delete from an update that landed in the same group
-                updates, inserts, deletes = explicit_stats.get(
-                    (partition, file_id), (0, 0, 0)
-                )
-            elif is_delete:
-                deletes = prev_rows - new_rows
-                updates = 0
-                inserts = 0
-            elif operation in ("compaction", "clustering", "repartition"):
-                # compaction/clustering/repartition change no records —
-                # with inc=0 the generic arithmetic would publish negative
-                # inserts and phantom updates whenever the rewritten output
-                # is smaller than the previous base (log tombstones applied)
-                updates = inserts = deletes = 0
-            else:
-                updates = max(0, prev_rows + inc - new_rows)
-                inserts = max(0, inc - updates)
-                deletes = 0
-            total_deleted += deletes
-            abs_path = os.path.join(self.base_path, rel_path)
+            total_deleted += w.deletes
+            abs_path = os.path.join(self.base_path, w.path)
             p2ws.setdefault(partition, []).append(
                 WriteStat(
                     file_id=file_id,
-                    path=rel_path,
+                    path=w.path,
                     prev_commit=prev.commit_ts if prev else None,
-                    num_writes=new_rows,
-                    num_update_writes=updates,
-                    num_deletes=deletes,
-                    num_inserts=inserts,
+                    num_writes=w.rows,
+                    num_update_writes=w.updates,
+                    num_deletes=w.deletes,
+                    num_inserts=w.inserts,
                     file_size_bytes=self.fs.size(abs_path),
                     column_stats=footer_column_stats(abs_path, stats_cols),
-                    value_index=vix,
+                    value_index=w.value_index,
                 )
             )
         meta = CommitMetadata(
@@ -706,15 +722,13 @@ class CowTable:
     # ------------------------------------------------------------------
     def bulk_insert(self, df: DataFrame, commit_ts: str) -> CommitMetadata:
         """Initial load: hash-bucket all rows into file groups — exactly
-        ONE Spark job. Per-group incoming counts equal the written footer
-        row counts (every incoming row lands; there are no survivors to
-        subtract), so the stats derive from ``written`` and the old
-        pre-write ``groupBy().count().collect()`` scan is gone."""
+        ONE Spark job. Every row written is an insert, so each group's
+        insert count is its footer row count."""
         stamped = self._dedup_incoming(self._with_meta(df, commit_ts))
         self._ensure_new_commit_ts(commit_ts)
         read_ts = self.timeline.latest_timestamp()
         written = {
-            g: w._replace(incoming=w.rows)
+            g: w._replace(inserts=w.rows)
             for g, w in self._write_file_groups(stamped, commit_ts).items()
         }
         return self._publish(
@@ -723,61 +737,98 @@ class CowTable:
             read_ts=read_ts,
         )
 
-    def upsert(self, df: DataFrame, commit_ts: str) -> CommitMetadata:
-        """Rewrite only the file groups the incoming keys hash into.
+    def _rewrite(
+        self,
+        source: DataFrame,
+        deleted,
+        commit_ts: str,
+        operation: str,
+        publish_empty: bool = True,
+    ) -> CommitMetadata | None:
+        """The one group rewrite under every keyed COW write: ``source``
+        holds stamped incoming rows (``_with_meta``), and those where the
+        boolean column ``deleted`` holds are delete markers for their key.
 
-        old-rows-minus-incoming-keys ∪ incoming — a per-group anti-join that
-        Catalyst executes as one shuffled join across all affected groups at
-        once (AQE picks broadcast when the incoming batch is small).
-        Unchanged rows keep their original meta columns (so incremental
-        reads by ``_hoodie_commit_time`` see only truly-changed records).
-        """
-        # The one pre-write pass: the affected-group set must be known
-        # BEFORE the survivors read is planned. It is a single exchange
-        # over the (partition, file-group) columns of the pre-dedup frame;
-        # dedup only drops rows, so it adds no group. Per-group incoming
-        # counts are not taken here: they are observed on the write, after
-        # dedup, so a key repeated under two partition values charges only
-        # the group that receives it.
-        stamped = self._with_meta(df, commit_ts)
-        affected = {
-            (r[_PP], r[_FID]) for r in stamped.select(_PP, _FID).distinct().collect()
-        }
-        incoming = self._dedup_incoming(stamped)
+        Shape: the affected-group collect (pre-dedup: dedup only drops
+        rows, so it adds no group), then the affected groups' live rows
+        (``_read_groups``; on MOR the merged rows) unioned with the
+        incoming rows, non-marker rows deduplicated, then ONE
+        ``repartition`` by group into the write (``_write_file_groups``),
+        which resolves each key in its group's task and observes the
+        per-group updates, inserts and deletes. With AQE off that is two
+        jobs, the collect and the write; with AQE on each query stage is
+        a job (4 for a delete, 5 for an upsert or merge).
+
+        A non-marker row beats a marker of its key, so a key both deleted
+        and upserted ends live. Unchanged rows keep their meta columns (so
+        incremental reads see only changed records). A group only markers
+        route to is a no-op unless one of them matched: it is not
+        published (standard MERGE semantics), and markers for groups
+        never written are dropped up front. ``publish_empty=False``
+        publishes nothing when no group is affected (returns None)."""
+        src = source.withColumn(_DEL, F.coalesce(deleted, F.lit(False)))
+        affected = src.groupBy(_PP, _FID, _group_id().alias("__gid")).agg(
+            F.max(~F.col(_DEL)).alias("__w")
+        ).collect()
         self._ensure_new_commit_ts(commit_ts)
         read_ts = self.timeline.latest_timestamp()
         prev_slices = resolve_slices(self.timeline)
-        old = self._read_groups(prev_slices, affected)
+        upserted = {(r[_PP], r[_FID]) for r in affected if r["__w"]}
+        kept = [r for r in affected if r["__w"] or (r[_PP], r[_FID]) in prev_slices]
+        if not kept and not publish_empty:
+            return None
+        gids = {r["__gid"]: (r[_PP], r[_FID]) for r in kept}
+        if len(gids) < len(kept):
+            raise RuntimeError(f"{operation} {commit_ts}: two file groups share a group id")
+        groups = set(gids.values())
+        incoming = self._dedup_incoming(src.filter(~F.col(_DEL))).unionByName(
+            src.filter(F.col(_DEL))
+        ).withColumn(_SRC, F.lit(True))
+        merged = incoming
+        old = self._read_groups(prev_slices, groups)
         if old is not None:
-            # an anti-join ignores duplicates on its build side and dedup
-            # keeps the same key set, so the build side is the pre-dedup
-            # key column: no window, no distinct
-            survivors = old.join(
-                stamped.select(RECORD_KEY_FIELD), on=RECORD_KEY_FIELD, how="left_anti"
+            old = old.select(
+                "*",
+                F.col(PARTITION_PATH_FIELD).alias(_PP),
+                file_id_expr(F.col(FILE_NAME_FIELD)).alias(_FID),
+                F.lit(False).alias(_SRC),
+                F.lit(False).alias(_DEL),
             )
             # allowMissingColumns = schema evolution: columns added by this
             # commit appear with nulls on surviving old rows (and vice
             # versa for columns the incoming batch omits)
-            merged = survivors.unionByName(
-                incoming.drop(_PP, _FID), allowMissingColumns=True
-            )
+            merged = old.unionByName(incoming, allowMissingColumns=True)
+        if upserted:
+            schema_json = merged.drop(_PP, _FID, _SRC, _DEL).schema.json()
+        elif read_ts is None:
+            raise TimelineError(f"{operation} on empty table")
         else:
-            merged = incoming.drop(_PP, _FID)
-        # re-derive staging cols for the union result (JVM-side, no shuffle yet)
-        merged = merged.withColumn(_PP, F.col(PARTITION_PATH_FIELD)).withColumn(
-            _FID, file_id_expr(F.col(FILE_NAME_FIELD))
-        )
+            schema_json = self.timeline.commit_metadata(read_ts).schema_json
         written = self._write_file_groups(
-            merged, commit_ts, expected_groups=sorted(affected), count_incoming=True
-        )
+            merged, commit_ts, expected_groups=sorted(groups), gids=gids
+        ) if groups else {}
+        noop = {
+            g: w for g, w in written.items()
+            if g not in upserted and not (w.updates or w.inserts or w.deletes)
+        }
+        self._remove_written(noop)
+        written = {g: w for g, w in written.items() if g not in noop}
+        if not written and not publish_empty:
+            return None
         return self._publish(
-            commit_ts, "upsert", written, prev_slices,
-            schema_json=merged.drop(_PP, _FID).schema.json(),  # evolved schema
-            read_ts=read_ts,
+            commit_ts, operation, written, prev_slices,
+            schema_json=schema_json, read_ts=read_ts,
         )
 
+    def upsert(self, df: DataFrame, commit_ts: str) -> CommitMetadata:
+        """Rewrite only the file groups the incoming keys hash into
+        (``_rewrite`` with no delete markers): old rows whose key the
+        batch names are updated, the others survive, new keys insert."""
+        return self._rewrite(self._with_meta(df, commit_ts), F.lit(False), commit_ts, "upsert")
+
     def delete(self, keys_df: DataFrame, commit_ts: str) -> CommitMetadata:
-        """Delete by key: rewrite affected groups without the given keys.
+        """Delete by key: rewrite the affected groups without the given
+        keys (``_rewrite`` with every row a marker).
 
         ``keys_df`` carries the key fields PLUS the partition column when
         the table is partitioned (routing needs it — same contract as
@@ -786,55 +837,23 @@ class CowTable:
         instead of an opaque resolution failure mid-plan. This is
         the write-side producer of everything ``delete_view`` consumes:
         write stats with ``numDeletes > 0`` and ``prevCommit`` per group.
+        Keys that match no row publish no group.
         """
         pf, _n = self._active_layout()
-        missing = [c for c in [*self.key_fields, *([pf] if pf else [])]
-                   if c not in keys_df.columns]
+        routing = [*self.key_fields, *([pf] if pf else [])]
+        missing = [c for c in routing if c not in keys_df.columns]
         if missing:
             raise ValueError(
                 f"delete keys_df is missing routing column(s) {missing}: a "
                 f"partitioned table needs the partition value alongside the "
                 f"key fields (table keys={self.key_fields}, partition={pf!r})"
             )
-        keys = keys_df.select(
-            self._record_key_col().alias(RECORD_KEY_FIELD),
-            self._partition_col().alias(_PP),
+        # markers carry the meta columns only: a key column typed unlike
+        # the table's must not widen the written column through the union
+        keys = self._with_meta(keys_df.select(*routing), commit_ts).select(
+            *META_FIELDS, _PP, _FID
         )
-        keys = keys.withColumn(_FID, self._fid_col(F.col(_PP)))
-        affected = {(r[_PP], r[_FID]) for r in keys.select(_PP, _FID).distinct().collect()}
-        self._ensure_new_commit_ts(commit_ts)
-        read_ts = self.timeline.latest_timestamp()
-        prev_slices = resolve_slices(self.timeline)
-        affected = {g for g in affected if g in prev_slices}  # keys never written: no-op
-        old = self._read_groups(prev_slices, affected)
-        if old is None:
-            # nothing matched: publish an empty delete commit (numDeletes=0
-            # everywhere — the delete view of this commit is empty). Schema
-            # comes from read_ts — the instant this writer actually read —
-            # not a re-listed latest that may include a concurrent commit.
-            if read_ts is None:
-                raise TimelineError("delete on empty table")
-            return self._publish(
-                commit_ts, "delete", written={}, prev_slices=prev_slices,
-                is_delete=True,
-                schema_json=self.timeline.commit_metadata(read_ts).schema_json,
-                read_ts=read_ts,
-            )
-        # repeated keys need no distinct: an anti-join ignores build-side
-        # duplicates
-        survivors = old.join(
-            keys.select(RECORD_KEY_FIELD), on=RECORD_KEY_FIELD, how="left_anti"
-        )
-        survivors = survivors.withColumn(_PP, F.col(PARTITION_PATH_FIELD)).withColumn(
-            _FID, file_id_expr(F.col(FILE_NAME_FIELD))
-        )
-        written = self._write_file_groups(survivors, commit_ts, expected_groups=sorted(affected))
-        return self._publish(
-            commit_ts, "delete", written, prev_slices, is_delete=True,
-            schema_json=self.timeline.commit_metadata(read_ts).schema_json
-            if read_ts else None,
-            read_ts=read_ts,
-        )
+        return self._rewrite(keys, F.lit(True), commit_ts, "delete")
 
     def delete_where(self, condition, commit_ts: str) -> CommitMetadata:
         """Predicate delete: snapshot → filter → key-delete."""
@@ -851,96 +870,32 @@ class CowTable:
 
         Single-commit is the point — upsert-then-delete would cost two
         group rewrites and leave an intermediate timeline state readers can
-        observe. Here the affected file groups are rewritten once:
-        survivors (old rows whose key the source doesn't touch, original
-        meta preserved) ∪ upserted source rows. Per-group
-        updates/inserts/deletes are classified against the old keys and
-        published explicitly, so a merge with matched deletes feeds the
-        delete view exactly like a delete commit (``numDeletes > 0`` +
-        ``prevCommit`` pairing; the view's anti-join reconstructs the
-        deleted rows — SURVEY §2 A2/B6, DeleteView.java:100).
-
-        Scale shape: the affected-group collect, one classification
-        aggregation over (source keys ⋈ old keys, both pruned to key+group
-        columns), then the same single-shuffle group rewrite every writer
-        uses, its anti-join built from the source key column without a
-        distinct. Only affected groups are read or written; AQE broadcasts
-        the source side when the batch is small. With AQE on, each query
-        stage is its own job: 11 on a 4-group table (5 with AQE off).
+        observe. It is ``_rewrite`` with the delete-flagged rows as
+        markers, so a merge with matched deletes feeds the delete view
+        exactly like a delete commit (``numDeletes > 0`` + ``prevCommit``
+        pairing; the view's anti-join reconstructs the deleted rows —
+        SURVEY §2 A2/B6, DeleteView.java:100).
         """
         if delete_condition is None:
             delete_condition = F.lit(False)
         elif isinstance(delete_condition, str):
             delete_condition = F.expr(delete_condition)
-        stamped = self._with_meta(source, commit_ts)
-        deduped = self._dedup_incoming(stamped).withColumn(
-            "__is_del", F.coalesce(delete_condition, F.lit(False))
+        return self._rewrite(
+            self._with_meta(source, commit_ts), delete_condition, commit_ts, "merge"
         )
-        self._ensure_new_commit_ts(commit_ts)
-        read_ts = self.timeline.latest_timestamp()
-        prev_slices = resolve_slices(self.timeline)
 
-        # classification: matched (key exists in its routed group) x
-        # delete-flagged → per-group (updates, inserts, deletes). One
-        # aggregation job over key+group columns only (old side pruned to
-        # the key column by Catalyst).
-        src_keys = deduped.select(_PP, _FID, RECORD_KEY_FIELD, "__is_del")
-        groups_all = {
-            (r[_PP], r[_FID]) for r in src_keys.select(_PP, _FID).distinct().collect()
-        }
-        old = self._read_groups(prev_slices, groups_all & set(prev_slices))
-        if old is not None:
-            old_keys = old.select(RECORD_KEY_FIELD).withColumn("__m", F.lit(True))
-            cls = src_keys.join(old_keys, RECORD_KEY_FIELD, "left")
-        else:
-            cls = src_keys.withColumn("__m", F.lit(None).cast("boolean"))
-        m = F.col("__m").isNotNull()
-        d = F.col("__is_del")
-        counts = {
-            (r[_PP], r[_FID]): (r["u"], r["i"], r["d"])
-            for r in cls.groupBy(_PP, _FID)
-            .agg(
-                F.count(F.when(m & ~d, 1)).alias("u"),
-                F.count(F.when(~m & ~d, 1)).alias("i"),
-                F.count(F.when(m & d, 1)).alias("d"),
-            )
-            .collect()
-        }
-        # groups with only unmatched delete-flagged rows are full no-ops
-        affected = {
-            g for g, (u, i, dd) in counts.items()
-            if u or i or dd  # something to write or remove
-        }
-        counts = {g: c for g, c in counts.items() if g in affected}
-
-        # survivors come ONLY from affected groups — a group whose source
-        # rows were all unmatched deletes is a full no-op and must not be
-        # rewritten (its slice stays owned by its previous commit). Reuse
-        # the classification read with a file-id filter instead of a second
-        # mergeSchema read (fid strings embed the partition, so the fid set
-        # identifies the group set exactly)
-        survivors = None
-        if old is not None:
-            affected_fids = sorted({f for (_p, f) in affected})
-            survivors = old.filter(
-                file_id_expr(F.col(FILE_NAME_FIELD)).isin(affected_fids)
-            ).join(stamped.select(RECORD_KEY_FIELD), on=RECORD_KEY_FIELD, how="left_anti")
-        upserts = deduped.filter(~F.col("__is_del")).drop(_PP, _FID, "__is_del")
-        if survivors is not None:
-            merged = survivors.unionByName(upserts, allowMissingColumns=True)
-        else:
-            merged = upserts
-        merged = merged.withColumn(_PP, F.col(PARTITION_PATH_FIELD)).withColumn(
-            _FID, file_id_expr(F.col(FILE_NAME_FIELD))
+    def apply_delta(
+        self, live: DataFrame, dead: DataFrame, commit_ts: str
+    ) -> CommitMetadata | None:
+        """One commit applying a maintained view's delta (``_rewrite``):
+        the ``dead`` keys delete and the ``live`` rows upsert; a key on
+        both sides ends live, and an empty delta publishes nothing."""
+        source = live.withColumn(_DEL, F.lit(False)).unionByName(
+            dead.withColumn(_DEL, F.lit(True)), allowMissingColumns=True
         )
-        written = self._write_file_groups(
-            merged, commit_ts, expected_groups=sorted(affected)
-        )
-        return self._publish(
-            commit_ts, "merge", written, prev_slices,
-            schema_json=merged.drop(_PP, _FID).schema.json(),
-            read_ts=read_ts,
-            explicit_stats=counts,
+        return self._rewrite(
+            self._with_meta(source, commit_ts), F.col(_DEL), commit_ts, "merge",
+            publish_empty=False,
         )
 
     def _lookup_probe(self, keys: list[tuple]) -> tuple[set, set]:

@@ -239,7 +239,7 @@ class MorTable(CowTable):
         )
         p2ws: dict[str, list[WriteStat]] = {}
         total_deleted = 0
-        for (partition, file_id), (rel_path, rows, _inc, _vix) in sorted(written.items()):
+        for (partition, file_id), (rel_path, rows, *_stats) in sorted(written.items()):
             prev = prev_slices.get((partition, file_id))
             if delete_counts is not None:
                 # mixed-action delta (merge): tombstones counted per group

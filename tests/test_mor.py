@@ -511,6 +511,29 @@ def test_cow_writers_on_mor_absorb_logs(spark, scratch):
     assert {(r["k"], r["v"]) for r in dv} == {(5, 50)}
 
 
+def test_cow_writers_on_mor_publish_merged_row_stats(spark, scratch):
+    """An absorbing COW-style write on MOR counts against the MERGED rows
+    it rewrote, not the base footer: a delete after a log tombstone of
+    another key deletes one row, and an upsert after a log insert of its
+    key is an update."""
+    t = MorTable(
+        spark, os.path.join(scratch, "mstats"), key_fields=["k"],
+        partition_field=None, num_file_groups=1,
+    )
+    t.bulk_insert(spark.createDataFrame([(k, k * 10) for k in range(1, 6)], "k int, v int"),
+                  "20270601000000")
+    t.delete_delta(spark.createDataFrame([(3,)], "k int"), "20270602000000")
+    meta = t.delete(spark.createDataFrame([(1,)], "k int"), "20270603000000")
+    (stat,) = [s for _p, s in meta.all_stats()]
+    assert (stat.num_deletes, meta.total_records_deleted, stat.num_writes) == (1, 1, 3)
+    t.upsert_delta(spark.createDataFrame([(6, 60)], "k int, v int"), "20270604000000")
+    meta = t.upsert(spark.createDataFrame([(6, 66), (7, 70)], "k int, v int"), "20270605000000")
+    (stat,) = [s for _p, s in meta.all_stats()]
+    assert (stat.num_update_writes, stat.num_inserts, stat.num_deletes) == (1, 1, 0)
+    assert {r["k"]: r["v"] for r in t.snapshot().collect()} == {
+        2: 20, 4: 40, 5: 50, 6: 66, 7: 70}
+
+
 def test_size_tiered_compaction_rewrites_fewer_bytes(spark, scratch):
     """Size-tiered policy (SURVEY 12.4): a huge-base group carrying one
     tiny log is DEFERRED (absorbing it now would over-amplify), while a

@@ -9,7 +9,8 @@ equals the from-scratch recompute, null-safe, after each advance.
 This is the adversarial net behind the targeted pytest pins: the plan
 pool covers every maintained kind (aggregate incl. min/max / COUNT
 DISTINCT / HLL, join, LEFT join, agg_join, agg_union with a self-union
-branch, agg_tree, window, window_tree, window self-join, snowflake
+branch, agg_tree, window (row_number and dense_rank top-k, and window
+aggregates under a value filter), window_tree, window self-join, snowflake
 expression keys, distinct, agg_stage), and the
 script generator favors the operations that broke algebras before
 (join-column mutations, NULL keys/values, group/partition moves, deletes
@@ -106,6 +107,23 @@ def _plans():
         w = W.partitionBy("g").orderBy(F.desc("v"), F.asc("vk"))
         return (t["fact"].selectExpr("_hoodie_record_key as vk", "g", "v")
                 .withColumn("rn", F.row_number().over(w)).filter("rn <= 2"))
+
+    def window_agg_filtered(t):
+        # a window AGGREGATE under a value filter above the window: a row
+        # the filter hides still moves its partition-mates' values
+        w = W.partitionBy("g")
+        return (t["fact"].selectExpr("_hoodie_record_key as vk", "g", "v")
+                .select("vk", "g", "v",
+                        F.count(F.lit(1)).over(w).alias("cnt"),
+                        F.sum("v").over(w).alias("sv"))
+                .filter("v >= 5"))
+
+    def window_dense(t):
+        # dense_rank top-k: ties share a rank, so k ranks may hold more
+        # than k rows
+        w = W.partitionBy("g").orderBy(F.desc("v"))
+        return (t["fact"].selectExpr("_hoodie_record_key as vk", "g", "v")
+                .withColumn("dr", F.dense_rank().over(w)).filter("dr <= 2"))
 
     def window_tree(t):
         f = t["fact"].selectExpr("_hoodie_record_key as vk", "g", "v")
@@ -224,6 +242,8 @@ def _plans():
         "snowflake": snowflake, "agg_join": agg_join,
         "agg_union": agg_union, "agg_tree": agg_tree,
         "agg_tree_left": agg_tree_left, "window": window,
+        "window_agg_filtered": window_agg_filtered,
+        "window_dense": window_dense,
         "window_tree": window_tree, "window_union": window_union,
         "join_exprkey": join_exprkey, "self_join_agg": self_join_agg,
         "self_join_tree": self_join_tree, "distinct": distinct,
