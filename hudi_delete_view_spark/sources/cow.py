@@ -839,21 +839,31 @@ class CowTable:
         write stats with ``numDeletes > 0`` and ``prevCommit`` per group.
         Keys that match no row publish no group.
         """
+        return self._rewrite(
+            self._markers(keys_df, commit_ts, "delete keys_df"), F.lit(True), commit_ts, "delete"
+        )
+
+    def _markers(self, keys_df: DataFrame, commit_ts: str, what: str) -> DataFrame:
+        """Stamped delete markers for the keys of ``keys_df``, which must
+        carry the key fields plus the partition column when the table is
+        partitioned (routing needs it). A missing routing column raises a
+        named error up front: a marker routed to the default partition
+        would match nothing and drop the delete silently. Markers carry
+        the meta columns only, so no payload column of ``keys_df`` (nor a
+        key column typed unlike the table's) reaches the written rows or
+        the published schema through the rewrite's union."""
         pf, _n = self._active_layout()
         routing = [*self.key_fields, *([pf] if pf else [])]
         missing = [c for c in routing if c not in keys_df.columns]
         if missing:
             raise ValueError(
-                f"delete keys_df is missing routing column(s) {missing}: a "
+                f"{what} is missing routing column(s) {missing}: a "
                 f"partitioned table needs the partition value alongside the "
                 f"key fields (table keys={self.key_fields}, partition={pf!r})"
             )
-        # markers carry the meta columns only: a key column typed unlike
-        # the table's must not widen the written column through the union
-        keys = self._with_meta(keys_df.select(*routing), commit_ts).select(
+        return self._with_meta(keys_df.select(*routing), commit_ts).select(
             *META_FIELDS, _PP, _FID
         )
-        return self._rewrite(keys, F.lit(True), commit_ts, "delete")
 
     def delete_where(self, condition, commit_ts: str) -> CommitMetadata:
         """Predicate delete: snapshot → filter → key-delete."""
@@ -889,14 +899,13 @@ class CowTable:
     ) -> CommitMetadata | None:
         """One commit applying a maintained view's delta (``_rewrite``):
         the ``dead`` keys delete and the ``live`` rows upsert; a key on
-        both sides ends live, and an empty delta publishes nothing."""
-        source = live.withColumn(_DEL, F.lit(False)).unionByName(
-            dead.withColumn(_DEL, F.lit(True)), allowMissingColumns=True
+        both sides ends live, and an empty delta publishes nothing.
+        ``dead`` follows ``delete``'s routing contract (``_markers``)."""
+        source = self._with_meta(live, commit_ts).withColumn(_DEL, F.lit(False)).unionByName(
+            self._markers(dead, commit_ts, "apply_delta dead").withColumn(_DEL, F.lit(True)),
+            allowMissingColumns=True,
         )
-        return self._rewrite(
-            self._with_meta(source, commit_ts), F.col(_DEL), commit_ts, "merge",
-            publish_empty=False,
-        )
+        return self._rewrite(source, F.col(_DEL), commit_ts, "merge", publish_empty=False)
 
     def _lookup_probe(self, keys: list[tuple]) -> tuple[set, set]:
         """(wanted record keys, {(partition, file_id)}) for key tuples in

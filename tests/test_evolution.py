@@ -387,15 +387,19 @@ def test_rewrite_counts_exact_over_many_groups(spark, tmp_path, no_aqe, monkeypa
         return observe(self, observation, *exprs)
 
     monkeypatch.setattr(frame_cls, "observe", counting_observe)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    # 8 write tasks; and list the ~1,000 explicit file paths of a read on
+    # the driver, not in a listing job of one task per path
+    listing = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    prev = {k: spark.conf.get(k) for k in ("spark.sql.shuffle.partitions", listing)}
     spark.conf.set("spark.sql.shuffle.partitions", "8")
+    spark.conf.set(listing, "100000")
     try:
         t = CowTable(spark, str(tmp_path / "many"), key_fields=["k"],
                      partition_field="p", num_file_groups=4)
-        rows = spark.range(6600).select(
-            F.col("id").alias("k"), (F.col("id") % 301).alias("p"),
+        rows = spark.range(8400).select(
+            F.col("id").alias("k"), (F.col("id") % 256).alias("p"),
             F.col("id").cast("double").alias("v"))
-        t.bulk_insert(rows.filter("k < 6000"), T1)
+        t.bulk_insert(rows.filter("k < 8192"), T1)
         src = rows.filter("k % 3 != 2").withColumn("d", F.col("k") % 3 == 1)
         old = t.snapshot()
         meta = t.merge_into(src, T2, delete_condition="d")
@@ -403,19 +407,20 @@ def test_rewrite_counts_exact_over_many_groups(spark, tmp_path, no_aqe, monkeypa
                          partition_field=None, num_file_groups=4)
         small.bulk_insert(rows.filter("k < 40"), T1)
         small.merge_into(src.filter("k < 50"), T2, delete_condition="d")
+        assert sizes == [3, 3]
+        # one counting job over the old rows the merge named and the rows
+        # it inserted, each counted in the file group its file name gives
+        changed = old.filter("k % 3 != 2").select("k", FILE_NAME_FIELD).unionByName(
+            t.snapshot().filter("k >= 8192").select("k", FILE_NAME_FIELD))
+        kind = F.when(F.col("k") >= 8192, "i").when(F.col("k") % 3 == 0, "u").otherwise("d")
+        want = {"u": {}, "i": {}, "d": {}}
+        for r in changed.groupBy(
+            kind.alias("kind"), file_id_expr(F.col(FILE_NAME_FIELD)).alias("fid")
+        ).count().collect():
+            want[r["kind"]][r["fid"]] = r["count"]
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    assert sizes == [3, 3]
-    fid = file_id_expr(F.col(FILE_NAME_FIELD)).alias("fid")
-
-    def per_group(df):
-        return {r["fid"]: r["count"] for r in df.groupBy(fid).count().collect()}
-
-    want = {
-        "u": per_group(old.filter("k % 3 = 0")),
-        "i": per_group(t.snapshot().filter("k >= 6000")),
-        "d": per_group(old.filter("k % 3 = 1")),
-    }
+        for k, v in prev.items():
+            spark.conf.set(k, v)
     stats = {s.file_id: s for _p, s in meta.all_stats()}
     assert len(stats) >= 1000
     got = {
@@ -424,7 +429,7 @@ def test_rewrite_counts_exact_over_many_groups(spark, tmp_path, no_aqe, monkeypa
         "d": {f: s.num_deletes for f, s in stats.items() if s.num_deletes},
     }
     assert got == want
-    assert meta.total_records_deleted == 2000
+    assert meta.total_records_deleted == 2731
 
 
 def test_upsert_stats_count_deduplicated_rows(spark, tmp_path):

@@ -13,7 +13,7 @@ from hudi_delete_view_spark.plans.ivm import (
     UnsupportedViewError,
     classify_view,
 )
-from hudi_delete_view_spark.sources.cow import CowTable
+from hudi_delete_view_spark.sources.cow import META_FIELDS, CowTable
 
 
 @pytest.fixture(scope="session")
@@ -2184,6 +2184,19 @@ def test_apply_delta_is_one_commit_and_live_wins(spark, scratch):
         0: 0.0, 1: 10.0, 3: 3.0, 4: 4.0, 5: 5.0, 9: 90.0}
     assert t.apply_delta(live.limit(0), dead.limit(0), c3) is None
     assert t.timeline.timestamps() == [c1, c2]
+    # dead rows are key-only markers: an extra column or a key typed
+    # unlike the table's reaches neither the files nor the schema
+    junk = spark.createDataFrame([(3, "x")], "k int, junk string")
+    meta = t.apply_delta(live.limit(0), junk, c3)
+    assert sum(s.num_deletes for _p, s in meta.all_stats()) == 1
+    assert t.snapshot().drop(*META_FIELDS).dtypes == [("k", "bigint"), ("v", "double")]
+    assert "junk" not in meta.schema_json
+    # on a partitioned table a dead frame without the partition column
+    # raises, as delete does, instead of routing to no group
+    pt = CowTable(spark, os.path.join(scratch, "adp"), key_fields=["k"],
+                  partition_field="p", num_file_groups=2)
+    with pytest.raises(ValueError, match="routing column"):
+        pt.apply_delta(live.withColumn("p", F.lit(1)), dead, c2)
 
 
 def test_window_view_over_mor_fact(spark, scratch):

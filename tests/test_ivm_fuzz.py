@@ -20,8 +20,9 @@ def test_ivm_fuzz_one_seed(spark, scratch):
 
 
 def test_ivm_fuzz_smoke(spark, scratch):
-    """Default-gate smoke of the same sweep: one fixed seed (a COW fact)
-    and one step over every plan in the pool."""
+    """Default-gate smoke of the same sweep: one fixed seed (a COW fact
+    whose one step deletes fact rows through the group rewrite) and one
+    step over every plan in the pool, each view in one file group."""
     from ivm_fuzz import run_seed
 
-    run_seed(spark, seed=18, steps=1, root=scratch)
+    run_seed(spark, seed=18, steps=1, root=scratch, view_groups=1)

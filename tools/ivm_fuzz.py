@@ -264,10 +264,12 @@ def _prev_ts(table, ts: str) -> str:
     return stamps[-1]
 
 
-def run_seed(spark, seed: int, steps: int, root: str) -> None:
+def run_seed(spark, seed: int, steps: int, root: str, view_groups: int = 4) -> None:
     """Odd seeds use a MERGE-ON-READ fact with delta commits — the
     log-resident update/tombstone feeds through every algebra's
-    inherited cdc; even seeds use COW."""
+    inherited cdc; even seeds use COW. ``view_groups`` is each view
+    table's file-group count (one writes a file fewer per touched group
+    and rewrite, for a quicker smoke)."""
     rng = random.Random(seed)
     mor = seed % 2 == 1
     d = os.path.join(root, f"s{seed}")
@@ -297,7 +299,8 @@ def run_seed(spark, seed: int, steps: int, root: str) -> None:
     srcs = {"fact": fact, "dim": dim, "sub": sub}
     mvs = {
         name: AutoMaterializedView(
-            spark, os.path.join(d, f"mv_{name}"), dict(srcs), fn)
+            spark, os.path.join(d, f"mv_{name}"), dict(srcs), fn,
+            num_file_groups=view_groups)
         for name, fn in _plans().items()
     }
     for mv in mvs.values():
@@ -363,10 +366,10 @@ def run_seed(spark, seed: int, steps: int, root: str) -> None:
                     [(rng.choice(live),)], "rk long"), ts)
 
     def _check_all():
-        for name, mv in mvs.items():
-            got = _rows(mv.serve())
-            want = _rows(_plans()[name](
-                {n: t.snapshot() for n, t in srcs.items()}))
+        snaps = {n: t.snapshot() for n, t in srcs.items()}
+        for name, plan in _plans().items():
+            got = _rows(mvs[name].serve())
+            want = _rows(plan(snaps))
             if got != want:
                 raise AssertionError(
                     f"seed={seed} plan={name}\ngot:  {got}\nwant: {want}")
