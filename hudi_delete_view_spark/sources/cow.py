@@ -781,9 +781,11 @@ class CowTable:
         if len(gids) < len(kept):
             raise RuntimeError(f"{operation} {commit_ts}: two file groups share a group id")
         groups = set(gids.values())
-        incoming = self._dedup_incoming(src.filter(~F.col(_DEL))).unionByName(
-            src.filter(F.col(_DEL))
-        ).withColumn(_SRC, F.lit(True))
+        # a batch of markers only (a delete) has nothing to deduplicate
+        incoming = src.filter(F.col(_DEL))
+        if upserted:
+            incoming = self._dedup_incoming(src.filter(~F.col(_DEL))).unionByName(incoming)
+        incoming = incoming.withColumn(_SRC, F.lit(True))
         merged = incoming
         old = self._read_groups(prev_slices, groups)
         if old is not None:
