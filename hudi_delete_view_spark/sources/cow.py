@@ -351,29 +351,33 @@ class CowTable:
         bucket = F.pmod(F.xxhash64(F.col(RECORD_KEY_FIELD)), F.lit(n))
         return F.concat(F.lit("fg-"), partition_col, F.lit("-"), bucket.cast("string"))
 
+    def _routed(self, df: DataFrame, *cols) -> DataFrame:
+        """``cols`` of ``df`` plus its record key and partition path."""
+        return df.select(
+            *cols,
+            self._record_key_col().alias(RECORD_KEY_FIELD),
+            self._partition_col().alias(PARTITION_PATH_FIELD),
+        )
+
     def _with_meta(self, df: DataFrame, commit_ts: str, suffix: str = ".parquet") -> DataFrame:
-        """Stamp the five Hudi-style meta columns + staging helper cols."""
-        pp = self._partition_col()
-        out = (
-            df.withColumn(RECORD_KEY_FIELD, self._record_key_col())
-            .withColumn(PARTITION_PATH_FIELD, pp)
-            .withColumn(_PP, F.col(PARTITION_PATH_FIELD))
-        )
-        out = out.withColumn(_FID, self._fid_col(F.col(PARTITION_PATH_FIELD)))
-        out = (
-            out.withColumn(COMMIT_TIME_FIELD, F.lit(commit_ts))
-            .withColumn(
-                COMMIT_SEQNO_FIELD,
-                F.concat_ws("_", F.lit(commit_ts), F.col(_FID), F.monotonically_increasing_id().cast("string")),
-            )
-            .withColumn(
-                FILE_NAME_FIELD,
-                F.concat(F.col(_FID), F.lit(f"_{WRITE_TOKEN}_{commit_ts}{suffix}")),
-            )
-        )
-        # canonical column order: meta fields first, then payload
+        """Stamp the five Hudi-style meta columns + staging helper cols,
+        meta fields first, then the payload. Two projections: every
+        DataFrame step is a driver-side analysis of the whole plan, which
+        a commit pays before its first job."""
         payload = [c for c in df.columns if c not in META_FIELDS]
-        return out.select(*META_FIELDS, *payload, _PP, _FID)
+        fid = self._fid_col(F.col(PARTITION_PATH_FIELD))
+        return self._routed(df, *payload).select(
+            F.lit(commit_ts).alias(COMMIT_TIME_FIELD),
+            F.concat_ws(
+                "_", F.lit(commit_ts), fid, F.monotonically_increasing_id().cast("string")
+            ).alias(COMMIT_SEQNO_FIELD),
+            RECORD_KEY_FIELD,
+            PARTITION_PATH_FIELD,
+            F.concat(fid, F.lit(f"_{WRITE_TOKEN}_{commit_ts}{suffix}")).alias(FILE_NAME_FIELD),
+            *payload,
+            F.col(PARTITION_PATH_FIELD).alias(_PP),
+            fid.alias(_FID),
+        )
 
     def _dedup_incoming(self, stamped: DataFrame) -> DataFrame:
         """Enforce record-key uniqueness within an incoming batch (the
@@ -842,11 +846,11 @@ class CowTable:
         Keys that match no row publish no group.
         """
         return self._rewrite(
-            self._markers(keys_df, commit_ts, "delete keys_df"), F.lit(True), commit_ts, "delete"
+            self._markers(keys_df, "delete keys_df"), F.lit(True), commit_ts, "delete"
         )
 
-    def _markers(self, keys_df: DataFrame, commit_ts: str, what: str) -> DataFrame:
-        """Stamped delete markers for the keys of ``keys_df``, which must
+    def _markers(self, keys_df: DataFrame, what: str) -> DataFrame:
+        """Delete markers for the keys of ``keys_df``, which must
         carry the key fields plus the partition column when the table is
         partitioned (routing needs it). A missing routing column raises a
         named error up front: a marker routed to the default partition
@@ -863,8 +867,12 @@ class CowTable:
                 f"partitioned table needs the partition value alongside the "
                 f"key fields (table keys={self.key_fields}, partition={pf!r})"
             )
-        return self._with_meta(keys_df.select(*routing), commit_ts).select(
-            *META_FIELDS, _PP, _FID
+        # markers are never written: their commit stamps stay null
+        stamp = {COMMIT_TIME_FIELD, COMMIT_SEQNO_FIELD, FILE_NAME_FIELD}
+        return self._routed(keys_df).select(
+            *[F.lit(None).cast("string").alias(c) if c in stamp else c for c in META_FIELDS],
+            F.col(PARTITION_PATH_FIELD).alias(_PP),
+            self._fid_col(F.col(PARTITION_PATH_FIELD)).alias(_FID),
         )
 
     def delete_where(self, condition, commit_ts: str) -> CommitMetadata:
@@ -904,7 +912,7 @@ class CowTable:
         both sides ends live, and an empty delta publishes nothing.
         ``dead`` follows ``delete``'s routing contract (``_markers``)."""
         source = self._with_meta(live, commit_ts).withColumn(_DEL, F.lit(False)).unionByName(
-            self._markers(dead, commit_ts, "apply_delta dead").withColumn(_DEL, F.lit(True)),
+            self._markers(dead, "apply_delta dead").withColumn(_DEL, F.lit(True)),
             allowMissingColumns=True,
         )
         return self._rewrite(source, F.col(_DEL), commit_ts, "merge", publish_empty=False)
@@ -929,12 +937,13 @@ class CowTable:
                     f"lookup key {k!r} must have {len(cols)} values ({cols})"
                 )
         probe = self.spark.createDataFrame([tuple(k) for k in keys], cols)
-        probe = probe.select(
-            self._record_key_col().alias(RECORD_KEY_FIELD),
-            self._partition_col().alias(_PP),
-        ).withColumn(_FID, self._fid_col(F.col(_PP)))
-        rows = probe.collect()
-        return {r[RECORD_KEY_FIELD] for r in rows}, {(r[_PP], r[_FID]) for r in rows}
+        rows = self._routed(probe).select(
+            RECORD_KEY_FIELD, PARTITION_PATH_FIELD,
+            self._fid_col(F.col(PARTITION_PATH_FIELD)).alias(_FID),
+        ).collect()
+        return {r[RECORD_KEY_FIELD] for r in rows}, {
+            (r[PARTITION_PATH_FIELD], r[_FID]) for r in rows
+        }
 
     def lookup(self, keys: list[tuple], as_of: str | None = None) -> DataFrame:
         """Point lookup by full record key — the record-index analogue.
