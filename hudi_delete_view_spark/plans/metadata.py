@@ -44,8 +44,14 @@ class WriteStat:
     # analogue of Hudi's metadata-table bloom index); a saturated bitmap
     # degrades to no-op pruning, never a wrong answer
     value_index: dict = field(default_factory=dict)
+    # native only: the table-relative Parquet file holding the rows this
+    # commit deleted from the group, as they were, stamped with the
+    # commit (a group rewrite writes it when ``num_deletes > 0``). The
+    # delete view serves it; stats without one take the keyed anti-join
+    before_image: str | None = None
 
     def to_dict(self) -> dict:
+        extra = {"beforeImage": self.before_image} if self.before_image else {}
         return {
             "fileId": self.file_id,
             "path": self.path,
@@ -58,6 +64,7 @@ class WriteStat:
             "logFile": self.log_file,
             "columnStats": self.column_stats,
             "valueIndex": self.value_index,
+            **extra,
         }
 
     @classmethod
@@ -80,6 +87,7 @@ class WriteStat:
             log_file=bool(d.get("logFile", False)),
             column_stats=d.get("columnStats", {}) or {},
             value_index=d.get("valueIndex", {}) or {},
+            before_image=d.get("beforeImage"),
         )
 
 
@@ -192,8 +200,8 @@ class CommitMetadata:
         bootstrap prevCommit as the STRING "null", no serialized
         totalRecordsDeleted (a Hudi reader computes it by summing
         numDeletes), and only the ``HoodieWriteStat`` field set — the
-        native side indexes (columnStats / valueIndex) stay out of the
-        foreign framing by design."""
+        native side indexes (columnStats / valueIndex) and before-images
+        stay out of the foreign framing by design."""
         stats = {}
         for partition, sl in self.partition_to_write_stats.items():
             stats[partition] = [

@@ -5,10 +5,12 @@ anti-joins on the record key, ``HudiDeleteHandle.java:44-81``).
 Each format only decodes its metadata into the parts a commit names,
 and ``delete_view`` assembles them. The five views and their parts:
 
-- native COW (``DeleteView``): its file pairs are the keyed rewrite on
-  ``(file id, record key)`` (the two-phase scale shape: one exact part);
+- native COW (``DeleteView``): the before-images its write kept are the
+  answer (served without this module); commits without them are the
+  keyed rewrite on ``(file id, record key)``;
 - native MOR (``MorTable.delete_view``): log tombstones select an exact
-  part; base rewrites are the keyed rewrite;
+  part; base rewrites' before-images are another (the keyed rewrite when
+  a commit has none);
 - foreign Hudi MOR: the log blocks' tombstones select an exact part;
 - Delta: rows by DV position, plus the keyed rewrite;
 - Iceberg: rows by position, equality deletes (exact), the keyed

@@ -305,6 +305,9 @@ class Timeline:
             meta = self.commit_metadata(ts)
             for _p, stat in meta.all_stats():
                 cp["path_bytes"][stat.path] = stat.file_size_bytes
+                if stat.before_image:
+                    # listed so clean() reclaims it and find_orphans knows it
+                    cp["path_bytes"][stat.before_image] = 0
             lines.append(
                 json.dumps({"ts": ts, "metadata": json.loads(meta.to_json())})
             )

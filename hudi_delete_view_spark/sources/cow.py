@@ -71,6 +71,11 @@ _FID = "__fid"
 # incoming batch / the incoming row is a delete marker
 _SRC = "__src"
 _DEL = "__del"
+# staging-only partition column of a rewrite: the row is a before-image
+_BI = "__bi"
+# before-images (the rows a commit deleted, as they were) live outside
+# the partition dirs: <base>/.before/<commit ts>/<file name>
+BEFORE_DIR = ".before"
 
 # file name: <fileId>_<writeToken>_<commitTs>[.log].parquet
 # The file id embeds the partition value verbatim (fg-<partition>-<n>), so
@@ -178,8 +183,9 @@ def _group_id():
 
 class GroupWrite(NamedTuple):
     """One file group a write produced: its table-relative path, footer
-    row count, value-index bitmaps, and the rows this commit updated,
-    inserted and deleted in it."""
+    row count, value-index bitmaps, the rows this commit updated,
+    inserted and deleted in it, and the table-relative path of the
+    deleted rows' before-image file (a rewrite that deleted rows)."""
 
     path: str
     rows: int
@@ -187,6 +193,7 @@ class GroupWrite(NamedTuple):
     updates: int = 0
     inserts: int = 0
     deletes: int = 0
+    before: str | None = None
 
 
 def _bitmap_has(b64: str, bucket: int) -> bool:
@@ -425,7 +432,11 @@ class CowTable:
         over (group, key) resolves the key without a join: an old row
         survives when no incoming row names its key, is updated when a
         non-marker one does, and is deleted when only markers do; an
-        incoming row is written unless it is a marker.
+        incoming row is written unless it is a marker. A deleted row is
+        written too, stamped with ``commit_ts``, into its group's
+        before-image file (``GroupWrite.before``, under ``BEFORE_DIR``):
+        the delete view then reads the rows a commit deleted instead of
+        reconstructing them.
 
         The per-group metadata beyond the footer row count is observed on
         the write itself (``DataFrame.observe``, no extra Spark job): a
@@ -449,6 +460,7 @@ class CowTable:
             )
             named, upserted = F.col("__named"), F.col("__upserted")
             keep = (~src & ~named) | (src & ~marker)
+            gone = ~src & named & ~upserted
             # one histogram per count, each exact only where every row of
             # a group sits in one task, i.e. after the repartition: partial
             # histograms of one id merged across tasks miscount
@@ -458,7 +470,7 @@ class CowTable:
                 for n, cond in (
                     ("updates", ~src & upserted),
                     ("inserts", src & ~marker & F.col("__new")),
-                    ("deletes", ~src & named & ~upserted),
+                    ("deletes", gone),
                 )
             ]
         if sort_cols:
@@ -481,11 +493,21 @@ class CowTable:
             # on the pre-shuffle frame)
             observation = Observation()
             shuffled = shuffled.observe(observation, *aggs)
+        parts = [_PP, _FID]
         if keep is not None:
-            shuffled = shuffled.filter(keep).drop(
-                _SRC, _DEL, "__named", "__upserted", "__new"
+            # deleted rows stay, stamped with the commit and routed to the
+            # before-image side of the write by one more partition column
+            staged = (_PP, _FID, _SRC, _DEL, "__named", "__upserted", "__new")
+            shuffled = shuffled.filter(keep | gone).select(
+                *[
+                    F.when(gone, F.lit(commit_ts)).otherwise(F.col(c)).alias(c)
+                    if c == COMMIT_TIME_FIELD else F.col(c)
+                    for c in shuffled.columns if c not in staged
+                ],
+                gone.alias(_BI), _PP, _FID,
             )
-        writer = shuffled.write.partitionBy(_PP, _FID).mode("overwrite")
+            parts = [_BI, _PP, _FID]
+        writer = shuffled.write.partitionBy(*parts).mode("overwrite")
         if parquet_block_bytes:
             writer = writer.option("parquet.block.size", str(parquet_block_bytes))
         # record-key bloom filter per row group (Hudi bloom-index analogue
@@ -513,29 +535,30 @@ class CowTable:
                 counts.setdefault(gids[int(b["x"])], {})[n] = round(b["y"])
 
         written: dict[tuple[str, str], GroupWrite] = {}
-        for pp_dir in self.fs.listdir(staging):
-            if not pp_dir.startswith(f"{_PP}="):
-                continue
-            partition = unquote(pp_dir.split("=", 1)[1])
-            for fid_dir in self.fs.listdir(os.path.join(staging, pp_dir)):
-                if not fid_dir.startswith(f"{_FID}="):
-                    continue
-                file_id = unquote(fid_dir.split("=", 1)[1])
-                leaf = os.path.join(staging, pp_dir, fid_dir)
-                parts = [f for f in self.fs.listdir(leaf) if f.endswith(".parquet")]
-                assert len(parts) == 1, f"file group {file_id} split across {len(parts)} files"
-                target_dir = os.path.join(self.base_path, partition)
-                self.fs.makedirs(target_dir)
-                fname = f"{file_id}_{WRITE_TOKEN}_{commit_ts}{suffix}"
-                target = os.path.join(target_dir, fname)
-                self.fs.replace(os.path.join(leaf, parts[0]), target)
-                g = (partition, file_id)
-                written[g] = GroupWrite(
-                    os.path.join(partition, fname),
-                    _footer_row_count(target),
-                    vix.get(g, {}),
-                    **counts.get(g, {}),
-                )
+        if keep is None:
+            data_root, before_root = staging, None
+        else:
+            data_root = os.path.join(staging, f"{_BI}=false")
+            before_root = os.path.join(staging, f"{_BI}=true")
+        for partition, file_id, leaf in self._staged_files(data_root):
+            target_dir = os.path.join(self.base_path, partition)
+            self.fs.makedirs(target_dir)
+            fname = f"{file_id}_{WRITE_TOKEN}_{commit_ts}{suffix}"
+            target = os.path.join(target_dir, fname)
+            self.fs.replace(leaf, target)
+            g = (partition, file_id)
+            written[g] = GroupWrite(
+                os.path.join(partition, fname),
+                _footer_row_count(target),
+                vix.get(g, {}),
+                **counts.get(g, {}),
+            )
+        befores = {}
+        for partition, file_id, leaf in self._staged_files(before_root):
+            rel = os.path.join(BEFORE_DIR, commit_ts, f"{file_id}_{WRITE_TOKEN}_{commit_ts}.parquet")
+            self.fs.makedirs(os.path.dirname(os.path.join(self.base_path, rel)))
+            self.fs.replace(leaf, os.path.join(self.base_path, rel))
+            befores[(partition, file_id)] = rel
 
         # publish empty slices for groups the write produced no rows for
         missing = [g for g in (expected_groups or []) if g not in written]
@@ -559,7 +582,26 @@ class CowTable:
                 )
 
         self.fs.rmtree(staging)
-        return written
+        return {g: w._replace(before=befores.get(g)) for g, w in written.items()}
+
+    def _staged_files(self, root: str | None):
+        """(partition, file id, path) of each group's one Parquet file
+        under a ``partitionBy(__pp, __fid)`` staging root (none when the
+        write produced no such root)."""
+        if root is None or not self.fs.isdir(root):
+            return
+        for pp_dir in self.fs.listdir(root):
+            if not pp_dir.startswith(f"{_PP}="):
+                continue
+            partition = unquote(pp_dir.split("=", 1)[1])
+            for fid_dir in self.fs.listdir(os.path.join(root, pp_dir)):
+                if not fid_dir.startswith(f"{_FID}="):
+                    continue
+                file_id = unquote(fid_dir.split("=", 1)[1])
+                leaf = os.path.join(root, pp_dir, fid_dir)
+                parts = [f for f in self.fs.listdir(leaf) if f.endswith(".parquet")]
+                assert len(parts) == 1, f"file group {file_id} split across {len(parts)} files"
+                yield partition, file_id, os.path.join(leaf, parts[0])
 
     def _ensure_new_commit_ts(self, commit_ts: str) -> None:
         """Monotonicity pre-flight, called BEFORE any file write: a commit
@@ -575,22 +617,31 @@ class CowTable:
             )
 
     def _remove_written(self, written: dict) -> None:
-        """Conflict-loser cleanup: remove the files this write moved in —
-        EXCEPT any file some published commit references (a same-ts
-        collision that slipped past the pre-flight must never delete a
-        committed file; readers' metadata still points at it)."""
+        """Conflict-loser cleanup: remove the files this write moved in,
+        before-images included — EXCEPT any file some published commit
+        references (a same-ts collision that slipped past the pre-flight
+        must never delete a committed file; readers' metadata still points
+        at it)."""
         referenced = {
-            s.path
+            p
             for t in self.timeline.timestamps()
             for _p, s in self.timeline.commit_metadata(t).all_stats()
+            for p in (s.path, s.before_image)
         }
         for w in written.values():
-            if w.path in referenced:
-                continue
-            try:
-                self.fs.remove(os.path.join(self.base_path, w.path))
-            except OSError:
-                pass
+            for rel in (w.path, w.before):
+                if rel is None or rel in referenced:
+                    continue
+                try:
+                    self.fs.remove(os.path.join(self.base_path, rel))
+                except OSError:
+                    pass
+            if w.before:
+                self._drop_if_empty(os.path.dirname(os.path.join(self.base_path, w.before)))
+
+    def _drop_if_empty(self, path: str) -> None:
+        if self.fs.isdir(path) and not self.fs.listdir(path):
+            self.fs.rmtree(path)
 
     def _occ_check(
         self,
@@ -707,6 +758,7 @@ class CowTable:
                     file_size_bytes=self.fs.size(abs_path),
                     column_stats=footer_column_stats(abs_path, stats_cols),
                     value_index=w.value_index,
+                    before_image=w.before,
                 )
             )
         meta = CommitMetadata(
@@ -758,8 +810,11 @@ class CowTable:
         (``_read_groups``; on MOR the merged rows) unioned with the
         incoming rows, non-marker rows deduplicated, then ONE
         ``repartition`` by group into the write (``_write_file_groups``),
-        which resolves each key in its group's task and observes the
-        per-group updates, inserts and deletes. With AQE off that is two
+        which resolves each key in its group's task, observes the
+        per-group updates, inserts and deletes, and writes each group's
+        deleted rows once more, as they were and stamped ``commit_ts``, to
+        its before-image file (``WriteStat.before_image``, what the delete
+        view serves). With AQE off that is two
         jobs, the collect and the write; with AQE on each query stage is
         a job (4 for a delete, 5 for an upsert or merge).
 
@@ -842,8 +897,8 @@ class CowTable:
         ignored. A missing routing column raises a named error up front
         instead of an opaque resolution failure mid-plan. This is
         the write-side producer of everything ``delete_view`` consumes:
-        write stats with ``numDeletes > 0`` and ``prevCommit`` per group.
-        Keys that match no row publish no group.
+        write stats with ``numDeletes > 0``, ``prevCommit`` and a
+        before-image per group. Keys that match no row publish no group.
         """
         return self._rewrite(
             self._markers(keys_df, "delete keys_df"), F.lit(True), commit_ts, "delete"
@@ -893,8 +948,8 @@ class CowTable:
         observe. It is ``_rewrite`` with the delete-flagged rows as
         markers, so a merge with matched deletes feeds the delete view
         exactly like a delete commit (``numDeletes > 0`` + ``prevCommit``
-        pairing; the view's anti-join reconstructs the deleted rows —
-        SURVEY §2 A2/B6, DeleteView.java:100).
+        pairing and a before-image per deleting group — SURVEY §2 A2/B6,
+        DeleteView.java:100).
         """
         if delete_condition is None:
             delete_condition = F.lit(False)
@@ -1004,19 +1059,20 @@ class CowTable:
         meta = self.timeline.commit_metadata(commit_ts)
         removed = []
         for _p, stat in meta.all_stats():
-            p = os.path.join(self.base_path, stat.path)
-            if self.fs.exists(p):
-                self.fs.remove(p)
-                removed.append(p)
+            for rel in (stat.path, stat.before_image):
+                p = os.path.join(self.base_path, rel) if rel else None
+                if p and self.fs.exists(p):
+                    self.fs.remove(p)
+                    removed.append(p)
         meta_dir = os.path.join(self.base_path, ".hoodie")
         self.fs.replace(
             os.path.join(meta_dir, f"{commit_ts}.commit"),
             os.path.join(meta_dir, f"{commit_ts}.commit.rolledback"),
         )
-        # drop any materialized delete view of the retired commit
-        self.fs.rmtree(
-            os.path.join(self.base_path, ".delete", commit_ts)
-        )
+        # drop the retired commit's before-image dir and any materialized
+        # delete view of it
+        for d in (BEFORE_DIR, ".delete"):
+            self.fs.rmtree(os.path.join(self.base_path, d, commit_ts))
         self.timeline.refresh()
         return removed
 
@@ -1418,8 +1474,10 @@ class CowTable:
         retention window keeps working); everything else under a partition
         dir that came from an earlier slice version is removed. Commit
         metadata itself is never deleted (the timeline stays auditable).
-        Returns the deleted paths (or the would-delete list when
-        ``dry_run``)."""
+        A commit's before-images (``WriteStat.before_image``) go with the
+        commit: kept while it is retained (its delete view stays
+        servable), reclaimed once it is not. Returns the deleted paths (or
+        the would-delete list when ``dry_run``)."""
         if retain_last_n < 1:
             # ts_list[-0:] would silently retain EVERYTHING — the opposite
             # of what "retain zero" reads as; require an explicit window
@@ -1445,11 +1503,16 @@ class CowTable:
         for t in ts_list:
             for _p, stat in self.timeline.commit_metadata(t).all_stats():
                 all_files.add(os.path.abspath(os.path.join(self.base_path, stat.path)))
+                if stat.before_image and t not in retained:
+                    all_files.add(os.path.abspath(os.path.join(self.base_path, stat.before_image)))
         doomed = sorted(all_files - referenced)
         if not dry_run:
             for p in doomed:
                 if self.fs.exists(p):
                     self.fs.remove(p)
+            for d in {os.path.dirname(p) for p in doomed}:
+                if os.path.basename(os.path.dirname(d)) == BEFORE_DIR:
+                    self._drop_if_empty(d)
         return doomed
 
     def find_orphans(self, remove: bool = False) -> list[str]:
@@ -1459,18 +1522,31 @@ class CowTable:
         ``clean()`` cannot reclaim these: it walks commit metadata, and an
         orphan by definition isn't in any. This walks the PARTITION dirs
         (driver-side listing, same scale class as a snapshot plan) and
-        diffs against every path any commit ever wrote. ``remove=True``
-        deletes them. Service dirs (``.hoodie``, ``.delete``, staging) and
-        non-parquet files are never touched."""
-        known: set[str] = set()
+        diffs against every path any commit ever wrote, archived commits
+        included (the archive checkpoint lists their files). The
+        before-image dirs (``BEFORE_DIR/<ts>``) are walked the same way.
+        ``remove=True`` deletes them. Other service dirs (``.hoodie``,
+        ``.delete``, staging) and non-parquet files are never touched."""
+        cp = self.timeline.archive_checkpoint()
+        known = {
+            os.path.abspath(os.path.join(self.base_path, rel))
+            for rel in (cp.get("path_bytes", {}) if cp else {})
+        }
         for t in self.timeline.timestamps():
             for _p, stat in self.timeline.commit_metadata(t).all_stats():
-                known.add(os.path.abspath(os.path.join(self.base_path, stat.path)))
+                for rel in (stat.path, stat.before_image):
+                    if rel:
+                        known.add(os.path.abspath(os.path.join(self.base_path, rel)))
+        before_root = os.path.join(self.base_path, BEFORE_DIR)
+        dirs = [
+            os.path.join(self.base_path, e)
+            for e in sorted(self.fs.listdir(self.base_path))
+            if not e.startswith(".")  # .hoodie / .delete / .staging-*
+        ]
+        if self.fs.isdir(before_root):
+            dirs += [os.path.join(before_root, e) for e in sorted(self.fs.listdir(before_root))]
         orphans: list[str] = []
-        for entry in sorted(self.fs.listdir(self.base_path)):
-            if entry.startswith("."):
-                continue  # .hoodie / .delete / .staging-*
-            pdir = os.path.join(self.base_path, entry)
+        for pdir in dirs:
             if not self.fs.isdir(pdir):
                 continue
             for fname in sorted(self.fs.listdir(pdir)):

@@ -1,4 +1,4 @@
-"""Delete view: reconstruct the rows deleted by commit T — the flagship.
+"""Delete view: the rows deleted by commit T — the flagship.
 
 Reference pipeline (SURVEY §2 A1-A15, ``DeleteView.java`` /
 ``DeleteSupport.java`` / ``HudiDeleteHandle.java``):
@@ -7,29 +7,36 @@ Reference pipeline (SURVEY §2 A1-A15, ``DeleteView.java`` /
 2. keep write stats with ``numDeletes > 0 && prevCommit != null`` — file
    groups untouched by deletes are pruned before any data is read
    (``DeleteView.java:100``),
-3. pair each new slice with its predecessor slice (``:112-163``),
-4. per pair, anti-join old rows against new keys (``HudiDeleteHandle.java:
-   44-81`` builds a per-task HashSet; we run ONE keyed anti-join on
-   ``(file_id, _hoodie_record_key)`` instead — Catalyst picks broadcast-hash
-   vs shuffled join, AQE handles skew, hash tables spill),
-5. stamp ``_hoodie_commit_time`` = T (``:73-74``),
-6. materialize to ``<base>/.delete/<T>/`` overwrite-mode
-   (``DeleteSupport.java:83``, ``DeleteView.java:168-172``),
-7. serve via ``spark.read.parquet`` (``DeleteSupport.java:94-95``), with a
+3. pair each new slice with its predecessor slice (``:112-163``); a
+   missing predecessor is an explicit error,
+4. materialize to ``<base>/.delete/<T>/`` (``DeleteSupport.java:83``,
+   ``DeleteView.java:168-172``),
+5. serve via ``spark.read.parquet`` (``DeleteSupport.java:94-95``), with a
    footer-count cache-validity check so repeat queries cost metadata only
    (``DeleteView.java:178-190``, ``DeleteUtils.java:27-48``).
 
-Scale notes: the old/new sides are read in two vectorized scans covering all
-deleting file groups at once (column pruning reduces the new side to two
-string columns); joining on ``(file_id, record_key)`` preserves per-group
-locality, so skewed groups split cleanly under AQE. Nothing is collected to
-the driver; the driver handles only commit metadata and path lists.
+Native commits carry the answer: the group rewrite that deleted the rows
+wrote them once more, stamped with T, to one before-image file per
+deleting group (``WriteStat.before_image``). When every deleting stat
+names one, step 4 copies those files — no Spark job, and nothing read but
+the rows returned. Hudi's CDC (RFC-51) and Delta's change data feed
+persist deleted rows at write time the same way.
+
+Commits without before-images (genuine Hudi layouts, tables written before
+before-images) take the reference's keyed path (A6-A9): per pair,
+anti-join old rows against new keys (``HudiDeleteHandle.java:44-81``
+builds a per-task HashSet; we run ONE keyed anti-join on
+``(file_id, _hoodie_record_key)`` instead — Catalyst picks broadcast-hash
+vs shuffled join, AQE handles skew, hash tables spill), then stamp
+``_hoodie_commit_time`` = T (``:73-74``). Its old/new sides are two
+vectorized scans over all deleting groups (the new side column-pruned to
+two string columns); nothing is collected to the driver. Both paths write
+the view in the commit's published column order.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -46,22 +53,6 @@ from .cow import (
 
 DELETE_DIR = ".delete"
 _FID = "__fid"
-
-# Two-phase anti-join gate (scale shape). The single keyed anti-join is
-# optimal while the new-keys build side fits a broadcast; past that,
-# Catalyst flips it to a sort-merge join that shuffles the WIDE old side —
-# table-sized traffic to find a delete-sized answer. When commit stats
-# prove (driver-side, before any read) that the new slices outgrow a
-# broadcast while the deleted-row count stays bounded, the join splits:
-# a NARROW (file_id, key) anti-join finds the deleted keys, then the wide
-# old side semi-joins against that broadcast key set — the wide rows never
-# cross the wire. Both thresholds env-tunable for cluster headroom.
-_TWO_PHASE_MIN_NEW_ROWS = int(
-    os.environ.get("SPARK_GRAFT_DV_TWO_PHASE_MIN_NEW_ROWS", 4_000_000)
-)
-_TWO_PHASE_MAX_DELETED = int(
-    os.environ.get("SPARK_GRAFT_DV_BCAST_DELETED_ROWS", 2_000_000)
-)
 
 
 def _delete_view_path(base_path: str, timestamp: str) -> str:
@@ -82,15 +73,16 @@ class DeleteView:
         self.timeline.instant_for(timestamp)
 
     # -- A2-A4: metadata resolution -------------------------------------
-    def _file_pairs(self) -> list[tuple[str, str, str]]:
-        """[(file_id, old_path, new_path)] for stats with numDeletes>0.
+    def _file_pairs(self) -> list[tuple[str, str, str, str | None]]:
+        """[(file_id, old_path, new_path, before_image_path)] for stats
+        with numDeletes>0 (the before-image None when the stat names none).
 
         Predecessor lookup mirrors ``findHoodieWriteStat``
         (``DeleteView.java:132-142``); a missing predecessor is an explicit
         error (reference behavior at ``:124-125``).
         """
         meta = self.timeline.commit_metadata(self.timestamp)
-        pairs: list[tuple[str, str, str]] = []
+        pairs = []
         for _partition, stat in meta.all_stats():
             if stat.num_deletes <= 0 or stat.prev_commit is None:
                 continue  # stats-based file pruning (DeleteView.java:100)
@@ -107,11 +99,12 @@ class DeleteView:
                     stat.file_id,
                     os.path.join(self.base_path, prev_stat.path),
                     os.path.join(self.base_path, stat.path),
+                    stat.before_image and os.path.join(self.base_path, stat.before_image),
                 )
             )
         return pairs
 
-    # -- A6-A9: the distributed pipeline --------------------------------
+    # -- A6-A9: the keyed path, for commits without before-images -------
     def _compute(self) -> DataFrame:
         pairs = self._file_pairs()
         if not pairs:
@@ -142,43 +135,19 @@ class DeleteView:
         new_reader = (
             self.spark.read.schema(schema) if schema is not None else self.spark.read
         )
-        keys = [_FID, RECORD_KEY_FIELD]
-
-        def read_keys(paths):
-            return new_reader.parquet(*paths).select(
-                file_id_expr(F.col(FILE_NAME_FIELD)).alias(_FID),
-                F.col(RECORD_KEY_FIELD),
-            )
-
-        new_keys = read_keys(new_paths)
-        # join shape from commit stats (known before any data is read):
-        # rows in the new slices bound the anti-join build side,
-        # totalRecordsDeleted bounds the answer
-        new_rows = sum(
-            stat.num_writes
-            for _p, stat in meta.all_stats()
-            if stat.num_deletes > 0 and stat.prev_commit is not None
+        new_keys = new_reader.parquet(*new_paths).select(
+            file_id_expr(F.col(FILE_NAME_FIELD)).alias(_FID),
+            F.col(RECORD_KEY_FIELD),
         )
-        if (
-            new_rows >= _TWO_PHASE_MIN_NEW_ROWS
-            and meta.total_records_deleted <= _TWO_PHASE_MAX_DELETED
-        ):
-            # scale shape: narrow key anti-join -> broadcast the (small)
-            # deleted-key set back onto the wide side. The wide scan feeds
-            # a BroadcastHashJoin directly — no Exchange of wide rows.
-            deleted_keys = read_keys(old_paths).join(
-                new_keys, on=keys, how="left_anti"
-            )
-            deleted = row_deletes.delete_view(self.spark, old_df.schema, exact=[
-                old_df.join(F.broadcast(deleted_keys), on=keys, how="left_semi")
-            ])
-        else:
-            deleted = row_deletes.delete_view(
-                self.spark, old_df.schema,
-                removed=old_df, added=new_keys, key_cols=keys,
-            )
-        # A9: stamp the delete commit as the row's processing time
-        return deleted.withColumn(COMMIT_TIME_FIELD, F.lit(self.timestamp)).drop(_FID)
+        deleted = row_deletes.delete_view(
+            self.spark, old_df.schema,
+            removed=old_df, added=new_keys, key_cols=[_FID, RECORD_KEY_FIELD],
+        )
+        # A9: stamp the delete commit as the row's processing time; the
+        # USING join put its keys first, so restore the table's order
+        return deleted.withColumn(COMMIT_TIME_FIELD, F.lit(self.timestamp)).select(
+            *[c for c in old_df.columns if c != _FID]
+        )
 
     # -- A12-A15: materialize / cache / serve ----------------------------
     def view_path(self) -> str:
@@ -200,6 +169,15 @@ class DeleteView:
         path = self.view_path()
         if not force and self.is_materialized():
             return path
+        fs = self.timeline.fs
+        images = [p[3] for p in self._file_pairs()]
+        if images and all(p and fs.exists(p) for p in images):
+            # the rows T deleted, as its write left them: copy, no job
+            fs.rmtree(path)
+            fs.makedirs(path)
+            for p in images:
+                fs.copy(p, os.path.join(path, os.path.basename(p)))
+            return path
         df = self._compute()
         if df is None:
             # empty view: publish an empty parquet dir with the table schema
@@ -216,9 +194,10 @@ class DeleteView:
 
     def dataset(self) -> DataFrame:
         """Materialize if stale/missing, then serve the Parquet-backed view.
-        The view files are written aligned to the commit's published schema
-        (``_compute``), so the serve plan carries that schema explicitly —
-        no footer inference on the hot repeat-query path."""
+        The view files are in the commit's published schema (before-images
+        are written in it; ``_compute`` reads with it), so the serve plan
+        carries that schema explicitly — no footer inference on the hot
+        repeat-query path."""
         path = self.materialize()
         schema = self.timeline.commit_metadata(self.timestamp).published_schema()
         if schema is not None:

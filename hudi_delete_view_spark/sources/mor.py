@@ -656,7 +656,9 @@ class MorTable(CowTable):
           ``delete_delta``/``merge_delta`` tombstone only keys live in the
           merged view, one action per key per commit.
         - Base-rewrite groups (a COW-style ``delete``/``merge_into``):
-          the keyed rewrite against the new base files' keys."""
+          their before-images (merged rows the rewrite deleted), an
+          exact part; the keyed rewrite against the new base files' keys
+          when a stat names none."""
         self.timeline.instant_for(timestamp)
         ts_list = self.timeline.timestamps()
         idx = ts_list.index(timestamp)
@@ -684,6 +686,12 @@ class MorTable(CowTable):
             tombs = self._tombstones(prev_ts, timestamp)
             exact.append(logged.join(tombs.select(*keys), keys, "left_semi"))
         rewritten = [s for s in deleting if not s.log_file]
+        if rewritten and all(s.before_image for s in rewritten):
+            exact.append(self._read_mor(
+                [os.path.join(self.base_path, s.before_image) for s in rewritten],
+                StructType(schema.fields[:-1]),
+            ).withColumn(_FID, fid))
+            rewritten = []
         removed = merged_before(rewritten)
         added = None if removed is None else self._read_mor(
             [os.path.join(self.base_path, s.path) for s in rewritten], schema

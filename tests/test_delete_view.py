@@ -146,39 +146,190 @@ def test_delete_view_range_includes_merge_commits(spark, scratch):
     }
 
 
-def test_two_phase_anti_join_scale_shape(table, spark, monkeypatch):
-    """Scale-shape pin: when commit stats say the new slices outgrow a
-    broadcast while the deleted count stays bounded, the compute splits
-    into a NARROW (fid, key) anti-join plus a broadcast semi-join of the
-    deleted keys back onto the wide side — so the wide old rows feed a
-    BroadcastHashJoin directly and never shuffle (with broadcast
-    estimation disabled below, only the explicit hint can produce one).
-    Output must be identical to the single anti-join."""
-    import io
-    from contextlib import redirect_stdout
-
-    from hudi_delete_view_spark.sources import delete_view as dv_mod
-
-    baseline = {
-        r[0] for r in DeleteView(spark, table.base_path, C3)._compute()
-        .select(RECORD_KEY_FIELD).collect()
-    }
-    monkeypatch.setattr(dv_mod, "_TWO_PHASE_MIN_NEW_ROWS", 0)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+def _jobs_for(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "delete view job audit")
     try:
-        df = DeleteView(spark, table.base_path, C3)._compute()
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        plan = buf.getvalue()
-        # wide side consumed by the hinted broadcast semi-join
-        assert "BroadcastHashJoin" in plan and "LeftSemi" in plan, plan
-        # the only shuffled join is the narrow key anti-join (tree lines
-        # carry the join type; the detail section repeats the bare name)
-        smj = [ln for ln in plan.splitlines() if "- SortMergeJoin" in ln]
-        assert smj and all("LeftAnti" in ln for ln in smj), plan
-        got = {r[0] for r in df.select(RECORD_KEY_FIELD).collect()}
-        assert got == baseline and len(got) > 0
+        fn()
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+        sc.setJobGroup(None, None)
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
+def _strip_before_images(base_path, ts):
+    """Rewrite commit ``ts`` as a writer without before-images left it."""
+    import json
+
+    meta = os.path.join(base_path, ".hoodie", f"{ts}.commit")
+    with open(meta) as f:
+        d = json.load(f)
+    for stats in d["partitionToWriteStats"].values():
+        for s in stats:
+            s.pop("beforeImage", None)
+    with open(meta, "w") as f:
+        json.dump(d, f)
+
+
+def _same_rows(a, b):
+    """Equal as row multisets over all columns (``b`` in ``a``'s order)."""
+    b = b.select(*a.columns)
+    return a.count() == b.count() and a.exceptAll(b).count() == 0 == b.exceptAll(a).count()
+
+
+def test_native_view_materializes_without_spark_jobs(table, spark):
+    """A native delete commit names one before-image per deleting group;
+    the view copies them into ``.delete/<T>`` and runs no Spark job. The
+    files keep the commit's published column order."""
+    meta = table.timeline.commit_metadata(C3)
+    deleting = [s for _p, s in meta.all_stats() if s.num_deletes > 0]
+    assert deleting and all(s.before_image for s in deleting)
+    view = DeleteView(spark, table.base_path, C3)
+    assert _jobs_for(spark, "dv-native-materialize", view.materialize) == []
+    assert view.is_materialized()
+    published = meta.published_schema().fieldNames()
+    assert spark.read.parquet(view.view_path()).columns == published
+    assert _same_rows(view.dataset(), view._compute())
+
+
+def test_commit_without_before_images_takes_keyed_path(table, spark):
+    """A commit whose stats name no before-image (a Hudi layout, or a
+    table written before before-images) is served by the keyed anti-join:
+    the same rows, in the same published column order."""
+    native = DeleteView(spark, table.base_path, C3)
+    want = native.dataset().collect()
+    _strip_before_images(table.base_path, C3)
+    keyed = DeleteView(spark, table.base_path, C3)
+    assert all(p[3] is None for p in keyed._file_pairs())
+    jobs = _jobs_for(spark, "dv-keyed-materialize", lambda: keyed.materialize(force=True))
+    assert jobs  # the anti-join ran
+    published = table.timeline.commit_metadata(C3).published_schema().fieldNames()
+    assert spark.read.parquet(keyed.view_path()).columns == published
+    assert _same_rows(keyed.dataset(), spark.createDataFrame(want, keyed.dataset().schema))
+
+
+T1, T2, T3, T4 = "20280201000000", "20280202000000", "20280203000000", "20280204000000"
+
+
+def _small(spark, base, n=60):
+    t = CowTable(spark, base, key_fields=["k"], partition_field="p", num_file_groups=2)
+    df = spark.createDataFrame(
+        [(k, f"p{k % 3}", k * 10) for k in range(n)], "k int, p string, v int"
+    )
+    t.bulk_insert(df, T1)
+    return t, df
+
+
+def _cross_partition(spark, base):
+    t, df = _small(spark, base)
+    t.delete(df.filter("k % 7 = 0").select("k", "p"), T2)
+    return t, T2
+
+
+def _merge_with_deletes(spark, base):
+    t, _df = _small(spark, base)
+    src = spark.createDataFrame(
+        [(1, "p1", 5, False), (2, "p2", 0, True), (9, "p0", 0, True), (100, "p1", 1, False)],
+        "k int, p string, v int, d boolean",
+    )
+    t.merge_into(src, T2, delete_condition="d")
+    return t, T2
+
+
+def _group_emptied(spark, base):
+    t, df = _small(spark, base)
+    t.delete(df.filter("p = 'p0'").select("k", "p"), T2)
+    return t, T2
+
+
+def _schema_evolved(spark, base):
+    t, df = _small(spark, base)
+    # adds column w on the groups of p1 only; the delete then spans
+    # groups with and without it
+    t.upsert(df.filter("p = 'p1'").withColumn("w", F.col("k") * 2), T2)
+    t.delete(df.filter("k % 4 = 0").select("k", "p"), T3)
+    return t, T3
+
+
+def _archived_predecessor(spark, base):
+    t, df = _small(spark, base)
+    t.upsert(df.filter("k = 1").withColumn("v", F.lit(-1)), T2)
+    t.archive_timeline(keep_last_n=1)  # T1, the delete's predecessor, archives
+    t.delete(df.filter("k % 5 = 0").select("k", "p"), T3)
+    return t, T3
+
+
+@pytest.mark.parametrize("build", [
+    _cross_partition, _merge_with_deletes, _group_emptied, _schema_evolved,
+    _archived_predecessor,
+], ids=lambda f: f.__name__.strip("_"))
+def test_before_image_view_equals_keyed_view(spark, scratch, build):
+    """On native commits the before-image view and the keyed anti-join
+    (``_compute``) give the same rows over all columns."""
+    t, ts = build(spark, os.path.join(scratch, "eq"))
+    view = DeleteView(spark, t.base_path, ts)
+    assert all(p[3] for p in view._file_pairs())
+    got = view.dataset()
+    assert got.count() == t.timeline.commit_metadata(ts).total_records_deleted > 0
+    assert _same_rows(got, view._compute())
+
+
+def test_table_services_handle_before_images(spark, scratch, monkeypatch):
+    """Before-image files are table files: rollback and restore remove
+    them, clean reclaims them once their commit leaves retention,
+    find_orphans reports a stray one, and a conflict loser's cleanup
+    removes its own; no read sees them as data."""
+    from hudi_delete_view_spark.sources.cow import BEFORE_DIR, ConcurrentCommitError
+
+    t, df = _small(spark, os.path.join(scratch, "svc"))
+    before = os.path.join(t.base_path, BEFORE_DIR)
+
+    def images(ts):
+        d = os.path.join(before, ts)
+        return sorted(os.listdir(d)) if os.path.isdir(d) else []
+
+    t.delete(df.filter("k % 7 = 0").select("k", "p"), T2)
+    assert images(T2)
+    assert t.snapshot().count() == 60 - 9 and t.find_orphans() == []
+    # rollback (and restore through it) removes the commit's before-images
+    t.delete(df.filter("k % 11 = 0").select("k", "p"), T3)
+    assert images(T3)
+    removed = t.rollback(T3)
+    assert not os.path.exists(os.path.join(before, T3))
+    assert any(BEFORE_DIR in p for p in removed)
+    t.delete(df.filter("k % 11 = 0").select("k", "p"), T3)
+    t.restore(T2)
+    assert not os.path.exists(os.path.join(before, T3)) and images(T2)
+    # a stray before-image is an orphan
+    stray = os.path.join(before, T2, "fg-p9-0_0-0-0_20280299000000.parquet")
+    shutil.copyfile(os.path.join(before, T2, images(T2)[0]), stray)
+    assert t.find_orphans() == [os.path.abspath(stray)]
+    t.find_orphans(remove=True)
+    assert t.find_orphans() == []
+    # a conflict loser removes its before-images with its data files:
+    # another writer's upsert lands on a shared group during its write
+    other = CowTable(spark, t.base_path, key_fields=["k"], partition_field="p",
+                     num_file_groups=2)
+    write = t._write_file_groups
+
+    def racing(*args, **kwargs):
+        out = write(*args, **kwargs)
+        other.upsert(df.filter("k = 3").withColumn("v", F.lit(-3)), T3)
+        return out
+
+    monkeypatch.setattr(t, "_write_file_groups", racing)
+    with pytest.raises(ConcurrentCommitError):
+        t.delete(df.filter("p = 'p0'").select("k", "p"), T4)
+    monkeypatch.undo()
+    assert not os.path.exists(os.path.join(before, T4)) and t.find_orphans() == []
+    # clean keeps a retained commit's before-images and reclaims them
+    # with the commit
+    t.clean(retain_last_n=2)
+    assert images(T2)
+    assert DeleteView(spark, t.base_path, T2).dataset().count() == 9
+    doomed = t.clean(retain_last_n=1)
+    assert any(BEFORE_DIR in p for p in doomed)
+    assert not os.path.exists(os.path.join(before, T2))
+    # reads never see them; the archive keeps every live file known
+    assert t.snapshot().count() == 51 and t.incremental(T1).count() == 1
+    t.archive_timeline(keep_last_n=1)
+    assert t.find_orphans() == []

@@ -387,12 +387,9 @@ def test_rewrite_counts_exact_over_many_groups(spark, tmp_path, no_aqe, monkeypa
         return observe(self, observation, *exprs)
 
     monkeypatch.setattr(frame_cls, "observe", counting_observe)
-    # 8 write tasks; and list the ~1,000 explicit file paths of a read on
-    # the driver, not in a listing job of one task per path
-    listing = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    prev = {k: spark.conf.get(k) for k in ("spark.sql.shuffle.partitions", listing)}
+    # 8 write tasks
+    prev = {k: spark.conf.get(k) for k in ("spark.sql.shuffle.partitions",)}
     spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set(listing, "100000")
     try:
         t = CowTable(spark, str(tmp_path / "many"), key_fields=["k"],
                      partition_field="p", num_file_groups=4)
