@@ -89,13 +89,13 @@ IDs for lineage) and classifies the view:
   INNER / LEFT / RIGHT / FULL OUTER equi-joins in a single
   declaration: a two-source join is the one-join tree, a star or
   snowflake rollup a deeper one, and a self-join gives each
-  occurrence its own leaf.  All-INNER trees: the telescoping DELTA-JOIN
-  feed Δ(s1⋈…⋈sn) = Σ_i s1_t⋈…⋈Δs_i⋈…⋈sn_a (for two sources,
-  Δ(F⋈D) = ΔF⋈D_anchor ∪ F_target⋈ΔD; the bilinear join rule of
-  DBSP), each static side pruned to the delta's join keys by a
-  broadcast semi-join.  Outer arms: the null-extension-aware signed
-  identity (inner terms plus a presence-flip correction).  Either feed
-  flows into the same retraction merge as single-source aggregates;
+  occurrence its own leaf.  One recursive SIGNED delta serves every
+  tree: each INNER node applies the bilinear join rule of DBSP,
+  Δ(L⋈R) = ΔL⋈R_target ∪ L_anchor⋈ΔR, with ΔL and ΔR the children's
+  own deltas and each static side pruned to the delta's join keys by
+  a broadcast semi-join; LEFT / FULL OUTER nodes add a presence-flip
+  correction for rows entering or leaving the null-extension.  The
+  feed flows into the same retraction merge as single-source aggregates;
   min/max re-derive their dirty groups through the tree, restricted
   to those groups at the group-carrying leaf when it is not
   null-extended.
@@ -992,8 +992,8 @@ def _build_join_tree(node, snapshots, quals, needed_ids, seen):
     nodes, term = _descend_chain(node, snapshots)
     if term[0] == "source":
         # SELF-JOIN leaves: a source appearing at several leaves gets an
-        # occurrence-unique pseudo name — the telescoping identity is
-        # occurrence-based, so every leaf is its own delta term; the
+        # occurrence-unique pseudo name — the delta identity is
+        # occurrence-based, so every leaf carries its own delta; the
         # view registers each pseudo name as an alias of the real table
         # (same timeline, same anchors) at spec-setup time
         real = term[1]
@@ -1139,11 +1139,10 @@ def _classify_agg_tree(
     """Aggregate (or DISTINCT) over a tree of one or more equi-joins —
     a two-source join is the one-join tree, the TPC-H Q5 rollup
     (star/snowflake below GROUP BY) a deeper one — maintained by a
-    SIGNED feed into the shared retraction merge.  All-INNER trees take
-    the telescoping delta-join feed (``_agg_tree_delta_feed``, the
-    bilinear join rule); trees with LEFT / FULL OUTER arms take the
-    null-extension-aware identity (``_tree_signed_delta``: inner terms
-    plus a presence-flip correction; FULL decomposes as
+    SIGNED feed into the shared retraction merge.  Every tree takes the
+    one recursive identity ``_tree_signed_delta``: the bilinear join
+    rule at each INNER node, plus a presence-flip correction at LEFT /
+    FULL OUTER nodes (FULL decomposes as
     T = (L LEFT R) ⊎ (R ANTI L) × null_L).  RIGHT joins normalize by a
     side swap; self-joins become occurrence-named leaves.
 
@@ -1204,15 +1203,6 @@ def _classify_agg_tree(
     if group_src is not None and group_src in _null_extended(tree):
         group_src = None
 
-    def _all_inner(n):
-        if "src" in n:
-            return True
-        return (
-            n["jt"] == "inner"
-            and _all_inner(n["left"])
-            and _all_inner(n["right"])
-        )
-
     return {
         "kind": "agg_tree",
         "group": group,
@@ -1222,10 +1212,6 @@ def _classify_agg_tree(
         "tree": tree,
         "sources": tree["srcs"],
         "group_src": group_src,
-        # all-INNER trees advance by the telescoping DELTA-JOIN feed
-        # (change-sized); any outer arm takes the signed identity
-        # (the telescoping fails under null-extension)
-        "all_inner": _all_inner(tree),
     }
 
 
@@ -2873,88 +2859,52 @@ class AutoMaterializedView:
             node,
         )
 
-    def _tree_delta_term(self, node, s, snaps, override) -> DataFrame:
-        """One telescoping term's subtree replay: the side containing
-        the changed source ``s`` carries the SIGNED delta; every
-        sibling subtree replays full and is SEMI-PRUNED to the delta
-        side's join keys at its meet node — the one-join delta's
-        static-side pruning, applied to INPUTS bottom-up so no sibling
-        join ever runs unpruned."""
-        from functools import reduce
-
-        if "src" in node:
-            return self._replay_tree(
-                node, snaps, override=override, extra=("__mv_sign",)
-            )
-        on_left = s in node["left"]["srcs"]
-        dnode = node["left"] if on_left else node["right"]
-        dside = self._tree_delta_term(dnode, s, snaps, override).drop(
-            *(node["drop_l"] if on_left else node["drop_r"])
-        )
-        if "src" not in dnode:
-            # a joined delta subtree is change-sized but costly to
-            # replay twice (key frame + join); a leaf's replayed CDC
-            # is cheaper to read again than to pin with its own job
-            dside = dside.localCheckpoint(eager=True)
-        sib = self._replay_tree(
-            node["right"] if on_left else node["left"], snaps
-        ).drop(*(node["drop_r"] if on_left else node["drop_l"]))
-        d_cols = [lc if on_left else rc for lc, rc in node["pairs"]]
-        s_cols = [rc if on_left else lc for lc, rc in node["pairs"]]
-        sib = sib.join(
-            F.broadcast(_jk_frame(dside, d_cols)),
-            _jk_cond(s_cols, False),
-            "left_semi",
-        )
-        cond = reduce(
-            lambda a, b: a & b,
-            [F.col(lc) == F.col(rc) for lc, rc in node["pairs"]],
-        )
-        left, right = (dside, sib) if on_left else (sib, dside)
-        out = _replay_spec(
-            node["mid"], left.join(right, cond, "inner"),
-            extra=("__mv_sign",),
-        )
-        return _synth(out, node)
-
-    def _tree_signed_delta(self, node, anchor, latest) -> DataFrame | None:
+    def _tree_signed_delta(
+        self, node, anchor, latest, snaps_a, snaps_t
+    ) -> DataFrame | None:
         """Signed delta of a classified join SUBTREE between the anchor
-        and target states — the LEFT-OUTER-aware recursive delta-join
-        identity (SURVEY §12 lead 1; closes the round-6 member-sized
-        dirty-group fallback for LEFT-arm aggregate trees):
+        and target states (``snaps_a`` / ``snaps_t``, the sources'
+        snapshots at each boundary, built once per refresh) — one
+        recursive identity for every join type.  An INNER node applies
+        the bilinear join rule of DBSP to its children's deltas:
+
+          Δ(L ⋈ R) = (ΔL ⋈ R_t) ⊎ (L_a ⋈ ΔR)
+
+        A LEFT OUTER node extends it to the null-extension:
 
           Δ(L ⟕ R) = (ΔL ⟕ R_t) ⊎ (L_a ⋈ ΔR) ⊎ (L_a ⋉ flip(R)) × null_R
 
-        Derivation: L⟕R = L⋈R ⊎ (L▷R)×null_R; the inner part telescopes
-        (ΔL⋈R_t + L_a⋈ΔR), the anti part splits as ΔL▷R_t (folded into
+        Derivation: L⟕R = L⋈R ⊎ (L▷R)×null_R; the inner part is the
+        rule above, the anti part splits as ΔL▷R_t (folded into
         term 1, since ΔL⟕R_t = ΔL⋈R_t ⊎ ΔL▷R_t×null) plus
         L_a▷R_t − L_a▷R_a — which is exactly L_a restricted to join
         keys whose PRESENCE in R flipped: +1 where a key vanished from
         R (rows re-enter the null-extension), −1 where one appeared
-        (rows leave it). INNER nodes take only the two inner terms.
-        FULL OUTER nodes (round 7) decompose as
+        (rows leave it).  FULL OUTER nodes decompose as
         T = (L ⟕ R) ⊎ (R ▷ L) × null_L — the left-join part takes the
         identity above, and the R-anti summand its own symmetric
         delta: ΔR ▷ L_t (null_L-extended, keeping ΔR's signs) plus
         R_a ⋉ flip(L) × null_L with ΔL's keys as flip candidates.
 
-        Change-sized by construction: every flipped key carries at
-        least one ΔR row, so the flip candidates are ΔR's distinct join
-        keys (change-sized, broadcast); R's presence at each boundary
-        is probed with broadcast semi-joins against those candidates;
-        the static sides of the inner terms are semi-pruned to the
-        delta's keys the same way ``_tree_delta_term`` prunes siblings.
-        Returns None when no source under the subtree changed."""
+        Change-sized by construction: the static side of each inner
+        term is semi-pruned to the delta side's distinct join keys
+        (broadcast); every flipped key carries at least one ΔR row, so
+        the flip candidates are ΔR's keys too, and R's presence at each
+        boundary is probed with broadcast semi-joins against them.  Each
+        delta side is checkpointed once: it is read for its keys, for its
+        join and by every merge pass over the feed (one per COUNT
+        DISTINCT / HLL alias), and re-reading a leaf's CDC instead ran
+        more Spark jobs per refresh, not fewer.  Returns None when no
+        source under the subtree changed."""
         from functools import reduce
-
-        sign = F.when(
-            F.col("op").isin("insert", "update"), F.lit(1)
-        ).otherwise(F.lit(-1))
 
         if "src" in node:
             s = node["src"]
             if anchor[s] == latest[s]:
                 return None
+            sign = F.when(
+                F.col("op").isin("insert", "update"), F.lit(1)
+            ).otherwise(F.lit(-1))
             cdc = self.sources[s].cdc(
                 anchor[s], latest[s], include_update_preimages=True
             ).withColumn("__mv_sign", sign)
@@ -2962,8 +2912,14 @@ class AutoMaterializedView:
                 _replay_spec(node["chain"], cdc, extra=("__mv_sign",)), node
             )
 
-        dl = self._tree_signed_delta(node["left"], anchor, latest)
-        dr = self._tree_signed_delta(node["right"], anchor, latest)
+        def _delta(side, drop):
+            d = self._tree_signed_delta(side, anchor, latest, snaps_a, snaps_t)
+            if d is None:
+                return None
+            return d.drop(*drop).localCheckpoint(eager=True)
+
+        dl = _delta(node["left"], node["drop_l"])
+        dr = _delta(node["right"], node["drop_r"])
         if dl is None and dr is None:
             return None
         lcols = [lc for lc, _rc in node["pairs"]]
@@ -2972,8 +2928,6 @@ class AutoMaterializedView:
             lambda a, b: a & b,
             [F.col(lc) == F.col(rc) for lc, rc in node["pairs"]],
         )
-        snaps_a = {n: t.snapshot(anchor[n]) for n, t in self.sources.items()}
-        snaps_t = {n: t.snapshot(latest[n]) for n, t in self.sources.items()}
         jk_names = [f"__mv_jk{i}" for i in range(len(lcols))]
 
         def _flip_rows(d_keys, probe_side, probe_cols, keep_side,
@@ -2984,19 +2938,27 @@ class AutoMaterializedView:
             null-extension of ``keep_side``'s anchor rows; gained keys
             (−1) leave it. Change-sized: probes and the keep-side scan
             are broadcast-semi-pruned to the candidates."""
-            p_a = self._replay_tree(probe_side["node"], snaps_a).drop(
-                *probe_side["drop"]
-            )
-            p_t = self._replay_tree(probe_side["node"], snaps_t).drop(
-                *probe_side["drop"]
-            )
-            in_a = d_keys.join(p_a, _jk_cond(probe_cols, False), "left_semi")
-            in_t = d_keys.join(p_t, _jk_cond(probe_cols, False), "left_semi")
-            flips = (
-                in_a.subtract(in_t).withColumn("__mv_sign", F.lit(1))
-                .unionByName(
-                    in_t.subtract(in_a).withColumn("__mv_sign", F.lit(-1))
+            def present(snaps, at_anchor):
+                p = self._replay_tree(probe_side["node"], snaps).drop(
+                    *probe_side["drop"]
                 )
+                return p.join(
+                    F.broadcast(d_keys), _jk_cond(probe_cols, False),
+                    "left_semi",
+                ).select(
+                    *[F.col(c).alias(j) for c, j in zip(probe_cols, jk_names)],
+                    F.lit(at_anchor).alias("__mv_at"),
+                )
+
+            # one aggregation over both boundaries: a key present only
+            # at the anchor scores max + min - 1 = +1, only at the
+            # target -1, at both 0
+            at = F.col("__mv_at")
+            flips = (
+                present(snaps_a, 1).unionByName(present(snaps_t, 0))
+                .groupBy(*jk_names)
+                .agg((F.max(at) + F.min(at) - 1).alias("__mv_sign"))
+                .filter(F.col("__mv_sign") != 0)
                 .localCheckpoint(eager=True)
             )
             nulls = [
@@ -3017,7 +2979,6 @@ class AutoMaterializedView:
         rspec = {"node": node["right"], "drop": node["drop_r"]}
         terms = []
         if dl is not None:
-            dl = dl.drop(*node["drop_l"]).localCheckpoint(eager=True)
             dl_keys = _jk_frame(dl, lcols)
             r_t = self._replay_tree(node["right"], snaps_t).drop(
                 *node["drop_r"]
@@ -3040,7 +3001,6 @@ class AutoMaterializedView:
                     .drop(*node["drop_l"]).schema,
                 ))
         if dr is not None:
-            dr = dr.drop(*node["drop_r"]).localCheckpoint(eager=True)
             dr_keys = _jk_frame(dr, rcols)
             l_a = self._replay_tree(node["left"], snaps_a).drop(
                 *node["drop_l"]
@@ -3077,49 +3037,6 @@ class AutoMaterializedView:
         out = reduce(lambda a, b: a.unionByName(b), terms)
         return _synth(
             _replay_spec(node["mid"], out, extra=("__mv_sign",)), node
-        )
-
-    def _agg_tree_delta_feed(self, spec, anchor, latest) -> DataFrame | None:
-        """Signed pre-aggregate delta of an all-INNER join tree — the
-        telescoping multiset identity
-        Δ(s1⋈…⋈sn) = Σ_i s1_t⋈…⋈s_{i-1}_t ⋈ Δs_i ⋈ s_{i+1}_a⋈…⋈sn_a
-        (sources before i at the TARGET state, after i at the ANCHOR,
-        Δs_i the signed CDC images): inner equi-joins are multiset-
-        bilinear, so the terms sum to exactly the view's delta.  Work ∝
-        the change set — each term's static sides are key-pruned to the
-        delta before joining."""
-        sign = F.when(
-            F.col("op").isin("insert", "update"), F.lit(1)
-        ).otherwise(F.lit(-1))
-        order = spec["sources"]
-        terms = []
-        for i, s in enumerate(order):
-            if anchor[s] == latest[s]:
-                continue
-            cdc = self.sources[s].cdc(
-                anchor[s], latest[s], include_update_preimages=True
-            ).withColumn("__mv_sign", sign)
-            snaps = {}
-            for j, s2 in enumerate(order):
-                if s2 == s:
-                    continue
-                at = latest if j < i else anchor
-                snaps[s2] = self.sources[s2].snapshot(at[s2])
-            terms.append(
-                _replay_spec(
-                    spec["mid"],
-                    self._tree_delta_term(
-                        spec["tree"], s, snaps, {s: cdc}
-                    ),
-                    extra=("__mv_sign",),
-                )
-            )
-        if not terms:
-            return None
-        from functools import reduce
-
-        return reduce(
-            lambda a, b: a.unionByName(b, allowMissingColumns=True), terms
         )
 
     def _agg_tree_full_feed(self, spec, snaps, restrict=None) -> DataFrame:
@@ -3207,32 +3124,26 @@ class AutoMaterializedView:
         )
 
     def _advance_agg_tree(self, spec, anchor, latest) -> None:
-        """Advance an aggregate-over-multi-join view by a SIGNED feed:
-        all-INNER trees use the leaf-telescoping identity
-        (``_agg_tree_delta_feed``); trees with LEFT arms use the
-        recursive null-extension-aware identity
-        (``_tree_signed_delta`` — inner terms + presence-flip
-        correction), replacing the round-6 member-sized dirty-group
-        re-derivation. Both feeds merge through the shared retraction
+        """Advance an aggregate-over-join-tree view by the SIGNED feed
+        of ``_tree_signed_delta`` (the bilinear join rule per INNER
+        node, plus presence-flip corrections under LEFT / FULL OUTER
+        nodes), replacing the round-6 member-sized dirty-group
+        re-derivation.  The feed merges through the shared retraction
         engine; min/max/DISTINCT retractions re-derive their dirty
         groups from ``full_feed`` (leaf-input-restricted when the
         group keys live on one non-null-extended leaf)."""
         from functools import reduce
 
-        if spec.get("all_inner"):
-            feed = self._agg_tree_delta_feed(spec, anchor, latest)
-        else:
-            feed = self._tree_signed_delta(spec["tree"], anchor, latest)
-            if feed is not None:
-                feed = _replay_spec(spec["mid"], feed, extra=("__mv_sign",))
+        snaps_a = {n: t.snapshot(anchor[n]) for n, t in self.sources.items()}
+        snaps_t = {n: t.snapshot(latest[n]) for n, t in self.sources.items()}
+        feed = self._tree_signed_delta(
+            spec["tree"], anchor, latest, snaps_a, snaps_t
+        )
         if feed is None:
             return
+        feed = _replay_spec(spec["mid"], feed, extra=("__mv_sign",))
 
         def full_feed(dirty_keys):
-            snaps = {
-                n: t.snapshot(latest[n])
-                for n, t in self.sources.items()
-            }
             restrict = None
             if spec.get("group_src") is not None and dirty_keys is not None:
                 rcond = reduce(
@@ -3245,7 +3156,7 @@ class AutoMaterializedView:
                     ],
                 )
                 restrict = (spec["group_src"], dirty_keys, rcond)
-            return self._agg_tree_full_feed(spec, snaps, restrict=restrict)
+            return self._agg_tree_full_feed(spec, snaps_t, restrict=restrict)
 
         self._merge_agg_delta(spec, feed, latest, full_feed)
 

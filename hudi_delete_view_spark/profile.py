@@ -108,11 +108,8 @@ def embedding_bucket_cap(explicit) -> int | None:
 # exceeded the budget — so the default slice is 2M rows (per-job spill
 # ~1/4 of single pass at 8M) and the bucketing spills to compressed
 # parquet instead of executor-disk persist (see
-# embedding_neardup_pairs' spill_dir). Env-tunable for other nodes'
-# disk budgets.
-EMBEDDING_MERGE_SLICE_ROWS = int(
-    os.environ.get("SPARK_GRAFT_EMB_SLICE_ROWS", 2_000_000)
-)
+# embedding_neardup_pairs' spill_dir).
+EMBEDDING_MERGE_SLICE_ROWS = 2_000_000
 
 
 def embedding_merge_slices(n: int) -> int:

@@ -1848,7 +1848,7 @@ def lake_mv_auto_agg_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Aggregate-over-join in ONE declaration through the unified entry
     point — no manual staging: the classifier finds the inner equi-join
     below the aggregate (a one-join agg_tree) and maintains it by the
-    telescoping delta-join feed Δ(F⋈D) = ΔF⋈D_anchor ∪ F_target⋈ΔD.
+    signed delta-join rule Δ(F⋈D) = ΔF⋈D_target ∪ F_anchor⋈ΔD.
     Each side's CDC (lineitem's C2 updates / C3+C4 deletes, orders' C2
     delta-updates / C3 delta-deletes) joins the other side pruned to
     its join keys, and the signed rows merge into the stored groups;
@@ -1948,8 +1948,8 @@ def lake_mv_sql_ddl(spark: SparkSession, sf_dir: str) -> DataFrame:
     over temp-view-registered lake snapshots, classified off the same
     analyzed tree (here: a one-join agg_tree — qualified attribute
     references are stripped against the plan's own SubqueryAlias names
-    so the maintenance replays resolve), maintained by the telescoping
-    delta-join feed across both change scripts, and served back as a
+    so the maintenance replays resolve), maintained by the signed
+    delta-join rule across both change scripts, and served back as a
     temp view SQL consumers query by name."""
     import os as _os
 
@@ -2114,8 +2114,8 @@ GROUP BY a.l_returnflag
 def lake_mv_auto_self_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Aggregate over a SELF-join (line-pair rollup per return flag —
     the same-table correlation shape): one source on BOTH join sides,
-    maintained by the occurrence-based telescoping identity
-    Δ(A⋈B) = ΔA⋈B_anchor + A_target⋈ΔB, where A and B replay the SAME
+    maintained by the occurrence-based delta-join identity
+    Δ(A⋈B) = ΔA⋈B_target + A_anchor⋈ΔB, where A and B replay the SAME
     table's CDC through their own side chains — one commit correctly
     produces BOTH terms (a changed row re-pairs with every line of its
     order, including itself).  Sums ride as integer cents; the oracle

@@ -11,6 +11,19 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch", "tests")
 
 
+def _jobs_for(spark, group, fn):
+    """Ids of the Spark jobs ``fn`` launches, counted under job group
+    ``group``. Job ids accumulate per group name, so every measured call
+    (each parametrized case too) needs a name of its own."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "job audit")
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
 @pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")

@@ -21,6 +21,8 @@ from hudi_delete_view_spark.operators.dedup import (
     token_hashes,
 )
 
+from conftest import _jobs_for
+
 
 @pytest.fixture(scope="module")
 def docs(spark, sf_dir):
@@ -440,18 +442,6 @@ def test_incremental_dedup_no_base_pairs(spark, docs):
     out = minhash_dedup_incremental(base, inc, "doc_id", "text")
     assert out.filter(F.col("doc_id") % 5 != 0).count() == 0
     assert out.columns == inc.columns
-
-
-def _jobs_for(spark, group, fn):
-    """Ids of the Spark jobs ``fn`` launches (the job audit of
-    ``tests/test_evolution.py``)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, "spread job audit")
-    try:
-        fn()
-    finally:
-        sc.setJobGroup(None, None)
-    return sc.statusTracker().getJobIdsForGroup(group)
 
 
 def _one_file_ids(spark, path, n=200):

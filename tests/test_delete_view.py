@@ -12,6 +12,8 @@ from hudi_delete_view_spark.plans.timeline import TimelineError
 from hudi_delete_view_spark.sources.cow import COMMIT_TIME_FIELD, RECORD_KEY_FIELD, CowTable
 from hudi_delete_view_spark.sources.delete_view import DeleteView, delete_view
 
+from conftest import _jobs_for
+
 C1, C2, C3, C4 = "20260101000000", "20260102000000", "20260103000000", "20260104000000"
 
 
@@ -144,16 +146,6 @@ def test_delete_view_range_includes_merge_commits(spark, scratch):
     assert got == {
         (2, "20280102000000"), (3, "20280102000000"), (6, "20280103000000")
     }
-
-
-def _jobs_for(spark, group, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, "delete view job audit")
-    try:
-        fn()
-    finally:
-        sc.setJobGroup(None, None)
-    return sc.statusTracker().getJobIdsForGroup(group)
 
 
 def _strip_before_images(base_path, ts):

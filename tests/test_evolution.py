@@ -21,6 +21,8 @@ from hudi_delete_view_spark.sources.cow import (
 from hudi_delete_view_spark.sources.delete_view import delete_view
 from hudi_delete_view_spark.sources.mor import MorTable
 
+from conftest import _jobs_for
+
 T1, T2, T3, T4, T5 = (
     "20270101000000",
     "20270102000000",
@@ -228,16 +230,6 @@ def no_aqe(spark):
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     yield
     spark.conf.set("spark.sql.adaptive.enabled", prev)
-
-
-def _jobs_for(spark, group, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, "writer job audit")
-    try:
-        fn()
-    finally:
-        sc.setJobGroup(None, None)
-    return sc.statusTracker().getJobIdsForGroup(group)
 
 
 def test_bulk_insert_is_single_job(spark, tmp_path, no_aqe):

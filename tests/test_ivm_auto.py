@@ -15,6 +15,8 @@ from hudi_delete_view_spark.plans.ivm import (
 )
 from hudi_delete_view_spark.sources.cow import META_FIELDS, CowTable
 
+from conftest import _jobs_for
+
 
 @pytest.fixture(scope="session")
 def _tables_seed(spark, tmp_path_factory):
@@ -1577,8 +1579,8 @@ def test_window_over_union_renamed_intermediate_falls_back(spark, scratch,
 
 def test_self_join_aggregate_view(spark, scratch):
     """Aggregate over a SELF-join (one table on both sides): the
-    telescoping delta identity is occurrence-based, so one source's
-    change correctly produces BOTH terms (ΔA⋈B_anchor + A_target⋈ΔB),
+    delta-join identity is occurrence-based, so one source's
+    change correctly produces BOTH terms (ΔA⋈B_target + A_anchor⋈ΔB),
     and the dirty-group fallback (min) unions both sides' probes over
     the same CDC. Updates, deletes, inserts, LEFT preservation, and
     zero-write idempotence all converge."""
@@ -1637,7 +1639,7 @@ def test_self_join_tree_aggregate(spark, scratch):
     """Aggregate over a 3-leaf tree with ONE table at TWO leaves
     (t ⋈ t ⋈ dim): duplicate leaves get occurrence-unique pseudo names
     ('t', 't__occ2'), registered as aliases of the real table, so the
-    telescoping delta feed emits one term per LEAF — the occurrence-
+    signed delta carries one CDC per LEAF — the occurrence-
     based identity extended to N-source trees.  A WINDOW view over the
     same self-join tree refuses: its fact-record-key row identity is
     not unique per output row."""
@@ -2094,16 +2096,6 @@ def test_noop_refresh_is_jobless(spark, scratch, tables):
     finally:
         sc.setJobGroup(None, None)
     assert sc.statusTracker().getJobIdsForGroup("noop-refresh") == []
-
-
-def _jobs_for(spark, group, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, "ivm refresh job audit")
-    try:
-        fn()
-    finally:
-        sc.setJobGroup(None, None)
-    return sc.statusTracker().getJobIdsForGroup(group)
 
 
 def test_window_refresh_job_counts(spark, scratch, tables):
@@ -2673,6 +2665,13 @@ def tree_tables(spark, scratch, _tree_tables_seed):
     return {"li": li, "o": o, "c": c}
 
 
+def _join_types(node):
+    """Join types of a classified join tree, root first (pre-order)."""
+    if "src" in node:
+        return []
+    return [node["jt"]] + _join_types(node["left"]) + _join_types(node["right"])
+
+
 def test_agg_tree_q5_rollup(spark, scratch, tree_tables):
     """Aggregate over a MULTI-JOIN tree in ONE declaration — the TPC-H
     Q5 shape (lineitem ⋈ orders ⋈ customer GROUP BY region): changes
@@ -2856,14 +2855,14 @@ def test_expression_join_keys(spark, scratch, tree_tables):
 
 
 def test_agg_tree_inner_takes_delta_path(spark, scratch, tree_tables):
-    """All-INNER trees advance by the leaf-telescoping delta-join feed —
-    change-sized, never the recursive LEFT-arm identity (which costs
-    per-node boundary replays the telescoping avoids): the signed-tree
-    path is replaced with a raiser, and for a retraction-capable
-    aggregate set (sum/count, HLL via aux) the full-feed re-derivation
-    hook is a raiser too; the view still converges through changes at
-    every level.  The two-leaf view (one inner join) rides the same
-    path as the three-leaf tree."""
+    """All-INNER trees advance by the one signed delta
+    (``_tree_signed_delta``: the bilinear join rule at every node),
+    change-sized: for a retraction-capable aggregate set (sum/count,
+    HLL via aux) the full-feed re-derivation hook is a raiser, and the
+    view still converges through changes at every level.  The two-leaf
+    view (one inner join) rides the same path as the three-leaf tree.
+    Spark jobs per refresh are pinned at the counts measured on this
+    fixture with 4 local cores."""
     srcs = tree_tables
     li, o, c = srcs["li"], srcs["o"], srcs["c"]
 
@@ -2889,15 +2888,11 @@ def test_agg_tree_inner_takes_delta_path(spark, scratch, tree_tables):
         AutoMaterializedView(spark, os.path.join(scratch, "mvdp2"),
                              {"li": li, "o": o}, plan2),
     ]
+    assert _join_types(views[0].spec()["tree"]) == ["inner", "inner"]
+    assert _join_types(views[1].spec()["tree"]) == ["inner"]
     for mv in views:
-        assert mv.spec()["all_inner"] is True
         mv.refresh()
 
-    def boom_signed(self, node, anchor, latest):
-        raise AssertionError("all-INNER tree took the LEFT-arm signed "
-                             "identity instead of the telescoping feed")
-
-    orig_signed = AutoMaterializedView._tree_signed_delta
     orig_merge = AutoMaterializedView._merge_agg_delta
 
     def no_full_feed(self, spec, feed, latest, full_feed_fn):
@@ -2906,8 +2901,8 @@ def test_agg_tree_inner_takes_delta_path(spark, scratch, tree_tables):
                                  "from the full feed")
         return orig_merge(self, spec, feed, latest, boom)
 
-    AutoMaterializedView._tree_signed_delta = boom_signed
     AutoMaterializedView._merge_agg_delta = no_full_feed
+    jobs = []
     try:
         li.delete(spark.createDataFrame([("l1",), ("l7",)], "k string"),
                   "20260102000000")
@@ -2916,13 +2911,15 @@ def test_agg_tree_inner_takes_delta_path(spark, scratch, tree_tables):
         c.upsert(spark.createDataFrame([(1, "USA")],
                                        "ckey long, region string"),
                  "20260104000000")
-        for mv in views:
-            mv.refresh()
+        for i, mv in enumerate(views):
+            jobs.append(len(_jobs_for(spark, f"inner-tree-jobs-{i}",
+                                      mv.refresh)))
             assert _rows_ns(mv.serve()) == _rows_ns(mv.plan_fn(
                 {n: t.snapshot() for n, t in mv.sources.items()}))
     finally:
-        AutoMaterializedView._tree_signed_delta = orig_signed
         AutoMaterializedView._merge_agg_delta = orig_merge
+    budget = [71, 54]
+    assert all(j <= b for j, b in zip(jobs, budget)), (jobs, budget)
     for mv in views:
         assert mv.refresh()["advanced"] is False
 
@@ -3407,8 +3404,8 @@ def test_agg_tree_refusals(spark, tree_tables):
     """Former tree refusals, tracked as they lift: FULL OUTER inside an
     aggregate tree classified as a refusal through round 6; the late
     round-7 signed identity (test_agg_tree_full_outer_arm) supports it,
-    so the shape must now CLASSIFY as a non-all-inner agg_tree with no
-    single group source (both sides null-extend). A source appearing
+    so the shape must now CLASSIFY as an agg_tree with a FULL root join
+    and no single group source (both sides null-extend). A source appearing
     TWICE lifted in round 6 (F15): duplicate leaves classify under
     occurrence-unique pseudo names."""
     srcs = tree_tables
@@ -3420,7 +3417,7 @@ def test_agg_tree_refusals(spark, tree_tables):
             .groupBy("region").agg(F.sum("qty").alias("sq")))
     spec_full = classify_view(full, snaps)
     assert spec_full["kind"] == "agg_tree"
-    assert spec_full["all_inner"] is False
+    assert _join_types(spec_full["tree"]) == ["full", "inner"]
     assert spec_full["group_src"] is None  # both sides null-extend
     twice = (snaps["li"].select("ok", "qty")
              .join(snaps["o"].select("okey", "ck"),
@@ -3579,8 +3576,11 @@ def test_agg_tree_left_arm_signed_identity_change_sized(spark, scratch,
     image-replay detector are raisers, and the view still converges
     through every null-extension transition — a top-dim delete moving
     rows INTO the null group (presence-flip +1), a re-insert moving
-    them out (flip −1), a mid-dim move, a fact delete, and a same-key
-    dim UPDATE that must NOT flip anything."""
+    them out (flip −1), a mid-dim move, a fact delete, a same-key dim
+    UPDATE that must NOT flip anything, and an advance that changes
+    both sides of the LEFT node at once (ΔL and ΔR together). Spark
+    jobs per refresh are pinned at the counts measured on this fixture
+    with 4 local cores."""
     srcs = tree_tables
     li, o, c = srcs["li"], srcs["o"], srcs["c"]
 
@@ -3594,7 +3594,7 @@ def test_agg_tree_left_arm_signed_identity_change_sized(spark, scratch,
 
     mv = AutoMaterializedView(spark, os.path.join(scratch, "mvq5sg"),
                               srcs, plan)
-    assert mv.spec()["all_inner"] is False
+    assert _join_types(mv.spec()["tree"]) == ["left", "inner"]
     mv.refresh()
 
     orig_merge = AutoMaterializedView._merge_agg_delta
@@ -3611,7 +3611,11 @@ def test_agg_tree_left_arm_signed_identity_change_sized(spark, scratch,
     AutoMaterializedView._merge_agg_delta = no_full_feed
     AutoMaterializedView._tree_touched = no_detection
 
-    def check():
+    jobs = []
+
+    def advance():
+        jobs.append(len(_jobs_for(spark, f"left-tree-jobs-{len(jobs)}",
+                                  mv.refresh)))
         assert _rows_ns(mv.serve()) == _rows_ns(
             plan({n: t.snapshot() for n, t in srcs.items()}))
 
@@ -3620,34 +3624,43 @@ def test_agg_tree_left_arm_signed_identity_change_sized(spark, scratch,
         # group via the presence-flip (+1 null-extended) term
         c.delete(spark.createDataFrame([(0,)], "ckey long"),
                  "20260102000000")
-        mv.refresh(); check()
+        advance()
         # re-insert under a new name: flip -1 pulls them back out
         c.upsert(spark.createDataFrame([(0, "EU2")],
                                        "ckey long, region string"),
                  "20260103000000")
-        mv.refresh(); check()
+        advance()
         # same-key dim UPDATE (region rename): presence unchanged ->
         # flip term must contribute nothing; rows move EU2 -> EU3 via
         # the plain inner terms
         c.upsert(spark.createDataFrame([(0, "EU3")],
                                        "ckey long, region string"),
                  "20260104000000")
-        mv.refresh(); check()
+        advance()
         # mid-dim move: order 1 re-points to a match-less customer key
         o.upsert(spark.createDataFrame([(1, 9)], "okey long, ck long"),
                  "20260105000000")
-        mv.refresh(); check()
+        advance()
         # fact-side delete + insert in one advance
         li.delete(spark.createDataFrame([("l1",)], "k string"),
                   "20260106000000")
         li.upsert(spark.createDataFrame([("l99", 3, 7.5)],
                                         "k string, ok long, qty double"),
                   "20260107000000")
-        mv.refresh(); check()
+        advance()
+        # both sides of the LEFT node in one advance: order 1 re-points
+        # to customer 0 (ΔL) while region APAC vanishes (ΔR, flip +1)
+        o.upsert(spark.createDataFrame([(1, 0)], "okey long, ck long"),
+                 "20260108000000")
+        c.delete(spark.createDataFrame([(2,)], "ckey long"),
+                 "20260109000000")
+        advance()
         assert mv.refresh()["advanced"] is False
     finally:
         AutoMaterializedView._merge_agg_delta = orig_merge
         AutoMaterializedView._tree_touched = orig_touched
+    budget = [28, 28, 29, 24, 24, 40]
+    assert all(j <= b for j, b in zip(jobs, budget)), (jobs, budget)
 
 
 def test_agg_tree_nested_left_arms(spark, scratch, tree_tables):
@@ -3672,7 +3685,7 @@ def test_agg_tree_nested_left_arms(spark, scratch, tree_tables):
 
     mv = AutoMaterializedView(spark, os.path.join(scratch, "mvq5nl"),
                               srcs, plan)
-    assert mv.spec()["all_inner"] is False
+    assert _join_types(mv.spec()["tree"]) == ["left", "left"]
     mv.refresh()
 
     orig_merge = AutoMaterializedView._merge_agg_delta
@@ -3807,7 +3820,7 @@ def test_agg_tree_full_outer_arm(spark, scratch, tree_tables):
 
     mv = AutoMaterializedView(spark, os.path.join(scratch, "mvq5f"),
                               srcs, plan)
-    assert mv.spec()["all_inner"] is False
+    assert _join_types(mv.spec()["tree"]) == ["full", "inner"]
     assert mv.spec()["group_src"] is None  # both sides null-extend
     mv.refresh()
 

@@ -163,7 +163,7 @@ def _plans():
                 .select("vk", "v", "gname"))
 
     def self_join_agg(t):
-        # aggregate over a SELF-join: occurrence-based telescoping terms
+        # aggregate over a SELF-join: occurrence-based delta terms
         a = t["fact"].select("g", "nv", "v")
         b = t["fact"].select(F.col("g").alias("g2"),
                              F.col("v").alias("pv"))
@@ -173,7 +173,7 @@ def _plans():
 
     def self_join_tree(t):
         # one table at TWO leaves of a 3-leaf tree (occurrence-keyed
-        # telescoping terms) + a dim leaf
+        # delta terms) + a dim leaf
         a = t["fact"].select("g", "nv", "v")
         b = t["fact"].select(F.col("g").alias("g2"), F.col("v").alias("pv"))
         dd = t["dim"].select("gk", "gname")
