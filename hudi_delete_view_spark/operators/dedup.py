@@ -1,21 +1,20 @@
 """Deduplication operators for LLM-corpus hygiene (SURVEY §2 B8/B9).
 
-All hot-path computation is JVM-side via built-in + higher-order SQL
-functions (``transform`` / ``aggregate`` / ``array_*`` over shingle
-arrays) — no Python UDFs anywhere, so everything stays inside whole-stage
-codegen and scales linearly with executor count.
+Shingling, hashing, banding and verification run JVM-side as built-in and
+higher-order SQL functions (``transform`` / ``aggregate`` / ``array_*``).
+Only the Arrow-batched ``pandas_udf`` kernels cross into Python: the
+MinHash minima (``minhash_signature_pandas``) and the embedding kernels.
 
 Scale shape of the LSH pipeline: shingle+minhash is a narrow map; the only
 shuffles are the band-bucket groupBys and the candidate-pair self-join,
 both keyed by band hash — cardinality ~ (#docs x #bands), heavily pruned
 because singleton buckets are dropped before the join. The verify step
-re-computes exact Jaccard only on candidate pairs (a tiny fraction of the
-n^2 pair space).
+joins the candidate pairs against the cached signature table, which
+carries the document text, and computes the estimate and the exact
+Jaccard there (a tiny fraction of the n^2 pair space).
 """
 
 from __future__ import annotations
-
-import os
 
 import numpy as np
 import pandas as pd
@@ -178,14 +177,16 @@ def _signature_table(
     bands: int,
     carry: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Persisted (__id, __sig, __bands[, *carry]) table.
+    """Persisted (__id, __text, __sig, __bands[, *carry]) table.
 
     Persisted and materialized BEFORE any explode/self-join: the signature
     computation is the expensive narrow map, and without the barrier
     Catalyst re-evaluates it per exploded row and once per join side
     (observed ~30x slowdown). Compute-once-then-join is also the right
-    shape at 100 TB — the signature table is ~600 bytes/row regardless of
-    document size (spills to disk under memory pressure).
+    shape at 100 TB. A row is the document text plus ~600 bytes of
+    signature and bands (spills to disk under memory pressure). The text
+    rides along so the verify tail (``_verify_pairs``) reads it from this
+    table instead of scanning the corpus again.
 
     ``carry`` names passthrough columns (e.g. a base/increment tag) so a
     caller can signature TWO disjoint row sets in one pass and split the
@@ -203,10 +204,16 @@ def _signature_table(
         # core-count-insensitive (the duplicated mega-expression leaves
         # whole-stage codegen). Guide §1.3/§4.
         .filter(F.length(text_col) >= shingle_k)
-        .select(F.col(id_col).alias("__id"), char_shingles(text_col, shingle_k).alias("__sh"), *keep)
+        .select(
+            F.col(id_col).alias("__id"), F.col(text_col).alias("__text"),
+            char_shingles(text_col, shingle_k).alias("__sh"), *keep,
+        )
         .withColumn("__hs", shingle_hashes("__sh"))
-        .select("__id", sig_udf("__hs").alias("__sig"), *keep)
-        .select("__id", "__sig", band_hashes("__sig", bands, rows_per_band).alias("__bands"), *keep)
+        .select("__id", "__text", sig_udf("__hs").alias("__sig"), *keep)
+        .select(
+            "__id", "__text", "__sig",
+            band_hashes("__sig", bands, rows_per_band).alias("__bands"), *keep,
+        )
     )
     # register_cache persists + materializes (one signature pass, ever) and
     # tracks the cache so long-lived sessions can release it via
@@ -220,7 +227,7 @@ def _bucket_pairs(sig: DataFrame, min_collisions: int = 1) -> DataFrame:
 
     ``min_collisions=1`` is the classic (highest-recall) LSH candidate
     rule. Raising it prunes the candidate set BEFORE the expensive
-    signature-estimate join at a quantifiable recall cost: a pair at
+    verify join at a quantifiable recall cost: a pair at
     Jaccard j collides per band with p = j^rows_per_band, so
     P(<m collisions) is binomial-tail-small for true pairs — at (16 bands,
     4 rows, j=0.8): p=0.41, P(<2) ~ 0.3%, while candidates near the noise
@@ -271,29 +278,6 @@ def minhash_lsh_candidate_pairs(
     return _bucket_pairs(sig)
 
 
-def signature_estimate_pairs(
-    pairs: DataFrame, sig: DataFrame, num_hashes: int
-) -> DataFrame:
-    """Attach the MinHash Jaccard estimate (signature agreement rate) to
-    candidate pairs — a 64-op comparison per pair against the cached
-    signature table, used to prune weak candidates before the exact
-    (array-intersection) verify."""
-    a = sig.select(F.col("__id").alias("id_a"), F.col("__sig").alias("__sig_a"))
-    b = sig.select(F.col("__id").alias("id_b"), F.col("__sig").alias("__sig_b"))
-    est = (
-        F.expr(
-            "aggregate(zip_with(__sig_a, __sig_b, (x, y) -> IF(x = y, 1L, 0L)),"
-            " 0L, (acc, v) -> acc + v)"
-        ).cast("double")
-        / num_hashes
-    )
-    return (
-        pairs.join(a, "id_a").join(b, "id_b")
-        .withColumn("est_jaccard", est)
-        .select("id_a", "id_b", "est_jaccard")
-    )
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -320,37 +304,52 @@ def ngram_jaccard_pairs(
         a.select("id_a").crossJoin(b.select("id_b")).filter(F.col("id_a") < F.col("id_b"))
     )
     joined = base.join(a, "id_a").join(b, "id_b")
-    inter = F.size(F.array_intersect("__sh_a", "__sh_b"))
-    union = F.size(F.array_union("__sh_a", "__sh_b"))
-    jac = F.when(union > 0, inter.cast("double") / union.cast("double")).otherwise(F.lit(0.0))
     return (
-        joined.withColumn("jaccard", F.round(jac, 6))
+        joined.withColumn("jaccard", _exact_jaccard("__sh_a", "__sh_b"))
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
 
 
-def _verify_strong_pairs(
-    docs: DataFrame,
-    strong: DataFrame,
-    id_col: str,
-    text_col: str,
-    threshold: float,
-    shingle_k: int,
-) -> DataFrame:
-    """The funnel's verify tail: exact n-gram Jaccard of the estimate-pruned
-    ``strong`` pairs (id_a, id_b) over their member docs in ``docs``.
+def _exact_jaccard(sh_a: str, sh_b: str):
+    """Exact Jaccard of two distinct-shingle array columns, rounded to 6
+    places as the oracles round it (0 when both are empty)."""
+    inter = F.size(F.array_intersect(sh_a, sh_b))
+    union = F.size(F.array_union(sh_a, sh_b))
+    jac = F.when(union > 0, inter.cast("double") / union.cast("double")).otherwise(F.lit(0.0))
+    return F.round(jac, 6)
 
-    ``strong`` is materialized first (tiny: id pairs only) so the
-    member-doc semi-join doesn't re-execute the whole funnel; then ONLY
-    pair-member docs are shingled — after the estimate prune that's a
-    small fraction of the corpus (measured ~5x faster than shingling every
-    doc at sf0.1). The members come from one scan of the cached pairs."""
-    strong = register_cache(strong)
-    members = strong.select(F.explode(F.array("id_a", "id_b")).alias(id_col)).distinct()
-    return ngram_jaccard_pairs(
-        docs.join(F.broadcast(members), id_col, "left_semi"),
-        id_col, text_col, pairs=strong, threshold=threshold, shingle_k=shingle_k,
+
+def _verify_pairs(
+    pairs: DataFrame,
+    sig: DataFrame,
+    threshold: float,
+    est_margin: float,
+    shingle_k: int,
+    num_hashes: int,
+) -> DataFrame:
+    """The funnel's verify tail: ONE join of the candidate ``pairs``
+    (id_a, id_b) against the cached signature table, once per side. The
+    signature agreement estimate drops pairs below ``threshold -
+    est_margin`` first; only the rest shingle their ``__text`` for the
+    exact Jaccard. Returns (id_a, id_b, jaccard) with jaccard >= threshold."""
+    a, b = (
+        sig.select(F.col("__id").alias(f"id_{s}"), F.col("__sig").alias(f"__sig_{s}"),
+                   F.col("__text").alias(f"__text_{s}"))
+        for s in "ab"
+    )
+    agree = F.expr(
+        "aggregate(zip_with(__sig_a, __sig_b, (x, y) -> IF(x = y, 1L, 0L)),"
+        " 0L, (acc, v) -> acc + v)"
+    )
+    shingles = (char_shingles(f"__text_{s}", shingle_k).alias(f"__sh_{s}") for s in "ab")
+    return (
+        pairs.join(a, "id_a").join(b, "id_b")
+        .filter(agree.cast("double") / num_hashes >= threshold - est_margin)
+        .select("id_a", "id_b", *shingles)
+        .withColumn("jaccard", _exact_jaccard("__sh_a", "__sh_b"))
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
     )
 
 
@@ -374,14 +373,9 @@ def minhash_verified_pairs(
     (``minhash_dedup``) and cluster resolution (connected components)."""
     sig = _signature_table(df, id_col, text_col, shingle_k, num_hashes, bands)
     # >=2 band collisions: ~0.3% recall loss at the verify threshold,
-    # ~2.5x fewer candidate pairs shipped into the signature-estimate join
+    # ~2.5x fewer candidate pairs shipped into the verify join
     cand = _bucket_pairs(sig, min_collisions=2)
-    strong = (
-        signature_estimate_pairs(cand, sig, num_hashes)
-        .filter(F.col("est_jaccard") >= threshold - est_margin)
-        .select("id_a", "id_b")
-    )
-    return _verify_strong_pairs(df, strong, id_col, text_col, threshold, shingle_k)
+    return _verify_pairs(cand, sig, threshold, est_margin, shingle_k, num_hashes)
 
 
 def minhash_dedup(
@@ -1014,19 +1008,20 @@ def minhash_dedup_incremental(
     vs history was settled by earlier runs).
 
     ``base_sig`` is the corpus's precomputed signature/band table (the
-    persisted asset previous runs maintain — columns ``__id/__sig/
-    __bands`` as produced by the signature stage). When given, the corpus
-    text is touched ONLY to shingle verified-pair members; without it the
-    signatures are recomputed from ``base`` (one extra linear pass).
+    persisted asset previous runs maintain — columns ``__id/__text/__sig/
+    __bands`` as produced by the signature stage). When given, ``base`` is
+    not read at all: the verify tail takes the corpus text from
+    ``base_sig`` (a table without ``__text`` raises ``ValueError``).
+    Without it the signatures are recomputed from ``base`` in the same
+    pass as the increment's. Either way the corpus is scanned at most
+    once, by the signature pass.
 
     Scale design: base-vs-base candidate pairs are never generated. The
     base side's band table is semi-joined down to buckets that contain at
     least one increment member BEFORE the pair join, so corpus-side work
     is proportional to bucket collisions with the increment, not corpus
-    size (in production the base signature/band table is a persisted
-    asset maintained by previous runs — recomputing it here stands in for
-    one read of that table). Pair orientation is fixed as (id_a = any
-    side, id_b = increment), so the drop rule is a single distinct on
+    size. Pair orientation is fixed as (id_a = any side, id_b =
+    increment), so the drop rule is a single distinct on
     id_b: an increment doc is dropped iff it verifies >= ``threshold``
     against ANY base doc or against a smaller-id increment doc (the
     deterministic survivor rule of ``minhash_dedup`` restricted to pairs
@@ -1035,10 +1030,17 @@ def minhash_dedup_incremental(
     Returns the surviving increment rows (schema of ``inc``).
     """
     if base_sig is not None:
-        sig_base = base_sig
+        if "__text" not in base_sig.columns:
+            raise ValueError(
+                "base_sig has no __text column: the verify reads the corpus "
+                "text from the signature table, so rebuild it with "
+                "_signature_table (columns __id, __text, __sig, __bands)"
+            )
+        sig_base = base_sig.select("__id", "__text", "__sig", "__bands")
         sig_inc = _signature_table(
             inc, id_col, text_col, shingle_k, num_hashes, bands
         )
+        sig_all = sig_base.unionByName(sig_inc)
     else:
         # no precomputed corpus signatures: signature BOTH sides in ONE
         # tagged pass (base and inc are disjoint by contract), so the
@@ -1048,12 +1050,12 @@ def minhash_dedup_incremental(
         tagged = base.withColumn("__inc", F.lit(False)).unionByName(
             inc.withColumn("__inc", F.lit(True))
         )
-        sig_all_tagged = _signature_table(
+        sig_all = _signature_table(
             tagged, id_col, text_col, shingle_k, num_hashes, bands,
             carry=("__inc",),
         )
-        sig_base = sig_all_tagged.filter(~F.col("__inc")).drop("__inc")
-        sig_inc = sig_all_tagged.filter(F.col("__inc")).drop("__inc")
+        sig_base = sig_all.filter(~F.col("__inc"))
+        sig_inc = sig_all.filter(F.col("__inc"))
 
     def _buckets(sig: DataFrame) -> DataFrame:
         return sig.select("__id", F.posexplode("__bands").alias("__band_idx", "__band_hash"))
@@ -1090,15 +1092,7 @@ def minhash_dedup_incremental(
         .filter(F.col("__nc") >= 2)
         .select("id_a", "id_b")
     )
-    sig_all = sig_base.unionByName(sig_inc)
-    strong = (
-        signature_estimate_pairs(pairs, sig_all, num_hashes)
-        .filter(F.col("est_jaccard") >= threshold - est_margin)
-        .select("id_a", "id_b")
-    )
-    verified = _verify_strong_pairs(
-        base.unionByName(inc), strong, id_col, text_col, threshold, shingle_k
-    )
+    verified = _verify_pairs(pairs, sig_all, threshold, est_margin, shingle_k, num_hashes)
     losers = verified.select(F.col("id_b").alias(id_col)).distinct()
     return inc.join(losers, id_col, "left_anti")
 

@@ -563,13 +563,13 @@ def stream_signature_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per micro-batch (4 scripted parquet files, batch k = doc_id % 4), the
     foreachBatch sink:
       1. reads the signature store's CURRENT snapshot (survivors-only
-         ``__id/__sig/__bands`` rows — the persisted asset) as
+         ``__id/__text/__sig/__bands`` rows — the persisted asset) as
          ``base_sig``, so the corpus side is never re-shingled;
       2. dedups the batch against it with ``minhash_dedup_incremental``
          (corpus band table semi-joined to batch-touched buckets; base-vs-
          base pairs never generated; exact-verify text for store members
-         resolved from the survivors corpus table — the lake data table
-         the same ingest maintains, not a side-channel state dir);
+         read from the store's ``__text``, so the corpus table is not
+         scanned);
       3. upserts the batch survivors into the corpus table AND their
          signatures into the store, one commit per batch on each table.
 
@@ -604,7 +604,6 @@ def stream_signature_store(spark: SparkSession, sf_dir: str) -> DataFrame:
             StructField("n_chars", LongType()),
         ]
     )
-    doc_cols = [f.name for f in docs_schema.fields]
     tag = scratch_tag(sf_dir)
     root = os.path.join(SCRATCH_ROOT, "stream", tag, "sig_store")
     in_dir = os.path.join(root, "in")
@@ -646,12 +645,10 @@ def stream_signature_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch = batch_df.persist()
         try:
             first = store.timeline.latest_timestamp() is None
-            if first:
-                base = spark.createDataFrame([], docs_schema)
-                base_sig = None
-            else:
-                base_sig = store.snapshot().select("__id", "__sig", "__bands")
-                base = corpus.snapshot().select(*doc_cols)
+            # after the first batch the store carries the corpus text, so
+            # ``base`` (read only without ``base_sig``) stays empty
+            base = spark.createDataFrame([], docs_schema)
+            base_sig = None if first else store.snapshot().select("__id", "__text", "__sig", "__bands")
             survivors = minhash_dedup_incremental(
                 base, batch, "doc_id", "text", threshold=0.8, base_sig=base_sig
             ).persist()

@@ -424,7 +424,7 @@ def build_lineitem_indexed(spark: SparkSession, sf_dir: str, base_path: str | No
 
 # --------------------------------------------------------------------------
 # signature_store — the incremental-dedup "persisted asset" as a REAL lake
-# table: MinHash signatures/bands keyed by doc_id.
+# table: MinHash signatures/bands and the document text keyed by doc_id.
 #   S1 bulk-insert signatures(base docs: doc_id % 5 != 0)
 #   S2 upsert signatures of the increment's SURVIVORS (doc_id % 5 = 0 docs
 #      that dedup against the store via minhash_dedup_incremental)
@@ -444,7 +444,8 @@ def build_signature_store(spark: SparkSession, sf_dir: str, base_path: str | Non
     store = CowTable(
         spark, base_path, key_fields=["__id"], partition_field=None, num_file_groups=4
     )
-    if store.timeline.timestamps() == [C1, C2]:
+    # a store written before signature tables carried __text is rebuilt
+    if store.timeline.timestamps() == [C1, C2] and "__text" in store.snapshot().columns:
         return store
     import shutil
 
@@ -454,7 +455,7 @@ def build_signature_store(spark: SparkSession, sf_dir: str, base_path: str | Non
     base = docs.filter(F.col("doc_id") % 5 != 0)
     inc = docs.filter(F.col("doc_id") % 5 == 0)
     store.bulk_insert(_signature_table(base, "doc_id", "text", 5, 64, 16), C1)
-    base_sig = store.snapshot().select("__id", "__sig", "__bands")
+    base_sig = store.snapshot().select("__id", "__text", "__sig", "__bands")
     survivors = minhash_dedup_incremental(base, inc, "doc_id", "text", base_sig=base_sig)
     store.upsert(_signature_table(survivors, "doc_id", "text", 5, 64, 16), C2)
     return store

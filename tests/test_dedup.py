@@ -444,6 +444,84 @@ def test_incremental_dedup_no_base_pairs(spark, docs):
     assert out.columns == inc.columns
 
 
+def test_incremental_dedup_needs_text_in_base_sig(spark, docs):
+    """A signature table without ``__text`` (one written before the verify
+    read the text from it) is refused before any plan is built."""
+    from hudi_delete_view_spark.operators.dedup import minhash_dedup_incremental
+
+    base = docs.filter(F.col("doc_id") % 5 != 0)
+    inc = docs.filter(F.col("doc_id") % 5 == 0)
+    old_sig = spark.createDataFrame([], "__id long, __sig array<long>, __bands array<long>")
+    with pytest.raises(ValueError, match="__text"):
+        minhash_dedup_incremental(base, inc, "doc_id", "text", base_sig=old_sig)
+
+
+def _plan_reads(df):
+    """(documents file scans outside cached relations, documents file scans
+    under them, distinct cached relations) in ``df``'s executed plan; each
+    cached plan is walked once."""
+    jvm = df.sparkSession.sparkContext._jvm
+    scan = jvm.java.lang.Class.forName("org.apache.spark.sql.execution.FileSourceScanExec")
+    mem = jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.execution.columnar.InMemoryTableScanExec"
+    )
+    stage = jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.execution.adaptive.QueryStageExec"
+    )
+    top, cached, caches = 0, 0, set()
+    stack = [(df._jdf.queryExecution().executedPlan(), False)]
+    while stack:
+        node, inside = stack.pop()
+        if scan.isInstance(node) and "documents.parquet" in str(
+            node.relation().location().rootPaths()
+        ):
+            cached, top = (cached + 1, top) if inside else (cached, top + 1)
+        if mem.isInstance(node):
+            builder = node.relation().cacheBuilder()
+            if jvm.System.identityHashCode(builder) not in caches:
+                caches.add(jvm.System.identityHashCode(builder))
+                stack.append((builder.cachedPlan(), True))
+            continue
+        if node.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+            stack.append((node.executedPlan(), inside))
+        if stage.isInstance(node):
+            stack.append((node.plan(), inside))
+        for seq in (node.children(), node.innerChildren()):
+            stack.extend((seq.apply(i), inside) for i in range(seq.size()))
+    return top, cached, len(caches)
+
+
+def test_minhash_cold_jobs_and_one_documents_scan(spark, docs, scratch):
+    """A cold MinHash call runs one signature pass and one verify join: the
+    Spark jobs of a cold ``minhash_dedup`` and ``minhash_dedup_incremental``
+    over a one-file corpus are bounded. The incremental plan holds one
+    cached relation, the signature table, whose pass scans the corpus
+    once as the union of its base and increment sides, and one more scan
+    outside it: the increment rows the anti-join returns."""
+    from hudi_delete_view_spark.operators.dedup import minhash_dedup_incremental
+
+    path = os.path.join(scratch, "documents.parquet")
+    docs.coalesce(1).write.parquet(path)
+    cold = spark.read.parquet(path)
+    # 13 or 14 jobs across runs and core counts: AQE submits independent
+    # query stages concurrently
+    jobs = _jobs_for(spark, "minhash-dedup-cold", lambda: minhash_dedup(
+        cold, "doc_id", "text", threshold=0.8).select("doc_id").collect())
+    assert len(jobs) <= 14
+    base = cold.filter(F.col("doc_id") % 5 != 0)
+    inc = cold.filter(F.col("doc_id") % 5 == 0)
+    out = {}
+
+    def incremental():
+        out["df"] = minhash_dedup_incremental(base, inc, "doc_id", "text", threshold=0.8)
+        out["rows"] = out["df"].select("doc_id").collect()
+
+    jobs = _jobs_for(spark, "minhash-incremental-cold", incremental)
+    assert len(jobs) <= 14
+    assert out["rows"]
+    assert _plan_reads(out["df"]) == (1, 2, 1)
+
+
 def _one_file_ids(spark, path, n=200):
     spark.range(n).coalesce(1).write.mode("overwrite").parquet(path)
     return spark.read.parquet(path)
